@@ -7,7 +7,7 @@ idiomatic Spark architecture:
 - the ``.scrp`` CSS-inspired extraction DSL is compiled **once on the
   driver** (``plans/``) and applied partition-parallel via Arrow
   ``mapInPandas`` UDFs (``operators/extract.py``);
-- a distributed URL frontier with partitioned bloom + cuckoo URL-seen
+- a distributed URL frontier with partitioned bloom URL-seen
   filters, per-host politeness and deterministic crawl-order lineage
   lives in ``streaming/`` over snapshot-checkpointed tables
   (``sources/checkpoint.py``, an Iceberg-shaped commit log);

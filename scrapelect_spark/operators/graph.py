@@ -111,7 +111,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = 0.15 / n
 
     # Loop partitioning sized to the input (guide §2 scale-adaptive
-    # partitioning): one partition per ~128 MiB scan split, so the
+    # partitioning): one partition per ~16 MiB of input, so the
     # 8-round loop schedules input-proportional stages instead of
     # shuffle.partitions-sized ones — at bench scale each round is a
     # couple of tasks, at 10^10 nodes the same derivation yields

@@ -61,9 +61,11 @@ def canonicalize_url(url: str) -> str | None:
         port = parts.port
     except ValueError:
         return None
-    netloc = host
+    # urlsplit strips an IPv6 literal's brackets; put them back so the
+    # result parses again
+    netloc = f"[{host}]" if ":" in host else host
     if port is not None and port != _DEFAULT_PORTS.get(scheme):
-        netloc = f"{host}:{port}"
+        netloc = f"{netloc}:{port}"
     return urlunsplit((scheme, netloc, _normalize_path(parts.path), parts.query, ""))
 
 

@@ -24,6 +24,22 @@ first and the root last (atomically), so resume reads a consistent
 cut (north_rule: "resumable from checkpoint with per-partition
 lineage + metrics").
 
+Python pass budget: after the fetch (a JVM join for CorpusFetcher), a
+batch runs exactly two Python passes; everything else is JVM-side.
+- The extract UDF (``_process_batch_udf``) parses each page once and
+  emits its record plus every frontier candidate: each followable
+  link and each redirect target, already carrying its ``host`` and
+  robots ``excluded`` value.
+- One cogroup per bucket (``urlseen.probe_and_merge_df``) tags every
+  candidate against the bucket's old bloom and emits the bucket's
+  merged bloom, in the same task.  It is materialized once; the
+  anti-join of the maybe-seen sliver and the sketch commit both read
+  that result.  The merged bloom is old ⊕ *every* candidate, not just
+  the new ones, and the bytes are the same: the bloom already holds
+  the whole seen set (seeds and every earlier frontier row, robots-
+  excluded and redirect rows included), so the extra candidates are
+  seen URLs, and adding a URL twice sets the same bits.
+
 Scale notes:
 - queued = frontier ⟕̸ pages (left-anti): at 10^10 rows this is the
   cost of plain parquet; on Iceberg the same loop uses MoR deletes and
@@ -38,10 +54,10 @@ Scale notes:
 
 from __future__ import annotations
 
-import json
 from concurrent.futures import ThreadPoolExecutor
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import Iterator, Optional
+from urllib.parse import urlsplit
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -62,11 +78,7 @@ from ..sources.checkpoint import SnapshotTable
 from .canonicalize import canonicalize_url, host_of, resolve_and_canonicalize
 from .politeness import repartition_for_fetch, select_batch
 from .robots import RobotsPolicy
-from .urlseen import (
-    empty_sketch_df,
-    maybe_seen_cogrouped,
-    merged_sketch_df,
-)
+from .urlseen import empty_sketch_df, merged_sketch_df, probe_and_merge_df
 
 ALLOWED_SCHEMES = ("http", "https", "file")
 
@@ -81,9 +93,6 @@ class CrawlConfig:
     bloom_bits_per_bucket: int = 1 << 20
     bloom_hashes: int = 5
     default_priority: int = 100
-    #: reference-parity UA (mod.rs:28-39 / Cargo.toml — matches
-    #: sources/fetch.py HttpFetcher.REFERENCE_UA)
-    user_agent: str = "scrapelect v0.4.0"
     batch_seconds: float = 60.0  # politeness budget window per micro-batch
     fetch_partitions: int = 32
     broadcast_corpus: bool = True
@@ -155,6 +164,14 @@ def page_robots_directives(root) -> frozenset:
     return frozenset(toks)
 
 
+def robots_fields(url: str, robots: RobotsPolicy) -> tuple[str, Optional[str]]:
+    """A frontier URL's ``(host, excluded)``: ``excluded`` is 'robots'
+    when robots.txt disallows the URL's path, else None."""
+    host = host_of(url)
+    allowed = robots.allowed(host, urlsplit(url).path or "/")
+    return host, None if allowed else "robots"
+
+
 PROCESS_SCHEMA = StructType(
     [
         StructField("page_url", StringType(), False),
@@ -163,6 +180,9 @@ PROCESS_SCHEMA = StructType(
         StructField("kind", StringType(), False),  # link | record | error | redirect
         StructField("seq", IntegerType(), False),
         StructField("value", StringType(), True),
+        # link / redirect rows: the target's frontier host and exclusion
+        StructField("host", StringType(), True),
+        StructField("excluded", StringType(), True),
     ]
 )
 
@@ -272,22 +292,6 @@ class Crawler:
         return self.tables[name].read(self.spark, snapshot_id=sid)
 
     # --- seen sketches --------------------------------------------
-    def _merge_sketch_df(self, new_urls: DataFrame) -> DataFrame:
-        """Next sketch DataFrame = current OR bloom(new urls), built
-        per bucket on executors (cogrouped applyInPandas — each task
-        touches exactly one bucket's bloom bytes)."""
-        base = (
-            self.sketch_df
-            if self.sketch_df is not None
-            else empty_sketch_df(self.spark)
-        )
-        return merged_sketch_df(
-            base,
-            new_urls,
-            num_bits=self.cfg.bloom_bits_per_bucket,
-            num_hashes=self.cfg.bloom_hashes,
-        ).localCheckpoint()
-
     def _restore_sketches(self) -> None:
         df = self._pinned("sketches")
         if df is None:
@@ -314,19 +318,24 @@ class Crawler:
             if canon is None or canon in seen_order:
                 continue
             seen_order[canon] = None
-            host = host_of(canon)
-            from urllib.parse import urlsplit
-
-            path = urlsplit(canon).path or "/"
-            excluded = None if self.robots.allowed(host, path) else "robots"
+            host, excluded = robots_fields(canon, self.robots)
             rows.append((canon, host, 0, -1, i, priority, excluded, 0))
         frontier_df = self.spark.createDataFrame(rows, FRONTIER_SCHEMA)
         fr_snap = self.tables["frontier"].commit(frontier_df, metrics={"batch": 0})
         seen_df = self._with_bucket(frontier_df.select("url")).select("url", "bucket")
         seen_snap = self.tables["seen"].commit(seen_df, metrics={"batch": 0})
         # seed blooms built executor-side; no URL ever crosses back
-        self.sketch_df = self._merge_sketch_df(seen_df)
-        sk_snap = self._commit_sketches(0)
+        self.sketch_df = (
+            merged_sketch_df(
+                empty_sketch_df(self.spark),
+                seen_df,
+                num_bits=self.cfg.bloom_bits_per_bucket,
+                num_hashes=self.cfg.bloom_hashes,
+            )
+            .select("bucket", "sketch")
+            .localCheckpoint()
+        )
+        sk_snap = self._commit_sketches(0, self.sketch_df)
         root = self.root.commit(
             None,
             metrics={
@@ -345,9 +354,8 @@ class Crawler:
         )
         return root
 
-    def _commit_sketches(self, batch: int):
-        assert self.sketch_df is not None
-        df = self.sketch_df.select(
+    def _commit_sketches(self, batch: int, sketch_df: DataFrame):
+        df = sketch_df.select(
             "bucket", "sketch", F.lit(batch).cast("long").alias("batch")
         )
         return self.tables["sketches"].commit(
@@ -355,8 +363,14 @@ class Crawler:
         )
 
     def _process_batch_udf(self):
+        """The batch's extract pass: per fetched page, its record (or
+        error) and its frontier candidates — each followable link
+        (allowed scheme, on a page shallower than ``max_depth``) and
+        each redirect target, already carrying the frontier ``host``
+        and ``excluded`` columns."""
         statements = self.statements
-        user_agent = self.cfg.user_agent  # noqa: F841 — HTTP path config
+        robots = self.robots
+        max_depth = self.cfg.max_depth
 
         def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             interp = Interpreter() if statements is not None else None
@@ -365,13 +379,15 @@ class Crawler:
                     k.name: [] for k in PROCESS_SCHEMA.fields
                 }
 
-                def emit(url, seq_, depth, kind, i, value):
+                def emit(url, seq_, depth, kind, i, value, host=None, excluded=None):
                     out["page_url"].append(url)
                     out["page_seq"].append(seq_)
                     out["depth"].append(depth)
                     out["kind"].append(kind)
                     out["seq"].append(i)
                     out["value"].append(value)
+                    out["host"].append(host)
+                    out["excluded"].append(excluded)
 
                 for url, html, pseq, depth, finu in zip(
                     pdf["url"], pdf["html"], pdf["page_seq_assigned"],
@@ -389,13 +405,22 @@ class Crawler:
                     if base != url:
                         canon = canonicalize_url(base)
                         if canon is not None and canon != canonicalize_url(url):
-                            emit(url, pseq, depth, "redirect", 0, canon)
+                            emit(
+                                url, pseq, depth, "redirect", -1, canon,
+                                host_of(canon), "redirect",
+                            )
                     root = parse_html(html)
                     directives = page_robots_directives(root)
-                    if "nofollow" not in directives:
+                    if depth < max_depth and "nofollow" not in directives:
                         for i, target in enumerate(extract_links(root, base)):
-                            if target is not None:
-                                emit(url, pseq, depth, "link", i, target)
+                            if (
+                                target is not None
+                                and urlsplit(target).scheme in ALLOWED_SCHEMES
+                            ):
+                                emit(
+                                    url, pseq, depth, "link", i, target,
+                                    *robots_fields(target, robots),
+                                )
                     if interp is not None and "noindex" not in directives:
                         try:
                             rec = interp.interpret_document(statements, root, url)
@@ -406,41 +431,40 @@ class Crawler:
 
         return process
 
-    def _maybe_seen_filter(self, candidates: DataFrame) -> DataFrame:
-        """Split candidates against the sketch *table*: cogrouped by
-        bucket, so each task deserializes exactly one bucket's bloom —
-        never the whole sketch set (at the 10^10-URL design point the
-        set is ~12 GiB; a broadcast/closure capture is the OOM).
-        Provably-new rows ('n') bypass the exact anti-join."""
-        sketch_df = (
-            self.sketch_df
-            if self.sketch_df is not None
-            else empty_sketch_df(self.spark)
+    def _candidate_pass(self, processed: DataFrame) -> DataFrame:
+        """The batch's frontier candidates, deduplicated in batch and
+        run through one cogroup per bucket that both probes the seen
+        blooms and merges them (``probe_and_merge_df``).
+
+        Links and redirect targets share this path.  Per URL, a
+        redirect row wins over links to it (its content is already
+        held), then the first discovery in lineage order.  Links sit one
+        level below their page; a redirect target keeps its page's
+        depth."""
+        is_link = F.col("kind") == "link"
+        first = (
+            processed.filter(F.col("kind").isin("link", "redirect"))
+            .groupBy(F.col("value").alias("url"))
+            .agg(
+                F.min(
+                    F.struct(
+                        is_link.alias("is_link"),
+                        "page_seq",
+                        F.col("seq").alias("link_seq"),
+                        (F.col("depth") + is_link.cast("int")).alias("depth"),
+                        "host",
+                        "excluded",
+                    )
+                ).alias("s")
+            )
+            .select("url", "s.depth", "s.page_seq", "s.link_seq", "s.host", "s.excluded")
         )
-        return maybe_seen_cogrouped(candidates, sketch_df)
-
-    def _robots_excluded_col(self, df: DataFrame) -> DataFrame:
-        policy_bc = self.spark.sparkContext.broadcast(self.robots)
-        schema = StructType(
-            df.schema.fields + [StructField("excluded", StringType(), True)]
+        return probe_and_merge_df(
+            self._with_bucket(first),
+            self.sketch_df,
+            num_bits=self.cfg.bloom_bits_per_bucket,
+            num_hashes=self.cfg.bloom_hashes,
         )
-
-        def check(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            from urllib.parse import urlsplit
-
-            policy: RobotsPolicy = policy_bc.value
-            for pdf in batches:
-                exc = [
-                    None
-                    if policy.allowed(h, urlsplit(u).path or "/")
-                    else "robots"
-                    for u, h in zip(pdf["url"], pdf["host"])
-                ]
-                pdf = pdf.copy()
-                pdf["excluded"] = pd.Series(exc, dtype=object)
-                yield pdf
-
-        return df.mapInPandas(check, schema=schema)
 
     # --- the loop --------------------------------------------------
     def run(self, max_batches: int = 100) -> dict:
@@ -610,116 +634,33 @@ class Crawler:
             pg_snap, rec_snap = pg_f.result(), rec_f.result()
 
         # --- new frontier candidates ---
-        links = processed.filter(
-            (F.col("kind") == "link") & (F.col("depth") < self.cfg.max_depth)
-        ).select(
-            F.col("value").alias("url"),
-            (F.col("depth") + 1).alias("depth"),
-            F.col("page_seq"),
-            F.col("seq").alias("link_seq"),
+        # one cogroup per bucket tags each candidate against the old
+        # blooms and builds the merged ones; materialized once, so the
+        # union below and the sketch commit read it without re-running
+        # the Python pass
+        tagged = self._candidate_pass(processed).localCheckpoint()
+        is_sketch = F.col("sketch").isNotNull()
+        next_sketch_df = tagged.filter(is_sketch).select("bucket", "sketch")
+        flagged = tagged.filter(~is_sketch)
+        # provably-new rows ('n') bypass the exact anti-join
+        maybe = flagged.filter(F.col("maybe_seen") == "y").join(
+            self._seen_df.select("url"), on="url", how="left_anti"
         )
-        links = links.filter(
-            F.split(F.col("url"), ":").getItem(0).isin(*ALLOWED_SCHEMES)
-        )
-        # in-batch dedup: deterministic first discovery by lineage order
-        links = (
-            links.groupBy("url")
-            .agg(F.min(F.struct("page_seq", "link_seq", "depth")).alias("s"))
-            .select(
-                "url",
-                F.col("s.depth").alias("depth"),
-                F.col("s.page_seq").alias("page_seq"),
-                F.col("s.link_seq").alias("link_seq"),
-            )
-        )
-        candidates = self._with_bucket(links)
-        flagged = self._maybe_seen_filter(candidates)
-        definitely_new = flagged.filter(F.col("maybe_seen") == "n").drop("maybe_seen")
-        maybe = flagged.filter(F.col("maybe_seen") == "y").drop("maybe_seen")
-        if self._seen_df is not None:
-            maybe = maybe.join(
-                self._seen_df.select("url"), on="url", how="left_anti"
-            )
-        new_urls = definitely_new.unionByName(maybe)
-
-        # --- redirect targets: seen-but-not-queued ---------------------
-        # Content behind a 3xx is already held under the requested URL;
-        # the served URL joins the seen set (and the frontier log, with
-        # excluded='redirect') so later links to it are not refetched.
-        # Only the HttpFetcher path can produce these (CorpusFetcher has
-        # no final_url column), and the count probe below is a cached-
-        # input job, so corpus replays and redirect-free crawls add no
-        # shuffle work here.
-        red_urls = None
-        if has_final and (
-            processed.filter(F.col("kind") == "redirect").limit(1).count() > 0
-        ):
-            red = (
-                processed.filter(F.col("kind") == "redirect")
-                .select(
-                    F.col("value").alias("url"),
-                    "depth",
-                    "page_seq",
-                    F.lit(-1).cast("int").alias("link_seq"),
-                )
-                .groupBy("url")
-                .agg(F.min(F.struct("page_seq", "link_seq", "depth")).alias("s"))
-                .select(
-                    "url",
-                    F.col("s.depth").alias("depth"),
-                    F.col("s.page_seq").alias("page_seq"),
-                    F.col("s.link_seq").alias("link_seq"),
-                )
-            )
-            red_flagged = self._maybe_seen_filter(self._with_bucket(red))
-            red_new = red_flagged.filter(F.col("maybe_seen") == "n").drop(
-                "maybe_seen"
-            )
-            red_maybe = red_flagged.filter(F.col("maybe_seen") == "y").drop(
-                "maybe_seen"
-            )
-            if self._seen_df is not None:
-                red_maybe = red_maybe.join(
-                    self._seen_df.select("url"), on="url", how="left_anti"
-                )
-            red_urls = red_new.unionByName(red_maybe)
-            # a same-batch link to the redirect target is already-held
-            # content — never queue it
-            new_urls = new_urls.join(
-                red_urls.select("url"), on="url", how="left_anti"
-            )
-
         new_frontier = (
-            new_urls.withColumn("host", F.expr("parse_url(url, 'HOST')"))
-            .withColumn("host", F.lower(F.coalesce(F.col("host"), F.lit(""))))
-            .withColumn("priority", F.lit(self.cfg.default_priority))
-            .withColumn("batch", F.lit(batch).cast("long"))
-        )
-        new_frontier = self._robots_excluded_col(
-            new_frontier.select(
-                "url", "host", "depth", "page_seq", "link_seq", "priority", "batch", "bucket"
+            flagged.filter(F.col("maybe_seen") == "n")
+            .unionByName(maybe)
+            .select(
+                "url", "host", "depth", "page_seq", "link_seq",
+                F.lit(self.cfg.default_priority).alias("priority"),
+                "excluded",
+                F.lit(batch).cast("long").alias("batch"),
+                "bucket",
             )
+            .cache()
         )
-        if red_urls is not None:
-            red_frontier = (
-                red_urls.withColumn("host", F.expr("parse_url(url, 'HOST')"))
-                .withColumn(
-                    "host", F.lower(F.coalesce(F.col("host"), F.lit("")))
-                )
-                .withColumn("priority", F.lit(self.cfg.default_priority))
-                .withColumn("batch", F.lit(batch).cast("long"))
-                .select(
-                    "url", "host", "depth", "page_seq", "link_seq",
-                    "priority", "batch", "bucket",
-                )
-                .withColumn("excluded", F.lit("redirect"))
-            )
-            new_frontier = new_frontier.unionByName(red_frontier)
-
-        new_frontier = new_frontier.cache()
 
         # materialize the cache once (deterministic single fill) so the
-        # five consumers below can run concurrently without racing to
+        # consumers below can run concurrently without racing to
         # compute it
         n_new = int(new_frontier.count())
 
@@ -730,9 +671,9 @@ class Crawler:
         frontier_parts = max(2, self._commit_parts(n_fetched * 10))
 
         # everything below reads only cached/checkpointed inputs — run
-        # the two table commits, the executor-side sketch build, and
-        # the two hot-state checkpoints concurrently (scheduler-latency
-        # overlap; see the pages/records note above)
+        # the three table commits and the two hot-state checkpoints
+        # concurrently (scheduler-latency overlap; see the pages/records
+        # note above)
         newly_queued = new_frontier.filter(F.col("excluded").isNull()).select(
             *self._QUEUED_COLS
         )
@@ -753,13 +694,7 @@ class Crawler:
                 new_frontier.select("url", "bucket").coalesce(frontier_parts),
                 metrics={"batch": batch},
             )
-            # sketch merge runs entirely executor-side (cogrouped
-            # applyInPandas per bucket: old bloom ⊕ new urls); the
-            # driver only keeps the DataFrame handle, and the per-
-            # bucket counts it carries double as n_new
-            sketch_f = pool.submit(
-                self._merge_sketch_df, new_frontier.select("url", "bucket")
-            )
+            sk_f = pool.submit(self._commit_sketches, batch, next_sketch_df)
             queued_f = pool.submit(
                 lambda: remaining.unionByName(newly_queued).localCheckpoint()
             )
@@ -770,15 +705,10 @@ class Crawler:
             )
             fr_snap = fr_f.result()
             seen_snap = seen_f.result()
-            merged_sketches = sketch_f.result()
+            sk_snap = sk_f.result()
             next_queued_df = queued_f.result()
             next_seen_df = seen_df_f.result()
-        # n_new == the cache-materialization count above: the sketch
-        # merge ingests exactly new_frontier's (url, bucket) rows, so
-        # sum(n_added) over the merged DataFrame equals that count —
-        # no extra aggregation job per batch
-        self.sketch_df = merged_sketches.select("bucket", "sketch")
-        sk_snap = self._commit_sketches(batch)
+        self.sketch_df = next_sketch_df
 
         root = self.root.commit(
             None,

@@ -1,4 +1,4 @@
-"""URL-seen sketches: partitioned bloom filters + a cuckoo sidecar.
+"""URL-seen sketches: one bloom filter per frontier bucket.
 
 Role in the frontier (north_star): candidate URLs from a micro-batch
 are pre-filtered against per-bucket bloom sketches *before* the exact
@@ -12,8 +12,7 @@ Partitioning: one bloom per frontier bucket (``pmod(hash(url), P)`` —
 Spark's murmur3 column hash, computed JVM-side).  At 10^10 URLs and
 1% FPP that is ~12 GiB of bloom spread over P buckets; each executor
 only needs the buckets its partition touches, and rebuilds are
-per-bucket incremental.  The cuckoo filter adds deletability (frontier
-retractions, e.g. robots revocation) with ~same space at 3% FPP.
+per-bucket incremental.
 
 Hashing is ``pandas.util.hash_array`` (SipHash-ish, keyed, C-speed,
 deterministic across processes for fixed keys) — vectorized over whole
@@ -91,193 +90,32 @@ class BloomFilter:
         return f
 
 
-class CuckooFilter:
-    """Partial-key cuckoo filter: 16-bit fingerprints, 4-slot buckets.
-
-    Supports delete (blooms cannot) — the sidecar for frontier
-    retractions.  Insert is per-item (driver/compaction path, not the
-    batch hot path); lookups are vectorized enough for sidecar use.
-    """
-
-    def __init__(self, num_buckets: int, bucket_size: int = 4, max_kicks: int = 500):
-        self.nb = int(num_buckets)
-        self.bs = bucket_size
-        self.max_kicks = max_kicks
-        self.table = np.zeros((self.nb, self.bs), dtype=np.uint16)
-        self.rng = np.random.default_rng(42)
-
-    @classmethod
-    def for_capacity(cls, n: int) -> "CuckooFilter":
-        nb = 1
-        while nb * 4 * 0.95 < max(n, 16):
-            nb *= 2
-        return cls(nb)
-
-    def _fp_and_index(self, item: str) -> tuple[int, int]:
-        h1, h2 = _hash2(np.array([item], dtype=object))
-        fp = int(h2[0] & np.uint64(0xFFFF)) or 1
-        i1 = int(h1[0]) % self.nb
-        return fp, i1
-
-    def _alt_index(self, i: int, fp: int) -> int:
-        fph = pd.util.hash_array(
-            np.array([fp], dtype=np.uint64), hash_key=_KEY1
-        )[0]
-        return (i ^ int(fph)) % self.nb
-
-    def insert(self, item: str) -> bool:
-        fp, i1 = self._fp_and_index(item)
-        i2 = self._alt_index(i1, fp)
-        for i in (i1, i2):
-            empty = np.flatnonzero(self.table[i] == 0)
-            if len(empty):
-                self.table[i, empty[0]] = fp
-                return True
-        i = i1 if self.rng.integers(2) else i2
-        for _ in range(self.max_kicks):
-            slot = int(self.rng.integers(self.bs))
-            fp, self.table[i, slot] = int(self.table[i, slot]), fp
-            i = self._alt_index(i, fp)
-            empty = np.flatnonzero(self.table[i] == 0)
-            if len(empty):
-                self.table[i, empty[0]] = fp
-                return True
-        return False  # full — caller should resize/rebuild
-
-    def contains(self, item: str) -> bool:
-        fp, i1 = self._fp_and_index(item)
-        i2 = self._alt_index(i1, fp)
-        return bool((self.table[i1] == fp).any() or (self.table[i2] == fp).any())
-
-    def delete(self, item: str) -> bool:
-        fp, i1 = self._fp_and_index(item)
-        for i in (i1, self._alt_index(i1, fp)):
-            hits = np.flatnonzero(self.table[i] == fp)
-            if len(hits):
-                self.table[i, hits[0]] = 0
-                return True
-        return False
-
-    def to_bytes(self) -> bytes:
-        head = np.array([self.nb, self.bs], dtype=np.int64).tobytes()
-        return head + self.table.tobytes()
-
-    @classmethod
-    def from_bytes(cls, raw: bytes) -> "CuckooFilter":
-        nb, bs = np.frombuffer(raw[:16], dtype=np.int64)
-        f = cls(int(nb), int(bs))
-        f.table = np.frombuffer(raw[16:], dtype=np.uint16).reshape(int(nb), int(bs)).copy()
-        return f
-
-
-class PartitionedSeenSketch:
-    """bucket_id -> BloomFilter; built per-bucket on executors, merged
-    as serialized bytes, broadcast back for candidate pre-filtering.
-
-    ``bucket_counts`` (when built by :func:`build_sketches`) carries
-    per-bucket row counts so callers get cardinality for free."""
-
-    def __init__(self, sketches: dict[int, bytes]):
-        self.raw = sketches
-        self._cache: dict[int, BloomFilter] = {}
-        self.bucket_counts: dict[int, int] = {}
-
-    def _get(self, bucket: int) -> BloomFilter | None:
-        if bucket not in self.raw:
-            return None
-        if bucket not in self._cache:
-            self._cache[bucket] = BloomFilter.from_bytes(self.raw[bucket])
-        return self._cache[bucket]
-
-    def maybe_seen(self, urls: pd.Series, buckets: pd.Series) -> np.ndarray:
-        """Vectorized per-bucket membership; False ⇒ provably new."""
-        out = np.zeros(len(urls), dtype=bool)
-        u = urls.to_numpy(dtype=object)
-        b = buckets.to_numpy()
-        for bucket in np.unique(b):
-            mask = b == bucket
-            f = self._get(int(bucket))
-            if f is not None:
-                out[mask] = f.might_contain_many(u[mask])
-        return out
-
-
-def build_sketches(
-    seen_df,
-    url_col: str = "url",
-    bucket_col: str = "bucket",
-    num_bits: int = 1 << 20,
-    num_hashes: int = 5,
-) -> PartitionedSeenSketch:
-    """Build per-bucket blooms with one ``applyInPandas`` pass over the
-    seen table (group = bucket → sketch rows), merged on the driver.
-
-    Driver traffic is just the serialized sketches (bytes per bucket),
-    never the URLs.  ``num_bits``/``num_hashes`` are fixed per table so
-    incremental per-batch sketches OR-merge with the running ones.
-    """
-    from pyspark.sql.types import (
-        BinaryType,
-        IntegerType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    schema = StructType(
-        [
-            StructField("bucket", IntegerType(), False),
-            StructField("sketch", BinaryType(), False),
-            StructField("n", LongType(), False),
-        ]
-    )
-
-    def per_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-        urls = pdf[url_col].to_numpy(dtype=object)
-        f = BloomFilter(num_bits, num_hashes)
-        f.add_many(urls)
-        return pd.DataFrame(
-            {
-                "bucket": [int(pdf[bucket_col].iloc[0])],
-                "sketch": [f.to_bytes()],
-                "n": [len(urls)],
-            }
-        )
-
-    rows = seen_df.groupBy(bucket_col).applyInPandas(per_bucket, schema).collect()
-    sk = PartitionedSeenSketch({r.bucket: bytes(r.sketch) for r in rows})
-    sk.bucket_counts = {r.bucket: r.n for r in rows}
-    return sk
-
-
-def merge_sketches(
-    base: PartitionedSeenSketch, delta: PartitionedSeenSketch
-) -> PartitionedSeenSketch:
-    """OR-merge two sketch sets (same num_bits/num_hashes per bucket)."""
-    out = dict(base.raw)
-    for bucket, raw in delta.raw.items():
-        if bucket in out:
-            f = BloomFilter.from_bytes(out[bucket])
-            f.merge(BloomFilter.from_bytes(raw))
-            out[bucket] = f.to_bytes()
-        else:
-            out[bucket] = raw
-    return PartitionedSeenSketch(out)
-
-
 # --- DataFrame-resident sketches (the 10^10-URL scale path) ----------
 #
 # At the design point (~12 GiB of bloom bits across P buckets) the
 # sketch set must NOT live in a driver dict or a per-batch closure:
-# it stays a (bucket, sketch) DataFrame on the executors, and both the
-# candidate pre-filter and the per-batch merge are *cogrouped by
+# it stays a (bucket, sketch) DataFrame on the executors, and the
+# candidate pre-filter and the per-batch merge share one cogroup *by
 # bucket* — each task deserializes exactly the one bloom its bucket
-# needs (asserted inside the UDFs), and only per-bucket counts ever
-# reach the driver.
+# needs (asserted inside the UDFs), and no bloom byte ever reaches the
+# driver.
 
 
 def empty_sketch_df(spark):
     return spark.createDataFrame([], "bucket int, sketch binary")
+
+
+def _bucket_bloom(key, sk_pdf: pd.DataFrame, num_bits: int, num_hashes: int) -> BloomFilter:
+    """The cogroup key's bloom: its one sketch row, or an empty bloom."""
+    # invariant: one sketch row per bucket — per-task sketch bytes are
+    # exactly one bucket's bloom
+    if len(sk_pdf) > 1:
+        raise AssertionError(
+            f"bucket {key[0]}: {len(sk_pdf)} sketch rows (expected <= 1)"
+        )
+    if len(sk_pdf):
+        return BloomFilter.from_bytes(bytes(sk_pdf["sketch"].iloc[0]))
+    return BloomFilter(num_bits, num_hashes)
 
 
 def merged_sketch_df(
@@ -293,19 +131,9 @@ def merged_sketch_df(
     the resulting DataFrame handle."""
 
     def merge(key, sk_pdf: pd.DataFrame, url_pdf: pd.DataFrame) -> pd.DataFrame:
-        # invariant: one sketch row per bucket — per-task sketch bytes
-        # are exactly one bucket's bloom
-        if len(sk_pdf) > 1:
-            raise AssertionError(
-                f"bucket {key[0]}: {len(sk_pdf)} sketch rows (expected <= 1)"
-            )
-        if len(sk_pdf):
-            f = BloomFilter.from_bytes(bytes(sk_pdf["sketch"].iloc[0]))
-        else:
-            f = BloomFilter(num_bits, num_hashes)
+        f = _bucket_bloom(key, sk_pdf, num_bits, num_hashes)
         urls = url_pdf["url"].to_numpy(dtype=object)
-        if len(urls):
-            f.add_many(urls)
+        f.add_many(urls)
         return pd.DataFrame(
             {
                 "bucket": [int(key[0])],
@@ -321,36 +149,56 @@ def merged_sketch_df(
     )
 
 
-def maybe_seen_cogrouped(candidates, sketch_df, url_col: str = "url"):
-    """Tag each candidate row ``maybe_seen`` ('y'/'n') by probing ONLY
-    its bucket's bloom: candidates are cogrouped with the sketch table
-    on ``bucket``, so a task holds one bucket's sketch at a time —
-    never the whole set (the scale fix for closure-captured sketches).
-    'n' rows are provably new (bloom: no false negatives)."""
-    from pyspark.sql.types import StringType, StructField, StructType
+def probe_and_merge_df(
+    candidates,
+    sketch_df,
+    num_bits: int = 1 << 20,
+    num_hashes: int = 5,
+):
+    """Probe and merge in one cogroup per bucket.
+
+    Each task takes one bucket's candidates (``url``, ``bucket``, any
+    other columns) and that bucket's bloom from ``sketch_df``.  It
+    emits two kinds of rows:
+
+    - every candidate, tagged ``maybe_seen`` ('y'/'n') against the OLD
+      bloom, with ``sketch`` null.  'n' rows are provably new (a bloom
+      has no false negatives);
+    - one row per bucket whose ``sketch`` is the old bloom OR-merged
+      with every candidate URL; its other columns are null except
+      ``bucket``.
+
+    Merging every candidate instead of only the new ones gives the same
+    bytes whenever the old bloom already holds the whole seen set: the
+    extra candidates are seen URLs, and adding a URL twice sets the
+    same bits."""
+    from pyspark.sql.types import BinaryType, StringType, StructField, StructType
 
     out_schema = StructType(
-        list(candidates.schema.fields)
-        + [StructField("maybe_seen", StringType(), False)]
+        [StructField(f.name, f.dataType, True) for f in candidates.schema.fields]
+        + [
+            StructField("maybe_seen", StringType(), True),
+            StructField("sketch", BinaryType(), True),
+        ]
     )
-    cand_cols = [f.name for f in candidates.schema.fields]
 
-    def check(key, cand_pdf: pd.DataFrame, sk_pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(sk_pdf) > 1:
-            raise AssertionError(
-                f"bucket {key[0]}: {len(sk_pdf)} sketch rows (expected <= 1)"
-            )
-        out = cand_pdf[cand_cols].copy()
-        if len(sk_pdf):
-            f = BloomFilter.from_bytes(bytes(sk_pdf["sketch"].iloc[0]))
-            flags = f.might_contain_many(out[url_col].to_numpy(dtype=object))
-        else:
-            flags = np.zeros(len(out), dtype=bool)
-        out["maybe_seen"] = np.where(flags, "y", "n")
-        return out
+    def probe_merge(key, cand_pdf: pd.DataFrame, sk_pdf: pd.DataFrame) -> pd.DataFrame:
+        f = _bucket_bloom(key, sk_pdf, num_bits, num_hashes)
+        out = cand_pdf.copy()
+        urls = out["url"].to_numpy(dtype=object)
+        out["maybe_seen"] = np.where(f.might_contain_many(urls), "y", "n")
+        out["sketch"] = None
+        f.add_many(urls)
+        # object dtype keeps the candidate rows' integers exact next to
+        # the sketch row's nulls
+        sketch_row = pd.DataFrame(
+            [{**dict.fromkeys(out.columns), "bucket": int(key[0]), "sketch": f.to_bytes()}],
+            dtype=object,
+        )
+        return pd.concat([out, sketch_row], ignore_index=True)
 
     return (
         candidates.groupBy("bucket")
         .cogroup(sketch_df.select("bucket", "sketch").groupBy("bucket"))
-        .applyInPandas(check, out_schema)
+        .applyInPandas(probe_merge, out_schema)
     )

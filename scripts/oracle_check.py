@@ -21,7 +21,32 @@ TABLES = (
 ).split()
 
 
+class _Null:
+    """Stands in for NULL: equal only to itself and sorted before every
+    value, so rows with NULLs sort in a column of any type."""
+
+    def __eq__(self, other):
+        return isinstance(other, _Null)
+
+    def __lt__(self, other):
+        return not isinstance(other, _Null)
+
+    def __gt__(self, other):
+        return False
+
+    def __hash__(self):
+        return 0
+
+    def __repr__(self):
+        return "NULL"
+
+
+NULL = _Null()
+
+
 def _norm(v):
+    if v is None:
+        return NULL
     if isinstance(v, float):
         if math.isnan(v):
             return ("f", b"nan")

@@ -11,7 +11,7 @@ from scrapelect_spark.streaming.canonicalize import (
     resolve_and_canonicalize,
 )
 from scrapelect_spark.streaming.robots import RobotsPolicy, parse_robots
-from scrapelect_spark.streaming.urlseen import BloomFilter, CuckooFilter
+from scrapelect_spark.streaming.urlseen import BloomFilter
 
 # ------------------------------------------------------------------ util
 
@@ -65,6 +65,12 @@ def test_canonicalize_rules():
     # idempotence
     u = canonicalize_url("HTTP://A.B/c/./d/../e?q=1#f")
     assert canonicalize_url(u) == u
+    # IPv6 literals keep their brackets, so the result parses again
+    assert canonicalize_url("http://[::1]:8080/a") == "http://[::1]:8080/a"
+    assert canonicalize_url("HTTP://[2001:DB8::1]:80/x") == "http://[2001:db8::1]/x"
+    for raw in ("http://[::1]:8080/a", "https://[fe80::2]/p/../q"):
+        u = canonicalize_url(raw)
+        assert u is not None and canonicalize_url(u) == u
 
 
 def test_resolve_relative():
@@ -113,20 +119,6 @@ def test_bloom_merge():
     b.add_many(ib)
     a.merge(b)
     assert a.might_contain_many(np.concatenate([ia, ib])).all()
-
-
-def test_cuckoo_insert_lookup_delete():
-    f = CuckooFilter.for_capacity(2000)
-    items = [f"http://c.test/{i}" for i in range(2000)]
-    for it in items:
-        assert f.insert(it)
-    assert all(f.contains(it) for it in items)
-    misses = sum(f.contains(f"http://d.test/{i}") for i in range(2000))
-    assert misses / 2000 < 0.05
-    assert f.delete(items[0])
-    assert not f.contains(items[0])
-    g = CuckooFilter.from_bytes(f.to_bytes())
-    assert g.contains(items[1])
 
 
 # ------------------------------------------------------------------ parity
@@ -311,53 +303,118 @@ def test_periodic_compaction_preserves_crawl_exactly(spark, tmp_path):
 def test_sketch_df_cogrouped_one_bucket_per_task(spark):
     """The scale invariant for the DataFrame-resident URL-seen sketch:
     tasks see exactly one bucket's bloom bytes (the cogroup key), never
-    the whole set — and the bloom keeps its no-false-negative contract
-    through the cogrouped path."""
+    the whole set.  The fused pass tags each candidate against the old
+    bloom exactly as a per-bucket probe would, and its merged bloom
+    (old ⊕ every candidate) has the bytes of old ⊕ the new URLs only."""
     from scrapelect_spark.streaming.urlseen import (
         empty_sketch_df,
-        maybe_seen_cogrouped,
         merged_sketch_df,
+        probe_and_merge_df,
     )
-    import pyspark.sql.functions as SF
 
-    seen = spark.createDataFrame(
-        [(f"http://h{i % 7}.test/p/{i}", i % 4) for i in range(200)],
-        "url string, bucket int",
-    )
-    sk = merged_sketch_df(empty_sketch_df(spark), seen, num_bits=1 << 14)
+    kw = dict(num_bits=1 << 14, num_hashes=5)
+    seen_rows = [(f"http://h{i % 7}.test/p/{i}", i % 4) for i in range(200)]
+    seen = spark.createDataFrame(seen_rows, "url string, bucket int")
+    sk = merged_sketch_df(empty_sketch_df(spark), seen, **kw)
     rows = sk.collect()
     # one sketch row per bucket — the per-task payload is one bloom
     assert sorted(r.bucket for r in rows) == [0, 1, 2, 3]
     assert sum(r.n_added for r in rows) == 200
+    old = sk.select("bucket", "sketch")
+    blooms = {r.bucket: BloomFilter.from_bytes(bytes(r.sketch)) for r in rows}
 
+    # 150 seen urls, 50 fresh ones, and 10 fresh ones in bucket 5, which
+    # has no sketch yet; depth/page_seq ride along untouched
+    new_rows = [(f"http://new{i}.test/x", i % 4) for i in range(50)] + [
+        (f"http://b5.test/{i}", 5) for i in range(10)
+    ]
+    cand_rows = [(u, b, 1, 7) for u, b in seen_rows[:150] + new_rows]
     cands = spark.createDataFrame(
-        [(f"http://h{i % 7}.test/p/{i}", i % 4) for i in range(150)]  # seen
-        + [(f"http://new{i}.test/x", i % 4) for i in range(50)],  # fresh
-        "url string, bucket int",
+        cand_rows, "url string, bucket int, depth int, page_seq long"
     )
-    flagged = {
-        r.url: r.maybe_seen
-        for r in maybe_seen_cogrouped(cands, sk.select("bucket", "sketch")).collect()
-    }
-    # bloom contract: every truly-seen url MUST flag 'y' (no false negatives)
-    for i in range(150):
-        assert flagged[f"http://h{i % 7}.test/p/{i}"] == "y"
+    out = probe_and_merge_df(cands, old, **kw).collect()
+    tagged = [r for r in out if r.sketch is None]
+    merged = {r.bucket: bytes(r.sketch) for r in out if r.sketch is not None}
+
+    assert sorted((r.url, r.bucket, r.depth, r.page_seq) for r in tagged) == sorted(
+        cand_rows
+    )
+    flags = {r.url: r.maybe_seen for r in tagged}
+    for b in range(6):
+        urls = np.array([u for u, bb, _, _ in cand_rows if bb == b], dtype=object)
+        expect = (
+            blooms[b].might_contain_many(urls)
+            if b in blooms
+            else np.zeros(len(urls), dtype=bool)
+        )
+        assert [flags[u] for u in urls] == ["y" if e else "n" for e in expect]
+    # bloom contract: every truly-seen url flags 'y' (no false negatives)
+    assert all(flags[u] == "y" for u, _ in seen_rows[:150])
     # fresh urls are mostly 'n' (false positives allowed, not required)
-    fresh_n = sum(
-        1 for i in range(50) if flagged[f"http://new{i}.test/x"] == "n"
-    )
-    assert fresh_n >= 40
+    assert sum(flags[u] == "n" for u, _ in new_rows) >= 50
+
+    # old ⊕ every candidate == old ⊕ the new urls only
+    new_only = spark.createDataFrame(new_rows, "url string, bucket int")
+    expect_merged = {
+        r.bucket: bytes(r.sketch)
+        for r in merged_sketch_df(old, new_only, **kw).collect()
+    }
+    assert sorted(merged) == [0, 1, 2, 3, 5]
+    assert merged == expect_merged
 
     # the invariant is ENFORCED, not assumed: duplicate sketch rows for
     # one bucket must fail loudly inside the task
-    bad = sk.select("bucket", "sketch").unionByName(
-        sk.select("bucket", "sketch").limit(1)
-    )
-    import pytest as _pytest
-    from py4j.protocol import Py4JJavaError
+    bad = old.unionByName(old.limit(1))
+    with pytest.raises(Exception, match="sketch rows|PythonException"):
+        probe_and_merge_df(cands, bad, **kw).collect()
 
-    with _pytest.raises(Exception, match="sketch rows|PythonException"):
-        maybe_seen_cogrouped(cands, bad).collect()
+
+def test_candidate_pass_is_one_python_pass(spark, tmp_path):
+    """A batch's candidate phase runs exactly one Python pass, the
+    per-bucket cogroup; host and robots exclusions come from the extract
+    UDF.  Links and redirects share it: a redirect row beats a link to
+    the same URL, links sit one level below their page, and a redirect
+    target keeps its page's depth."""
+    import re
+
+    from scrapelect_spark.streaming.crawl import (
+        PROCESS_SCHEMA,
+        Crawler,
+        CrawlConfig,
+    )
+
+    corpus_df = spark.createDataFrame([], "url string, html string")
+    c = Crawler(
+        spark, str(tmp_path / "c"), corpus_df, [("http://a.test/", 1)],
+        config=CrawlConfig(buckets=4, bloom_bits_per_bucket=1 << 12),
+    )
+    c.run(max_batches=0)  # seed commit: sketches, hot state
+    rows = [
+        # (page_url, page_seq, depth, kind, seq, value, host, excluded)
+        ("http://a.test/", 0, 2, "link", 0, "http://b.test/x", "b.test", None),
+        ("http://a.test/", 0, 2, "link", 1, "http://c.test/", "c.test", "robots"),
+        ("http://a.test/", 0, 2, "link", 2, "http://a.test/", "a.test", None),
+        ("http://a.test/", 0, 2, "record", 0, "{}", None, None),
+        ("http://d.test/", 3, 5, "redirect", -1, "http://b.test/x", "b.test", "redirect"),
+        ("http://e.test/", 1, 2, "link", 4, "http://c.test/", "c.test", "robots"),
+    ]
+    processed = spark.createDataFrame(rows, PROCESS_SCHEMA)
+    tagged = c._candidate_pass(processed)
+
+    plan = tagged._jdf.queryExecution().executedPlan().toString()
+    python_nodes = re.findall(r"\w*(?:InPandas|EvalPython|InArrow)\w*", plan)
+    assert python_nodes == ["FlatMapCoGroupsInPandas"], plan
+
+    got = {
+        r.url: (r.depth, r.page_seq, r.link_seq, r.host, r.excluded, r.maybe_seen)
+        for r in tagged.collect()
+        if r.sketch is None
+    }
+    assert got == {
+        "http://b.test/x": (5, 3, -1, "b.test", "redirect", "n"),
+        "http://c.test/": (3, 0, 1, "c.test", "robots", "n"),
+        "http://a.test/": (3, 0, 2, "a.test", None, "y"),  # the seed
+    }
 
 
 def test_sketch_merge_matches_rebuild(spark):
