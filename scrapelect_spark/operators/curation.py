@@ -36,7 +36,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .tables import barrier
+from .tables import barrier, docs, map_rows
 
 
 def curate_image_caption_pairs(
@@ -232,43 +232,23 @@ def curate_pairs_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _curate_synth_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The deterministic input_hint-shaped gate corpus shared by the
     curation-cascade gate and the funnel report."""
-    from .tables import load, spread
 
-    d = spread(load(spark, sf_dir, "documents").filter(F.col("doc_id") < 300))
+    def synth(doc_id):
+        yield {
+            "image_id": doc_id,
+            "bytes": None,
+            "w": 32 + (doc_id % 20) * 16,
+            "h": 64 + (doc_id % 15) * 32,
+            "fmt": "png",
+            "caption": "Tok " * (2 + doc_id % 12) + "grp%d" % (doc_id % 40),
+            "phash": _synth_phash(doc_id),
+            "decode_error": "truncated stream" if doc_id % 17 == 0 else None,
+        }
 
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            n = len(ids)
-            rows = {
-                "image_id": ids,
-                "bytes": pd.Series([None] * n, dtype=object),
-                "w": (32 + (ids % 20) * 16).astype("int32"),
-                "h": (64 + (ids % 15) * 32).astype("int32"),
-                "fmt": pd.Series(["png"] * n, dtype=object),
-                "caption": pd.Series(
-                    [
-                        "Tok " * (2 + int(i) % 12) + "grp%d" % (int(i) % 40)
-                        for i in ids
-                    ],
-                    dtype=object,
-                ),
-                "phash": pd.Series(
-                    [_synth_phash(int(i)) for i in ids], dtype="int64"
-                ),
-                "decode_error": pd.Series(
-                    [
-                        "truncated stream" if int(i) % 17 == 0 else None
-                        for i in ids
-                    ],
-                    dtype=object,
-                ),
-            }
-            yield pd.DataFrame(rows)
-
-    return d.select("doc_id").mapInPandas(
+    return map_rows(
+        docs(spark, sf_dir, 300, "doc_id"),
         synth,
-        schema="image_id long, bytes binary, w int, h int, fmt string, "
+        "image_id long, bytes binary, w int, h int, fmt string, "
         "caption string, phash long, decode_error string",
     )
 
@@ -471,6 +451,19 @@ def extract_anchors(
     return pages.mapInPandas(run, schema=schema)
 
 
+def _pages(spark: SparkSession, sf_dir: str, page) -> DataFrame:
+    """The crawl-extraction gates' input: one ``(url, html)`` page per
+    doc (doc_id < 300), built by ``page(doc_id) -> (url, html)``."""
+
+    def synth(doc_id):
+        url, html = page(doc_id)
+        yield {"url": url, "html": html}
+
+    return map_rows(
+        docs(spark, sf_dir, 300, "doc_id"), synth, "url string, html string"
+    )
+
+
 def crawl_anchor_texts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gate for anchor-text extraction: per doc a page with
     ``1 + doc_id%4`` links whose targets and texts are closed-form
@@ -478,31 +471,22 @@ def crawl_anchor_texts(spark: SparkSession, sf_dir: str) -> DataFrame:
     rel=nofollow (kept as data, unlike the frontier path which drops
     them); one link has nested markup (``<b>``) that must flatten
     into the text."""
-    from .tables import load, spread
 
-    d = spread(load(spark, sf_dir, "documents").filter(F.col("doc_id") < 300))
+    def page(doc_id):
+        links = "".join(
+            '<a href="/t/{i}.html"{rel}>anchor <b>{i}</b> for {d}</a>'
+            .format(
+                i=i, d=doc_id,
+                rel=' rel="nofollow"' if i % 3 == 2 else "",
+            )
+            for i in range(1 + doc_id % 4)
+        )
+        return (
+            f"http://a{doc_id % 8}.test/p/{doc_id}.html",
+            f"<html><body>{links}</body></html>",
+        )
 
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            urls, htmls = [], []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                k = 1 + doc_id % 4
-                links = "".join(
-                    '<a href="/t/{i}.html"{rel}>anchor <b>{i}</b> for {d}</a>'
-                    .format(
-                        i=i, d=doc_id,
-                        rel=' rel="nofollow"' if i % 3 == 2 else "",
-                    )
-                    for i in range(k)
-                )
-                urls.append(f"http://a{doc_id % 8}.test/p/{doc_id}.html")
-                htmls.append(f"<html><body>{links}</body></html>")
-            yield pd.DataFrame({"url": urls, "html": htmls})
-
-    pages = d.select("doc_id").mapInPandas(
-        synth, schema="url string, html string"
-    )
+    pages = _pages(spark, sf_dir, page)
     return extract_anchors(pages).transform(barrier).orderBy("page_url", "seq")
 
 
@@ -598,40 +582,30 @@ def crawl_og_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     RELATIVE og:image that must resolve against the page directory,
     and docs ≡1 (mod 3) additionally a twitter:card; a duplicate
     og:title later in the head must NOT override the first."""
-    from .tables import load, spread
 
-    d = spread(load(spark, sf_dir, "documents").filter(F.col("doc_id") < 300))
-
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            urls, htmls = [], []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                metas = ""
-                if doc_id % 4 != 0:
-                    metas = (
-                        f'<meta property="og:title" content="Title {doc_id}">'
-                        f'<meta property="og:description" '
-                        f'content="Desc {doc_id % 9}">'
-                        f'<meta property="og:image" '
-                        f'content="img/{doc_id}.jpg">'
-                        '<meta property="og:type" content="article">'
-                        '<meta property="og:title" content="LOSER">'
-                    )
-                    if doc_id % 3 == 1:
-                        metas += (
-                            '<meta name="twitter:card" '
-                            'content="summary_large_image">'
-                        )
-                urls.append(f"http://o{doc_id % 8}.test/p/{doc_id}.html")
-                htmls.append(
-                    f"<html><head>{metas}</head><body>x</body></html>"
+    def page(doc_id):
+        metas = ""
+        if doc_id % 4 != 0:
+            metas = (
+                f'<meta property="og:title" content="Title {doc_id}">'
+                f'<meta property="og:description" '
+                f'content="Desc {doc_id % 9}">'
+                f'<meta property="og:image" '
+                f'content="img/{doc_id}.jpg">'
+                '<meta property="og:type" content="article">'
+                '<meta property="og:title" content="LOSER">'
+            )
+            if doc_id % 3 == 1:
+                metas += (
+                    '<meta name="twitter:card" '
+                    'content="summary_large_image">'
                 )
-            yield pd.DataFrame({"url": urls, "html": htmls})
+        return (
+            f"http://o{doc_id % 8}.test/p/{doc_id}.html",
+            f"<html><head>{metas}</head><body>x</body></html>",
+        )
 
-    pages = d.select("doc_id").mapInPandas(
-        synth, schema="url string, html string"
-    )
+    pages = _pages(spark, sf_dir, page)
     return extract_og_meta(pages).transform(barrier).orderBy("page_url")
 
 
@@ -777,54 +751,44 @@ def crawl_jsonld_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     in ``@graph``; docs ≡0 (mod 23) carry malformed JSON that must
     surface as a parse_error row; docs ≡0 (mod 4) have no JSON-LD at
     all (no rows)."""
-    from .tables import load, spread
 
-    d = spread(load(spark, sf_dir, "documents").filter(F.col("doc_id") < 300))
-
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            urls, htmls = [], []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                script = ""
-                if doc_id % 23 == 0:
-                    script = (
-                        '<script type="application/ld+json">'
-                        "{not json</script>"
-                    )
-                elif doc_id % 4 != 0:
-                    img = f"img/{doc_id}.jpg"
-                    if doc_id % 3 == 0:
-                        img_json = f'"{img}"'
-                    elif doc_id % 3 == 1:
-                        img_json = f'["{img}", "ignored.png"]'
-                    else:
-                        img_json = (
-                            '{"@type": "ImageObject", "url": "%s"}' % img
-                        )
-                    node = (
-                        '{"@type": "NewsArticle", '
-                        + f'"headline": "Head {doc_id}", '
-                        + f'"image": {img_json}, '
-                        + f'"datePublished": "2024-0{1 + doc_id % 9}-02", '
-                        + '"author": {"@type": "Person", "name": '
-                        + f'"Writer {doc_id % 7}"' + "}}"
-                    )
-                    if doc_id % 4 == 1:
-                        node = '{"@graph": [%s]}' % node
-                    script = (
-                        f'<script type="application/ld+json">{node}'
-                        "</script>"
-                    )
-                urls.append(f"http://j{doc_id % 8}.test/p/{doc_id}.html")
-                htmls.append(
-                    f"<html><head>{script}</head><body>x</body></html>"
+    def page(doc_id):
+        script = ""
+        if doc_id % 23 == 0:
+            script = (
+                '<script type="application/ld+json">'
+                "{not json</script>"
+            )
+        elif doc_id % 4 != 0:
+            img = f"img/{doc_id}.jpg"
+            if doc_id % 3 == 0:
+                img_json = f'"{img}"'
+            elif doc_id % 3 == 1:
+                img_json = f'["{img}", "ignored.png"]'
+            else:
+                img_json = (
+                    '{"@type": "ImageObject", "url": "%s"}' % img
                 )
-            yield pd.DataFrame({"url": urls, "html": htmls})
+            node = (
+                '{"@type": "NewsArticle", '
+                + f'"headline": "Head {doc_id}", '
+                + f'"image": {img_json}, '
+                + f'"datePublished": "2024-0{1 + doc_id % 9}-02", '
+                + '"author": {"@type": "Person", "name": '
+                + f'"Writer {doc_id % 7}"' + "}}"
+            )
+            if doc_id % 4 == 1:
+                node = '{"@graph": [%s]}' % node
+            script = (
+                f'<script type="application/ld+json">{node}'
+                "</script>"
+            )
+        return (
+            f"http://j{doc_id % 8}.test/p/{doc_id}.html",
+            f"<html><head>{script}</head><body>x</body></html>",
+        )
 
-    pages = d.select("doc_id").mapInPandas(
-        synth, schema="url string, html string"
-    )
+    pages = _pages(spark, sf_dir, page)
     return extract_jsonld(pages).withColumn(
         "failed",
         F.when(F.col("parse_error").isNotNull(), 1).otherwise(0)
@@ -944,39 +908,31 @@ def crawl_microdata(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``meta content`` price, and an ``img itemprop=image`` with a
     RELATIVE src that must base-resolve; docs ≡1 (mod 3) add a
     second top-level item (Person) whose prop must get item_seq 1."""
-    from .tables import load, spread
 
-    d = spread(load(spark, sf_dir, "documents").filter(F.col("doc_id") < 300))
+    def page(doc_id):
+        body = ""
+        if doc_id % 4 != 0:
+            body = (
+                '<div itemscope itemtype='
+                '"https://schema.org/Product">'
+                f'<span itemprop="name">Item <b>{doc_id}</b></span>'
+                f'<meta itemprop="price" content="{doc_id % 50}.99">'
+                f'<img itemprop="image" src="p/{doc_id}.png">'
+                "</div>"
+            )
+            if doc_id % 3 == 1:
+                body += (
+                    '<div itemscope itemtype='
+                    '"https://schema.org/Person">'
+                    f'<span itemprop="name">P {doc_id % 7}</span>'
+                    "</div>"
+                )
+        return (
+            f"http://md{doc_id % 8}.test/s/{doc_id}.html",
+            f"<html><body>{body}</body></html>",
+        )
 
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            urls, htmls = [], []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                body = ""
-                if doc_id % 4 != 0:
-                    body = (
-                        '<div itemscope itemtype='
-                        '"https://schema.org/Product">'
-                        f'<span itemprop="name">Item <b>{doc_id}</b></span>'
-                        f'<meta itemprop="price" content="{doc_id % 50}.99">'
-                        f'<img itemprop="image" src="p/{doc_id}.png">'
-                        "</div>"
-                    )
-                    if doc_id % 3 == 1:
-                        body += (
-                            '<div itemscope itemtype='
-                            '"https://schema.org/Person">'
-                            f'<span itemprop="name">P {doc_id % 7}</span>'
-                            "</div>"
-                        )
-                urls.append(f"http://md{doc_id % 8}.test/s/{doc_id}.html")
-                htmls.append(f"<html><body>{body}</body></html>")
-            yield pd.DataFrame({"url": urls, "html": htmls})
-
-    pages = d.select("doc_id").mapInPandas(
-        synth, schema="url string, html string"
-    )
+    pages = _pages(spark, sf_dir, page)
     return extract_microdata(pages).transform(barrier).orderBy("page_url", "item_seq", "prop")
 
 
@@ -1081,46 +1037,23 @@ def crawl_link_rels(spark: SparkSession, sf_dir: str) -> DataFrame:
     the head must be ignored; docs ≡0 (mod 2) carry
     ``1 + doc_id%3`` hreflang alternates over [en, de, ja], one of
     which (en) is the page itself."""
-    from .tables import load, spread
-
-    d = spread(load(spark, sf_dir, "documents").filter(F.col("doc_id") < 300))
     langs = ["en", "de", "ja"]
 
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            urls, htmls = [], []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                page = f"http://l{doc_id % 8}.test/en/{doc_id}.html"
-                head = ""
-                if doc_id % 3 == 0:
-                    head += f'<link rel="canonical" href="{page}">'
-                else:
-                    head += (
-                        f'<link rel="canonical" '
-                        f'href="/c/{doc_id}">'
-                    )
-                head += '<link rel="canonical" href="/LOSER">'
-                if doc_id % 2 == 0:
-                    for li in range(1 + doc_id % 3):
-                        lang = langs[li]
-                        target = (
-                            page if lang == "en"
-                            else f"/{lang}/{doc_id}.html"
-                        )
-                        head += (
-                            f'<link rel="alternate" hreflang="{lang}" '
-                            f'href="{target}">'
-                        )
-                urls.append(page)
-                htmls.append(
-                    f"<html><head>{head}</head><body>x</body></html>"
+    def page(doc_id):
+        url = f"http://l{doc_id % 8}.test/en/{doc_id}.html"
+        canonical = url if doc_id % 3 == 0 else f"/c/{doc_id}"
+        head = f'<link rel="canonical" href="{canonical}">'
+        head += '<link rel="canonical" href="/LOSER">'
+        if doc_id % 2 == 0:
+            for lang in langs[: 1 + doc_id % 3]:
+                target = url if lang == "en" else f"/{lang}/{doc_id}.html"
+                head += (
+                    f'<link rel="alternate" hreflang="{lang}" '
+                    f'href="{target}">'
                 )
-            yield pd.DataFrame({"url": urls, "html": htmls})
+        return url, f"<html><head>{head}</head><body>x</body></html>"
 
-    pages = d.select("doc_id").mapInPandas(
-        synth, schema="url string, html string"
-    )
+    pages = _pages(spark, sf_dir, page)
     return extract_link_rels(pages).transform(barrier).orderBy(
         "page_url", "rel", "hreflang"
     )
@@ -1168,34 +1101,25 @@ def crawl_image_refs(spark: SparkSession, sf_dir: str) -> DataFrame:
     lazy ``data-src`` image with no alt.  The oracle reproduces every
     resolved URL, alt string, source kind, descriptor, and
     document-order seq in closed form."""
-    from .tables import load, spread
 
-    d = spread(load(spark, sf_dir, "documents").filter(F.col("doc_id") < 300))
+    def page(doc_id):
+        body = "".join(
+            f'<img src="img/{doc_id}_{i}.png" alt="alt {doc_id} {i}">'
+            for i in range(1 + doc_id % 3)
+        )
+        if doc_id % 4 == 0:
+            body += (
+                f'<img alt="ss {doc_id}" '
+                f'srcset="s/{doc_id}_a.png 1x, s/{doc_id}_b.png 2x">'
+            )
+        if doc_id % 5 == 0:
+            body += f'<img data-src="lazy/{doc_id}.png">'
+        return (
+            f"http://d{doc_id % 8}.test/p/{doc_id}.html",
+            f"<html><body>{body}</body></html>",
+        )
 
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            urls, htmls = [], []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                k = 1 + doc_id % 3
-                body = "".join(
-                    f'<img src="img/{doc_id}_{i}.png" alt="alt {doc_id} {i}">'
-                    for i in range(k)
-                )
-                if doc_id % 4 == 0:
-                    body += (
-                        f'<img alt="ss {doc_id}" '
-                        f'srcset="s/{doc_id}_a.png 1x, s/{doc_id}_b.png 2x">'
-                    )
-                if doc_id % 5 == 0:
-                    body += f'<img data-src="lazy/{doc_id}.png">'
-                urls.append(f"http://d{doc_id % 8}.test/p/{doc_id}.html")
-                htmls.append(f"<html><body>{body}</body></html>")
-            yield pd.DataFrame({"url": urls, "html": htmls})
-
-    pages = d.select("doc_id").mapInPandas(
-        synth, schema="url string, html string"
-    )
+    pages = _pages(spark, sf_dir, page)
     return extract_image_refs(pages).transform(barrier).orderBy("page_url", "seq")
 
 
@@ -1449,43 +1373,35 @@ def crawl_table_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     right through the occupancy grid); docs ≡3 (mod 6) nest a 1-cell
     table inside a body cell (own table_seq, and its text also
     flattens into the outer cell)."""
-    from .tables import load, spread
 
-    d = spread(load(spark, sf_dir, "documents").filter(F.col("doc_id") < 300))
+    def page(doc_id):
+        body = ""
+        if doc_id % 5 != 0:
+            rs = ' rowspan="2"' if doc_id % 7 == 2 else ""
+            nested = (
+                f' <table><tr><td>n{doc_id % 9}</td></tr></table>'
+                if doc_id % 6 == 3
+                else ""
+            )
+            rows = (
+                "<tr><th>Name</th><th>Value</th></tr>"
+                f"<tr><td{rs}>a{doc_id} 1</td>"
+                f"<td>b{(doc_id * 1) % 100}{nested}</td></tr>"
+                f"<tr><td>a{doc_id} 2</td>"
+                f"<td>b{(doc_id * 2) % 100}</td></tr>"
+            )
+            if doc_id % 4 == 1:
+                rows += (
+                    f'<tr><td colspan="2">sum {doc_id % 97}'
+                    "</td></tr>"
+                )
+            body = f"<table>{rows}</table>"
+        return (
+            f"http://tb{doc_id % 8}.test/t/{doc_id}.html",
+            f"<html><body>{body}</body></html>",
+        )
 
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            urls, htmls = [], []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                body = ""
-                if doc_id % 5 != 0:
-                    rs = ' rowspan="2"' if doc_id % 7 == 2 else ""
-                    nested = (
-                        f' <table><tr><td>n{doc_id % 9}</td></tr></table>'
-                        if doc_id % 6 == 3
-                        else ""
-                    )
-                    rows = (
-                        "<tr><th>Name</th><th>Value</th></tr>"
-                        f"<tr><td{rs}>a{doc_id} 1</td>"
-                        f"<td>b{(doc_id * 1) % 100}{nested}</td></tr>"
-                        f"<tr><td>a{doc_id} 2</td>"
-                        f"<td>b{(doc_id * 2) % 100}</td></tr>"
-                    )
-                    if doc_id % 4 == 1:
-                        rows += (
-                            f'<tr><td colspan="2">sum {doc_id % 97}'
-                            "</td></tr>"
-                        )
-                    body = f"<table>{rows}</table>"
-                urls.append(f"http://tb{doc_id % 8}.test/t/{doc_id}.html")
-                htmls.append(f"<html><body>{body}</body></html>")
-            yield pd.DataFrame({"url": urls, "html": htmls})
-
-    pages = d.select("doc_id").mapInPandas(
-        synth, schema="url string, html string"
-    )
+    pages = _pages(spark, sf_dir, page)
     return extract_tables(pages).transform(barrier).orderBy(
         "page_url", "table_seq", "row_idx", "col_idx"
     )
@@ -1620,37 +1536,27 @@ def corpus_html_sections(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs ≡2 (mod 5) add a second h1 that must RESET the title path;
     docs ≡3 (mod 11) make the first h2 body empty (an empty-text
     section row, kept because the heading exists)."""
-    from .tables import load, spread
 
-    d = spread(load(spark, sf_dir, "documents").filter(F.col("doc_id") < 300))
+    def page(doc_id):
+        b = []
+        if doc_id % 3 == 0:
+            b.append(f"<p>pre {doc_id % 13}</p>")
+        b.append(f"<h1>T{doc_id % 50}</h1><p>body {doc_id % 17}</p>")
+        if doc_id % 2 == 1:
+            first = (
+                "" if doc_id % 11 == 3
+                else f"<p>s1 {doc_id % 19}</p>"
+            )
+            b.append(f"<h2>S1</h2>{first}")
+            b.append(f"<h2>S2 {doc_id % 7}</h2><p>s2 body</p>")
+        if doc_id % 5 == 2:
+            b.append(f"<h1>U{doc_id % 23}</h1><p>u body</p>")
+        return (
+            f"http://sec{doc_id % 8}.test/d/{doc_id}.html",
+            "<html><body>" + "".join(b) + "</body></html>",
+        )
 
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            urls, htmls = [], []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                b = []
-                if doc_id % 3 == 0:
-                    b.append(f"<p>pre {doc_id % 13}</p>")
-                b.append(f"<h1>T{doc_id % 50}</h1><p>body {doc_id % 17}</p>")
-                if doc_id % 2 == 1:
-                    first = (
-                        "" if doc_id % 11 == 3
-                        else f"<p>s1 {doc_id % 19}</p>"
-                    )
-                    b.append(f"<h2>S1</h2>{first}")
-                    b.append(f"<h2>S2 {doc_id % 7}</h2><p>s2 body</p>")
-                if doc_id % 5 == 2:
-                    b.append(f"<h1>U{doc_id % 23}</h1><p>u body</p>")
-                urls.append(f"http://sec{doc_id % 8}.test/d/{doc_id}.html")
-                htmls.append(
-                    "<html><body>" + "".join(b) + "</body></html>"
-                )
-            yield pd.DataFrame({"url": urls, "html": htmls})
-
-    pages = d.select("doc_id").mapInPandas(
-        synth, schema="url string, html string"
-    )
+    pages = _pages(spark, sf_dir, page)
     return extract_sections(pages).transform(barrier).orderBy("page_url", "section_seq")
 
 
@@ -1803,51 +1709,41 @@ def corpus_html_markdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     ≡2 (mod 3) an ordered list (numbering check), ≡3 (mod 5) a
     blockquote + inline code, ≡4 (mod 7) an image and a pre block
     (fence check); a script tag is always planted and must vanish."""
-    from .tables import load, spread
 
-    d = spread(load(spark, sf_dir, "documents").filter(F.col("doc_id") < 300))
+    def page(doc_id):
+        b = [
+            f"<h2>Title {doc_id % 40}</h2>",
+            f"<p>Intro <b>bold{doc_id % 9}</b> and "
+            f'<a href="/l/{doc_id % 11}">link text</a>.</p>',
+            "<script>var x = 1;</script>",
+        ]
+        if doc_id % 2 == 1:
+            b.append(
+                f"<ul><li>alpha {doc_id % 5}</li>"
+                "<li>beta</li></ul>"
+            )
+        if doc_id % 3 == 2:
+            b.append(
+                "<ol><li>first</li><li>second "
+                f"{doc_id % 13}</li></ol>"
+            )
+        if doc_id % 5 == 3:
+            b.append(
+                f"<blockquote>quoted {doc_id % 17}</blockquote>"
+                "<p>Use <code>run()</code> here.</p>"
+            )
+        if doc_id % 7 == 4:
+            b.append(
+                f'<p><img src="i/{doc_id}.png" alt="pic '
+                f'{doc_id % 3}"></p>'
+                f"<pre>line {doc_id % 19}</pre>"
+            )
+        return (
+            f"http://md{doc_id % 8}.test/m/{doc_id}.html",
+            "<html><body>" + "".join(b) + "</body></html>",
+        )
 
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            urls, htmls = [], []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                b = [
-                    f"<h2>Title {doc_id % 40}</h2>",
-                    f"<p>Intro <b>bold{doc_id % 9}</b> and "
-                    f'<a href="/l/{doc_id % 11}">link text</a>.</p>',
-                    "<script>var x = 1;</script>",
-                ]
-                if doc_id % 2 == 1:
-                    b.append(
-                        f"<ul><li>alpha {doc_id % 5}</li>"
-                        "<li>beta</li></ul>"
-                    )
-                if doc_id % 3 == 2:
-                    b.append(
-                        "<ol><li>first</li><li>second "
-                        f"{doc_id % 13}</li></ol>"
-                    )
-                if doc_id % 5 == 3:
-                    b.append(
-                        f"<blockquote>quoted {doc_id % 17}</blockquote>"
-                        "<p>Use <code>run()</code> here.</p>"
-                    )
-                if doc_id % 7 == 4:
-                    b.append(
-                        f'<p><img src="i/{doc_id}.png" alt="pic '
-                        f'{doc_id % 3}"></p>'
-                        f"<pre>line {doc_id % 19}</pre>"
-                    )
-                urls.append(f"http://md{doc_id % 8}.test/m/{doc_id}.html")
-                htmls.append(
-                    "<html><body>" + "".join(b) + "</body></html>"
-                )
-            yield pd.DataFrame({"url": urls, "html": htmls})
-
-    pages = d.select("doc_id").mapInPandas(
-        synth, schema="url string, html string"
-    )
+    pages = _pages(spark, sf_dir, page)
     return html_to_markdown(pages).transform(barrier).orderBy("page_url")
 
 

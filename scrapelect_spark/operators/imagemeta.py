@@ -26,7 +26,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .tables import barrier
+from .tables import barrier, docs, map_rows
 
 
 def extract_exif(
@@ -148,6 +148,22 @@ def _phash_image(doc_id: int) -> np.ndarray:
     return _phash_base(doc_id)
 
 
+def _phash_hashes(spark, sf_dir: str) -> DataFrame:
+    """(doc_id, phash) for the ``_phash_image`` corpus (doc_id < 200),
+    each image taken through an encode→decode round of the real PNG
+    path so the gates cover the pixels-in-bytes plumbing, not just
+    in-memory arrays."""
+    from ..sources.png import decode_png, encode_png, phash64
+
+    def synth_hash(doc_id):
+        arr = decode_png(encode_png(_phash_image(doc_id)))
+        yield {"doc_id": doc_id, "phash": phash64(arr)}
+
+    return map_rows(
+        docs(spark, sf_dir, 200, "doc_id"), synth_hash, "doc_id long, phash long"
+    )
+
+
 def image_phash_neardup(spark, sf_dir: str) -> DataFrame:
     """Gate for perceptual image near-dedup: synthesize one PNG per
     doc (docs ≡6 mod 10 are Hamming-2 near-copies of their
@@ -156,27 +172,7 @@ def image_phash_neardup(spark, sf_dir: str) -> DataFrame:
     Expected output is exactly the built-in pairs — banding must not
     lose them (pigeonhole) and the 17+-bit separation of unrelated
     docs must not add any."""
-    from .tables import load, spread
-    from ..sources.png import decode_png, encode_png, phash64
-
-    d = spread(load(spark, sf_dir, "documents").filter(F.col("doc_id") < 200))
-
-    def synth_hash(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, hashes = [], []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                # encode→decode round through the real PNG path so the
-                # gate covers the pixels-in-bytes plumbing, not just
-                # in-memory arrays
-                arr = decode_png(encode_png(_phash_image(doc_id)))
-                ids.append(doc_id)
-                hashes.append(phash64(arr))
-            yield pd.DataFrame({"doc_id": ids, "phash": hashes})
-
-    hashed = d.select("doc_id").mapInPandas(
-        synth_hash, schema="doc_id long, phash long"
-    )
+    hashed = _phash_hashes(spark, sf_dir)
     return phash_neardup(hashed, max_hamming=7).transform(barrier).orderBy("doc_a", "doc_b")
 
 
@@ -196,41 +192,31 @@ def image_exif_extract(spark, sf_dir: str) -> DataFrame:
     tags distributed, and project them next to ``failed``.  Docs ≡0
     mod 10 carry NO EXIF segment and must surface as per-row
     ``failed=1`` (error capture, not batch death)."""
-    from .tables import load, spread
     from ..sources import exif as E
     from ..sources.jpeg import encode_jpeg
 
-    d = spread(load(spark, sf_dir, "documents").filter(F.col("doc_id") < 200))
-
     base_jpeg = encode_jpeg(np.full((16, 16, 3), 120, np.uint8))
 
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, blobs = [], []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                ids.append(str(doc_id))
-                if doc_id % 10 == 0:
-                    blobs.append(base_jpeg)
-                    continue
-                fields = {
-                    E.TAG_MAKE: f"CamCo {doc_id % 5}",
-                    E.TAG_MODEL: f"M-{doc_id % 13}",
-                    E.TAG_ORIENTATION: 1 + doc_id % 8,
-                    E.TAG_ISO: 100 * (1 + doc_id % 32),
-                    E.TAG_PIXEL_X: 64 + (doc_id % 7) * 16,
-                    E.TAG_PIXEL_Y: 48 + (doc_id % 3) * 16,
-                    E.TAG_EXPOSURE_TIME: (1, 125 * (1 + doc_id % 4)),
-                    E.TAG_DATETIME: "2021:05:06 07:08:09",
-                }
-                bo = "II" if doc_id % 2 == 0 else "MM"
-                blobs.append(
-                    E.insert_exif_jpeg(base_jpeg, E.build_tiff(fields, bo))
-                )
-            yield pd.DataFrame({"image_id": ids, "bytes": blobs})
+    def synth(doc_id):
+        if doc_id % 10 == 0:
+            yield {"image_id": str(doc_id), "bytes": base_jpeg}
+            return
+        fields = {
+            E.TAG_MAKE: f"CamCo {doc_id % 5}",
+            E.TAG_MODEL: f"M-{doc_id % 13}",
+            E.TAG_ORIENTATION: 1 + doc_id % 8,
+            E.TAG_ISO: 100 * (1 + doc_id % 32),
+            E.TAG_PIXEL_X: 64 + (doc_id % 7) * 16,
+            E.TAG_PIXEL_Y: 48 + (doc_id % 3) * 16,
+            E.TAG_EXPOSURE_TIME: (1, 125 * (1 + doc_id % 4)),
+            E.TAG_DATETIME: "2021:05:06 07:08:09",
+        }
+        bo = "II" if doc_id % 2 == 0 else "MM"
+        blob = E.insert_exif_jpeg(base_jpeg, E.build_tiff(fields, bo))
+        yield {"image_id": str(doc_id), "bytes": blob}
 
-    images = d.select("doc_id").mapInPandas(
-        synth, schema="image_id string, bytes binary"
+    images = map_rows(
+        docs(spark, sf_dir, 200, "doc_id"), synth, "image_id string, bytes binary"
     )
     meta = extract_exif(images)
     return (
@@ -286,33 +272,19 @@ def image_dctphash_neardup(spark, sf_dir: str) -> DataFrame:
     unrelated docs ≥ 18, so the ≤7 band-join bound is exact with wide
     slack.  Same skew-guarded banded bucket-join 100-TB shape as
     ``image_phash_neardup``."""
-    from .tables import load, spread
     from ..sources.jpeg import decode_jpeg, encode_jpeg
     from ..sources.png import dct_phash64
 
-    d = spread(load(spark, sf_dir, "documents").filter(F.col("doc_id") < 200))
+    def synth_hash(doc_id):
+        if doc_id % 10 == 7:
+            re = decode_jpeg(encode_jpeg(_phash_base(doc_id - 1), quality=35))
+            img = re.reshape(16, 2, 16, 2, 3).mean(axis=(1, 3)).astype(np.uint8)
+        else:
+            img = _phash_base(doc_id)
+        yield {"doc_id": doc_id, "phash": dct_phash64(img)}
 
-    def synth_hash(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, hashes = [], []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                if doc_id % 10 == 7:
-                    src = _phash_base(doc_id - 1)
-                    re = decode_jpeg(encode_jpeg(src, quality=35))
-                    img = (
-                        re.reshape(16, 2, 16, 2, 3)
-                        .mean(axis=(1, 3))
-                        .astype(np.uint8)
-                    )
-                else:
-                    img = _phash_base(doc_id)
-                ids.append(doc_id)
-                hashes.append(dct_phash64(img))
-            yield pd.DataFrame({"doc_id": ids, "phash": hashes})
-
-    hashed = d.select("doc_id").mapInPandas(
-        synth_hash, schema="doc_id long, phash long"
+    hashed = map_rows(
+        docs(spark, sf_dir, 200, "doc_id"), synth_hash, "doc_id long, phash long"
     )
     return phash_neardup(hashed, max_hamming=7).transform(barrier).orderBy("doc_a", "doc_b")
 
@@ -365,11 +337,8 @@ def image_jpeg_quality(spark, sf_dir: str) -> DataFrame:
     assert the exact inverse SQL-side.  Docs ≡0 mod 10 get a PNG
     blob instead and must surface as ``failed=1`` (per-row error
     capture on a non-JPEG input)."""
-    from .tables import load, spread
-    from ..sources.jpeg import encode_jpeg
+    from ..sources.jpeg import encode_jpeg, estimate_jpeg_quality
     from ..sources.png import encode_png
-
-    d = spread(load(spark, sf_dir, "documents").filter(F.col("doc_id") < 200))
 
     base = np.indices((24, 24)).sum(0).astype(np.int64)
     img = np.stack(
@@ -377,38 +346,20 @@ def image_jpeg_quality(spark, sf_dir: str) -> DataFrame:
          255 - np.minimum(base * 5, 255)], axis=-1
     ).astype(np.uint8)
 
-    def synth_estimate(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..sources.jpeg import estimate_jpeg_quality
+    def synth_estimate(doc_id):
+        if doc_id % 10 == 0:
+            blob = encode_png(img)
+        else:
+            blob = encode_jpeg(img, quality=20 + (doc_id % 17) * 5)
+        yield {"doc_id": doc_id, "quality": estimate_jpeg_quality(blob)}
 
-        for pdf in batches:
-            ids, qs, failed = [], [], []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                ids.append(doc_id)
-                if doc_id % 10 == 0:
-                    blob = encode_png(img)
-                else:
-                    blob = encode_jpeg(
-                        img, quality=20 + (doc_id % 17) * 5
-                    )
-                try:
-                    qs.append(estimate_jpeg_quality(blob))
-                    failed.append(0)
-                except Exception:
-                    qs.append(-1)
-                    failed.append(1)
-            yield pd.DataFrame(
-                {"doc_id": ids, "quality": qs, "failed": failed}
-            )
-
-    return (
-        d.select("doc_id")
-        .mapInPandas(
-            synth_estimate,
-            schema="doc_id long, quality long, failed long",
-        )
-        .transform(barrier).orderBy("doc_id")
-    )
+    return map_rows(
+        docs(spark, sf_dir, 200, "doc_id"),
+        synth_estimate,
+        "doc_id long, quality long, failed long",
+        errors=(ValueError,),
+        on_error={"quality": -1},
+    ).transform(barrier).orderBy("doc_id")
 
 
 _JPEG_QUALITY_SQL = """
@@ -488,6 +439,29 @@ def pixel_stats(
     return images.mapInPandas(run, schema=schema)
 
 
+def _stats_pngs(spark, sf_dir: str, picture) -> DataFrame:
+    """The pixel-statistics gates' input: per doc (doc_id < 300) one
+    PNG of ``picture(doc_id)`` (a 2-D gray plane is stacked to RGB).
+    Docs ≡0 (mod 23) get the stream truncated to half, which the
+    statistics operator must error-capture."""
+    from ..sources.png import encode_png
+
+    def synth(doc_id):
+        img = picture(doc_id)
+        if img.ndim == 2:
+            img = np.stack([img, img, img], axis=-1)
+        blob = encode_png(img)
+        if doc_id % 23 == 0:
+            blob = blob[: len(blob) // 2]  # truncated stream
+        yield {"image_id": doc_id, "bytes": blob, "fmt": "png"}
+
+    return map_rows(
+        docs(spark, sf_dir, 300, "doc_id"),
+        synth,
+        "image_id long, bytes binary, fmt string",
+    )
+
+
 def image_pixel_stats(spark, sf_dir: str) -> DataFrame:
     """Gate for exact pixel statistics: per doc synthesize a real PNG —
     docs ≡0 (mod 3) SOLID gray ``doc_id % 256`` at 64x32 (luma_sum =
@@ -499,37 +473,14 @@ def image_pixel_stats(spark, sf_dir: str) -> DataFrame:
     (mod 23) get truncated bytes and must error-capture.  The oracle
     reproduces every number in closed form — the decode path has no
     tolerance to hide in."""
-    from .tables import load, spread
-    from ..sources.png import encode_png
 
-    d = spread(load(spark, sf_dir, "documents").filter(F.col("doc_id") < 300))
+    def picture(doc_id):
+        if doc_id % 3 == 0:
+            return np.full((32, 64), doc_id % 256, dtype=np.uint8)
+        col = ((doc_id * 7 + np.arange(256)) % 256).astype(np.uint8)
+        return np.repeat(col[:, None], 16 + (doc_id % 8) * 4, axis=1)
 
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, blobs, fmts = [], [], []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                if doc_id % 3 == 0:
-                    g = np.full((32, 64), doc_id % 256, dtype=np.uint8)
-                else:
-                    w = 16 + (doc_id % 8) * 4
-                    col = ((doc_id * 7 + np.arange(256)) % 256).astype(
-                        np.uint8
-                    )
-                    g = np.repeat(col[:, None], w, axis=1)
-                blob = encode_png(np.stack([g, g, g], axis=-1))
-                if doc_id % 23 == 0:
-                    blob = blob[: len(blob) // 2]  # truncated stream
-                ids.append(doc_id)
-                blobs.append(blob)
-                fmts.append("png")
-            yield pd.DataFrame(
-                {"image_id": ids, "bytes": blobs, "fmt": fmts}
-            )
-
-    images = d.select("doc_id").mapInPandas(
-        synth, schema="image_id long, bytes binary, fmt string"
-    )
+    images = _stats_pngs(spark, sf_dir, picture)
     return pixel_stats(images).transform(barrier).orderBy("image_id")
 
 
@@ -650,44 +601,18 @@ def image_sharpness_stats(spark, sf_dir: str) -> DataFrame:
     gray values (a = doc_id-dependent) shift per doc but cancel out of
     the Laplacian — the oracle reproduces every number in closed form,
     so the decode+stencil path has no tolerance to hide in."""
-    from .tables import load, spread
-    from ..sources.png import encode_png
 
-    d = spread(load(spark, sf_dir, "documents").filter(F.col("doc_id") < 300))
+    def picture(doc_id):
+        h, w = 32, 16 + (doc_id % 8) * 4
+        if doc_id % 3 == 0:
+            return np.full((h, 64), doc_id % 256, dtype=np.uint8)
+        if doc_id % 3 == 1:
+            ij = np.add.outer(np.arange(h), np.arange(w)) % 2
+            return (doc_id % 128 + ij * 96).astype(np.uint8)
+        rows = (np.arange(h) % 2) * 64 + doc_id % 160
+        return np.repeat(rows.astype(np.uint8)[:, None], w, axis=1)
 
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, blobs, fmts = [], [], []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                h = 32
-                if doc_id % 3 == 0:
-                    g = np.full((h, 64), doc_id % 256, dtype=np.uint8)
-                elif doc_id % 3 == 1:
-                    w = 16 + (doc_id % 8) * 4
-                    a = doc_id % 128
-                    ij = np.add.outer(np.arange(h), np.arange(w)) % 2
-                    g = (a + ij * 96).astype(np.uint8)
-                else:
-                    w = 16 + (doc_id % 8) * 4
-                    a = doc_id % 160
-                    rows = (np.arange(h) % 2) * 64 + a
-                    g = np.repeat(
-                        rows.astype(np.uint8)[:, None], w, axis=1
-                    )
-                blob = encode_png(np.stack([g, g, g], axis=-1))
-                if doc_id % 23 == 0:
-                    blob = blob[: len(blob) // 2]  # truncated stream
-                ids.append(doc_id)
-                blobs.append(blob)
-                fmts.append("png")
-            yield pd.DataFrame(
-                {"image_id": ids, "bytes": blobs, "fmt": fmts}
-            )
-
-    images = d.select("doc_id").mapInPandas(
-        synth, schema="image_id long, bytes binary, fmt string"
-    )
+    images = _stats_pngs(spark, sf_dir, picture)
     return laplacian_stats(images).transform(barrier).orderBy("image_id")
 
 
@@ -729,24 +654,8 @@ def image_phash_clusters(spark, sf_dir: str) -> DataFrame:
     verify → O(log n) star-contraction CC → one broadcast-ready label
     join back; the corpus is never self-joined all-pairs."""
     from .dedup import connected_components
-    from .tables import load, spread
-    from ..sources.png import decode_png, encode_png, phash64
 
-    d = spread(load(spark, sf_dir, "documents").filter(F.col("doc_id") < 200))
-
-    def synth_hash(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, hashes = [], []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                arr = decode_png(encode_png(_phash_image(doc_id)))
-                ids.append(doc_id)
-                hashes.append(phash64(arr))
-            yield pd.DataFrame({"doc_id": ids, "phash": hashes})
-
-    hashed = d.select("doc_id").mapInPandas(
-        synth_hash, schema="doc_id long, phash long"
-    ).transform(barrier)
+    hashed = _phash_hashes(spark, sf_dir).transform(barrier)
     edges = phash_neardup(hashed, max_hamming=7).select(
         F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
     )
@@ -863,46 +772,20 @@ def image_color_stats(spark, sf_dir: str) -> DataFrame:
 
     Docs ≡0 (mod 23) get truncated bytes and must error-capture.  The
     oracle reproduces every number in closed form."""
-    from .tables import load, spread
-    from ..sources.png import encode_png
 
-    d = spread(load(spark, sf_dir, "documents").filter(F.col("doc_id") < 300))
+    def picture(doc_id):
+        h, w = 32, 16 + (doc_id % 8) * 4
+        if doc_id % 3 == 0:
+            return np.full((h, 64), doc_id % 256, dtype=np.uint8)
+        img = np.empty((h, w, 3), dtype=np.uint8)
+        if doc_id % 3 == 1:
+            img[:, :] = (doc_id % 128 + 64, doc_id % 64, doc_id % 32)
+        else:
+            img[:, : w // 2, :] = doc_id % 256
+            img[:, w // 2:] = (200, 100, 0)
+        return img
 
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, blobs, fmts = [], [], []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                h = 32
-                if doc_id % 3 == 0:
-                    g = np.full((h, 64), doc_id % 256, dtype=np.uint8)
-                    img = np.stack([g, g, g], axis=-1)
-                elif doc_id % 3 == 1:
-                    w = 16 + (doc_id % 8) * 4
-                    img = np.empty((h, w, 3), dtype=np.uint8)
-                    img[:, :, 0] = doc_id % 128 + 64
-                    img[:, :, 1] = doc_id % 64
-                    img[:, :, 2] = doc_id % 32
-                else:
-                    w = 16 + (doc_id % 8) * 4
-                    img = np.empty((h, w, 3), dtype=np.uint8)
-                    img[:, : w // 2, :] = doc_id % 256
-                    img[:, w // 2:, 0] = 200
-                    img[:, w // 2:, 1] = 100
-                    img[:, w // 2:, 2] = 0
-                blob = encode_png(img)
-                if doc_id % 23 == 0:
-                    blob = blob[: len(blob) // 2]  # truncated stream
-                ids.append(doc_id)
-                blobs.append(blob)
-                fmts.append("png")
-            yield pd.DataFrame(
-                {"image_id": ids, "bytes": blobs, "fmt": fmts}
-            )
-
-    images = d.select("doc_id").mapInPandas(
-        synth, schema="image_id long, bytes binary, fmt string"
-    )
+    images = _stats_pngs(spark, sf_dir, picture)
     return color_stats(images).transform(barrier).orderBy("image_id")
 
 
@@ -1038,44 +921,24 @@ def image_border_stats(spark, sf_dir: str) -> DataFrame:
       down each column).
 
     Docs ≡0 (mod 23) get truncated bytes and must error-capture."""
-    from .tables import load, spread
-    from ..sources.png import encode_png
 
-    d = spread(load(spark, sf_dir, "documents").filter(F.col("doc_id") < 300))
+    def picture(doc_id):
+        h, w = 32, 16 + (doc_id % 8) * 4
+        if doc_id % 3 == 0:
+            return np.full((h, 64), doc_id % 256, dtype=np.uint8)
+        if doc_id % 3 == 1:
+            grad = ((np.arange(w) + 7) % 250 + 5).astype(np.uint8)
+            g = np.repeat(grad[None, :], h, axis=0)
+            g[:3, :] = 0
+            g[-5:, :] = 0
+        else:
+            ramp = ((np.arange(h) + 3) % 250 + 1).astype(np.uint8)
+            g = np.repeat(ramp[:, None], w, axis=1)
+            g[:, :2] = 255
+            g[:, -4:] = 255
+        return g
 
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, blobs, fmts = [], [], []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                h = 32
-                if doc_id % 3 == 0:
-                    g = np.full((h, 64), doc_id % 256, dtype=np.uint8)
-                elif doc_id % 3 == 1:
-                    w = 16 + (doc_id % 8) * 4
-                    grad = ((np.arange(w) + 7) % 250 + 5).astype(np.uint8)
-                    g = np.repeat(grad[None, :], h, axis=0).copy()
-                    g[:3, :] = 0
-                    g[-5:, :] = 0
-                else:
-                    w = 16 + (doc_id % 8) * 4
-                    ramp = ((np.arange(h) + 3) % 250 + 1).astype(np.uint8)
-                    g = np.repeat(ramp[:, None], w, axis=1).copy()
-                    g[:, :2] = 255
-                    g[:, -4:] = 255
-                blob = encode_png(np.stack([g, g, g], axis=-1))
-                if doc_id % 23 == 0:
-                    blob = blob[: len(blob) // 2]  # truncated stream
-                ids.append(doc_id)
-                blobs.append(blob)
-                fmts.append("png")
-            yield pd.DataFrame(
-                {"image_id": ids, "bytes": blobs, "fmt": fmts}
-            )
-
-    images = d.select("doc_id").mapInPandas(
-        synth, schema="image_id long, bytes binary, fmt string"
-    )
+    images = _stats_pngs(spark, sf_dir, picture)
     return border_stats(images).transform(barrier).orderBy("image_id")
 
 
@@ -1205,39 +1068,25 @@ def image_autorotate(spark, sf_dir: str) -> DataFrame:
     — and dims swap exactly for orientations 5-8.  Docs ≡0 (mod 10)
     carry no EXIF (→ orientation 1, no rotation); docs ≡0 (mod 23)
     are truncated and must error-capture."""
-    from .tables import load, spread
     from ..sources import exif as E
     from ..sources.jpeg import encode_jpeg
-
-    d = spread(load(spark, sf_dir, "documents").filter(F.col("doc_id") < 240))
 
     base = np.full((32, 48, 3), 40, np.uint8)
     base[:16, :24] = 220
     base_jpeg = encode_jpeg(base)
 
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, blobs = [], []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                if doc_id % 10 == 0:
-                    blob = base_jpeg
-                else:
-                    bo = "II" if doc_id % 2 == 0 else "MM"
-                    blob = E.insert_exif_jpeg(
-                        base_jpeg,
-                        E.build_tiff(
-                            {E.TAG_ORIENTATION: 1 + doc_id % 8}, bo
-                        ),
-                    )
-                if doc_id % 23 == 0:
-                    blob = blob[: len(blob) // 2]
-                ids.append(doc_id)
-                blobs.append(blob)
-            yield pd.DataFrame({"image_id": ids, "bytes": blobs})
+    def synth(doc_id):
+        blob = base_jpeg
+        if doc_id % 10 != 0:
+            bo = "II" if doc_id % 2 == 0 else "MM"
+            tiff = E.build_tiff({E.TAG_ORIENTATION: 1 + doc_id % 8}, bo)
+            blob = E.insert_exif_jpeg(base_jpeg, tiff)
+        if doc_id % 23 == 0:
+            blob = blob[: len(blob) // 2]
+        yield {"image_id": doc_id, "bytes": blob}
 
-    images = d.select("doc_id").mapInPandas(
-        synth, schema="image_id long, bytes binary"
+    images = map_rows(
+        docs(spark, sf_dir, 240, "doc_id"), synth, "image_id long, bytes binary"
     )
     return autorotate_stats(images).transform(barrier).orderBy("image_id")
 
@@ -1275,87 +1124,66 @@ def image_exif_gps_scrub(spark, sf_dir: str) -> DataFrame:
     carry no EXIF at all.  Scrub distributed, then verify: GPS gone,
     the OTHER tags preserved, and the compressed pixels byte-identical
     (the scrub must rewrite only the APP1 segment)."""
-    from .tables import load, spread
     from ..sources import exif as E
     from ..sources.jpeg import encode_jpeg
 
-    d = spread(load(spark, sf_dir, "documents").filter(F.col("doc_id") < 200))
-
     base_jpeg = encode_jpeg(np.full((16, 16, 3), 135, np.uint8))
 
-    def synth_scrub(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in (
-                "doc_id", "had_gps", "gps_after", "tags_kept", "pixels_same",
-            )}
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                bo = "II" if doc_id % 2 == 0 else "MM"
-                if doc_id % 10 == 0:
-                    blob = base_jpeg
-                    expect_make = None
-                else:
-                    fields = {
-                        E.TAG_MAKE: f"CamCo {doc_id % 5}",
-                        E.TAG_MODEL: f"M-{doc_id % 13}",
-                        E.TAG_ORIENTATION: 1 + doc_id % 8,
-                        E.TAG_ISO: 100 * (1 + doc_id % 32),
-                    }
-                    if doc_id % 3 != 0:
-                        fields.update({
-                            E.GPS_KEY_BASE | E.TAG_GPS_LAT_REF:
-                                "N" if doc_id % 2 == 0 else "S",
-                            E.GPS_KEY_BASE | E.TAG_GPS_LAT: (
-                                (doc_id % 90, 1), (doc_id % 60, 1),
-                                (100 * (doc_id % 6000), 100),
-                            ),
-                            E.GPS_KEY_BASE | E.TAG_GPS_LON_REF:
-                                "E" if doc_id % 4 < 2 else "W",
-                            E.GPS_KEY_BASE | E.TAG_GPS_LON: (
-                                (doc_id % 180, 1), ((doc_id * 7) % 60, 1),
-                                (100 * ((doc_id * 11) % 6000), 100),
-                            ),
-                        })
-                    blob = E.insert_exif_jpeg(
-                        base_jpeg, E.build_tiff(fields, bo)
-                    )
-                    expect_make = fields[E.TAG_MAKE]
-                scrubbed, had = E.scrub_gps_jpeg(blob, bo)
-                try:
-                    back = E.parse_exif_jpeg(scrubbed)
-                except ValueError:
-                    back = {}
-                gps_after = any(t >= E.GPS_KEY_BASE for t in back)
-                kept = (
-                    1
-                    if expect_make is None
-                    or (
-                        back.get(E.TAG_MAKE) == expect_make
-                        and back.get(E.TAG_ORIENTATION) == 1 + doc_id % 8
-                        and back.get(E.TAG_ISO) == 100 * (1 + doc_id % 32)
-                    )
-                    else 0
-                )
-                # image data must be untouched: compare from SOS on
-                sos = blob.find(b"\xff\xda")
-                sos2 = scrubbed.find(b"\xff\xda")
-                same = 1 if blob[sos:] == scrubbed[sos2:] else 0
-                out["doc_id"].append(doc_id)
-                out["had_gps"].append(1 if had else 0)
-                out["gps_after"].append(1 if gps_after else 0)
-                out["tags_kept"].append(kept)
-                out["pixels_same"].append(same)
-            yield pd.DataFrame(out)
-
-    return (
-        d.select("doc_id")
-        .mapInPandas(
-            synth_scrub,
-            schema="doc_id long, had_gps long, gps_after long, "
-            "tags_kept long, pixels_same long",
+    def synth_scrub(doc_id):
+        bo = "II" if doc_id % 2 == 0 else "MM"
+        if doc_id % 10 == 0:
+            blob = base_jpeg
+            expect_make = None
+        else:
+            fields = {
+                E.TAG_MAKE: f"CamCo {doc_id % 5}",
+                E.TAG_MODEL: f"M-{doc_id % 13}",
+                E.TAG_ORIENTATION: 1 + doc_id % 8,
+                E.TAG_ISO: 100 * (1 + doc_id % 32),
+            }
+            if doc_id % 3 != 0:
+                fields.update({
+                    E.GPS_KEY_BASE | E.TAG_GPS_LAT_REF:
+                        "N" if doc_id % 2 == 0 else "S",
+                    E.GPS_KEY_BASE | E.TAG_GPS_LAT: (
+                        (doc_id % 90, 1), (doc_id % 60, 1),
+                        (100 * (doc_id % 6000), 100),
+                    ),
+                    E.GPS_KEY_BASE | E.TAG_GPS_LON_REF:
+                        "E" if doc_id % 4 < 2 else "W",
+                    E.GPS_KEY_BASE | E.TAG_GPS_LON: (
+                        (doc_id % 180, 1), ((doc_id * 7) % 60, 1),
+                        (100 * ((doc_id * 11) % 6000), 100),
+                    ),
+                })
+            blob = E.insert_exif_jpeg(base_jpeg, E.build_tiff(fields, bo))
+            expect_make = fields[E.TAG_MAKE]
+        scrubbed, had = E.scrub_gps_jpeg(blob, bo)
+        try:
+            back = E.parse_exif_jpeg(scrubbed)
+        except ValueError:
+            back = {}
+        kept = expect_make is None or (
+            back.get(E.TAG_MAKE) == expect_make
+            and back.get(E.TAG_ORIENTATION) == 1 + doc_id % 8
+            and back.get(E.TAG_ISO) == 100 * (1 + doc_id % 32)
         )
-        .transform(barrier).orderBy("doc_id")
-    )
+        # image data must be untouched: compare from SOS on
+        sos = blob.find(b"\xff\xda")
+        sos2 = scrubbed.find(b"\xff\xda")
+        yield {
+            "doc_id": doc_id,
+            "had_gps": 1 if had else 0,
+            "gps_after": 1 if any(t >= E.GPS_KEY_BASE for t in back) else 0,
+            "tags_kept": 1 if kept else 0,
+            "pixels_same": 1 if blob[sos:] == scrubbed[sos2:] else 0,
+        }
+
+    return map_rows(
+        docs(spark, sf_dir, 200, "doc_id"),
+        synth_scrub,
+        "doc_id long, had_gps long, gps_after long, tags_kept long, pixels_same long",
+    ).transform(barrier).orderBy("doc_id")
 
 
 _GPS_SCRUB_SQL = """

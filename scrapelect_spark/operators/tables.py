@@ -1,10 +1,17 @@
-"""Parquet table loader for the driver-provided testdata star schema."""
+"""Gate plumbing for the catalog operators: the parquet loader for the
+star-schema tables, the fan-out (:func:`spread`, :func:`docs`), loop
+sizing (:func:`scan_partitions`, :func:`loop_shuffle`), the
+materialization barrier, and the per-row kernel applier
+(:func:`map_rows`)."""
 
 from __future__ import annotations
 
 from contextlib import contextmanager
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import IntegralType, _parse_datatype_string
 
 TABLES = (
     "region nation customer supplier part orders lineitem events "
@@ -15,6 +22,12 @@ TABLES = (
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     assert name in TABLES, name
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+
+
+#: ceiling on :func:`scan_partitions`: 65 536 loop partitions is about
+#: 1.4 GiB per partition at 100 TB, where the 16 MiB target alone would
+#: derive ~6.5 M tasks per round.
+MAX_LOOP_PARTITIONS = 65_536
 
 
 def scan_partitions(df: DataFrame, target_bytes: int = 16 << 20) -> int:
@@ -30,18 +43,18 @@ def scan_partitions(df: DataFrame, target_bytes: int = 16 << 20) -> int:
     per round across many rounds and typically explodes it (edge
     lists, element tables), so per-round partitions want to be
     smaller than one-shot scan splits.  A 600 KB bench table yields
-    1 (the measured-fast case for the graph loops), a 100 TB corpus
-    hundreds of thousands.  Falls back to the physical scan split
-    count if the estimate is unavailable."""
+    1 (the measured-fast case for the graph loops); a 100 TB corpus
+    is clamped to :data:`MAX_LOOP_PARTITIONS`.  Falls back to the
+    physical scan split count if the estimate is unavailable."""
     try:
         size = int(
             str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
         )
         if size > 0:
-            return max(1, -(-size // target_bytes))
+            return min(MAX_LOOP_PARTITIONS, max(1, -(-size // target_bytes)))
     except Exception:
         pass
-    return max(1, df.rdd.getNumPartitions())
+    return min(MAX_LOOP_PARTITIONS, max(1, df.rdd.getNumPartitions()))
 
 
 @contextmanager
@@ -59,7 +72,12 @@ def loop_shuffle(spark: SparkSession, n: int):
     overhead at bench scale and the WRONG constant at 100 TB, where the
     same loops need far more than the session default.  Sizing the
     loop's shuffles to the input keeps the co-partitioned
-    zero-exchange round shape at every scale."""
+    zero-exchange round shape at every scale.
+
+    The setting is session-global, so this assumes gates run one at a
+    time: no other query may run on the same session while a loop
+    holds the conf (it would be planned with the loop's partition
+    count)."""
     key = "spark.sql.shuffle.partitions"
     old = spark.conf.get(key)
     spark.conf.set(key, str(n))
@@ -80,29 +98,13 @@ BARRIERS = True
 def barrier(df: DataFrame) -> DataFrame:
     """Lazy materialization barrier: compute-once for subtrees that are
     consumed several times or feed a global sort (whose range sampling
-    executes the child in full a second time).  Chain with
+    executes the child in full a second time: 3.33 s → 1.76 s on the
+    MPEG-1 B-frame gate at sf0.1 with the barrier).  Chain with
     ``df.transform(barrier)``.  No-op when ``BARRIERS`` is False (plan
     inspection)."""
     if not BARRIERS:
         return df
     return df.localCheckpoint(eager=False)
-
-
-def materialized_sort(df: DataFrame, *cols) -> DataFrame:
-    """Global ORDER BY without re-executing an expensive subtree.
-
-    A total sort shuffles by RangePartitioning, and computing the range
-    boundaries SAMPLES the child — which executes the entire child plan
-    once in full before the sort's own pass executes it again.  For a
-    lineage that contains Python codec stages (mapInPandas synthesis /
-    decode) that doubles the dominant cost: measured 3.33 s → 1.76 s on
-    the MPEG-1 B-frame gate at sf0.1.  ``localCheckpoint`` (lazy)
-    materializes the child once; the sampling pass then reads the
-    cached partitions.  The checkpoint is bounded by the operator's
-    OUTPUT (already reduced), and at corpus scale materializing a
-    result before a total sort is the standard trade — the alternative
-    is decoding the corpus twice."""
-    return df.localCheckpoint(eager=False).orderBy(*cols)
 
 
 def spread(df: DataFrame) -> DataFrame:
@@ -125,3 +127,57 @@ def spread(df: DataFrame) -> DataFrame:
     if df.rdd.getNumPartitions() >= n:
         return df
     return df.repartition(n)
+
+
+def docs(spark: SparkSession, sf_dir: str, n: int, *cols) -> DataFrame:
+    """The gates' input: ``documents`` rows with ``doc_id < n``, fanned
+    out by :func:`spread`, projected to ``cols``."""
+    d = load(spark, sf_dir, "documents").filter(F.col("doc_id") < n)
+    return spread(d).select(*cols)
+
+
+def map_rows(df: DataFrame, fn, schema, errors=(), on_error=None) -> DataFrame:
+    """Apply a per-row kernel to ``df`` in one ``mapInPandas``.
+
+    ``fn(*row)`` gets each row's values as plain Python objects
+    (``int`` for integral columns, ``None`` for their nulls) and yields
+    zero or more output rows as dicts keyed by the ``schema`` field
+    names.  Output columns are built as object arrays, so a ``long``
+    next to a ``None`` never passes through ``float64``.  (On the input
+    side, Spark's Arrow-to-pandas step already turns an integral column
+    that holds a null into ``float64``, exact only up to 2**53.)
+
+    With ``errors`` non-empty the helper owns the ``failed`` column: 0
+    for the rows ``fn`` yielded, and one row of ``{**on_error,
+    "failed": 1}`` when ``fn`` raises one of ``errors``.  In that row the
+    input columns that also name an output column (the row key) keep
+    their values and every other column is ``None``.  Any other
+    exception fails the task."""
+    if isinstance(schema, str):
+        schema = _parse_datatype_string(schema)
+    names = schema.fieldNames()
+    in_names = df.columns
+    ints = {f.name for f in df.schema.fields if isinstance(f.dataType, IntegralType)}
+    fallback = {**dict.fromkeys(names), **(on_error or {}), "failed": 1}
+
+    def values(col):
+        # a null in an integral column arrives as a float64 NaN
+        if col.name in ints and col.dtype.kind == "f":
+            return [None if v != v else int(v) for v in col.tolist()]
+        return col.tolist()
+
+    def run(batches):
+        for pdf in batches:
+            cols = {c: [] for c in names}
+            for row in zip(*(values(pdf[c]) for c in in_names)):
+                try:
+                    out = [{**r, "failed": 0} if errors else r for r in fn(*row)]
+                except errors:
+                    key = {c: v for c, v in zip(in_names, row) if c in cols}
+                    out = [{**fallback, **key}]
+                for r in out:
+                    for c in names:
+                        cols[c].append(r[c])
+            yield pd.DataFrame({c: pd.Series(v, dtype=object) for c, v in cols.items()})
+
+    return df.mapInPandas(run, schema=schema)

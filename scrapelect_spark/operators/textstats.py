@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .dedup import _SHINGLES_SQL, _WORDS_SQL, _shingles, _words
-from .tables import barrier, load, spread
+from .tables import barrier, docs, load, map_rows
 
 _STOPWORDS = ("the", "a", "of", "and", "to", "in")
 _LANG_MARKERS = {
@@ -548,36 +548,26 @@ def corpus_main_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     teaser (< 40 chars → dropped), and a footer of links (→ dropped).
     The oracle rebuilds the exact joined text, lengths, and block
     counts in closed form."""
-    from .tables import load, spread
 
-    d = spread(load(spark, sf_dir, "documents").filter(F.col("doc_id") < 300))
+    def synth(doc_id):
+        xs = "x" * (40 + doc_id % 5)
+        paras = "".join(
+            f"<p>para {i} <a href=\"/r\">go</a> {xs}</p>"
+            for i in range(1 + doc_id % 3)
+        )
+        html = (
+            "<html><body>"
+            '<p><a href="/h">Home</a> <a href="/a">About</a> '
+            '<a href="/c">Contact</a></p>'
+            f"{paras}"
+            f"<p>short teaser {doc_id % 10}</p>"
+            '<p><a href="/t">Terms</a> <a href="/p">Privacy</a></p>'
+            "</body></html>"
+        )
+        yield {"url": f"http://d{doc_id % 8}.test/a/{doc_id}.html", "html": html}
 
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            urls, htmls = [], []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                k = 1 + doc_id % 3
-                xs = "x" * (40 + doc_id % 5)
-                paras = "".join(
-                    f"<p>para {i} <a href=\"/r\">go</a> {xs}</p>"
-                    for i in range(k)
-                )
-                html = (
-                    "<html><body>"
-                    '<p><a href="/h">Home</a> <a href="/a">About</a> '
-                    '<a href="/c">Contact</a></p>'
-                    f"{paras}"
-                    f"<p>short teaser {doc_id % 10}</p>"
-                    '<p><a href="/t">Terms</a> <a href="/p">Privacy</a></p>'
-                    "</body></html>"
-                )
-                urls.append(f"http://d{doc_id % 8}.test/a/{doc_id}.html")
-                htmls.append(html)
-            yield pd.DataFrame({"url": urls, "html": htmls})
-
-    pages = d.select("doc_id").mapInPandas(
-        synth, schema="url string, html string"
+    pages = map_rows(
+        docs(spark, sf_dir, 300, "doc_id"), synth, "url string, html string"
     )
     return extract_main_text(pages).select(
         "page_url", "n_blocks", "n_kept", "main_len", "boiler_len",
@@ -701,28 +691,19 @@ def corpus_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     a cookie-banner line that survives only in doc 0 (the lowest
     ≡0-mod-3 doc).  The oracle reproduces every reassembled text and
     count in closed form."""
-    from .tables import load, spread
 
-    d = spread(load(spark, sf_dir, "documents").filter(F.col("doc_id") < 300))
+    def synth(doc_id):
+        lines = [f"body of {doc_id}"]
+        if doc_id % 3 == 0:
+            lines.append("accept all cookies")
+        lines.append("(c) example footer")
+        yield {"doc_id": doc_id, "text": "\n".join(lines)}
 
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, texts = [], []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                lines = [f"body of {doc_id}"]
-                if doc_id % 3 == 0:
-                    lines.append("accept all cookies")
-                lines.append("(c) example footer")
-                ids.append(doc_id)
-                texts.append("\n".join(lines))
-            yield pd.DataFrame({"doc_id": ids, "text": texts})
-
-    docs = d.select("doc_id").mapInPandas(
-        synth, schema="doc_id long, text string"
+    texts = map_rows(
+        docs(spark, sf_dir, 300, "doc_id"), synth, "doc_id long, text string"
     )
     return (
-        line_dedup(docs)
+        line_dedup(texts)
         .select("doc_id", F.md5("text").alias("text_md5"), "n_kept",
                 "n_lines")
         .transform(barrier).orderBy("doc_id")

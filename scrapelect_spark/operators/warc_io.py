@@ -19,7 +19,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .tables import barrier, load, spread
+from .tables import barrier, docs, map_rows
 
 #: deterministic snapshot stamp for gate/test segments (a real crawl
 #: batch passes its own batch timestamp)
@@ -91,8 +91,8 @@ def crawl_warc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     to per-partition .warc.gz segments and ingested back — url, HTTP
     status, byte-exact body (md5) must survive the container
     roundtrip."""
-    d = spread(load(spark, sf_dir, "documents").filter(F.col("doc_id") < 300))
-    pages = d.select(
+    pages = docs(
+        spark, sf_dir, 300,
         F.concat(F.lit("http://corpus.test/doc/"), F.col("doc_id")).alias("url"),
         F.col("text").alias("html"),
     )
@@ -174,30 +174,23 @@ def crawl_sitemap_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     match the closed-form oracle."""
     from ..sources.sitemap import build_sitemap
 
-    d = spread(load(spark, sf_dir, "documents").filter(F.col("doc_id") < 300))
-
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, blobs = [], []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                entries = [
-                    {
-                        "loc": f"http://s{doc_id}.test/p/{k}",
-                        "priority": f"{((doc_id + k) % 10) / 10:.1f}",
-                        "lastmod": "2024-01-02",
-                    }
-                    for k in range(1 + doc_id % 4)
-                ]
-                ids.append(str(doc_id))
-                blobs.append(
-                    build_sitemap(entries, gzip_payload=(doc_id % 3 == 0))
-                )
-            yield pd.DataFrame({"sitemap_id": ids, "sitemap": blobs})
+    def synth(doc_id):
+        entries = [
+            {
+                "loc": f"http://s{doc_id}.test/p/{k}",
+                "priority": f"{((doc_id + k) % 10) / 10:.1f}",
+                "lastmod": "2024-01-02",
+            }
+            for k in range(1 + doc_id % 4)
+        ]
+        blob = build_sitemap(entries, gzip_payload=(doc_id % 3 == 0))
+        yield {"sitemap_id": str(doc_id), "sitemap": blob}
 
     seeds = sitemap_seed_frontier(
-        d.select("doc_id").mapInPandas(
-            synth, schema="sitemap_id string, sitemap binary"
+        map_rows(
+            docs(spark, sf_dir, 300, "doc_id"),
+            synth,
+            "sitemap_id string, sitemap binary",
         )
     )
     return (
@@ -277,41 +270,33 @@ def crawl_feed_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     as a parse_error row."""
     from ..sources.feed import build_atom, build_rss
 
-    d = spread(load(spark, sf_dir, "documents").filter(F.col("doc_id") < 300))
-
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, blobs = [], []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                items = [
-                    {
-                        "link": f"http://f{doc_id % 8}.test/a/{doc_id}_{k}",
-                        "title": f"story {doc_id} {k}",
-                        "published": f"2024-01-{1 + (doc_id + k) % 28:02d}",
-                        "id": f"g{doc_id}-{k}",
-                    }
-                    for k in range(1 + doc_id % 3)
-                ]
-                if doc_id % 23 == 0:
-                    blob = (
-                        b'<?xml version="1.0"?><!DOCTYPE rss [<!ENTITY '
-                        b'x "y">]><rss version="2.0"><channel>'
-                        b"</channel></rss>"
-                    )
-                elif doc_id % 3 == 0:
-                    blob = build_rss(items)
-                elif doc_id % 3 == 1:
-                    blob = build_atom(items)
-                else:
-                    blob = build_rss(items, gzip_payload=True)
-                ids.append(str(doc_id))
-                blobs.append(blob)
-            yield pd.DataFrame({"feed_id": ids, "feed": blobs})
+    def synth(doc_id):
+        items = [
+            {
+                "link": f"http://f{doc_id % 8}.test/a/{doc_id}_{k}",
+                "title": f"story {doc_id} {k}",
+                "published": f"2024-01-{1 + (doc_id + k) % 28:02d}",
+                "id": f"g{doc_id}-{k}",
+            }
+            for k in range(1 + doc_id % 3)
+        ]
+        if doc_id % 23 == 0:
+            blob = (
+                b'<?xml version="1.0"?><!DOCTYPE rss [<!ENTITY '
+                b'x "y">]><rss version="2.0"><channel>'
+                b"</channel></rss>"
+            )
+        elif doc_id % 3 == 0:
+            blob = build_rss(items)
+        elif doc_id % 3 == 1:
+            blob = build_atom(items)
+        else:
+            blob = build_rss(items, gzip_payload=True)
+        yield {"feed_id": str(doc_id), "feed": blob}
 
     seeds = feed_seed_frontier(
-        d.select("doc_id").mapInPandas(
-            synth, schema="feed_id string, feed binary"
+        map_rows(
+            docs(spark, sf_dir, 300, "doc_id"), synth, "feed_id string, feed binary"
         )
     )
     return (
@@ -412,38 +397,32 @@ def crawl_archive_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     body md5."""
     from ..sources.archive import build_tar, build_zip
 
-    d = spread(load(spark, sf_dir, "documents").filter(F.col("doc_id") < 300))
-
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, blobs = [], []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                if doc_id % 10 == 4:
-                    members = [("../escape.txt", b"traversal")]
-                else:
-                    members = [
-                        (
-                            f"d{doc_id}/part{k}.txt",
-                            f"doc {doc_id} member {k} "
-                            f"{'x' * (doc_id % 50)}".encode(),
-                        )
-                        for k in range(1 + doc_id % 3)
-                    ]
-                kind = doc_id % 3
-                if kind == 0:
-                    blob = build_zip(members)
-                elif kind == 1:
-                    blob = build_tar(members)
-                else:
-                    blob = build_tar(members, gz=True)
-                ids.append(str(doc_id))
-                blobs.append(blob)
-            yield pd.DataFrame({"archive_id": ids, "archive": blobs})
+    def synth(doc_id):
+        if doc_id % 10 == 4:
+            members = [("../escape.txt", b"traversal")]
+        else:
+            members = [
+                (
+                    f"d{doc_id}/part{k}.txt",
+                    f"doc {doc_id} member {k} "
+                    f"{'x' * (doc_id % 50)}".encode(),
+                )
+                for k in range(1 + doc_id % 3)
+            ]
+        kind = doc_id % 3
+        if kind == 0:
+            blob = build_zip(members)
+        elif kind == 1:
+            blob = build_tar(members)
+        else:
+            blob = build_tar(members, gz=True)
+        yield {"archive_id": str(doc_id), "archive": blob}
 
     members = archive_extract(
-        d.select("doc_id").mapInPandas(
-            synth, schema="archive_id string, archive binary"
+        map_rows(
+            docs(spark, sf_dir, 300, "doc_id"),
+            synth,
+            "archive_id string, archive binary",
         )
     )
     return members.select(

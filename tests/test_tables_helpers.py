@@ -1,0 +1,151 @@
+"""The gate plumbing in ``operators/tables.py``: the per-row kernel
+applier ``map_rows``, the ``docs`` input helper, the loop-partition
+ceiling of ``scan_partitions``, and a guard that keeps gate functions
+on ``map_rows`` instead of hand-rolled ``mapInPandas`` batch loops."""
+
+import ast
+import glob
+import os
+
+import pytest
+
+from scrapelect_spark.operators import tables
+from scrapelect_spark.operators.tables import docs, map_rows, scan_partitions
+
+OPERATORS = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    "scrapelect_spark",
+    "operators",
+)
+
+
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+def test_map_rows_declared_error_gives_failed_row(spark):
+    def kernel(doc_id, tag):
+        if doc_id % 3 == 0:
+            raise ValueError("bad input")
+        yield {"doc_id": doc_id, "tag": tag, "score": 10 * doc_id, "ok": 1}
+
+    df = spark.range(6).selectExpr("id AS doc_id", "'t' || id AS tag")
+    out = map_rows(
+        df,
+        kernel,
+        "doc_id long, tag string, score long, ok long, failed long",
+        errors=(ValueError,),
+        on_error={"ok": 0},
+    )
+    assert _rows(out) == [
+        # the row key (input columns that are also output columns)
+        # survives; on_error fills its columns; everything else is None
+        (0, "t0", None, 0, 1),
+        (1, "t1", 10, 1, 0),
+        (2, "t2", 20, 1, 0),
+        (3, "t3", None, 0, 1),
+        (4, "t4", 40, 1, 0),
+        (5, "t5", 50, 1, 0),
+    ]
+
+
+def test_map_rows_undeclared_error_fails_the_job(spark):
+    from pyspark.errors import PythonException
+
+    def kernel(doc_id):
+        if doc_id == 2:
+            raise TypeError("a real bug")
+        yield {"doc_id": doc_id, "failed": 0}
+
+    out = map_rows(
+        spark.range(4).withColumnRenamed("id", "doc_id"),
+        kernel,
+        "doc_id long, failed long",
+        errors=(ValueError,),
+    )
+    with pytest.raises(PythonException, match="a real bug"):
+        out.collect()
+
+
+def test_map_rows_zero_one_or_many_rows_per_input(spark):
+    def kernel(n):
+        assert type(n) is int  # plain Python values, not numpy scalars
+        for k in range(n):
+            yield {"n": n, "k": k}
+
+    df = spark.createDataFrame([(0,), (1,), (3,)], "n long")
+    out = map_rows(df, kernel, "n long, k long")
+    assert _rows(out) == [(1, 0), (3, 0), (3, 1), (3, 2)]
+
+
+def test_map_rows_long_next_to_none_is_exact(spark):
+    big = 2**62 + 1
+
+    def kernel(i):
+        yield {"i": i, "v": {0: big, 1: None, 2: -big}[i]}
+
+    df = spark.range(3).withColumnRenamed("id", "i")
+    out = map_rows(df, kernel, "i long, v long")
+    assert _rows(out) == [(0, big), (1, None), (2, -big)]
+
+
+def test_docs_filters_and_projects(spark, tmp_path):
+    sf_dir = str(tmp_path)
+    spark.range(25).selectExpr(
+        "id AS doc_id", "'en' AS lang", "repeat('x', int(id)) AS text"
+    ).write.parquet(f"{sf_dir}/documents.parquet")
+    d = docs(spark, sf_dir, 10, "doc_id", "lang")
+    assert d.columns == ["doc_id", "lang"]
+    assert _rows(d) == [(i, "en") for i in range(10)]
+
+
+class _Stats:
+    def __init__(self, size):
+        self.size = size
+
+    def queryExecution(self):
+        return self
+
+    def optimizedPlan(self):
+        return self
+
+    def stats(self):
+        return self
+
+    def sizeInBytes(self):
+        return self.size
+
+
+class _SizedFrame:
+    """Stands in for a DataFrame whose optimizer size estimate is
+    ``size`` bytes."""
+
+    def __init__(self, size):
+        self._jdf = _Stats(size)
+
+
+def test_scan_partitions_is_capped():
+    assert scan_partitions(_SizedFrame(100 * 10**12)) == tables.MAX_LOOP_PARTITIONS
+    # a bench-scale table stays one loop partition
+    assert scan_partitions(_SizedFrame(600 * 1024)) == 1
+
+
+def test_scan_partitions_small_frame_is_one(spark):
+    assert scan_partitions(spark.range(100)) == 1
+
+
+def test_gate_functions_have_no_batch_loops():
+    """Gates (functions taking ``sf_dir``) apply per-row kernels via
+    ``map_rows``; only corpus operators keep their own batch loops."""
+    offenders = []
+    for path in sorted(glob.glob(os.path.join(OPERATORS, "*.py"))):
+        with open(path) as f:
+            src = f.read()
+        for node in ast.walk(ast.parse(src)):
+            if not isinstance(node, ast.FunctionDef):
+                continue
+            if "sf_dir" not in {a.arg for a in node.args.args}:
+                continue
+            if "for pdf in batches" in ast.get_source_segment(src, node):
+                offenders.append(f"{os.path.basename(path)}:{node.name}")
+    assert offenders == []
