@@ -18,89 +18,12 @@ from . import (
 )
 from ..streaming import windows as streaming_windows
 
-_ALL_QUERIES = {}
-_ALL_ORACLE = {}
+QUERIES = {}
+ORACLE_SQL = {}
 for mod in (relational, dedup, simsearch, textstats, scrp_queries, multimodal,
             streaming_windows, warc_io, imagemeta, graph, curation,
             tokenizer):
-    _ALL_QUERIES.update(mod.QUERIES)
-    _ALL_ORACLE.update(mod.ORACLE_SQL)
-
-# The driver's correctness gate records a bounded number of rows (exactly
-# 50 per round) in queries() iteration order. Round-6 rotation (VERDICT r5
-# item #2): the round's one FIXED gate first (crawl_change_rate — the r5
-# red row, sign-of-zero repair in relational.py), then the 36 gates that
-# have never had a driver row in ANY of r1-r5 (judge-verified at sf0.01 in
-# the r5 session but never driver-recorded), then the gates whose
-# internals this optimization round touches (a fresh green row proves the
-# rewrite is value-identical). Everything else already holds a green row
-# in some CORRECTNESS_r*.json and safely falls past the 50-row window.
-_PRIORITY = [
-    # r5's only red driver row — re-verify the fix first
-    "crawl_change_rate",
-    # never driver-verified in r1-r5 (cumulative-coverage closure)
-    "audio_adpcm_stereo",
-    "audio_g711_roundtrip",
-    "audio_id3_extract",
-    "audio_mp1_roundtrip",
-    "audio_mp2_roundtrip",
-    "audio_mp3_metadata",
-    "audio_ogg_flac_roundtrip",
-    "corpus_main_text",
-    "corpus_quota_sample_bucketed",
-    "corpus_repeated_ngram_dedup",
-    "crawl_archive_ingest",
-    "crawl_image_refs",
-    "crawl_recrawl_priority",
-    "crawl_revalidate_classify",
-    "curate_pairs_pipeline",
-    "graph_pagerank",
-    "image_autorotate",
-    "image_border_stats",
-    "image_color_stats",
-    "image_dctphash_neardup",
-    "image_exif_extract",
-    "image_foreign_formats",
-    "image_jpeg_quality",
-    "image_patch_grid",
-    "image_phash_clusters",
-    "image_phash_neardup",
-    "image_pixel_stats",
-    "image_resize_filters",
-    "image_sharpness_stats",
-    "image_tiff_roundtrip",
-    "image_webp_roundtrip",
-    "video_mpeg1_b_sample",
-    "video_mpeg1_iframe_sample",
-    "video_mpeg1_p_sample",
-    "video_mpeg_ps_roundtrip",
-    "video_msvc_roundtrip",
-    # gates whose internals round 6 optimizes — fresh rows prove the
-    # rewrites value-identical
-    "curate_funnel_report",
-    "graph_hits",
-    "embedding_power_iteration",
-    "embedding_kmeans",
-    "embedding_pq_adc",
-    "embedding_hard_negatives",
-    "embedding_semdedup",
-    "events_late_drop_stream",
-    "events_hourly_stream",
-    "events_sessionized_stream",
-    "dedup_clusters_dist",
-    "dedup_containment",
-    "q1_pricing_summary",
-]
-
-QUERIES = {}
-ORACLE_SQL = {}
-for name in _PRIORITY:
-    if name in _ALL_QUERIES:
-        QUERIES[name] = _ALL_QUERIES[name]
-        ORACLE_SQL[name] = _ALL_ORACLE[name]
-for name, fn in _ALL_QUERIES.items():
-    if name not in QUERIES:
-        QUERIES[name] = fn
-        ORACLE_SQL[name] = _ALL_ORACLE[name]
+    QUERIES.update(mod.QUERIES)
+    ORACLE_SQL.update(mod.ORACLE_SQL)
 
 assert set(QUERIES) == set(ORACLE_SQL)

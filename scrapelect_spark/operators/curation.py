@@ -30,9 +30,7 @@ salt-guarded; nothing driver-side.
 from __future__ import annotations
 
 import hashlib
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -325,79 +323,56 @@ def extract_image_refs(
         "source string, descriptor string"
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in (
-                "page_url", "seq", "img_url", "alt", "source", "descriptor"
-            )}
+    def srcset(el, alt, kind):
+        for cand in el.attrs["srcset"].split(","):
+            parts = cand.strip().split()
+            if parts:
+                yield parts[0], alt, kind, parts[1] if len(parts) > 1 else "1x"
 
-            def emit(url, seq, img, alt, src_kind, desc):
-                out["page_url"].append(url)
-                out["seq"].append(seq)
-                out["img_url"].append(img)
-                out["alt"].append(alt)
-                out["source"].append(src_kind)
-                out["descriptor"].append(desc)
+    def refs(root):
+        # (raw url, alt, source, descriptor) per reference, in order
+        for el in root.descendants():
+            if el.tag == "source" and "srcset" in el.attrs:
+                # <picture><source srcset …> candidates: the caption is
+                # the sibling <img alt> per the spec
+                parent = el.parent
+                alt = None
+                if parent is not None and parent.tag == "picture":
+                    alt = next(
+                        (c.attrs.get("alt")
+                         for c in parent.child_elements()
+                         if c.tag == "img"),
+                        None,
+                    )
+                yield from srcset(el, alt, "source")
+                continue
+            if el.tag != "img":
+                continue
+            alt = el.attrs.get("alt")
+            if "src" in el.attrs:
+                yield el.attrs["src"], alt, "src", None
+            if "srcset" in el.attrs:
+                yield from srcset(el, alt, "srcset")
+            if "src" not in el.attrs and "data-src" in el.attrs:
+                yield el.attrs["data-src"], alt, "data-src", None
 
-            for url, html in zip(pdf[url_col], pdf[html_col]):
-                if html is None:
-                    continue
-                root = parse_html(html)
-                base = effective_base(root, url)
-                seq = 0
-                for el in root.descendants():
-                    if el.tag == "source" and "srcset" in el.attrs:
-                        # <picture><source srcset …> candidates: the
-                        # caption is the sibling <img alt> per the spec
-                        parent = el.parent
-                        alt = None
-                        if parent is not None and parent.tag == "picture":
-                            alt = next(
-                                (c.attrs.get("alt")
-                                 for c in parent.child_elements()
-                                 if c.tag == "img"),
-                                None,
-                            )
-                        for cand in el.attrs["srcset"].split(","):
-                            parts = cand.strip().split()
-                            if not parts:
-                                continue
-                            r = resolve_and_canonicalize(parts[0], base)
-                            if r is None:
-                                continue
-                            desc = parts[1] if len(parts) > 1 else "1x"
-                            emit(url, seq, r, alt, "source", desc)
-                            seq += 1
-                        continue
-                    if el.tag != "img":
-                        continue
-                    alt = el.attrs.get("alt")
-                    if "src" in el.attrs:
-                        r = resolve_and_canonicalize(el.attrs["src"], base)
-                        if r is not None:
-                            emit(url, seq, r, alt, "src", None)
-                            seq += 1
-                    if "srcset" in el.attrs:
-                        for cand in el.attrs["srcset"].split(","):
-                            parts = cand.strip().split()
-                            if not parts:
-                                continue
-                            r = resolve_and_canonicalize(parts[0], base)
-                            if r is None:
-                                continue
-                            desc = parts[1] if len(parts) > 1 else "1x"
-                            emit(url, seq, r, alt, "srcset", desc)
-                            seq += 1
-                    if "src" not in el.attrs and "data-src" in el.attrs:
-                        r = resolve_and_canonicalize(
-                            el.attrs["data-src"], base
-                        )
-                        if r is not None:
-                            emit(url, seq, r, alt, "data-src", None)
-                            seq += 1
-            yield pd.DataFrame(out)
+    def row(url, html):
+        if html is None:
+            return
+        root = parse_html(html)
+        base = effective_base(root, url)
+        seq = 0
+        for ref, alt, kind, desc in refs(root):
+            img = resolve_and_canonicalize(ref, base)
+            if img is None:
+                continue
+            yield {
+                "page_url": url, "seq": seq, "img_url": img, "alt": alt,
+                "source": kind, "descriptor": desc,
+            }
+            seq += 1
 
-    return pages.mapInPandas(run, schema=schema)
+    return map_rows(pages.select(url_col, html_col), row, schema)
 
 
 def extract_anchors(
@@ -420,35 +395,27 @@ def extract_anchors(
         "nofollow long"
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in (
-                "page_url", "seq", "target_url", "anchor_text", "nofollow"
-            )}
-            for url, html in zip(pdf[url_col], pdf[html_col]):
-                if html is None:
-                    continue
-                root = parse_html(html)
-                base = effective_base(root, url)
-                seq = 0
-                for el in root.descendants():
-                    if el.tag != "a" or "href" not in el.attrs:
-                        continue
-                    target = resolve_and_canonicalize(el.attrs["href"], base)
-                    if target is None:
-                        continue
-                    rel = el.attrs.get("rel", "").lower().split()
-                    out["page_url"].append(url)
-                    out["seq"].append(seq)
-                    out["target_url"].append(target)
-                    out["anchor_text"].append(
-                        " ".join(el.all_text().split())
-                    )
-                    out["nofollow"].append(1 if "nofollow" in rel else 0)
-                    seq += 1
-            yield pd.DataFrame(out)
+    def row(url, html):
+        if html is None:
+            return
+        root = parse_html(html)
+        base = effective_base(root, url)
+        seq = 0
+        for el in root.descendants():
+            if el.tag != "a" or "href" not in el.attrs:
+                continue
+            target = resolve_and_canonicalize(el.attrs["href"], base)
+            if target is None:
+                continue
+            rel = el.attrs.get("rel", "").lower().split()
+            yield {
+                "page_url": url, "seq": seq, "target_url": target,
+                "anchor_text": " ".join(el.all_text().split()),
+                "nofollow": 1 if "nofollow" in rel else 0,
+            }
+            seq += 1
 
-    return pages.mapInPandas(run, schema=schema)
+    return map_rows(pages.select(url_col, html_col), row, schema)
 
 
 def _pages(spark: SparkSession, sf_dir: str, page) -> DataFrame:
@@ -532,48 +499,38 @@ def extract_og_meta(
     )
     _PROPS = ("og:title", "og:description", "og:image", "og:type")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in (
-                "page_url", "og_title", "og_description", "og_image",
-                "og_type", "twitter_card", "has_og",
-            )}
-            for url, html in zip(pdf[url_col], pdf[html_col]):
-                if html is None:
-                    continue
-                root = parse_html(html)
-                base = effective_base(root, url)
-                got: dict[str, str] = {}
-                for el in root.descendants():
-                    if el.tag != "meta":
-                        continue
-                    # OpenGraph uses property=, Twitter uses name=
-                    key = (
-                        el.attrs.get("property") or el.attrs.get("name")
-                        or ""
-                    ).strip().lower()
-                    content = el.attrs.get("content")
-                    if content is None:
-                        continue
-                    if (
-                        key in _PROPS or key == "twitter:card"
-                    ) and key not in got:
-                        got[key] = content.strip()
-                img = got.get("og:image")
-                if img is not None:
-                    img = resolve_and_canonicalize(img, base)
-                out["page_url"].append(url)
-                out["og_title"].append(got.get("og:title"))
-                out["og_description"].append(got.get("og:description"))
-                out["og_image"].append(img)
-                out["og_type"].append(got.get("og:type"))
-                out["twitter_card"].append(got.get("twitter:card"))
-                out["has_og"].append(
-                    1 if any(k.startswith("og:") for k in got) else 0
-                )
-            yield pd.DataFrame(out)
+    def row(url, html):
+        if html is None:
+            return
+        root = parse_html(html)
+        base = effective_base(root, url)
+        got: dict[str, str] = {}
+        for el in root.descendants():
+            if el.tag != "meta":
+                continue
+            # OpenGraph uses property=, Twitter uses name=
+            key = (
+                el.attrs.get("property") or el.attrs.get("name") or ""
+            ).strip().lower()
+            content = el.attrs.get("content")
+            if content is None:
+                continue
+            if (key in _PROPS or key == "twitter:card") and key not in got:
+                got[key] = content.strip()
+        img = got.get("og:image")
+        if img is not None:
+            img = resolve_and_canonicalize(img, base)
+        yield {
+            "page_url": url,
+            "og_title": got.get("og:title"),
+            "og_description": got.get("og:description"),
+            "og_image": img,
+            "og_type": got.get("og:type"),
+            "twitter_card": got.get("twitter:card"),
+            "has_og": 1 if any(k.startswith("og:") for k in got) else 0,
+        }
 
-    return pages.mapInPandas(run, schema=schema)
+    return map_rows(pages.select(url_col, html_col), row, schema)
 
 
 def crawl_og_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -678,70 +635,57 @@ def extract_jsonld(
             a = a.get("name")
         return a if isinstance(a, str) and a.strip() else None
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in (
-                "page_url", "seq", "ld_type", "headline", "image_url",
-                "date_published", "author", "parse_error",
-            )}
-
-            def row(url, seq, t=None, h=None, img=None, dp=None,
-                    au=None, err=None):
-                out["page_url"].append(url)
-                out["seq"].append(seq)
-                out["ld_type"].append(t)
-                out["headline"].append(h)
-                out["image_url"].append(img)
-                out["date_published"].append(dp)
-                out["author"].append(au)
-                out["parse_error"].append(err)
-
-            for url, html in zip(pdf[url_col], pdf[html_col]):
-                if html is None:
+    def row(url, html):
+        if html is None:
+            return
+        root = parse_html(html)
+        base = effective_base(root, url)
+        seq = 0
+        for el in root.descendants():
+            if el.tag != "script":
+                continue
+            if el.attrs.get("type", "").strip().lower() != (
+                "application/ld+json"
+            ):
+                continue
+            try:
+                doc = _json.loads(el.all_text())
+            except ValueError as e:
+                yield {
+                    "page_url": url, "seq": seq, "ld_type": None,
+                    "headline": None, "image_url": None,
+                    "date_published": None, "author": None,
+                    "parse_error": f"bad JSON-LD: {e}",
+                }
+                seq += 1
+                continue
+            if isinstance(doc, dict) and "@graph" in doc:
+                nodes = doc["@graph"]
+            elif isinstance(doc, list):
+                nodes = doc
+            else:
+                nodes = [doc]
+            for node in nodes:
+                if not isinstance(node, dict):
                     continue
-                root = parse_html(html)
-                base = effective_base(root, url)
-                seq = 0
-                for el in root.descendants():
-                    if el.tag != "script":
-                        continue
-                    if el.attrs.get("type", "").strip().lower() != (
-                        "application/ld+json"
-                    ):
-                        continue
-                    try:
-                        doc = _json.loads(el.all_text())
-                    except ValueError as e:
-                        row(url, seq, err=f"bad JSON-LD: {e}")
-                        seq += 1
-                        continue
-                    if isinstance(doc, dict) and "@graph" in doc:
-                        nodes = doc["@graph"]
-                    elif isinstance(doc, list):
-                        nodes = doc
-                    else:
-                        nodes = [doc]
-                    for node in nodes:
-                        if not isinstance(node, dict):
-                            continue
-                        t = node.get("@type")
-                        if isinstance(t, list) and t:
-                            t = t[0]
-                        headline = node.get("headline") or node.get("name")
-                        row(
-                            url, seq,
-                            t if isinstance(t, str) else None,
-                            headline if isinstance(headline, str) else None,
-                            _image_of(node, base),
-                            node.get("datePublished")
-                            if isinstance(node.get("datePublished"), str)
-                            else None,
-                            _author_of(node),
-                        )
-                        seq += 1
-            yield pd.DataFrame(out)
+                t = node.get("@type")
+                if isinstance(t, list) and t:
+                    t = t[0]
+                headline = node.get("headline") or node.get("name")
+                dp = node.get("datePublished")
+                yield {
+                    "page_url": url,
+                    "seq": seq,
+                    "ld_type": t if isinstance(t, str) else None,
+                    "headline": headline if isinstance(headline, str) else None,
+                    "image_url": _image_of(node, base),
+                    "date_published": dp if isinstance(dp, str) else None,
+                    "author": _author_of(node),
+                    "parse_error": None,
+                }
+                seq += 1
 
-    return pages.mapInPandas(run, schema=schema)
+    return map_rows(pages.select(url_col, html_col), row, schema)
 
 
 def crawl_jsonld_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -845,60 +789,51 @@ def extract_microdata(
                  "source": "src", "iframe": "src", "embed": "src",
                  "a": "href", "area": "href", "link": "href"}
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in (
-                "page_url", "item_seq", "item_type", "prop", "value"
-            )}
+    def value_of(el, base):
+        if el.tag == "meta":
+            return el.attrs.get("content", "").strip()
+        attr = _URL_ATTR.get(el.tag)
+        if attr is not None and attr in el.attrs:
+            return resolve_and_canonicalize(el.attrs[attr], base)
+        if el.tag == "time" and "datetime" in el.attrs:
+            return el.attrs["datetime"].strip()
+        return " ".join(el.all_text().split())
 
-            def value_of(el, base):
-                if el.tag == "meta":
-                    return el.attrs.get("content", "").strip()
-                attr = _URL_ATTR.get(el.tag)
-                if attr is not None and attr in el.attrs:
-                    return resolve_and_canonicalize(el.attrs[attr], base)
-                if el.tag == "time" and "datetime" in el.attrs:
-                    return el.attrs["datetime"].strip()
-                return " ".join(el.all_text().split())
+    def item_props(item, base):
+        # DFS: props belong to the NEAREST enclosing itemscope
+        stack = list(reversed(list(item.child_elements())))
+        while stack:
+            el = stack.pop()
+            if "itemprop" in el.attrs:
+                v = value_of(el, base)
+                if v is not None:
+                    yield el.attrs["itemprop"].strip(), v
+            if "itemscope" in el.attrs:
+                continue  # inner item owns its subtree
+            stack.extend(reversed(list(el.child_elements())))
 
-            def walk_item(item, base, url, seq, itype):
-                # DFS: props belong to the NEAREST enclosing itemscope
-                stack = list(reversed(list(item.child_elements())))
-                while stack:
-                    el = stack.pop()
-                    if "itemprop" in el.attrs:
-                        v = value_of(el, base)
-                        if v is not None:
-                            out["page_url"].append(url)
-                            out["item_seq"].append(seq)
-                            out["item_type"].append(itype)
-                            out["prop"].append(el.attrs["itemprop"].strip())
-                            out["value"].append(v)
-                    if "itemscope" in el.attrs:
-                        continue  # inner item owns its subtree
-                    stack.extend(reversed(list(el.child_elements())))
+    def top_items(el, inside):
+        # top-level itemscopes: not nested inside another scope
+        if "itemscope" in el.attrs and not inside:
+            yield el
+            inside = True
+        for c in el.child_elements():
+            yield from top_items(c, inside)
 
-            for url, html in zip(pdf[url_col], pdf[html_col]):
-                if html is None:
-                    continue
-                root = parse_html(html)
-                base = effective_base(root, url)
-                seq = 0
-                # top-level itemscopes: not nested inside another scope
-                def top_items(el, inside):
-                    if "itemscope" in el.attrs and not inside:
-                        yield el
-                        inside = True
-                    for c in el.child_elements():
-                        yield from top_items(c, inside)
+    def row(url, html):
+        if html is None:
+            return
+        root = parse_html(html)
+        base = effective_base(root, url)
+        for seq, item in enumerate(top_items(root, False)):
+            itype = item.attrs.get("itemtype", "").strip() or None
+            for prop, v in item_props(item, base):
+                yield {
+                    "page_url": url, "item_seq": seq, "item_type": itype,
+                    "prop": prop, "value": v,
+                }
 
-                for item in top_items(root, False):
-                    itype = item.attrs.get("itemtype", "").strip() or None
-                    walk_item(item, base, url, seq, itype)
-                    seq += 1
-            yield pd.DataFrame(out)
-
-    return pages.mapInPandas(run, schema=schema)
+    return map_rows(pages.select(url_col, html_col), row, schema)
 
 
 def crawl_microdata(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -987,47 +922,33 @@ def extract_link_rels(
         "is_self long"
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in (
-                "page_url", "rel", "href", "hreflang", "is_self"
-            )}
-            for url, html in zip(pdf[url_col], pdf[html_col]):
-                if html is None:
-                    continue
-                root = parse_html(html)
-                base = effective_base(root, url)
-                self_canon = canonicalize_url(url)
-                seen_canonical = False
-                for el in root.descendants():
-                    if el.tag != "link" or "href" not in el.attrs:
-                        continue
-                    rels = el.attrs.get("rel", "").lower().split()
-                    href = resolve_and_canonicalize(el.attrs["href"], base)
-                    if href is None:
-                        continue
-                    if "canonical" in rels and not seen_canonical:
-                        seen_canonical = True
-                        out["page_url"].append(url)
-                        out["rel"].append("canonical")
-                        out["href"].append(href)
-                        out["hreflang"].append(None)
-                        out["is_self"].append(
-                            1 if href == self_canon else 0
-                        )
-                    elif "alternate" in rels and "hreflang" in el.attrs:
-                        out["page_url"].append(url)
-                        out["rel"].append("alternate")
-                        out["href"].append(href)
-                        out["hreflang"].append(
-                            el.attrs["hreflang"].strip().lower()
-                        )
-                        out["is_self"].append(
-                            1 if href == self_canon else 0
-                        )
-            yield pd.DataFrame(out)
+    def row(url, html):
+        if html is None:
+            return
+        root = parse_html(html)
+        base = effective_base(root, url)
+        self_canon = canonicalize_url(url)
+        seen_canonical = False
+        for el in root.descendants():
+            if el.tag != "link" or "href" not in el.attrs:
+                continue
+            rels = el.attrs.get("rel", "").lower().split()
+            href = resolve_and_canonicalize(el.attrs["href"], base)
+            if href is None:
+                continue
+            if "canonical" in rels and not seen_canonical:
+                seen_canonical = True
+                rel, hreflang = "canonical", None
+            elif "alternate" in rels and "hreflang" in el.attrs:
+                rel, hreflang = "alternate", el.attrs["hreflang"].strip().lower()
+            else:
+                continue
+            yield {
+                "page_url": url, "rel": rel, "href": href,
+                "hreflang": hreflang, "is_self": 1 if href == self_canon else 0,
+            }
 
-    return pages.mapInPandas(run, schema=schema)
+    return map_rows(pages.select(url_col, html_col), row, schema)
 
 
 def crawl_link_rels(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1294,75 +1215,60 @@ def extract_tables(
         "is_header int, cell_text string"
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in (
-                "page_url", "table_seq", "row_idx", "col_idx",
-                "is_header", "cell_text",
-            )}
+    def tables_of(el):
+        for c in el.child_elements():
+            if c.tag == "table":
+                yield c
+            yield from tables_of(c)
 
-            def tables_of(el):
-                for c in el.child_elements():
-                    if c.tag == "table":
-                        yield c
-                    yield from tables_of(c)
+    def own_rows(table):
+        # tr descendants whose nearest table ancestor is `table`
+        stack = list(reversed(list(table.child_elements())))
+        while stack:
+            el = stack.pop()
+            if el.tag == "table":
+                continue
+            if el.tag == "tr":
+                yield el
+            stack.extend(reversed(list(el.child_elements())))
 
-            def own_rows(table):
-                # tr descendants whose nearest table ancestor is `table`
-                stack = list(reversed(list(table.child_elements())))
-                while stack:
-                    el = stack.pop()
-                    if el.tag == "table":
+    def span_of(cell, attr):
+        try:
+            v = int(str(cell.attrs.get(attr, "1")).strip() or 1)
+        except ValueError:
+            v = 1
+        return max(1, v)
+
+    def row(url, html):
+        if html is None:
+            return
+        for tseq, table in enumerate(tables_of(parse_html(html))):
+            pending: dict[int, int] = {}  # col -> rows remaining
+            for ridx, tr in enumerate(own_rows(table)):
+                col = 0
+                for cell in tr.child_elements():
+                    if cell.tag not in ("td", "th"):
                         continue
-                    if el.tag == "tr":
-                        yield el
-                    stack.extend(reversed(list(el.child_elements())))
+                    while pending.get(col, 0) > 0:
+                        col += 1
+                    cspan = span_of(cell, "colspan")
+                    rspan = span_of(cell, "rowspan")
+                    yield {
+                        "page_url": url, "table_seq": tseq, "row_idx": ridx,
+                        "col_idx": col,
+                        "is_header": 1 if cell.tag == "th" else 0,
+                        "cell_text": " ".join(cell.all_text().split()),
+                    }
+                    if rspan > 1:
+                        for c in range(col, col + cspan):
+                            pending[c] = max(pending.get(c, 0), rspan)
+                    col += cspan
+                for c in list(pending):
+                    pending[c] -= 1
+                    if pending[c] <= 0:
+                        del pending[c]
 
-            def span_of(cell, attr):
-                try:
-                    v = int(str(cell.attrs.get(attr, "1")).strip() or 1)
-                except ValueError:
-                    v = 1
-                return max(1, v)
-
-            for url, html in zip(pdf[url_col], pdf[html_col]):
-                if html is None:
-                    continue
-                root = parse_html(html)
-                for tseq, table in enumerate(tables_of(root)):
-                    pending: dict[int, int] = {}  # col -> rows remaining
-                    for ridx, tr in enumerate(own_rows(table)):
-                        col = 0
-                        for cell in tr.child_elements():
-                            if cell.tag not in ("td", "th"):
-                                continue
-                            while pending.get(col, 0) > 0:
-                                col += 1
-                            cspan = span_of(cell, "colspan")
-                            rspan = span_of(cell, "rowspan")
-                            out["page_url"].append(url)
-                            out["table_seq"].append(tseq)
-                            out["row_idx"].append(ridx)
-                            out["col_idx"].append(col)
-                            out["is_header"].append(
-                                1 if cell.tag == "th" else 0
-                            )
-                            out["cell_text"].append(
-                                " ".join(cell.all_text().split())
-                            )
-                            if rspan > 1:
-                                for c in range(col, col + cspan):
-                                    pending[c] = max(
-                                        pending.get(c, 0), rspan
-                                    )
-                            col += cspan
-                        for c in list(pending):
-                            pending[c] -= 1
-                            if pending[c] <= 0:
-                                del pending[c]
-            yield pd.DataFrame(out)
-
-    return pages.mapInPandas(run, schema=schema)
+    return map_rows(pages.select(url_col, html_col), row, schema)
 
 
 def crawl_table_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1468,64 +1374,50 @@ def extract_sections(
     )
     headings = {"h1", "h2", "h3", "h4", "h5", "h6"}
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in (
-                "page_url", "section_seq", "level", "title_path",
-                "text", "n_tokens",
-            )}
+    def flat(s: str) -> str:
+        return " ".join(s.split())
 
-            def flat(s: str) -> str:
-                return " ".join(s.split())
+    def row(url, html):
+        if html is None:
+            return
+        stack_nodes = list(reversed(parse_html(html).children))
+        # open headings; non-empty once a heading has opened a section
+        title_stack: list[tuple[int, str]] = []
+        parts: list[str] = []
+        found: list[tuple[int, str, str]] = []  # (level, title_path, text)
 
-            for url, html in zip(pdf[url_col], pdf[html_col]):
-                if html is None:
-                    continue
-                root = parse_html(html)
-                stack_nodes = list(reversed(root.children))
-                title_stack: list[tuple[int, str]] = []
-                parts: list[str] = []
-                seq = 0
-                started = False  # a heading has opened a section
+        def flush():
+            text = flat(" ".join(parts))
+            if title_stack or text:  # an empty preamble gets no row
+                found.append((
+                    title_stack[-1][0] if title_stack else 0,
+                    " > ".join(t for _, t in title_stack),
+                    text,
+                ))
 
-                def flush(is_preamble_ok: bool):
-                    nonlocal seq
-                    text = flat(" ".join(parts))
-                    if not started and not text:
-                        return  # empty preamble: no row
-                    out["page_url"].append(url)
-                    out["section_seq"].append(seq)
-                    out["level"].append(
-                        title_stack[-1][0] if title_stack else 0
-                    )
-                    out["title_path"].append(
-                        " > ".join(t for _, t in title_stack)
-                    )
-                    out["text"].append(text)
-                    out["n_tokens"].append(
-                        len(text.split()) if text else 0
-                    )
-                    seq += 1
+        while stack_nodes:
+            node = stack_nodes.pop()
+            if isinstance(node, TextNode):
+                parts.append(node.text)
+                continue
+            if node.tag in headings:
+                flush()
+                level = int(node.tag[1])
+                while title_stack and title_stack[-1][0] >= level:
+                    title_stack.pop()
+                title_stack.append((level, flat(node.all_text())))
+                parts = []
+                continue
+            stack_nodes.extend(reversed(node.children))
+        flush()
+        for seq, (level, path, text) in enumerate(found):
+            yield {
+                "page_url": url, "section_seq": seq, "level": level,
+                "title_path": path, "text": text,
+                "n_tokens": len(text.split()) if text else 0,
+            }
 
-                while stack_nodes:
-                    node = stack_nodes.pop()
-                    if isinstance(node, TextNode):
-                        parts.append(node.text)
-                        continue
-                    if node.tag in headings:
-                        flush(True)
-                        level = int(node.tag[1])
-                        while title_stack and title_stack[-1][0] >= level:
-                            title_stack.pop()
-                        title_stack.append((level, flat(node.all_text())))
-                        parts = []
-                        started = True
-                        continue
-                    stack_nodes.extend(reversed(node.children))
-                flush(True)
-            yield pd.DataFrame(out)
-
-    return pages.mapInPandas(run, schema=schema)
+    return map_rows(pages.select(url_col, html_col), row, schema)
 
 
 def corpus_html_sections(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1616,91 +1508,80 @@ def html_to_markdown(
     from ..functions.dom import TextNode, parse_html
 
     schema = "page_url string, markdown string, n_blocks long, n_links long"
-    _BLOCKS = {"p", "div", "section", "article", "blockquote", "pre",
-               "ul", "ol", "table", "h1", "h2", "h3", "h4", "h5", "h6"}
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in (
-                "page_url", "markdown", "n_blocks", "n_links")}
+    def flat(s):
+        return " ".join(s.split())
 
-            def flat(s):
-                return " ".join(s.split())
+    def inline(el, stats) -> str:
+        parts = []
+        for c in el.children:
+            if isinstance(c, TextNode):
+                parts.append(c.text)
+                continue
+            if c.tag in ("script", "style"):
+                continue
+            body = inline(c, stats)
+            if c.tag == "a" and "href" in c.attrs:
+                stats["links"] += 1
+                parts.append(f"[{flat(body)}]({c.attrs['href']})")
+            elif c.tag in ("strong", "b"):
+                parts.append(f"**{flat(body)}**")
+            elif c.tag in ("em", "i"):
+                parts.append(f"*{flat(body)}*")
+            elif c.tag == "code":
+                parts.append(f"`{flat(body)}`")
+            elif c.tag == "img":
+                alt = flat(c.attrs.get("alt", ""))
+                src = c.attrs.get("src", "")
+                parts.append(f"![{alt}]({src})")
+            elif c.tag == "br":
+                parts.append(" ")
+            else:
+                parts.append(body)
+        return " ".join(p for p in (x.strip() for x in parts) if p)
 
-            def inline(el, stats) -> str:
-                parts = []
-                for c in el.children:
-                    if isinstance(c, TextNode):
-                        parts.append(c.text)
+    def blocks(el, stats):
+        for c in el.child_elements():
+            t = c.tag
+            if t in ("script", "style"):
+                continue
+            if t in ("h1", "h2", "h3", "h4", "h5", "h6"):
+                yield "#" * int(t[1]) + " " + flat(inline(c, stats))
+            elif t == "p":
+                text = flat(inline(c, stats))
+                if text:
+                    yield text
+            elif t == "blockquote":
+                text = flat(inline(c, stats))
+                if text:
+                    yield "> " + text
+            elif t == "pre":
+                yield "```\n" + c.all_text().strip("\n") + "\n```"
+            elif t in ("ul", "ol"):
+                items = []
+                n = 0
+                for li in c.child_elements():
+                    if li.tag != "li":
                         continue
-                    if c.tag in ("script", "style"):
-                        continue
-                    body = inline(c, stats)
-                    if c.tag == "a" and "href" in c.attrs:
-                        stats["links"] += 1
-                        parts.append(f"[{flat(body)}]({c.attrs['href']})")
-                    elif c.tag in ("strong", "b"):
-                        parts.append(f"**{flat(body)}**")
-                    elif c.tag in ("em", "i"):
-                        parts.append(f"*{flat(body)}*")
-                    elif c.tag == "code":
-                        parts.append(f"`{flat(body)}`")
-                    elif c.tag == "img":
-                        alt = flat(c.attrs.get("alt", ""))
-                        src = c.attrs.get("src", "")
-                        parts.append(f"![{alt}]({src})")
-                    elif c.tag == "br":
-                        parts.append(" ")
-                    else:
-                        parts.append(body)
-                return " ".join(p for p in (x.strip() for x in parts) if p)
+                    n += 1
+                    mark = f"{n}." if t == "ol" else "-"
+                    items.append(f"{mark} " + flat(inline(li, stats)))
+                if items:
+                    yield "\n".join(items)
+            else:
+                yield from blocks(c, stats)
 
-            def blocks(el, stats):
-                for c in el.child_elements():
-                    t = c.tag
-                    if t in ("script", "style"):
-                        continue
-                    if t in ("h1", "h2", "h3", "h4", "h5", "h6"):
-                        yield "#" * int(t[1]) + " " + flat(inline(c, stats))
-                    elif t == "p":
-                        text = flat(inline(c, stats))
-                        if text:
-                            yield text
-                    elif t == "blockquote":
-                        text = flat(inline(c, stats))
-                        if text:
-                            yield "> " + text
-                    elif t == "pre":
-                        yield "```\n" + c.all_text().strip("\n") + "\n```"
-                    elif t in ("ul", "ol"):
-                        items = []
-                        n = 0
-                        for li in c.child_elements():
-                            if li.tag != "li":
-                                continue
-                            n += 1
-                            mark = f"{n}." if t == "ol" else "-"
-                            items.append(
-                                f"{mark} " + flat(inline(li, stats))
-                            )
-                        if items:
-                            yield "\n".join(items)
-                    else:
-                        yield from blocks(c, stats)
+    def row(url, html):
+        if html is None:
+            return
+        stats = {"links": 0}
+        bl = list(blocks(parse_html(html), stats))
+        yield {
+            "page_url": url, "markdown": "\n\n".join(bl),
+            "n_blocks": len(bl), "n_links": stats["links"],
+        }
 
-            for url, html in zip(pdf[url_col], pdf[html_col]):
-                if html is None:
-                    continue
-                root = parse_html(html)
-                stats = {"links": 0}
-                bl = list(blocks(root, stats))
-                out["page_url"].append(url)
-                out["markdown"].append("\n\n".join(bl))
-                out["n_blocks"].append(len(bl))
-                out["n_links"].append(stats["links"])
-            yield pd.DataFrame(out)
-
-    return pages.mapInPandas(run, schema=schema)
+    return map_rows(pages.select(url_col, html_col), row, schema)
 
 
 def corpus_html_markdown(spark: SparkSession, sf_dir: str) -> DataFrame:

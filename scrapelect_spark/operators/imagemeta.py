@@ -19,10 +19,8 @@ malformed APP1 becomes a ``failed=1`` row, never a dead batch.
 from __future__ import annotations
 
 import hashlib
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -42,34 +40,29 @@ def extract_exif(
         "exif_error string"
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {
-                id_col: [], "make": [], "model": [], "orientation": [],
-                "iso": [], "pixel_x": [], "pixel_y": [],
-                "exposure_den": [], "exif_error": [],
+    def row(iid, raw):
+        try:
+            tags = E.parse_exif_jpeg(bytes(raw))
+            exp = tags.get(E.TAG_EXPOSURE_TIME)
+            yield {
+                id_col: iid,
+                "make": tags.get(E.TAG_MAKE),
+                "model": tags.get(E.TAG_MODEL),
+                "orientation": tags.get(E.TAG_ORIENTATION),
+                "iso": tags.get(E.TAG_ISO),
+                "pixel_x": tags.get(E.TAG_PIXEL_X),
+                "pixel_y": tags.get(E.TAG_PIXEL_Y),
+                "exposure_den": exp[1] if exp else None,
+                "exif_error": None,
             }
-            for iid, raw in zip(pdf[id_col], pdf[bytes_col]):
-                out[id_col].append(iid)
-                try:
-                    tags = E.parse_exif_jpeg(bytes(raw))
-                    exp = tags.get(E.TAG_EXPOSURE_TIME)
-                    out["make"].append(tags.get(E.TAG_MAKE))
-                    out["model"].append(tags.get(E.TAG_MODEL))
-                    out["orientation"].append(tags.get(E.TAG_ORIENTATION))
-                    out["iso"].append(tags.get(E.TAG_ISO))
-                    out["pixel_x"].append(tags.get(E.TAG_PIXEL_X))
-                    out["pixel_y"].append(tags.get(E.TAG_PIXEL_Y))
-                    out["exposure_den"].append(exp[1] if exp else None)
-                    out["exif_error"].append(None)
-                except Exception as e:  # noqa: BLE001 — permissive corpus
-                    for k in ("make", "model", "orientation", "iso",
-                              "pixel_x", "pixel_y", "exposure_den"):
-                        out[k].append(None)
-                    out["exif_error"].append(str(e) or type(e).__name__)
-            yield pd.DataFrame(out)
+        except Exception as e:  # noqa: BLE001 — permissive corpus
+            yield {
+                id_col: iid, "make": None, "model": None, "orientation": None,
+                "iso": None, "pixel_x": None, "pixel_y": None,
+                "exposure_den": None, "exif_error": str(e) or type(e).__name__,
+            }
 
-    return images.mapInPandas(run, schema=schema)
+    return map_rows(images.select(id_col, bytes_col), row, schema)
 
 
 def phash_neardup(
@@ -311,23 +304,15 @@ def estimate_quality(
 
     schema = f"{id_col} string, quality int, quality_error string"
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, qs, errs = [], [], []
-            for iid, raw in zip(pdf[id_col], pdf[bytes_col]):
-                ids.append(iid)
-                try:
-                    qs.append(estimate_jpeg_quality(bytes(raw)))
-                    errs.append(None)
-                except Exception as e:  # noqa: BLE001 — permissive corpus
-                    qs.append(None)
-                    errs.append(str(e) or type(e).__name__)
-            yield pd.DataFrame(
-                {id_col: ids, "quality": pd.array(qs, dtype="Int32"),
-                 "quality_error": errs}
-            )
+    def row(iid, raw):
+        q = err = None
+        try:
+            q = estimate_jpeg_quality(bytes(raw))
+        except Exception as e:  # noqa: BLE001 — permissive corpus
+            err = str(e) or type(e).__name__
+        yield {id_col: iid, "quality": q, "quality_error": err}
 
-    return images.mapInPandas(run, schema=schema)
+    return map_rows(images.select(id_col, bytes_col), row, schema)
 
 
 def image_jpeg_quality(spark, sf_dir: str) -> DataFrame:
@@ -397,46 +382,22 @@ def pixel_stats(
         "flat_permille long, failed long"
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, ws, hs, sums, flats, fails = [], [], [], [], [], []
-            for iid, raw, fmt in zip(
-                pdf[id_col], pdf[bytes_col], pdf[fmt_col]
-            ):
-                ids.append(iid)
-                try:
-                    arr = decode_image(raw, fmt).astype(np.int64)
-                    luma = (
-                        arr[:, :, 0] * 299 + arr[:, :, 1] * 587
-                        + arr[:, :, 2] * 114
-                    ) // 1000
-                    npix = luma.size
-                    hist = np.bincount(
-                        (luma.ravel() * n_bins) // 256, minlength=n_bins
-                    )
-                    ws.append(arr.shape[1])
-                    hs.append(arr.shape[0])
-                    sums.append(int(luma.sum()))
-                    flats.append(int(hist.max()) * 1000 // npix)
-                    fails.append(0)
-                except Exception:  # noqa: BLE001 — permissive corpus
-                    ws.append(None)
-                    hs.append(None)
-                    sums.append(None)
-                    flats.append(None)
-                    fails.append(1)
-            yield pd.DataFrame(
-                {
-                    id_col: ids,
-                    "w": pd.array(ws, dtype="Int32"),
-                    "h": pd.array(hs, dtype="Int32"),
-                    "luma_sum": pd.array(sums, dtype="Int64"),
-                    "flat_permille": pd.array(flats, dtype="Int64"),
-                    "failed": fails,
-                }
-            )
+    def row(iid, raw, fmt):
+        arr = decode_image(raw, fmt).astype(np.int64)
+        luma = (
+            arr[:, :, 0] * 299 + arr[:, :, 1] * 587 + arr[:, :, 2] * 114
+        ) // 1000
+        hist = np.bincount((luma.ravel() * n_bins) // 256, minlength=n_bins)
+        yield {
+            id_col: iid, "w": arr.shape[1], "h": arr.shape[0],
+            "luma_sum": int(luma.sum()),
+            "flat_permille": int(hist.max()) * 1000 // luma.size,
+        }
 
-    return images.mapInPandas(run, schema=schema)
+    # untrusted bytes: any exception is that row's failed=1
+    return map_rows(
+        images.select(id_col, bytes_col, fmt_col), row, schema, errors=(Exception,)
+    )
 
 
 def _stats_pngs(spark, sf_dir: str, picture) -> DataFrame:
@@ -528,60 +489,31 @@ def laplacian_stats(
         "lap_mean_milli long, is_sharp long, failed long"
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, ws, hs, sums, means, sharps, fails = (
-                [], [], [], [], [], [], []
-            )
-            for iid, raw, fmt in zip(
-                pdf[id_col], pdf[bytes_col], pdf[fmt_col]
-            ):
-                ids.append(iid)
-                try:
-                    arr = decode_image(raw, fmt).astype(np.int64)
-                    luma = (
-                        arr[:, :, 0] * 299 + arr[:, :, 1] * 587
-                        + arr[:, :, 2] * 114
-                    ) // 1000
-                    h, w = luma.shape
-                    if h < 3 or w < 3:
-                        raise ValueError("image too small for Laplacian")
-                    lap = (
-                        4 * luma[1:-1, 1:-1]
-                        - luma[:-2, 1:-1] - luma[2:, 1:-1]
-                        - luma[1:-1, :-2] - luma[1:-1, 2:]
-                    )
-                    total = int(np.abs(lap).sum())
-                    interior = (h - 2) * (w - 2)
-                    mean_milli = total * 1000 // interior
-                    ws.append(w)
-                    hs.append(h)
-                    sums.append(total)
-                    means.append(mean_milli)
-                    sharps.append(
-                        1 if mean_milli >= sharp_milli_threshold else 0
-                    )
-                    fails.append(0)
-                except Exception:  # noqa: BLE001 — permissive corpus
-                    ws.append(None)
-                    hs.append(None)
-                    sums.append(None)
-                    means.append(None)
-                    sharps.append(None)
-                    fails.append(1)
-            yield pd.DataFrame(
-                {
-                    id_col: ids,
-                    "w": pd.array(ws, dtype="Int32"),
-                    "h": pd.array(hs, dtype="Int32"),
-                    "abs_lap_sum": pd.array(sums, dtype="Int64"),
-                    "lap_mean_milli": pd.array(means, dtype="Int64"),
-                    "is_sharp": pd.array(sharps, dtype="Int64"),
-                    "failed": fails,
-                }
-            )
+    def row(iid, raw, fmt):
+        arr = decode_image(raw, fmt).astype(np.int64)
+        luma = (
+            arr[:, :, 0] * 299 + arr[:, :, 1] * 587 + arr[:, :, 2] * 114
+        ) // 1000
+        h, w = luma.shape
+        if h < 3 or w < 3:
+            raise ValueError("image too small for Laplacian")
+        lap = (
+            4 * luma[1:-1, 1:-1]
+            - luma[:-2, 1:-1] - luma[2:, 1:-1]
+            - luma[1:-1, :-2] - luma[1:-1, 2:]
+        )
+        total = int(np.abs(lap).sum())
+        mean_milli = total * 1000 // ((h - 2) * (w - 2))
+        yield {
+            id_col: iid, "w": w, "h": h, "abs_lap_sum": total,
+            "lap_mean_milli": mean_milli,
+            "is_sharp": 1 if mean_milli >= sharp_milli_threshold else 0,
+        }
 
-    return images.mapInPandas(run, schema=schema)
+    # untrusted bytes: any exception is that row's failed=1
+    return map_rows(
+        images.select(id_col, bytes_col, fmt_col), row, schema, errors=(Exception,)
+    )
 
 
 def image_sharpness_stats(spark, sf_dir: str) -> DataFrame:
@@ -708,52 +640,26 @@ def color_stats(
         "is_grayscale long, failed long"
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            cols = {k: [] for k in (
-                "id", "w", "h", "r", "g", "b", "ch", "gp", "gs", "f"
-            )}
-            for iid, raw, fmt in zip(
-                pdf[id_col], pdf[bytes_col], pdf[fmt_col]
-            ):
-                cols["id"].append(iid)
-                try:
-                    arr = decode_image(raw, fmt).astype(np.int64)
-                    h, w = arr.shape[:2]
-                    hi = arr.max(axis=2)
-                    lo = arr.min(axis=2)
-                    chroma = hi - lo
-                    npix = h * w
-                    n_gray = int((chroma == 0).sum())
-                    cols["w"].append(w)
-                    cols["h"].append(h)
-                    cols["r"].append(int(arr[:, :, 0].sum()))
-                    cols["g"].append(int(arr[:, :, 1].sum()))
-                    cols["b"].append(int(arr[:, :, 2].sum()))
-                    cols["ch"].append(int(chroma.sum()))
-                    cols["gp"].append(n_gray * 1000 // npix)
-                    cols["gs"].append(1 if n_gray == npix else 0)
-                    cols["f"].append(0)
-                except Exception:  # noqa: BLE001 — permissive corpus
-                    for k in ("w", "h", "r", "g", "b", "ch", "gp", "gs"):
-                        cols[k].append(None)
-                    cols["f"].append(1)
-            yield pd.DataFrame(
-                {
-                    id_col: cols["id"],
-                    "w": pd.array(cols["w"], dtype="Int32"),
-                    "h": pd.array(cols["h"], dtype="Int32"),
-                    "r_sum": pd.array(cols["r"], dtype="Int64"),
-                    "g_sum": pd.array(cols["g"], dtype="Int64"),
-                    "b_sum": pd.array(cols["b"], dtype="Int64"),
-                    "chroma_sum": pd.array(cols["ch"], dtype="Int64"),
-                    "gray_permille": pd.array(cols["gp"], dtype="Int64"),
-                    "is_grayscale": pd.array(cols["gs"], dtype="Int64"),
-                    "failed": cols["f"],
-                }
-            )
+    def row(iid, raw, fmt):
+        arr = decode_image(raw, fmt).astype(np.int64)
+        h, w = arr.shape[:2]
+        chroma = arr.max(axis=2) - arr.min(axis=2)
+        npix = h * w
+        n_gray = int((chroma == 0).sum())
+        yield {
+            id_col: iid, "w": w, "h": h,
+            "r_sum": int(arr[:, :, 0].sum()),
+            "g_sum": int(arr[:, :, 1].sum()),
+            "b_sum": int(arr[:, :, 2].sum()),
+            "chroma_sum": int(chroma.sum()),
+            "gray_permille": n_gray * 1000 // npix,
+            "is_grayscale": 1 if n_gray == npix else 0,
+        }
 
-    return images.mapInPandas(run, schema=schema)
+    # untrusted bytes: any exception is that row's failed=1
+    return map_rows(
+        images.select(id_col, bytes_col, fmt_col), row, schema, errors=(Exception,)
+    )
 
 
 def image_color_stats(spark, sf_dir: str) -> DataFrame:
@@ -858,53 +764,25 @@ def border_stats(
     def _leading(flags: np.ndarray) -> int:
         return int(np.argmin(flags)) if not flags.all() else len(flags)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in (
-                "id", "w", "h", "t", "b", "l", "r", "cw", "ch", "f"
-            )}
-            for iid, raw, fmt in zip(
-                pdf[id_col], pdf[bytes_col], pdf[fmt_col]
-            ):
-                out["id"].append(iid)
-                try:
-                    arr = decode_image(raw, fmt)
-                    h, w = arr.shape[:2]
-                    eq00 = (arr == arr[0, 0]).all(axis=2)
-                    eq11 = (arr == arr[h - 1, w - 1]).all(axis=2)
-                    t = _leading(eq00.all(axis=1))
-                    b = _leading(eq11.all(axis=1)[::-1])
-                    le = _leading(eq00.all(axis=0))
-                    r = _leading(eq11.all(axis=0)[::-1])
-                    out["w"].append(w)
-                    out["h"].append(h)
-                    out["t"].append(t)
-                    out["b"].append(b)
-                    out["l"].append(le)
-                    out["r"].append(r)
-                    out["cw"].append(max(0, w - le - r))
-                    out["ch"].append(max(0, h - t - b))
-                    out["f"].append(0)
-                except Exception:  # noqa: BLE001 — permissive corpus
-                    for k in ("w", "h", "t", "b", "l", "r", "cw", "ch"):
-                        out[k].append(None)
-                    out["f"].append(1)
-            yield pd.DataFrame(
-                {
-                    id_col: out["id"],
-                    "w": pd.array(out["w"], dtype="Int32"),
-                    "h": pd.array(out["h"], dtype="Int32"),
-                    "top_border": pd.array(out["t"], dtype="Int32"),
-                    "bottom_border": pd.array(out["b"], dtype="Int32"),
-                    "left_border": pd.array(out["l"], dtype="Int32"),
-                    "right_border": pd.array(out["r"], dtype="Int32"),
-                    "content_w": pd.array(out["cw"], dtype="Int32"),
-                    "content_h": pd.array(out["ch"], dtype="Int32"),
-                    "failed": out["f"],
-                }
-            )
+    def row(iid, raw, fmt):
+        arr = decode_image(raw, fmt)
+        h, w = arr.shape[:2]
+        eq00 = (arr == arr[0, 0]).all(axis=2)
+        eq11 = (arr == arr[h - 1, w - 1]).all(axis=2)
+        t = _leading(eq00.all(axis=1))
+        b = _leading(eq11.all(axis=1)[::-1])
+        le = _leading(eq00.all(axis=0))
+        r = _leading(eq11.all(axis=0)[::-1])
+        yield {
+            id_col: iid, "w": w, "h": h, "top_border": t,
+            "bottom_border": b, "left_border": le, "right_border": r,
+            "content_w": max(0, w - le - r), "content_h": max(0, h - t - b),
+        }
 
-    return images.mapInPandas(run, schema=schema)
+    # untrusted bytes: any exception is that row's failed=1
+    return map_rows(
+        images.select(id_col, bytes_col, fmt_col), row, schema, errors=(Exception,)
+    )
 
 
 def image_border_stats(spark, sf_dir: str) -> DataFrame:
@@ -1000,63 +878,34 @@ def autorotate_stats(
         "bright_corner long, failed long"
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in (
-                id_col, "orientation", "w", "h", "bright_corner", "failed"
-            )}
-            for iid, raw in zip(pdf[id_col], pdf[bytes_col]):
-                out[id_col].append(iid)
-                try:
-                    raw = bytes(raw)
-                    try:
-                        o = int(
-                            parse_exif_jpeg(raw).get(TAG_ORIENTATION, 1)
-                        )
-                    except Exception:
-                        o = 1  # no/malformed EXIF: stored data is upright
-                    arr = decode_image(raw, "jpeg")
-                    up = apply_orientation(arr, o if 1 <= o <= 8 else 1)
-                    luma = (
-                        up[:, :, 0].astype(np.int64) * 299
-                        + up[:, :, 1].astype(np.int64) * 587
-                        + up[:, :, 2].astype(np.int64) * 114
-                    )
-                    h, w = luma.shape
-                    hh, hw = h // 2, w // 2
-                    quads = [
-                        int(luma[:hh, :hw].sum()),   # 0 TL
-                        int(luma[:hh, hw:].sum()),   # 1 TR
-                        int(luma[hh:, :hw].sum()),   # 2 BL
-                        int(luma[hh:, hw:].sum()),   # 3 BR
-                    ]
-                    out["orientation"].append(o)
-                    out["w"].append(w)
-                    out["h"].append(h)
-                    out["bright_corner"].append(
-                        int(np.argmax(np.array(quads)))
-                    )
-                    out["failed"].append(0)
-                except Exception:  # noqa: BLE001 — permissive corpus
-                    for k in ("orientation", "w", "h", "bright_corner"):
-                        out[k].append(None)
-                    out["failed"].append(1)
-            yield pd.DataFrame(
-                {
-                    id_col: out[id_col],
-                    "orientation": pd.array(
-                        out["orientation"], dtype="Int64"
-                    ),
-                    "w": pd.array(out["w"], dtype="Int32"),
-                    "h": pd.array(out["h"], dtype="Int32"),
-                    "bright_corner": pd.array(
-                        out["bright_corner"], dtype="Int64"
-                    ),
-                    "failed": out["failed"],
-                }
-            )
+    def row(iid, raw):
+        raw = bytes(raw)
+        try:
+            o = int(parse_exif_jpeg(raw).get(TAG_ORIENTATION, 1))
+        except Exception:
+            o = 1  # no/malformed EXIF: stored data is upright
+        arr = decode_image(raw, "jpeg")
+        up = apply_orientation(arr, o if 1 <= o <= 8 else 1)
+        luma = (
+            up[:, :, 0].astype(np.int64) * 299
+            + up[:, :, 1].astype(np.int64) * 587
+            + up[:, :, 2].astype(np.int64) * 114
+        )
+        h, w = luma.shape
+        hh, hw = h // 2, w // 2
+        quads = [
+            int(luma[:hh, :hw].sum()),   # 0 TL
+            int(luma[:hh, hw:].sum()),   # 1 TR
+            int(luma[hh:, :hw].sum()),   # 2 BL
+            int(luma[hh:, hw:].sum()),   # 3 BR
+        ]
+        yield {
+            id_col: iid, "orientation": o, "w": w, "h": h,
+            "bright_corner": int(np.argmax(np.array(quads))),
+        }
 
-    return images.mapInPandas(run, schema=schema)
+    # untrusted bytes: any exception is that row's failed=1
+    return map_rows(images.select(id_col, bytes_col), row, schema, errors=(Exception,))
 
 
 def image_autorotate(spark, sf_dir: str) -> DataFrame:

@@ -32,10 +32,8 @@ from __future__ import annotations
 
 import struct
 from functools import partial
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -151,36 +149,26 @@ def with_image_features(
     pixels — the input_hint sink schema.  Decode failures are captured
     per-row (permissive corpus mode), including the JPEG stub path."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            n = len(pdf)
-            w = np.full(n, None, dtype=object)
-            h = np.full(n, None, dtype=object)
-            ph = np.full(n, None, dtype=object)
-            err = np.full(n, None, dtype=object)
-            for i, (raw, fmt) in enumerate(zip(pdf[bytes_col], pdf[fmt_col])):
-                try:
-                    arr = decode_image(raw, fmt)
-                    h[i], w[i] = int(arr.shape[0]), int(arr.shape[1])
-                    ph[i] = phash64(arr)
-                except Exception as e:  # noqa: BLE001 — permissive corpus
-                    # mode: truncated/corrupt payloads raise anything
-                    # (ValueError, struct.error, IndexError, ...)
-                    err[i] = str(e) or type(e).__name__
-            yield pd.DataFrame(
-                {
-                    "image_id": pdf[id_col],
-                    "bytes": pdf[bytes_col],
-                    "w": w,
-                    "h": h,
-                    "fmt": pdf[fmt_col],
-                    "caption": pdf[caption_col],
-                    "phash": ph,
-                    "decode_error": err,
-                }
-            )
+    def row(image_id, raw, fmt, caption):
+        w = h = ph = err = None
+        try:
+            arr = decode_image(raw, fmt)
+            h, w = int(arr.shape[0]), int(arr.shape[1])
+            ph = phash64(arr)
+        except Exception as e:  # noqa: BLE001 — permissive corpus
+            # mode: truncated/corrupt payloads raise anything
+            # (ValueError, struct.error, IndexError, ...)
+            err = str(e) or type(e).__name__
+        yield {
+            "image_id": image_id, "bytes": raw, "w": w, "h": h, "fmt": fmt,
+            "caption": caption, "phash": ph, "decode_error": err,
+        }
 
-    return images.mapInPandas(run, schema=IMAGE_META_SCHEMA)
+    return map_rows(
+        images.select(id_col, bytes_col, fmt_col, caption_col),
+        row,
+        IMAGE_META_SCHEMA,
+    )
 
 
 RESIZE_SCHEMA = StructType(
@@ -280,21 +268,14 @@ def resize_images(
     to the input dtype is deterministic half-up."""
     sample = _RESIZE_METHODS[method]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, blobs, ws, hs = [], [], [], []
-            for image_id, raw, fmt in zip(pdf["image_id"], pdf["bytes"], pdf["fmt"]):
-                arr = decode_image(raw, fmt)
-                out = sample(arr, target_w, target_h)
-                ids.append(image_id)
-                blobs.append(encode_png(out))
-                ws.append(target_w)
-                hs.append(target_h)
-            yield pd.DataFrame(
-                {"image_id": ids, "bytes": blobs, "w": ws, "h": hs}
-            )
+    def row(image_id, raw, fmt):
+        out = sample(decode_image(raw, fmt), target_w, target_h)
+        yield {
+            "image_id": image_id, "bytes": encode_png(out),
+            "w": target_w, "h": target_h,
+        }
 
-    return images.mapInPandas(run, schema=RESIZE_SCHEMA)
+    return map_rows(images.select("image_id", "bytes", "fmt"), row, RESIZE_SCHEMA)
 
 
 PSNR_SCHEMA = StructType(
@@ -321,30 +302,18 @@ def verify_against_reference(
     )
     cap_bc = spark.sparkContext.broadcast(reference_captions)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pix = pix_bc.value
-        caps = cap_bc.value
-        for pdf in batches:
-            ids, scores, matches = [], [], []
-            for image_id, raw, fmt, caption in zip(
-                pdf["image_id"], pdf["bytes"], pdf["fmt"], pdf["caption"]
-            ):
-                ids.append(image_id)
-                ref = pix.get(image_id)
-                if ref is None or raw is None:
-                    scores.append(None)
-                else:
-                    scores.append(
-                        psnr(decode_png(ref), decode_image(raw, fmt))
-                    )
-                matches.append(
-                    "y" if caps.get(image_id) == caption else "n"
-                )
-            yield pd.DataFrame(
-                {"image_id": ids, "psnr_db": scores, "caption_match": matches}
-            )
+    def row(image_id, raw, fmt, caption):
+        ref = pix_bc.value.get(image_id)
+        yield {
+            "image_id": image_id,
+            "psnr_db": None if ref is None or raw is None
+            else psnr(decode_png(ref), decode_image(raw, fmt)),
+            "caption_match": "y" if cap_bc.value.get(image_id) == caption else "n",
+        }
 
-    return images.mapInPandas(run, schema=PSNR_SCHEMA)
+    return map_rows(
+        images.select("image_id", "bytes", "fmt", "caption"), row, PSNR_SCHEMA
+    )
 
 
 FRAME_SCHEMA = StructType(
@@ -455,28 +424,23 @@ def frame_sample(video: DataFrame, every_n: int = 10) -> DataFrame:
         else:
             yield from decode_avi_mjpeg_frames(raw, every_n=every_n)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k.name: [] for k in FRAME_SCHEMA.fields}
-            for video_id, raw in zip(pdf["video_id"], pdf["bytes"]):
-                try:
-                    for idx, arr in sampled_frames(bytes(raw)):
-                        out["video_id"].append(video_id)
-                        out["frame_idx"].append(idx)
-                        out["bytes"].append(encode_png(arr))
-                        out["h"].append(int(arr.shape[0]))
-                        out["w"].append(int(arr.shape[1]))
-                        out["decode_error"].append(None)
-                except Exception as e:  # noqa: BLE001 — permissive corpus
-                    out["video_id"].append(video_id)
-                    out["frame_idx"].append(None)
-                    out["bytes"].append(None)
-                    out["h"].append(None)
-                    out["w"].append(None)
-                    out["decode_error"].append(str(e) or type(e).__name__)
-            yield pd.DataFrame(out)
+    def row(video_id, raw):
+        # caught here, not via map_rows(errors=...): a truncated stream
+        # keeps the frames decoded before the error, then one error row
+        try:
+            for idx, arr in sampled_frames(bytes(raw)):
+                yield {
+                    "video_id": video_id, "frame_idx": idx,
+                    "bytes": encode_png(arr), "w": int(arr.shape[1]),
+                    "h": int(arr.shape[0]), "decode_error": None,
+                }
+        except Exception as e:  # noqa: BLE001 — permissive corpus
+            yield {
+                "video_id": video_id, "frame_idx": None, "bytes": None,
+                "w": None, "h": None, "decode_error": str(e) or type(e).__name__,
+            }
 
-    return video.mapInPandas(run, schema=FRAME_SCHEMA)
+    return map_rows(video.select("video_id", "bytes"), row, FRAME_SCHEMA)
 
 
 AUDIO_FEATURES_SCHEMA = StructType(
@@ -511,90 +475,63 @@ def audio_features(
     from ..sources.mp2 import decode_mpa
     from ..sources.wav import duration_rms
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            n = len(pdf)
-            dur = np.full(n, None, dtype=object)
-            rms = np.full(n, None, dtype=object)
-            err = np.full(n, None, dtype=object)
-            for i, (raw, fmt) in enumerate(zip(pdf[bytes_col], pdf[fmt_col])):
-                if fmt in ("wav", "wave"):
-                    try:
-                        dur[i], rms[i] = duration_rms(raw)
-                    except Exception as e:  # wave.Error, ValueError, EOFError
-                        done = False
-                        # compressed WAV tags: IMA ADPCM (0x11), then
-                        # G.711 μ-law/A-law (7/6)
-                        for decoder in (decode_wav_ima, decode_wav_g711):
-                            try:
-                                samples, rate = decoder(bytes(raw))
-                            except Exception:
-                                continue
-                            if samples.ndim > 1:  # downmix for RMS
-                                samples = samples.mean(axis=1)
-                            dur[i] = len(samples) / rate
-                            x = samples.astype(np.float64) / 32768.0
-                            rms[i] = float(np.sqrt(np.mean(x * x)))
-                            err[i] = None
-                            done = True
-                            break
-                        if done:
-                            continue
-                        # EOFError from a truncated header stringifies
-                        # empty — fall back to the exception type name
-                        msg = str(e) or type(e).__name__
-                        err[i] = f"WAV decode failed: {msg}"
-                elif fmt == "flac":
-                    try:
-                        samples, rate = decode_flac(bytes(raw))
-                        if samples.ndim > 1:  # downmix for RMS
-                            samples = samples.mean(axis=1)
-                        dur[i] = len(samples) / rate
-                        x = samples.astype(np.float64) / 32768.0
-                        rms[i] = float(np.sqrt(np.mean(x * x)))
-                    except Exception as e:
-                        msg = str(e) or type(e).__name__
-                        err[i] = f"FLAC decode failed: {msg}"
-                elif fmt in ("mp2", "mp1", "mpa"):
-                    try:
-                        samples, rate = decode_mpa(bytes(raw))
-                        if samples.ndim > 1:  # downmix for RMS
-                            samples = samples.mean(axis=1)
-                        dur[i] = len(samples) / rate
-                        x = samples.astype(np.float64) / 32768.0
-                        rms[i] = float(np.sqrt(np.mean(x * x)))
-                    except Exception as e:
-                        msg = str(e) or type(e).__name__
-                        err[i] = f"MPEG audio decode failed: {msg}"
-                elif fmt in ("ogg", "oga"):
-                    # REAL path for Ogg-FLAC (RFC 3533 pages + the xiph
-                    # FLAC mapping, sources/ogg.py).  Ogg-Vorbis payloads
-                    # fail the mapping check and error-capture — the
-                    # psychoacoustic codec itself stays a declared stub.
-                    try:
-                        from ..sources.ogg import demux_flac_ogg
+    def features(samples, rate):
+        if samples.ndim > 1:  # downmix for RMS
+            samples = samples.mean(axis=1)
+        x = samples.astype(np.float64) / 32768.0
+        return len(samples) / rate, float(np.sqrt(np.mean(x * x)))
 
-                        samples, rate = decode_flac(demux_flac_ogg(bytes(raw)))
-                        if samples.ndim > 1:  # downmix for RMS
-                            samples = samples.mean(axis=1)
-                        dur[i] = len(samples) / rate
-                        x = samples.astype(np.float64) / 32768.0
-                        rms[i] = float(np.sqrt(np.mean(x * x)))
-                    except Exception as e:
-                        msg = str(e) or type(e).__name__
-                        err[i] = f"Ogg decode failed: {msg}"
+    def row(audio_id, raw, fmt):
+        dur = rms = err = None
+        if fmt in ("wav", "wave"):
+            try:
+                dur, rms = duration_rms(raw)
+            except Exception as e:  # wave.Error, ValueError, EOFError
+                # compressed WAV tags: IMA ADPCM (0x11), then
+                # G.711 μ-law/A-law (7/6)
+                for decoder in (decode_wav_ima, decode_wav_g711):
+                    try:
+                        samples, rate = decoder(bytes(raw))
+                    except Exception:
+                        continue
+                    dur, rms = features(samples, rate)
+                    break
                 else:
-                    err[i] = f"audio decode for {fmt!r} requires a codec library"
-            yield pd.DataFrame(
-                {
-                    "audio_id": pdf["audio_id"],
-                    "duration_s": dur,
-                    "rms": rms,
-                    "decode_error": err,
-                }
-            )
+                    # EOFError from a truncated header stringifies
+                    # empty — fall back to the exception type name
+                    msg = str(e) or type(e).__name__
+                    err = f"WAV decode failed: {msg}"
+        elif fmt == "flac":
+            try:
+                dur, rms = features(*decode_flac(bytes(raw)))
+            except Exception as e:
+                msg = str(e) or type(e).__name__
+                err = f"FLAC decode failed: {msg}"
+        elif fmt in ("mp2", "mp1", "mpa"):
+            try:
+                dur, rms = features(*decode_mpa(bytes(raw)))
+            except Exception as e:
+                msg = str(e) or type(e).__name__
+                err = f"MPEG audio decode failed: {msg}"
+        elif fmt in ("ogg", "oga"):
+            # REAL path for Ogg-FLAC (RFC 3533 pages + the xiph
+            # FLAC mapping, sources/ogg.py).  Ogg-Vorbis payloads
+            # fail the mapping check and error-capture — the
+            # psychoacoustic codec itself stays a declared stub.
+            try:
+                from ..sources.ogg import demux_flac_ogg
 
-    return audio.mapInPandas(run, schema=AUDIO_FEATURES_SCHEMA)
+                dur, rms = features(*decode_flac(demux_flac_ogg(bytes(raw))))
+            except Exception as e:
+                msg = str(e) or type(e).__name__
+                err = f"Ogg decode failed: {msg}"
+        else:
+            err = f"audio decode for {fmt!r} requires a codec library"
+        yield {"audio_id": audio_id, "duration_s": dur, "rms": rms, "decode_error": err}
+
+    return map_rows(
+        audio.select("audio_id", bytes_col, fmt_col), row, AUDIO_FEATURES_SCHEMA
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -889,37 +826,25 @@ def extract_patches(images: DataFrame, patch: int) -> DataFrame:
     fans out to patches with zero shuffle: the parent row and all its
     patches stay in the same partition for downstream embedding."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, pys, pxs, blobs, sums = [], [], [], [], []
-            for image_id, raw, fmt in zip(pdf["image_id"], pdf["bytes"], pdf["fmt"]):
-                arr = decode_image(raw, fmt)
-                if arr.ndim == 3 and arr.shape[2] == 1:
-                    arr = arr[:, :, 0]
-                hp, wp = arr.shape[0] // patch, arr.shape[1] // patch
-                tiles = (
-                    arr[: hp * patch, : wp * patch]
-                    .reshape(hp, patch, wp, patch, *arr.shape[2:])
-                )
-                for py in range(hp):
-                    for px in range(wp):
-                        tile = tiles[py, :, px]
-                        ids.append(image_id)
-                        pys.append(py)
-                        pxs.append(px)
-                        blobs.append(encode_png(np.ascontiguousarray(tile)))
-                        sums.append(int(tile.astype(np.int64).sum()))
-            yield pd.DataFrame(
-                {
-                    "image_id": ids,
-                    "py": pd.array(pys, dtype="int32"),
-                    "px": pd.array(pxs, dtype="int32"),
-                    "bytes": blobs,
-                    "patch_sum": pd.array(sums, dtype="int64"),
+    def row(image_id, raw, fmt):
+        arr = decode_image(raw, fmt)
+        if arr.ndim == 3 and arr.shape[2] == 1:
+            arr = arr[:, :, 0]
+        hp, wp = arr.shape[0] // patch, arr.shape[1] // patch
+        tiles = (
+            arr[: hp * patch, : wp * patch]
+            .reshape(hp, patch, wp, patch, *arr.shape[2:])
+        )
+        for py in range(hp):
+            for px in range(wp):
+                tile = tiles[py, :, px]
+                yield {
+                    "image_id": image_id, "py": py, "px": px,
+                    "bytes": encode_png(np.ascontiguousarray(tile)),
+                    "patch_sum": int(tile.astype(np.int64).sum()),
                 }
-            )
 
-    return images.mapInPandas(run, schema=PATCH_SCHEMA)
+    return map_rows(images.select("image_id", "bytes", "fmt"), row, PATCH_SCHEMA)
 
 
 def image_patch_grid(spark, sf_dir: str) -> DataFrame:
@@ -2098,33 +2023,21 @@ def extract_audio_tags(
     )
     fields = ("title", "artist", "album", "track", "year")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in (id_col, *fields, "tag_version", "failed")}
-            for aid, raw in zip(pdf[id_col], pdf[bytes_col]):
-                out[id_col].append(aid)
-                try:
-                    raw = bytes(raw)
-                    v2 = parse_id3v2(raw)
-                    if v2 is not None:
-                        tags, version = v2[0], f"2.{raw[3]}"
-                    else:
-                        tags = parse_id3v1(raw)
-                        if tags is None:
-                            raise ValueError("no ID3 tag")
-                        version = "1"
-                    for f_ in fields:
-                        out[f_].append(tags.get(f_))
-                    out["tag_version"].append(version)
-                    out["failed"].append(0)
-                except Exception:  # noqa: BLE001 — permissive corpus
-                    for f_ in fields:
-                        out[f_].append(None)
-                    out["tag_version"].append(None)
-                    out["failed"].append(1)
-            yield pd.DataFrame(out)
+    def row(aid, raw):
+        raw = bytes(raw)
+        v2 = parse_id3v2(raw)
+        if v2 is not None:
+            tags, version = v2[0], f"2.{raw[3]}"
+        else:
+            tags = parse_id3v1(raw)
+            if tags is None:
+                raise ValueError("no ID3 tag")
+            version = "1"
+        yield {id_col: aid, **{f_: tags.get(f_) for f_ in fields},
+               "tag_version": version}
 
-    return audio.mapInPandas(run, schema=schema)
+    # untrusted bytes: any exception is that row's failed=1
+    return map_rows(audio.select(id_col, bytes_col), row, schema, errors=(Exception,))
 
 
 def audio_id3_extract(spark, sf_dir: str) -> DataFrame:

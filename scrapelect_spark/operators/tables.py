@@ -152,7 +152,10 @@ def map_rows(df: DataFrame, fn, schema, errors=(), on_error=None) -> DataFrame:
     "failed": 1}`` when ``fn`` raises one of ``errors``.  In that row the
     input columns that also name an output column (the row key) keep
     their values and every other column is ``None``.  Any other
-    exception fails the task."""
+    exception fails the task.  The fallback row replaces everything
+    ``fn`` yielded for that input row, so a kernel that must keep
+    partial output (the frames decoded before a truncated stream
+    fails) catches inside ``fn`` instead."""
     if isinstance(schema, str):
         schema = _parse_datatype_string(schema)
     names = schema.fieldNames()

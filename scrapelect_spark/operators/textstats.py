@@ -8,9 +8,6 @@ counts are exact BIGINTs (SURVEY-style float discipline).
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -500,44 +497,34 @@ def extract_main_text(
         "boiler_len int, main_text string"
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in (
-                "page_url", "n_blocks", "n_kept", "main_len",
-                "boiler_len", "main_text",
-            )}
-            for url, html in zip(pdf[url_col], pdf[html_col]):
-                if html is None:
-                    continue
-                root = parse_html(html)
-                kept, n_blocks, boiler = [], 0, 0
-                for el in root.descendants():
-                    if el.tag != "p":
-                        continue
-                    n_blocks += 1
-                    text = " ".join(el.all_text().split())
-                    if not text:
-                        continue
-                    link_chars = sum(
-                        len(" ".join(a.all_text().split()))
-                        for a in el.descendants()
-                        if a.tag == "a"
-                    )
-                    density = link_chars / len(text)
-                    if len(text) >= min_chars and density <= max_link_density:
-                        kept.append(text)
-                    else:
-                        boiler += len(text)
-                main = "\n".join(kept)
-                out["page_url"].append(url)
-                out["n_blocks"].append(n_blocks)
-                out["n_kept"].append(len(kept))
-                out["main_len"].append(len(main))
-                out["boiler_len"].append(boiler)
-                out["main_text"].append(main)
-            yield pd.DataFrame(out)
+    def row(url, html):
+        if html is None:
+            return
+        kept, n_blocks, boiler = [], 0, 0
+        for el in parse_html(html).descendants():
+            if el.tag != "p":
+                continue
+            n_blocks += 1
+            text = " ".join(el.all_text().split())
+            if not text:
+                continue
+            link_chars = sum(
+                len(" ".join(a.all_text().split()))
+                for a in el.descendants()
+                if a.tag == "a"
+            )
+            density = link_chars / len(text)
+            if len(text) >= min_chars and density <= max_link_density:
+                kept.append(text)
+            else:
+                boiler += len(text)
+        main = "\n".join(kept)
+        yield {
+            "page_url": url, "n_blocks": n_blocks, "n_kept": len(kept),
+            "main_len": len(main), "boiler_len": boiler, "main_text": main,
+        }
 
-    return pages.mapInPandas(run, schema=schema)
+    return map_rows(pages.select(url_col, html_col), row, schema)
 
 
 def corpus_main_text(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1305,34 +1292,28 @@ def repair_mojibake(
 
     100-TB shape: a pure map (Arrow-batched mapInPandas, no shuffle);
     the md5 summary keeps gate rows bounded."""
-    import pandas as pd_
+    import hashlib
 
     schema = "doc_id long, changed long, text_md5 string"
     markers = ("Ã", "Â", "â€")
 
-    def run(batches):
-        for pdf in batches:
-            ids, changed, md5s = [], [], []
-            import hashlib
-
-            for doc_id, text in zip(pdf["doc_id"], pdf[text_col]):
-                t = text or ""
+    def row(doc_id, text):
+        t = text or ""
+        fixed = t
+        if any(m in t for m in markers):
+            try:
+                fixed = t.encode("cp1252").decode("utf-8")
+            except (UnicodeEncodeError, UnicodeDecodeError):
                 fixed = t
-                if any(m in t for m in markers):
-                    try:
-                        fixed = t.encode("cp1252").decode("utf-8")
-                    except (UnicodeEncodeError, UnicodeDecodeError):
-                        fixed = t
-                ids.append(int(doc_id))
-                changed.append(1 if fixed != t else 0)
-                md5s.append(hashlib.md5(fixed.encode("utf-8")).hexdigest())
-            yield pd_.DataFrame(
-                {"doc_id": ids, "changed": changed, "text_md5": md5s}
-            )
+        yield {
+            "doc_id": int(doc_id),
+            "changed": 1 if fixed != t else 0,
+            "text_md5": hashlib.md5(fixed.encode("utf-8")).hexdigest(),
+        }
 
-    return docs.select(
-        F.col(id_col).alias("doc_id"), F.col(text_col)
-    ).mapInPandas(run, schema=schema)
+    return map_rows(
+        docs.select(F.col(id_col).alias("doc_id"), F.col(text_col)), row, schema
+    )
 
 
 def corpus_fix_mojibake(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -60,28 +60,28 @@ def warc_ingest(
     skipped, corrupt segments produce a single error row."""
     from ..sources.warc import read_warc, split_http_response
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"url": [], "status": [], "html": [], "ingest_error": []}
-            for raw in pdf[bytes_col]:
-                try:
-                    for headers, payload in read_warc(bytes(raw)):
-                        if headers.get("warc-type") != "response":
-                            continue
-                        status, body = split_http_response(payload)
-                        out["url"].append(headers.get("warc-target-uri"))
-                        out["status"].append(status)
-                        out["html"].append(body.decode("utf-8", "replace"))
-                        out["ingest_error"].append(None)
-                except Exception as e:  # noqa: BLE001 — permissive corpus
-                    out["url"].append(None)
-                    out["status"].append(None)
-                    out["html"].append(None)
-                    out["ingest_error"].append(str(e) or type(e).__name__)
-            yield pd.DataFrame(out)
+    def row(raw):
+        # caught here, not via map_rows(errors=...): a segment corrupt
+        # past its first records keeps them, then one error row
+        try:
+            for headers, payload in read_warc(bytes(raw)):
+                if headers.get("warc-type") != "response":
+                    continue
+                status, body = split_http_response(payload)
+                yield {
+                    "url": headers.get("warc-target-uri"), "status": status,
+                    "html": body.decode("utf-8", "replace"), "ingest_error": None,
+                }
+        except Exception as e:  # noqa: BLE001 — permissive corpus
+            yield {
+                "url": None, "status": None, "html": None,
+                "ingest_error": str(e) or type(e).__name__,
+            }
 
-    return segments.mapInPandas(
-        run, schema="url string, status long, html string, ingest_error string"
+    return map_rows(
+        segments.select(bytes_col),
+        row,
+        "url string, status long, html string, ingest_error string",
     )
 
 
@@ -131,37 +131,26 @@ def sitemap_seed_frontier(
     no shuffle."""
     from ..sources.sitemap import parse_sitemap
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {
-                "sitemap_id": [], "url": [], "priority": [],
-                "child_sitemap": [], "parse_error": [],
-            }
+    def row(sid, raw):
+        empty = {"sitemap_id": sid, "url": None, "priority": None,
+                 "child_sitemap": None, "parse_error": None}
+        # caught here: rows already yielded for a payload stay
+        try:
+            kind, items = parse_sitemap(bytes(raw))
+            if kind == "sitemapindex":
+                for loc in items:
+                    yield {**empty, "child_sitemap": loc}
+            else:
+                for e in items:
+                    p = e["priority"] if e["priority"] is not None else 0.5
+                    yield {**empty, "url": e["loc"], "priority": round((1 - p) * 100)}
+        except Exception as e:  # noqa: BLE001 — untrusted input
+            yield {**empty, "parse_error": str(e) or type(e).__name__}
 
-            def row(sid, url=None, prio=None, child=None, err=None):
-                out["sitemap_id"].append(sid)
-                out["url"].append(url)
-                out["priority"].append(prio)
-                out["child_sitemap"].append(child)
-                out["parse_error"].append(err)
-
-            for sid, raw in zip(pdf[id_col], pdf[bytes_col]):
-                try:
-                    kind, items = parse_sitemap(bytes(raw))
-                    if kind == "sitemapindex":
-                        for loc in items:
-                            row(sid, child=loc)
-                    else:
-                        for e in items:
-                            p = e["priority"] if e["priority"] is not None else 0.5
-                            row(sid, url=e["loc"], prio=round((1 - p) * 100))
-                except Exception as e:  # noqa: BLE001 — untrusted input
-                    row(sid, err=str(e) or type(e).__name__)
-            yield pd.DataFrame(out)
-
-    return sitemaps.mapInPandas(
-        run,
-        schema="sitemap_id string, url string, priority long, "
+    return map_rows(
+        sitemaps.select(id_col, bytes_col),
+        row,
+        "sitemap_id string, url string, priority long, "
         "child_sitemap string, parse_error string",
     )
 
@@ -229,35 +218,22 @@ def feed_seed_frontier(
     one error row.  Scan → MapInPandas, no shuffle."""
     from ..sources.feed import parse_feed
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {
-                "feed_id": [], "url": [], "title": [],
-                "published": [], "feed_kind": [], "parse_error": [],
-            }
+    def row(fid, raw):
+        empty = {"feed_id": fid, "url": None, "title": None,
+                 "published": None, "feed_kind": None, "parse_error": None}
+        # caught here: rows already yielded for a payload stay
+        try:
+            kind, entries = parse_feed(bytes(raw))
+            for e in entries:
+                yield {**empty, "url": e["link"], "title": e["title"],
+                       "published": e["published"], "feed_kind": kind}
+        except Exception as exc:  # noqa: BLE001
+            yield {**empty, "parse_error": str(exc) or type(exc).__name__}
 
-            def row(fid, url=None, title=None, pub=None, kind=None,
-                    err=None):
-                out["feed_id"].append(fid)
-                out["url"].append(url)
-                out["title"].append(title)
-                out["published"].append(pub)
-                out["feed_kind"].append(kind)
-                out["parse_error"].append(err)
-
-            for fid, raw in zip(pdf[id_col], pdf[bytes_col]):
-                try:
-                    kind, entries = parse_feed(bytes(raw))
-                    for e in entries:
-                        row(fid, e["link"], e["title"], e["published"],
-                            kind)
-                except Exception as exc:  # noqa: BLE001
-                    row(fid, err=str(exc) or type(exc).__name__)
-            yield pd.DataFrame(out)
-
-    return feeds.mapInPandas(
-        run,
-        schema="feed_id string, url string, title string, "
+    return map_rows(
+        feeds.select(id_col, bytes_col),
+        row,
+        "feed_id string, url string, title string, "
         "published string, feed_kind string, parse_error string",
     )
 
@@ -348,41 +324,22 @@ def archive_extract(
     archive is one row, members fan out partition-locally."""
     from ..sources.archive import read_archive_members
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, names, bodies, sizes, errs = [], [], [], [], []
-            for aid, blob in zip(pdf[id_col], pdf[bytes_col]):
-                try:
-                    members = read_archive_members(bytes(blob))
-                except (ValueError, MemoryError) as e:
-                    ids.append(aid)
-                    names.append(None)
-                    bodies.append(None)
-                    sizes.append(None)
-                    errs.append(str(e))
-                    continue
-                for name, body in members:
-                    ids.append(aid)
-                    names.append(name)
-                    bodies.append(body)
-                    sizes.append(len(body))
-                    errs.append(None)
-            yield pd.DataFrame(
-                {
-                    "archive_id": pd.array(ids, dtype="string"),
-                    "member_name": pd.array(names, dtype="string"),
-                    "member_bytes": bodies,
-                    "member_size": pd.array(sizes, dtype="Int64"),
-                    "extract_error": pd.array(errs, dtype="string"),
-                }
-            )
+    def row(aid, blob):
+        try:
+            members = read_archive_members(bytes(blob))
+        except (ValueError, MemoryError) as e:
+            yield {"archive_id": aid, "member_name": None, "member_bytes": None,
+                   "member_size": None, "extract_error": str(e)}
+            return
+        for name, body in members:
+            yield {"archive_id": aid, "member_name": name, "member_bytes": body,
+                   "member_size": len(body), "extract_error": None}
 
-    return archives.mapInPandas(
-        run,
-        schema=(
-            "archive_id string, member_name string, member_bytes binary,"
-            " member_size long, extract_error string"
-        ),
+    return map_rows(
+        archives.select(id_col, bytes_col),
+        row,
+        "archive_id string, member_name string, member_bytes binary,"
+        " member_size long, extract_error string",
     )
 
 

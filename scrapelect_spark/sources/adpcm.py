@@ -57,10 +57,6 @@ _NEXT_INDEX = [
 ]
 
 
-def _clamp16(v: int) -> int:
-    return -32768 if v < -32768 else (32767 if v > 32767 else v)
-
-
 def _encode_core(samples, pred: int, index: int) -> tuple[list[int], int, int]:
     """Quantize samples against (pred, index); returns (codes, pred,
     index).  Bit-identical to CPython audioop.lin2adpcm's quantizer
@@ -112,11 +108,6 @@ def _decode_codes(codes, pred: int, index: int, out: list) -> tuple[int, int]:
         index = next_index[index][code]
         append(pred)
     return pred, index
-
-
-def _decode_code(code: int, pred: int, index: int) -> tuple[int, int]:
-    pred = _clamp16(pred + _SDIFF[index][code])
-    return pred, _NEXT_INDEX[index][code]
 
 
 def _unpack_nibbles(data: bytes) -> list[int]:

@@ -133,15 +133,14 @@ def decode_content(
 
 
 class CorpusFetcher:
-    """fetch = left join against (url, html); broadcast when small."""
+    """fetch = left join against the (url, html) corpus, always
+    broadcast: the replay stand-in for :class:`HttpFetcher`."""
 
-    def __init__(self, corpus: DataFrame, broadcast: bool = True):
+    def __init__(self, corpus: DataFrame):
         self.corpus = corpus
-        self.broadcast = broadcast
 
     def fetch(self, claimed: DataFrame) -> DataFrame:
-        corpus = F.broadcast(self.corpus) if self.broadcast else self.corpus
-        return claimed.join(corpus, on="url", how="left").withColumn(
+        return claimed.join(F.broadcast(self.corpus), on="url", how="left").withColumn(
             "status", F.when(F.col("html").isNull(), 404).otherwise(200)
         )
 

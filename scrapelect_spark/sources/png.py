@@ -251,14 +251,6 @@ def decode_png(data: bytes) -> np.ndarray:
     return img
 
 
-def png_size(data: bytes) -> tuple[int, int]:
-    """(width, height) from IHDR without a full decode."""
-    if data[:8] != _SIG or data[12:16] != b"IHDR":
-        raise ValueError("not a PNG")
-    w, h = struct.unpack(">II", data[16:24])
-    return int(w), int(h)
-
-
 # --- perceptual hash ------------------------------------------------
 
 

@@ -13,7 +13,7 @@ from __future__ import annotations
 
 import numpy as np
 
-from .png import encode_png, phash64
+from .png import encode_png
 
 _CAPTION_WORDS = (
     "sunset mountain river forest bridge harbor skyline meadow canyon "
@@ -91,6 +91,3 @@ def gallery_pages(
         )
     return corpus
 
-
-def expected_phash(image_id: str, w: int = 48, h: int = 32) -> int:
-    return phash64(make_image(image_id, w, h))

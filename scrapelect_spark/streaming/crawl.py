@@ -95,7 +95,6 @@ class CrawlConfig:
     default_priority: int = 100
     batch_seconds: float = 60.0  # politeness budget window per micro-batch
     fetch_partitions: int = 32
-    broadcast_corpus: bool = True
     #: fold the append-only snapshot logs into one base commit every N
     #: batches (0 = never).  At the 10^10-URL design point the frontier
     #: log otherwise accumulates one commit dir per batch forever, and
@@ -225,7 +224,7 @@ class Crawler:
         if fetcher is None:
             from ..sources.fetch import CorpusFetcher
 
-            fetcher = CorpusFetcher(corpus, broadcast=self.cfg.broadcast_corpus)
+            fetcher = CorpusFetcher(corpus)
         self.fetcher = fetcher
         self.root = SnapshotTable(f"{workdir}/crawl")
         self.tables = {

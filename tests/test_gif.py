@@ -318,3 +318,29 @@ def test_frame_sample_gif_error_capture(spark):
     )
     rows = frame_sample(video).collect()
     assert len(rows) == 1 and rows[0].decode_error is not None
+
+
+def test_frame_sample_truncated_gif_keeps_decoded_frames(spark):
+    """A GIF cut short yields the frames decoded before the cut, then
+    exactly one decode_error row: frame_sample catches inside its row
+    kernel, where map_rows's error fallback would drop the frames."""
+    import pandas as pd
+    from scrapelect_spark.operators.multimodal import frame_sample
+    from scrapelect_spark.sources.png import decode_png
+
+    levels = np.array([0, 85, 170, 255], dtype=np.uint8)  # 64 colors
+    rng = np.random.default_rng(3)
+    anim = [levels[rng.integers(0, 4, (16, 16, 3))] for _ in range(3)]
+    blob = encode_gif(anim)
+    video = spark.createDataFrame(
+        pd.DataFrame({"video_id": ["t"], "bytes": [blob[: 2 * len(blob) // 3]]})
+    )
+    rows = frame_sample(video, every_n=1).collect()
+    frames, errors = rows[:-1], rows[-1:]
+    assert frames and [r.frame_idx for r in frames] == list(range(len(frames)))
+    assert len(frames) < len(anim)
+    for r in frames:
+        assert r.decode_error is None
+        assert np.array_equal(decode_png(bytes(r.bytes)), anim[r.frame_idx])
+    assert [(r.video_id, r.frame_idx, r.bytes) for r in errors] == [("t", None, None)]
+    assert errors[0].decode_error

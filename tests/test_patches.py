@@ -11,23 +11,17 @@ from scrapelect_spark.operators.multimodal import extract_patches
 from scrapelect_spark.sources.png import decode_png, encode_png
 
 
-def run_local(arr: np.ndarray, patch: int):
-    """Drive the operator's Arrow-batch function directly (no Spark)."""
-    images = pd.DataFrame(
-        {"image_id": ["x"], "bytes": [encode_png(arr)], "fmt": ["png"]}
+def run_local(spark, arr: np.ndarray, patch: int) -> pd.DataFrame:
+    """Run the operator over a one-image frame."""
+    images = spark.createDataFrame(
+        [("x", encode_png(arr), "png")], "image_id string, bytes binary, fmt string"
     )
-
-    # reach the inner batch fn through a 1-row local mapInPandas stand-in
-    class _FakeDF:
-        def mapInPandas(self, fn, schema):
-            return list(fn(iter([images])))
-
-    return pd.concat(extract_patches(_FakeDF(), patch), ignore_index=True)
+    return extract_patches(images, patch).toPandas()
 
 
-def test_partial_tiles_dropped_gray():
+def test_partial_tiles_dropped_gray(spark):
     arr = np.arange(10 * 11, dtype=np.uint8).reshape(10, 11) % 256
-    out = run_local(arr, 4)
+    out = run_local(spark, arr, 4)
     # 10//4=2 rows, 11//4=2 cols of full tiles
     assert len(out) == 4
     assert sorted(zip(out["py"], out["px"])) == [(0, 0), (0, 1), (1, 0), (1, 1)]
@@ -38,10 +32,10 @@ def test_partial_tiles_dropped_gray():
         assert int(r["patch_sum"]) == int(want.astype(np.int64).sum())
 
 
-def test_rgb_tiles_roundtrip():
+def test_rgb_tiles_roundtrip(spark):
     rng = np.random.RandomState(9)
     arr = rng.randint(0, 256, size=(8, 8, 3)).astype(np.uint8)
-    out = run_local(arr, 4)
+    out = run_local(spark, arr, 4)
     assert len(out) == 4
     for _, r in out.iterrows():
         tile = decode_png(bytes(r["bytes"]))
@@ -50,6 +44,6 @@ def test_rgb_tiles_roundtrip():
         assert int(r["patch_sum"]) == int(want.astype(np.int64).sum())
 
 
-def test_image_smaller_than_patch_yields_no_rows():
+def test_image_smaller_than_patch_yields_no_rows(spark):
     arr = np.zeros((3, 3), np.uint8)
-    assert len(run_local(arr, 4)) == 0
+    assert len(run_local(spark, arr, 4)) == 0

@@ -1,7 +1,7 @@
 """The gate plumbing in ``operators/tables.py``: the per-row kernel
 applier ``map_rows``, the ``docs`` input helper, the loop-partition
-ceiling of ``scan_partitions``, and a guard that keeps gate functions
-on ``map_rows`` instead of hand-rolled ``mapInPandas`` batch loops."""
+ceiling of ``scan_partitions``, and a guard that keeps operators on
+``map_rows`` instead of hand-rolled ``mapInPandas`` batch loops."""
 
 import ast
 import glob
@@ -134,18 +134,51 @@ def test_scan_partitions_small_frame_is_one(spark):
     assert scan_partitions(spark.range(100)) == 1
 
 
+#: the only operators that call ``mapInPandas`` themselves, and why
+BATCH_LEVEL = {
+    "tables.py:map_rows": "the per-row kernel applier itself",
+    "extract.py:extract": "per-partition state: the Interpreter, the "
+    "broadcast corpus and the URL-recursion document cache",
+    "warc_io.py:warc_export": "one WARC segment per Arrow batch, not per row",
+}
+
+
 def test_gate_functions_have_no_batch_loops():
-    """Gates (functions taking ``sf_dir``) apply per-row kernels via
-    ``map_rows``; only corpus operators keep their own batch loops."""
-    offenders = []
+    """Every operator outside ``BATCH_LEVEL`` applies its per-row
+    kernel through ``map_rows``: no other function in ``operators/``
+    (nested functions count toward their top-level one) may call
+    ``.mapInPandas(``."""
+    callers = []
     for path in sorted(glob.glob(os.path.join(OPERATORS, "*.py"))):
         with open(path) as f:
-            src = f.read()
-        for node in ast.walk(ast.parse(src)):
-            if not isinstance(node, ast.FunctionDef):
-                continue
-            if "sf_dir" not in {a.arg for a in node.args.args}:
-                continue
-            if "for pdf in batches" in ast.get_source_segment(src, node):
-                offenders.append(f"{os.path.basename(path)}:{node.name}")
-    assert offenders == []
+            tree = ast.parse(f.read())
+        for top in tree.body:
+            for node in ast.walk(top):
+                if (
+                    isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr == "mapInPandas"
+                ):
+                    name = getattr(top, "name", "<module>")
+                    callers.append(f"{os.path.basename(path)}:{name}")
+    assert sorted(callers) == sorted(BATCH_LEVEL)
+
+
+def test_map_rows_error_drops_rows_already_yielded(spark):
+    """The ``errors`` fallback replaces everything ``fn`` yielded for
+    that input row, which is why partial-output kernels catch inside
+    ``fn``."""
+
+    def kernel(doc_id):
+        yield {"doc_id": doc_id, "k": 0}
+        yield {"doc_id": doc_id, "k": 1}
+        if doc_id == 1:
+            raise ValueError("cut short")
+
+    out = map_rows(
+        spark.range(2).withColumnRenamed("id", "doc_id"),
+        kernel,
+        "doc_id long, k long, failed long",
+        errors=(ValueError,),
+    )
+    assert _rows(out) == [(0, 0, 0), (0, 1, 0), (1, None, 1)]
