@@ -34,7 +34,7 @@ import hashlib
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .tables import barrier, docs, map_rows
+from .tables import barrier, docs, final_sort, map_rows
 
 
 def curate_image_caption_pairs(
@@ -46,7 +46,6 @@ def curate_image_caption_pairs(
     max_tokens: int = 128,
     phash_hamming: int = 7,
     n_bands: int = 8,
-    materialize: bool = True,
 ) -> DataFrame:
     """Curate an ``input_hint``-shaped table (post
     ``with_image_features``: has ``decode_error``) down to training
@@ -55,9 +54,7 @@ def curate_image_caption_pairs(
 
     The aspect bound is integer-exact (``max_side * 100 <=
     max_aspect_x100 * min_side``) so Spark and any SQL oracle agree
-    bit-for-bit — no float ratios.  ``materialize=False`` disables the
-    reused-intermediate checkpoints (for plan-shape inspection; the
-    default keeps them — see :func:`_curate_stages`)."""
+    bit-for-bit — no float ratios."""
     stages = _curate_stages(
         featured,
         min_side=min_side,
@@ -66,7 +63,6 @@ def curate_image_caption_pairs(
         max_tokens=max_tokens,
         phash_hamming=phash_hamming,
         n_bands=n_bands,
-        materialize=materialize,
     )
     return stages[-1][1].select("image_id", "w", "h", "n_tokens")
 
@@ -80,16 +76,13 @@ def _curate_stages(
     max_tokens: int,
     phash_hamming: int,
     n_bands: int,
-    materialize: bool = True,
 ) -> list[tuple[str, DataFrame]]:
     """The cascade as an ordered (stage name, survivors) list — the
     single source both the curation operator and the funnel report
     run, so the counts a pipeline card publishes are counts of the
-    EXACT DataFrames that produced the training set.
-
-    ``materialize`` keeps the two reused intermediates checkpointed
-    (the production default — their upstream is the expensive decode
-    pass); pass False to inspect the un-truncated logical plan."""
+    EXACT DataFrames that produced the training set.  The two reused
+    intermediates go through :func:`barrier` (their upstream is the
+    expensive decode pass)."""
     from .imagemeta import phash_neardup
 
     norm = F.lower(F.trim(F.regexp_replace(F.col("caption"), r"\s+", " ")))
@@ -122,8 +115,7 @@ def _curate_stages(
     # production) re-executes once per consumer (guide §5: cache exactly
     # the reused-and-expensive intermediates).  ``localCheckpoint`` also
     # truncates the lineage, keeping the near-dup join's plan small.
-    if materialize:
-        viable = viable.transform(barrier)
+    viable = viable.transform(barrier)
 
     # caption exact-dedup: min image_id per normalized caption
     cap_keep = (
@@ -132,8 +124,7 @@ def _curate_stages(
         .select("image_id")
     )
     deduped = viable.join(cap_keep, on="image_id", how="left_semi")
-    if materialize:
-        deduped = deduped.transform(barrier)
+    deduped = deduped.transform(barrier)
 
     # perceptual near-dedup among survivors: greedy keep-lowest-id
     hashed = deduped.select(
@@ -189,7 +180,7 @@ def curate_funnel(featured: DataFrame, **params) -> DataFrame:
     rows.sort()
     return spark.createDataFrame(
         rows, "stage_idx long, stage string, n_rows long"
-    ).transform(barrier).orderBy("stage_idx")
+    ).transform(final_sort, "stage_idx")
 
 
 # --- gate ---------------------------------------------------------------
@@ -224,7 +215,7 @@ def curate_pairs_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         _curate_synth_corpus(spark, sf_dir), min_side=64,
         max_aspect_x100=300, min_tokens=4, max_tokens=128,
         phash_hamming=7, n_bands=8,
-    ).transform(barrier).orderBy("image_id")
+    ).transform(final_sort, "image_id")
 
 
 def _curate_synth_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -454,7 +445,7 @@ def crawl_anchor_texts(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     pages = _pages(spark, sf_dir, page)
-    return extract_anchors(pages).transform(barrier).orderBy("page_url", "seq")
+    return extract_anchors(pages).transform(final_sort, "page_url", "seq")
 
 
 _ANCHORS_SQL = """
@@ -563,7 +554,7 @@ def crawl_og_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     pages = _pages(spark, sf_dir, page)
-    return extract_og_meta(pages).transform(barrier).orderBy("page_url")
+    return extract_og_meta(pages).transform(final_sort, "page_url")
 
 
 _OG_SQL = """
@@ -737,7 +728,7 @@ def crawl_jsonld_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         "failed",
         F.when(F.col("parse_error").isNotNull(), 1).otherwise(0)
         .cast("long"),
-    ).drop("parse_error").transform(barrier).orderBy("page_url", "seq")
+    ).drop("parse_error").transform(final_sort, "page_url", "seq")
 
 
 _JSONLD_SQL = """
@@ -868,7 +859,7 @@ def crawl_microdata(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     pages = _pages(spark, sf_dir, page)
-    return extract_microdata(pages).transform(barrier).orderBy("page_url", "item_seq", "prop")
+    return extract_microdata(pages).transform(final_sort, "page_url", "item_seq", "prop")
 
 
 _MICRODATA_SQL = """
@@ -975,8 +966,8 @@ def crawl_link_rels(spark: SparkSession, sf_dir: str) -> DataFrame:
         return url, f"<html><head>{head}</head><body>x</body></html>"
 
     pages = _pages(spark, sf_dir, page)
-    return extract_link_rels(pages).transform(barrier).orderBy(
-        "page_url", "rel", "hreflang"
+    return extract_link_rels(pages).transform(
+        final_sort, "page_url", "rel", "hreflang"
     )
 
 
@@ -1041,7 +1032,7 @@ def crawl_image_refs(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     pages = _pages(spark, sf_dir, page)
-    return extract_image_refs(pages).transform(barrier).orderBy("page_url", "seq")
+    return extract_image_refs(pages).transform(final_sort, "page_url", "seq")
 
 
 _IMAGE_REFS_SQL = """
@@ -1164,7 +1155,7 @@ def curate_aspect_batches(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.lit(32) + (F.col("doc_id") % 20) * 16).cast("int").alias("w"),
         (F.lit(64) + (F.col("doc_id") % 15) * 32).cast("int").alias("h"),
     )
-    return aspect_bucket_batches(pairs).transform(barrier).orderBy("image_id")
+    return aspect_bucket_batches(pairs).transform(final_sort, "image_id")
 
 
 _ASPECT_BATCHES_SQL = f"""
@@ -1308,8 +1299,8 @@ def crawl_table_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     pages = _pages(spark, sf_dir, page)
-    return extract_tables(pages).transform(barrier).orderBy(
-        "page_url", "table_seq", "row_idx", "col_idx"
+    return extract_tables(pages).transform(
+        final_sort, "page_url", "table_seq", "row_idx", "col_idx"
     )
 
 
@@ -1449,7 +1440,7 @@ def corpus_html_sections(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     pages = _pages(spark, sf_dir, page)
-    return extract_sections(pages).transform(barrier).orderBy("page_url", "section_seq")
+    return extract_sections(pages).transform(final_sort, "page_url", "section_seq")
 
 
 _SECTIONS_SQL = """
@@ -1625,7 +1616,7 @@ def corpus_html_markdown(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     pages = _pages(spark, sf_dir, page)
-    return html_to_markdown(pages).transform(barrier).orderBy("page_url")
+    return html_to_markdown(pages).transform(final_sort, "page_url")
 
 
 _MARKDOWN_SQL = """

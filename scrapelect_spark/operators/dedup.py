@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .tables import barrier, load, spread
+from .tables import barrier, final_sort, load, spread
 
 DEC = "decimal(28,12)"
 
@@ -40,7 +40,7 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         d.withColumn("fingerprint", F.md5(F.col("text")))
         .withColumn("dup_rank", F.row_number().over(w).cast("int"))
         .select("doc_id", "fingerprint", "dup_rank")
-        .transform(barrier).orderBy("doc_id")
+        .transform(final_sort, "doc_id")
     )
 
 
@@ -135,9 +135,7 @@ def band_pairs(
     # once so the upstream band derivation (and whatever produced the
     # hashes) does not re-execute per consumer; (doc_id, band, band_val,
     # bsz) is a lightweight proxy row (guide §8), cheap to hold
-    tagged = bands.join(sizes, ["band", "band_val"]).localCheckpoint(
-        eager=False
-    )
+    tagged = bands.join(sizes, ["band", "band_val"]).transform(barrier)
     cold = tagged.filter(F.col("bsz") <= hot_threshold)
     hot = tagged.filter(F.col("bsz") > hot_threshold)
 
@@ -190,7 +188,7 @@ def _minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.expr(f"stack({n_bands}, {stack_args}) AS (band, band_val)"),
     ).select("doc_id", F.col("band").cast("int").alias("band"), "band_val")
-    return band_pairs(bands).transform(barrier).orderBy("doc_a", "doc_b")
+    return band_pairs(bands).transform(final_sort, "doc_a", "doc_b")
 
 
 _MINHASH_SQL = (
@@ -246,7 +244,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         combine = term if combine is None else combine + term
     return (
         per.select("doc_id", combine.cast("long").alias("simhash"))
-        .transform(barrier).orderBy("doc_id")
+        .transform(final_sort, "doc_id")
     )
 
 
@@ -294,7 +292,7 @@ def dedup_jaccard_adjacent(spark: SparkSession, sf_dir: str) -> DataFrame:
                 6,
             ).alias("jaccard"),
         )
-        .transform(barrier).orderBy("doc_id")
+        .transform(final_sort, "doc_id")
     )
 
 
@@ -367,7 +365,7 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn(
             "contained", (F.col("containment") >= 0.9).cast("long")
         )
-        .transform(barrier).orderBy("doc_id")
+        .transform(final_sort, "doc_id")
     )
 
 
@@ -466,7 +464,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cosine",
             F.when(F.col("cosine") > 0.95, 1).otherwise(0).cast("int").alias("is_near_dup"),
         )
-        .transform(barrier).orderBy("vec_id")
+        .transform(final_sort, "vec_id")
     )
 
 
@@ -660,7 +658,7 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     round bound)."""
     pairs = _minhash_pairs(spark, sf_dir)
     edges = pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-    return connected_components(edges).transform(barrier).orderBy("doc_id")
+    return connected_components(edges).transform(final_sort, "doc_id")
 
 
 _DECON_N = 4  # n-gram width; real pipelines use 8-13 — the synthetic
@@ -722,7 +720,7 @@ def corpus_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents")
     bench = d.filter(F.col("doc_id") % 50 == 7)
     corpus = d.filter(F.col("doc_id") % 50 != 7)
-    return decontaminate(corpus, bench).transform(barrier).orderBy("doc_id")
+    return decontaminate(corpus, bench).transform(final_sort, "doc_id")
 
 
 _DECONTAMINATE_SQL = rf"""
@@ -757,7 +755,7 @@ def dedup_clusters_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
     reachability oracle."""
     pairs = _minhash_pairs(spark, sf_dir)
     edges = pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-    return connected_components(edges, local_threshold=0).transform(barrier).orderBy("doc_id")
+    return connected_components(edges, local_threshold=0).transform(final_sort, "doc_id")
 
 
 _CLUSTERS_SQL = (
@@ -821,7 +819,7 @@ def dedup_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("dropped"),
         )
-        .transform(barrier).orderBy("source")
+        .transform(final_sort, "source")
     )
 
 
@@ -987,7 +985,7 @@ def corpus_repeated_ngram_dedup(
     synth = d.select(
         "doc_id", F.concat_ws(" ", toks).alias("text")
     )
-    return repeated_ngram_spans(synth, n=8, min_count=2).transform(barrier).orderBy("doc_id")
+    return repeated_ngram_spans(synth, n=8, min_count=2).transform(final_sort, "doc_id")
 
 
 _REPEATED_NGRAM_SQL = """

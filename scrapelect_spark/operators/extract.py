@@ -67,7 +67,6 @@ def extract(
     url_col: str = "url",
     html_col: str = "html",
     corpus: Optional[dict[str, str]] = None,
-    strict_registry: bool = False,
     registry: Optional[dict] = None,
     fail_fast: bool = False,
 ) -> DataFrame:
@@ -80,6 +79,10 @@ def extract(
     broadcast once per job.  At crawl scale the frontier loop owns
     link-following instead.
 
+    ``registry`` is the filter table the interpreter dispatches on; the
+    default is the full ``FILTERS``.  Pass ``REFERENCE_FILTERS`` for
+    strict reference parity (its 17 registered filters only).
+
     Stream-native: ``pages`` may be a streaming DataFrame — mapInPandas
     is supported under Structured Streaming, so the same compiled plan
     runs per micro-batch unchanged
@@ -89,12 +92,10 @@ def extract(
     spark = pages.sparkSession
     corpus_bc = spark.sparkContext.broadcast(corpus or {})
 
-    user_registry = registry
-
     def run_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions.filters import FILTERS, REFERENCE_FILTERS
+        from ..functions.filters import FILTERS
 
-        registry = user_registry or (REFERENCE_FILTERS if strict_registry else FILTERS)
+        filters = registry or FILTERS
         local_corpus = corpus_bc.value
         doc_cache: dict[str, object] = {}
 
@@ -122,7 +123,7 @@ def extract(
             doc_cache[url] = doc
             return doc
 
-        interp = Interpreter(fetcher=fetch, registry=registry)
+        interp = Interpreter(fetcher=fetch, registry=filters)
 
         for batch in batches:
             urls = batch[url_col].tolist()

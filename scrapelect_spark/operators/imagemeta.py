@@ -24,7 +24,7 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .tables import barrier, docs, map_rows
+from .tables import barrier, docs, final_sort, map_rows
 
 
 def extract_exif(
@@ -166,7 +166,7 @@ def image_phash_neardup(spark, sf_dir: str) -> DataFrame:
     lose them (pigeonhole) and the 17+-bit separation of unrelated
     docs must not add any."""
     hashed = _phash_hashes(spark, sf_dir)
-    return phash_neardup(hashed, max_hamming=7).transform(barrier).orderBy("doc_a", "doc_b")
+    return phash_neardup(hashed, max_hamming=7).transform(final_sort, "doc_a", "doc_b")
 
 
 _PHASH_NEARDUP_SQL = """
@@ -229,7 +229,7 @@ def image_exif_extract(spark, sf_dir: str) -> DataFrame:
             F.when(F.col("exif_error").isNull(), F.lit(0))
             .otherwise(F.lit(1)).cast("long").alias("failed"),
         )
-        .transform(barrier).orderBy("doc_id")
+        .transform(final_sort, "doc_id")
     )
 
 
@@ -279,7 +279,7 @@ def image_dctphash_neardup(spark, sf_dir: str) -> DataFrame:
     hashed = map_rows(
         docs(spark, sf_dir, 200, "doc_id"), synth_hash, "doc_id long, phash long"
     )
-    return phash_neardup(hashed, max_hamming=7).transform(barrier).orderBy("doc_a", "doc_b")
+    return phash_neardup(hashed, max_hamming=7).transform(final_sort, "doc_a", "doc_b")
 
 
 _DCTPHASH_NEARDUP_SQL = """
@@ -344,7 +344,7 @@ def image_jpeg_quality(spark, sf_dir: str) -> DataFrame:
         "doc_id long, quality long, failed long",
         errors=(ValueError,),
         on_error={"quality": -1},
-    ).transform(barrier).orderBy("doc_id")
+    ).transform(final_sort, "doc_id")
 
 
 _JPEG_QUALITY_SQL = """
@@ -442,7 +442,7 @@ def image_pixel_stats(spark, sf_dir: str) -> DataFrame:
         return np.repeat(col[:, None], 16 + (doc_id % 8) * 4, axis=1)
 
     images = _stats_pngs(spark, sf_dir, picture)
-    return pixel_stats(images).transform(barrier).orderBy("image_id")
+    return pixel_stats(images).transform(final_sort, "image_id")
 
 
 _PIXEL_STATS_SQL = """
@@ -545,7 +545,7 @@ def image_sharpness_stats(spark, sf_dir: str) -> DataFrame:
         return np.repeat(rows.astype(np.uint8)[:, None], w, axis=1)
 
     images = _stats_pngs(spark, sf_dir, picture)
-    return laplacian_stats(images).transform(barrier).orderBy("image_id")
+    return laplacian_stats(images).transform(final_sort, "image_id")
 
 
 _SHARPNESS_SQL = """
@@ -603,7 +603,7 @@ def image_phash_clusters(spark, sf_dir: str) -> DataFrame:
             "is_canonical",
             (F.col("doc_id") == F.col("cluster")).cast("long"),
         )
-        .transform(barrier).orderBy("doc_id")
+        .transform(final_sort, "doc_id")
     )
 
 
@@ -692,7 +692,7 @@ def image_color_stats(spark, sf_dir: str) -> DataFrame:
         return img
 
     images = _stats_pngs(spark, sf_dir, picture)
-    return color_stats(images).transform(barrier).orderBy("image_id")
+    return color_stats(images).transform(final_sort, "image_id")
 
 
 _COLOR_STATS_SQL = """
@@ -817,7 +817,7 @@ def image_border_stats(spark, sf_dir: str) -> DataFrame:
         return g
 
     images = _stats_pngs(spark, sf_dir, picture)
-    return border_stats(images).transform(barrier).orderBy("image_id")
+    return border_stats(images).transform(final_sort, "image_id")
 
 
 _BORDER_STATS_SQL = """
@@ -937,7 +937,7 @@ def image_autorotate(spark, sf_dir: str) -> DataFrame:
     images = map_rows(
         docs(spark, sf_dir, 240, "doc_id"), synth, "image_id long, bytes binary"
     )
-    return autorotate_stats(images).transform(barrier).orderBy("image_id")
+    return autorotate_stats(images).transform(final_sort, "image_id")
 
 
 _AUTOROTATE_SQL = """
@@ -1032,7 +1032,7 @@ def image_exif_gps_scrub(spark, sf_dir: str) -> DataFrame:
         docs(spark, sf_dir, 200, "doc_id"),
         synth_scrub,
         "doc_id long, had_gps long, gps_after long, tags_kept long, pixels_same long",
-    ).transform(barrier).orderBy("doc_id")
+    ).transform(final_sort, "doc_id")
 
 
 _GPS_SCRUB_SQL = """

@@ -37,7 +37,7 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .tables import barrier, docs, map_rows
+from .tables import barrier, docs, final_sort, map_rows
 from pyspark.sql.types import (
     BinaryType,
     DoubleType,
@@ -570,7 +570,7 @@ def audio_wav_features(spark, sf_dir: str) -> DataFrame:
         F.col("audio_id").cast("long").alias("doc_id"),
         "duration_s",
         F.round("rms", 6).alias("rms"),
-    ).transform(barrier).orderBy("doc_id")
+    ).transform(final_sort, "doc_id")
 
 
 _AUDIO_SQL = """
@@ -614,7 +614,7 @@ def image_png_roundtrip(spark, sf_dir: str) -> DataFrame:
         .otherwise(F.lit(1))
         .cast("long")
         .alias("failed"),
-    ).transform(barrier).orderBy("doc_id")
+    ).transform(final_sort, "doc_id")
 
 
 _IMAGE_SQL = """
@@ -668,7 +668,7 @@ def image_jpeg_roundtrip(spark, sf_dir: str) -> DataFrame:
         "doc_id long, w long, h long, caption string, psnr_ok long, failed long",
         errors=(NotImplementedError, ValueError),
         on_error={"psnr_ok": 0},
-    ).transform(barrier).orderBy("doc_id")
+    ).transform(final_sort, "doc_id")
 
 
 _JPEG_SQL = """
@@ -714,7 +714,7 @@ def image_resize_nn(spark, sf_dir: str) -> DataFrame:
         resized.select("image_id", "bytes", "w", "h"),
         verify,
         "doc_id long, w long, h long, pixel long",
-    ).transform(barrier).orderBy("doc_id")
+    ).transform(final_sort, "doc_id")
 
 
 _RESIZE_SQL = """
@@ -790,7 +790,7 @@ def image_resize_filters(spark, sf_dir: str) -> DataFrame:
         verify,
         "doc_id long, w long, h long, bilinear_ok long, "
         "area_ok long, nn_differs long",
-    ).transform(barrier).orderBy("doc_id")
+    ).transform(final_sort, "doc_id")
 
 
 _RESIZE_FILTERS_SQL = """
@@ -881,7 +881,7 @@ def image_patch_grid(spark, sf_dir: str) -> DataFrame:
         patches.select("image_id", "py", "px", "bytes", "patch_sum"),
         verify,
         "doc_id long, py long, px long, patch_sum long, blob_sum long",
-    ).transform(barrier).orderBy("doc_id", "py", "px")
+    ).transform(final_sort, "doc_id", "py", "px")
 
 
 _PATCH_SQL = """
@@ -947,7 +947,7 @@ def image_foreign_formats(spark, sf_dir: str) -> DataFrame:
         "doc_id long, fmt string, w long, h long, exact long, failed long",
         errors=(ValueError, struct.error),
         on_error={"exact": 0},
-    ).transform(barrier).orderBy("doc_id")
+    ).transform(final_sort, "doc_id")
 
 
 _FOREIGN_SQL = """
@@ -992,7 +992,7 @@ def image_decode_errors(spark, sf_dir: str) -> DataFrame:
         F.when(F.col("phash").isNull(), 0).otherwise(1)
         .cast("long")
         .alias("has_phash"),
-    ).transform(barrier).orderBy("doc_id")
+    ).transform(final_sort, "doc_id")
 
 
 _DECODE_ERRORS_SQL = """
@@ -1039,7 +1039,7 @@ def _sampled_video_gate(spark, sf_dir, encode, flag, check) -> DataFrame:
         sampled.select("video_id", "frame_idx", "bytes", "decode_error", "w", "h"),
         verify,
         f"doc_id long, frame_idx long, w long, h long, {flag} long, failed long",
-    ).transform(barrier).orderBy("doc_id", "frame_idx")
+    ).transform(final_sort, "doc_id", "frame_idx")
 
 
 def video_frame_sample(spark, sf_dir: str) -> DataFrame:
@@ -1112,7 +1112,7 @@ def audio_adpcm_roundtrip(spark, sf_dir: str) -> DataFrame:
         "doc_id long, duration_s double, snr_ok long, failed long",
         errors=(ValueError, NotImplementedError, struct.error),
         on_error={"snr_ok": 0},
-    ).transform(barrier).orderBy("doc_id")
+    ).transform(final_sort, "doc_id")
 
 
 _ADPCM_SQL = """
@@ -1212,7 +1212,7 @@ def audio_adpcm_stereo(spark, sf_dir: str) -> DataFrame:
         "doc_id long, duration_s double, snr_ok long, failed long",
         errors=(ValueError, NotImplementedError, struct.error),
         on_error={"snr_ok": 0},
-    ).transform(barrier).orderBy("doc_id")
+    ).transform(final_sort, "doc_id")
 
 
 def audio_g711_roundtrip(spark, sf_dir: str) -> DataFrame:
@@ -1243,7 +1243,7 @@ def audio_g711_roundtrip(spark, sf_dir: str) -> DataFrame:
         "doc_id long, duration_s double, snr_ok long, failed long",
         errors=(ValueError, NotImplementedError, struct.error),
         on_error={"snr_ok": 0},
-    ).transform(barrier).orderBy("doc_id")
+    ).transform(final_sort, "doc_id")
 
 
 _ADPCM_STEREO_SQL = """
@@ -1284,7 +1284,7 @@ def audio_flac_roundtrip(spark, sf_dir: str) -> DataFrame:
         "doc_id long, duration_s double, exact long, compressed long, failed long",
         errors=(ValueError, struct.error),
         on_error={"exact": 0, "compressed": 0},
-    ).transform(barrier).orderBy("doc_id")
+    ).transform(final_sort, "doc_id")
 
 
 _FLAC_SQL = """
@@ -1335,7 +1335,7 @@ def audio_ogg_flac_roundtrip(spark, sf_dir: str) -> DataFrame:
         synth_and_verify,
         "doc_id long, duration_s double, exact long, granule_ok long, failed long",
         errors=(ValueError,),
-    ).transform(barrier).orderBy("doc_id")
+    ).transform(final_sort, "doc_id")
 
 
 _OGG_FLAC_SQL = """
@@ -1405,7 +1405,7 @@ def audio_mp3_metadata(spark, sf_dir: str) -> DataFrame:
         "bitrate_max_kbps long, is_cbr long, has_id3 long, "
         "failed long",
         errors=(ValueError,),
-    ).transform(barrier).orderBy("doc_id")
+    ).transform(final_sort, "doc_id")
 
 
 _MP3_META_SQL = """
@@ -1496,7 +1496,7 @@ def audio_mp2_roundtrip(spark, sf_dir: str) -> DataFrame:
         "doc_id long, duration_s double, good long, compressed long, failed long",
         errors=(ValueError,),
         on_error={"good": 0, "compressed": 0},
-    ).transform(barrier).orderBy("doc_id")
+    ).transform(final_sort, "doc_id")
 
 
 _MP2_SQL = """
@@ -1556,7 +1556,7 @@ def image_gif_roundtrip(spark, sf_dir: str) -> DataFrame:
         "doc_id long, w long, h long, n_frames long, exact long, failed long",
         errors=(ValueError, struct.error),
         on_error={"exact": 0},
-    ).transform(barrier).orderBy("doc_id")
+    ).transform(final_sort, "doc_id")
 
 
 _GIF_SQL = """
@@ -1587,7 +1587,7 @@ def _exact_image_gate(spark, sf_dir, roundtrip, errors) -> DataFrame:
         "doc_id long, w long, h long, exact long, failed long",
         errors=errors,
         on_error={"exact": 0},
-    ).transform(barrier).orderBy("doc_id")
+    ).transform(final_sort, "doc_id")
 
 
 def image_bmp_roundtrip(spark, sf_dir: str) -> DataFrame:
@@ -1738,7 +1738,7 @@ def _mpeg_gate(
         sampled.select("video_id", "frame_idx", "bytes", "decode_error"),
         verify,
         "doc_id long, frame_idx long, ok long, failed long",
-    ).transform(barrier).orderBy("doc_id", "frame_idx")
+    ).transform(final_sort, "doc_id", "frame_idx")
 
 
 def video_mpeg1_iframe_sample(spark, sf_dir: str) -> DataFrame:
@@ -1926,7 +1926,7 @@ def audio_mp1_roundtrip(spark, sf_dir: str) -> DataFrame:
         "doc_id long, duration_s double, good long, compressed long, failed long",
         errors=(ValueError,),
         on_error={"good": 0, "compressed": 0},
-    ).transform(barrier).orderBy("doc_id")
+    ).transform(final_sort, "doc_id")
 
 
 _MP1_SQL = """
@@ -1990,7 +1990,7 @@ def video_mpeg_ps_roundtrip(spark, sf_dir: str) -> DataFrame:
         "doc_id long, n_frames long, es_exact long, audio_ok long, failed long",
         errors=(ValueError,),
         on_error={"es_exact": 0, "audio_ok": 0},
-    ).transform(barrier).orderBy("doc_id")
+    ).transform(final_sort, "doc_id")
 
 
 _PS_SQL = """
@@ -2075,7 +2075,7 @@ def audio_id3_extract(spark, sf_dir: str) -> DataFrame:
     audio = map_rows(
         docs(spark, sf_dir, 240, "doc_id"), synth, "audio_id long, bytes binary"
     )
-    return extract_audio_tags(audio).transform(barrier).orderBy("audio_id")
+    return extract_audio_tags(audio).transform(final_sort, "audio_id")
 
 
 _ID3_SQL = """
@@ -2159,7 +2159,7 @@ def audio_mel_bands(spark, sf_dir: str) -> DataFrame:
         docs(spark, sf_dir, 240, "doc_id"),
         synth_and_feature,
         "audio_id long, f_hz long, dominant_band long, n_bands long",
-    ).transform(barrier).orderBy("audio_id")
+    ).transform(final_sort, "audio_id")
 
 
 _MEL_SQL = f"""

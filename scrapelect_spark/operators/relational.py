@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .tables import barrier, load, spread
+from .tables import final_sort, load, spread
 
 DEC = "decimal(28,8)"
 
@@ -52,7 +52,7 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(charge).cast("double").alias("sum_charge"),
             F.count(F.lit(1)).cast("long").alias("count_order"),
         )
-        .transform(barrier).orderBy("l_returnflag", "l_linestatus")
+        .transform(final_sort, "l_returnflag", "l_linestatus")
     )
 
 
@@ -121,7 +121,7 @@ def q5_nation_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         l.join(sup, l.l_suppkey == F.col("s_suppkey"))
         .groupBy("n_name")
         .agg(F.sum(revenue).cast("double").alias("revenue"))
-        .transform(barrier).orderBy(F.desc("revenue"), "n_name")
+        .transform(final_sort, F.desc("revenue"), "n_name")
     )
 
 
@@ -185,7 +185,7 @@ def top_events_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.col("value"), 6).alias("value"),
             F.col("rk").cast("int").alias("rk"),
         )
-        .transform(barrier).orderBy("user_id", "rk")
+        .transform(final_sort, "user_id", "rk")
     )
 
 
@@ -214,7 +214,7 @@ def events_running_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
             "user_id",
             F.col("running").cast("double").alias("running_value"),
         )
-        .transform(barrier).orderBy("event_id")
+        .transform(final_sort, "event_id")
     )
 
 
@@ -242,7 +242,7 @@ def events_hourly_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).cast("long").alias("n"),
             F.sum(F.col("value").cast(DEC)).cast("double").alias("total_value"),
         )
-        .transform(barrier).orderBy("hour", "event_type")
+        .transform(final_sort, "hour", "event_type")
     )
 
 
@@ -362,7 +362,7 @@ def q4_priority_late(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         late.groupBy("o_orderpriority")
         .agg(F.count(F.lit(1)).cast("long").alias("order_count"))
-        .transform(barrier).orderBy("o_orderpriority")
+        .transform(final_sort, "o_orderpriority")
     )
 
 
@@ -435,7 +435,7 @@ def frontier_new_urls(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         p.join(seen, p.p_partkey == F.col("l_partkey"), "left_anti")
         .select("p_partkey", "p_name")
-        .transform(barrier).orderBy("p_partkey")
+        .transform(final_sort, "p_partkey")
     )
 
 
@@ -460,7 +460,7 @@ def perhost_politeness_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         d.withColumn("rk", F.row_number().over(w))
         .filter(F.col("rk") <= 5)
         .select("source", "doc_id", "n_chars", F.col("rk").cast("int").alias("rk"))
-        .transform(barrier).orderBy("source", "rk")
+        .transform(final_sort, "source", "rk")
     )
 
 
@@ -499,7 +499,7 @@ def priority_claim_order(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "lang",
         "n_chars",
-    ).transform(barrier).orderBy("fetch_order")
+    ).transform(final_sort, "fetch_order")
 
 
 _PRIORITY_SQL = """
@@ -613,7 +613,7 @@ def crawl_recrawl_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return recrawl_priority(hist, 100).select(
         "doc_id", "age_s", "change_count", "crawl_count", "score"
-    ).transform(barrier).orderBy(F.desc("score"), "doc_id")
+    ).transform(final_sort, F.desc("score"), "doc_id")
 
 
 def crawl_revalidate_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -663,7 +663,7 @@ def crawl_revalidate_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("outcome") == "changed", F.col("fetched_hash"))
         .otherwise(F.col("stored_hash"))
         .alias("new_hash"),
-    ).transform(barrier).orderBy("doc_id")
+    ).transform(final_sort, "doc_id")
 
 
 _REVALIDATE_SQL = """
@@ -747,7 +747,7 @@ def events_sessionized(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("event_id").alias("last_event"),
             (F.max("us") - F.min("us")).alias("duration_us"),
         )
-        .transform(barrier).orderBy("user_id", "session_idx")
+        .transform(final_sort, "user_id", "session_idx")
     )
 
 
@@ -827,7 +827,7 @@ def crawl_trap_hosts(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).otherwise(F.lit("")),
         ).alias("url")
     )
-    return url_space_stats(urls).transform(barrier).orderBy("host")
+    return url_space_stats(urls).transform(final_sort, "host")
 
 
 _TRAP_SQL = r"""
@@ -974,7 +974,7 @@ def crawl_change_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
         x.cast("long").alias("n_unchanged"),
         lam_per_day.alias("lambda_per_day"),
         F.round(next_s, 3).alias("next_fetch_s"),
-    ).transform(barrier).orderBy("url_id")
+    ).transform(final_sort, "url_id")
 
 
 _CHANGE_RATE_SQL = f"""
@@ -1070,7 +1070,7 @@ def dust_param_rules(pages: DataFrame) -> DataFrame:
                 & (F.col("n_pairs") >= 2)
             ).cast("long"),
         )
-        .transform(barrier).orderBy("param")
+        .transform(final_sort, "param")
     )
 
 

@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .tables import barrier, load
+from .tables import final_sort, load
 
 # page template: every value the scrp program extracts is derived from
 # documents columns, so SQL can predict the exact output
@@ -62,7 +62,7 @@ def scrp_extract_over_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("r.body").alias("body"),
         F.size("r.kws").cast("long").alias("n_kws"),
         F.concat_ws("|", "r.kws").alias("kws_joined"),
-    ).transform(barrier).orderBy("doc_id")
+    ).transform(final_sort, "doc_id")
 
 
 _SCRP_SQL = """
@@ -140,7 +140,7 @@ def scrp_filters_numeric(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("r.first").alias("first_tok"),
         F.col("r.third").alias("third_tok"),
         F.col("r.m2").alias("m2"),
-    ).transform(barrier).orderBy("doc_id")
+    ).transform(final_sort, "doc_id")
 
 
 _NUM_SQL = """
@@ -208,7 +208,7 @@ def scrp_filters_logic(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("r.both").cast("long").alias("both"),
         F.col("r.either").cast("long").alias("either"),
         F.col("r.neg").cast("long").alias("neg"),
-    ).transform(barrier).orderBy("doc_id")
+    ).transform(final_sort, "doc_id")
 
 
 _LOGIC_SQL = """
@@ -273,7 +273,7 @@ def scrp_url_recursion(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("r.link").alias("link"),
         F.col("r.detail").alias("detail"),
         F.concat_ws("|", "r.words").alias("words_joined"),
-    ).transform(barrier).orderBy("doc_id")
+    ).transform(final_sort, "doc_id")
 
 
 _REC_SQL = """

@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .tables import barrier, load, spread
+from .tables import barrier, final_sort, load, spread
 
 DEC = "decimal(28,12)"
 
@@ -318,7 +318,7 @@ def embedding_int8_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.array_min(q).alias("q_min"),
         F.array_max(q).alias("q_max"),
     )
-    return d.transform(barrier).orderBy("vec_id")
+    return d.transform(final_sort, "vec_id")
 
 
 _QUANT_SQL = """
@@ -527,7 +527,7 @@ def embedding_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         spark.createDataFrame(out, "ord long, component double")
         .select("ord", F.round("component", 6).alias("component"))
-        .transform(barrier).orderBy("ord")
+        .transform(final_sort, "ord")
     )
 
 
@@ -623,7 +623,7 @@ def embedding_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
                 out, "k long, n_members long, ord long, component double"
             )
             .select("k", "n_members", "ord", F.round("component", 6).alias("component"))
-            .transform(barrier).orderBy("k", "ord")
+            .transform(final_sort, "k", "ord")
         )
     finally:
         el.unpersist()
@@ -824,7 +824,7 @@ def embedding_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.when(F.col("ord") == 1, F.col("x") + 0.05).otherwise(F.col("x")).alias("x"),
         )
     )
-    return semdedup_flags(el.unionByName(dup_el)).transform(barrier).orderBy("vec_id")
+    return semdedup_flags(el.unionByName(dup_el)).transform(final_sort, "vec_id")
 
 
 _SEMDEDUP_SQL = f"""
@@ -1066,7 +1066,7 @@ def embedding_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.round(F.col("adc"), 6).alias("adc_d2"),
                 F.round(F.col("exact").cast("double"), 6).alias("exact_d2"),
             )
-            .transform(barrier).orderBy("adc_d2", "vec_id")
+            .transform(final_sort, "adc_d2", "vec_id")
         )
     finally:
         el.unpersist()
@@ -1247,7 +1247,7 @@ def embedding_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
             "neg_vec",
         )
         .select("q_vec", "q_label", "neg_vec", "neg_label", "neg_cosine")
-        .transform(barrier).orderBy("q_vec")
+        .transform(final_sort, "q_vec")
     )
 
 

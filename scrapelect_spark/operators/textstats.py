@@ -12,7 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .dedup import _SHINGLES_SQL, _WORDS_SQL, _shingles, _words
-from .tables import barrier, docs, load, map_rows
+from .tables import docs, final_sort, load, map_rows
 
 _STOPWORDS = ("the", "a", "of", "and", "to", "in")
 _LANG_MARKERS = {
@@ -40,7 +40,7 @@ def text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum("n_tokens").cast("double") / F.count(F.lit(1)), 6
             ).alias("avg_tokens"),
         )
-        .transform(barrier).orderBy("lang")
+        .transform(final_sort, "lang")
     )
 
 
@@ -133,7 +133,7 @@ def text_langid_heuristic(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("n_match"),
         )
-        .transform(barrier).orderBy("lang")
+        .transform(final_sort, "lang")
     )
 
 
@@ -173,7 +173,7 @@ def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         d.select("doc_id")
         .join(fp, "doc_id", "left")
-        .transform(barrier).orderBy("doc_id")
+        .transform(final_sort, "doc_id")
     )
 
 
@@ -224,7 +224,7 @@ def text_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.length(scrubbed)
             - F.length(F.regexp_replace(scrubbed, "<EMAIL>", ""))
         ).cast("long").alias("email_chars_redacted"),
-    ).transform(barrier).orderBy("doc_id")
+    ).transform(final_sort, "doc_id")
 
 
 _PII_SQL = f"""
@@ -272,7 +272,7 @@ def corpus_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("kept_tokens"),
         )
-        .transform(barrier).orderBy("source")
+        .transform(final_sort, "source")
     )
 
 
@@ -323,7 +323,7 @@ def corpus_hash_split(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).cast("long").alias("n_docs"),
             F.sum("n_tokens").cast("long").alias("total_tokens"),
         )
-        .transform(barrier).orderBy("source", "split")
+        .transform(final_sort, "source", "split")
     )
 
 
@@ -376,7 +376,7 @@ def corpus_quota_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).cast("long").alias("sampled_docs"),
             F.sum("n_tokens").cast("long").alias("sampled_tokens"),
         )
-        .transform(barrier).orderBy("source")
+        .transform(final_sort, "source")
     )
 
 
@@ -445,7 +445,7 @@ def corpus_quota_sample_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).cast("long").alias("sampled_docs"),
             F.sum("n_tokens").cast("long").alias("sampled_tokens"),
         )
-        .transform(barrier).orderBy("source")
+        .transform(final_sort, "source")
     )
 
 
@@ -559,7 +559,7 @@ def corpus_main_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     return extract_main_text(pages).select(
         "page_url", "n_blocks", "n_kept", "main_len", "boiler_len",
         F.md5("main_text").alias("main_md5"),
-    ).transform(barrier).orderBy("page_url")
+    ).transform(final_sort, "page_url")
 
 
 _MAIN_TEXT_SQL = """
@@ -693,7 +693,7 @@ def corpus_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         line_dedup(texts)
         .select("doc_id", F.md5("text").alias("text_md5"), "n_kept",
                 "n_lines")
-        .transform(barrier).orderBy("doc_id")
+        .transform(final_sort, "doc_id")
     )
 
 
@@ -769,7 +769,7 @@ def corpus_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_tf",
             F.md5("postings").alias("postings_md5"),
         )
-        .transform(barrier).orderBy("term")
+        .transform(final_sort, "term")
     )
 
 
@@ -861,7 +861,7 @@ def corpus_lm_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     (doc_id < 300; the synthetic ~30-word vocabulary gives a natural
     mix of common and singleton bigrams, so both keep outcomes occur)."""
     d = load(spark, sf_dir, "documents").filter(F.col("doc_id") < 300)
-    return lm_novelty_scores(d).transform(barrier).orderBy("doc_id")
+    return lm_novelty_scores(d).transform(final_sort, "doc_id")
 
 
 _LM_NOVELTY_SQL = rf"""
@@ -959,7 +959,7 @@ def corpus_passage_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_tokens",
             F.md5("chunk_text").alias("chunk_md5"),
         )
-        .transform(barrier).orderBy("doc_id", "chunk_id")
+        .transform(final_sort, "doc_id", "chunk_id")
     )
 
 
@@ -1020,7 +1020,7 @@ def corpus_length_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
         "max_tokens",
         F.round(mean, 6).alias("mean_tokens"),
         F.round(F.sqrt(var), 6).alias("std_tokens"),
-    ).transform(barrier).orderBy("source")
+    ).transform(final_sort, "source")
 
 
 _MOMENTS_SQL = r"""
@@ -1076,7 +1076,7 @@ def corpus_vocab_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("n_types").cast("double") / F.col("n_tokens"), 6
             ),
         )
-        .transform(barrier).orderBy("source")
+        .transform(final_sort, "source")
     )
 
 
@@ -1159,7 +1159,7 @@ def corpus_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
                 4,
             ).alias("est_over_exact"),
         )
-        .transform(barrier).orderBy("source")
+        .transform(final_sort, "source")
     )
 
 
@@ -1249,7 +1249,7 @@ def text_pii_luhn(spark: SparkSession, sf_dir: str) -> DataFrame:
             cand.alias("card_digits"),
         )
         .withColumn("luhn_valid", luhn_valid_col(F.col("card_digits")))
-        .transform(barrier).orderBy("doc_id")
+        .transform(final_sort, "doc_id")
     )
 
 
@@ -1339,7 +1339,7 @@ def corpus_fix_mojibake(spark: SparkSession, sf_dir: str) -> DataFrame:
             .otherwise(F.col("text")),
         )
     )
-    return repair_mojibake(d).transform(barrier).orderBy("doc_id")
+    return repair_mojibake(d).transform(final_sort, "doc_id")
 
 
 _MOJI_SQL = f"""
@@ -1440,7 +1440,7 @@ def corpus_sequence_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     sequences; the synthetic doc lengths straddle the bin size, so
     single-bin, bin-spanning, and exactly-at-cut segments all occur."""
     d = load(spark, sf_dir, "documents").filter(F.col("doc_id") < 400)
-    return sequence_pack(d).transform(barrier).orderBy("bin_id", "seg_off", "doc_id")
+    return sequence_pack(d).transform(final_sort, "bin_id", "seg_off", "doc_id")
 
 
 _PACK_SQL = rf"""
@@ -1553,7 +1553,7 @@ def corpus_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     the corpus mixes docs shorter than k, shorter than w+k-1, and
     long docs, so all three window branches execute)."""
     d = load(spark, sf_dir, "documents").filter(F.col("doc_id") < 300)
-    return winnow_fingerprints(d).transform(barrier).orderBy("doc_id")
+    return winnow_fingerprints(d).transform(final_sort, "doc_id")
 
 
 _WINNOW_SQL = rf"""
@@ -1762,7 +1762,7 @@ def gopher_rules(
 def corpus_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gate: Gopher rules over every document, ordered by doc_id —
     both keep and each per-rule verdict are hash-pinned."""
-    return gopher_rules(load(spark, sf_dir, "documents")).transform(barrier).orderBy("doc_id")
+    return gopher_rules(load(spark, sf_dir, "documents")).transform(final_sort, "doc_id")
 
 
 _GOPHER_SQL = rf"""
@@ -1899,7 +1899,7 @@ def corpus_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
             .otherwise(F.col("text")),
         )
     )
-    return dsir_select(d).transform(barrier).orderBy("doc_id")
+    return dsir_select(d).transform(final_sort, "doc_id")
 
 
 _DSIR_SQL = rf"""
@@ -1998,7 +1998,7 @@ def source_mix_weights(
             * (F.sqrt(F.col("n_tokens").cast("double")) / F.lit(z)),
             3,
         ).alias("budget_tokens"),
-    ).transform(barrier).orderBy("source")
+    ).transform(final_sort, "source")
 
 
 def corpus_source_mix(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .tables import barrier
+from .tables import final_sort
 
 #: default cap on the driver-side word-frequency table
 _MAX_VOCAB = 65536
@@ -190,7 +190,7 @@ def corpus_bpe_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id", "n_words", "n_bpe_tokens", "oov_words",
             "token_stream",
         )
-        .transform(barrier).orderBy("doc_id")
+        .transform(final_sort, "doc_id")
     )
 
 

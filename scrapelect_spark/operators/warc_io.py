@@ -19,7 +19,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .tables import barrier, docs, map_rows
+from .tables import docs, final_sort, map_rows
 
 #: deterministic snapshot stamp for gate/test segments (a real crawl
 #: batch passes its own batch timestamp)
@@ -102,7 +102,7 @@ def crawl_warc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         "url",
         "status",
         F.md5(F.col("html")).alias("body_md5"),
-    ).transform(barrier).orderBy("url")
+    ).transform(final_sort, "url")
 
 
 _WARC_SQL = """
@@ -188,7 +188,7 @@ def crawl_sitemap_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             "url",
             "priority",
         )
-        .transform(barrier).orderBy("doc_id", "url")
+        .transform(final_sort, "doc_id", "url")
     )
 
 
@@ -285,7 +285,7 @@ def crawl_feed_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.when(F.col("parse_error").isNotNull(), 1)
             .otherwise(0).cast("long").alias("failed"),
         )
-        .transform(barrier).orderBy("doc_id", "url")
+        .transform(final_sort, "doc_id", "url")
     )
 
 
@@ -395,7 +395,7 @@ def crawl_archive_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(0)
         .cast("long")
         .alias("failed"),
-    ).transform(barrier).orderBy("doc_id", "member_name")
+    ).transform(final_sort, "doc_id", "member_name")
 
 
 _ARCHIVE_SQL = """

@@ -377,11 +377,6 @@ def encode_flac_parts(
 
 # ------------------------------------------------------------------ decoder
 
-_SAMPLE_RATES = {
-    0b0001: 88_200, 0b0010: 176_400, 0b0011: 192_000, 0b0100: 8_000,
-    0b0101: 16_000, 0b0110: 22_050, 0b0111: 24_000, 0b1000: 32_000,
-    0b1001: 44_100, 0b1010: 48_000, 0b1011: 96_000,
-}
 _SAMPLE_SIZES = {0b001: 8, 0b010: 12, 0b100: 16, 0b101: 20, 0b110: 24, 0b111: 32}
 
 

@@ -20,7 +20,6 @@ from __future__ import annotations
 import numpy as np
 
 _BIAS = 0x84
-_CLIP = 32635
 _SEG_AEND = np.array(
     [0x1F, 0x3F, 0x7F, 0xFF, 0x1FF, 0x3FF, 0x7FF, 0xFFF], dtype=np.int64
 )

@@ -37,8 +37,6 @@ TEXT_FRAMES = {
 _V22_IDS = {"TT2": "TIT2", "TP1": "TPE1", "TAL": "TALB",
             "TRK": "TRCK", "TYE": "TYER"}
 
-_GENRES_MAX = 191  # beyond the list → None
-
 
 def _syncsafe(n: int) -> bytes:
     return bytes(

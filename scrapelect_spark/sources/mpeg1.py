@@ -76,7 +76,6 @@ _GOP = 0xB8
 _PIC = 0x00
 _SEQ_END = 0xB7
 _EXT = 0xB5
-_USER = 0xB2
 _SLICE_MAX = 0xAF  # slice_vertical_position 1..175 → height ≤ 2800
 
 #: default intra quantizer matrix (ISO 11172-2 §2.4.3.2), raster order

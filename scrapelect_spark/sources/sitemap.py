@@ -17,7 +17,6 @@ import gzip
 import io
 import xml.etree.ElementTree as ET
 
-_NS = "{http://www.sitemaps.org/schemas/sitemap/0.9}"
 _MAX_BYTES = 64 << 20  # spec caps sitemaps at 50 MB uncompressed
 
 

@@ -594,12 +594,13 @@ def test_curation_pushdown_no_window(spark, tmp_path):
     src.write.parquet(path)
     featured = spark.read.parquet(path)
 
-    # materialize=False: the production default checkpoints the reused
-    # intermediates, which truncates the visible plan at the barrier —
-    # the LOGICAL cascade shape (pushdown, no windows) is asserted on
-    # the un-truncated form; the checkpointed form computes the same
-    # subtree (the scan with these PushedFilters materializes it).
-    out = curate_image_caption_pairs(featured, materialize=False)
+    # the autouse fixture turns barriers off: in production the reused
+    # intermediates are checkpointed, which truncates the visible plan
+    # at the barrier — the LOGICAL cascade shape (pushdown, no windows)
+    # is asserted on the un-truncated form; the checkpointed form
+    # computes the same subtree (the scan with these PushedFilters
+    # materializes it).
+    out = curate_image_caption_pairs(featured)
     plan = plan_of(out)
     assert "Window" not in plan  # dedup via min-per-group, not windows
     # decode_error/w/h predicates are pushed into the parquet scan

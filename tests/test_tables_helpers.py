@@ -1,7 +1,9 @@
 """The gate plumbing in ``operators/tables.py``: the per-row kernel
 applier ``map_rows``, the ``docs`` input helper, the loop-partition
-ceiling of ``scan_partitions``, and a guard that keeps operators on
-``map_rows`` instead of hand-rolled ``mapInPandas`` batch loops."""
+ceiling of ``scan_partitions``, the gate-final sort ``final_sort``, and
+guards that keep operators on ``map_rows`` instead of hand-rolled
+``mapInPandas`` batch loops and on ``final_sort`` instead of a
+hand-built barrier-then-sort."""
 
 import ast
 import glob
@@ -10,13 +12,18 @@ import os
 import pytest
 
 from scrapelect_spark.operators import tables
-from scrapelect_spark.operators.tables import docs, map_rows, scan_partitions
+from scrapelect_spark.operators.tables import (
+    docs,
+    final_sort,
+    map_rows,
+    scan_partitions,
+)
 
-OPERATORS = os.path.join(
+PACKAGE = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
     "scrapelect_spark",
-    "operators",
 )
+OPERATORS = os.path.join(PACKAGE, "operators")
 
 
 def _rows(df):
@@ -182,3 +189,77 @@ def test_map_rows_error_drops_rows_already_yielded(spark):
         errors=(ValueError,),
     )
     assert _rows(out) == [(0, 0, 0), (0, 1, 0), (1, None, 1)]
+
+
+@pytest.mark.parametrize("desc", [False, True])
+def test_final_sort_runs_the_kernel_once(spark, monkeypatch, desc):
+    """The range sort's sampling pass reads the barrier's saved
+    partitions, so each input row goes through the kernel once; a plain
+    ``orderBy`` runs the kernel twice per row."""
+    from pyspark.sql import functions as F
+
+    monkeypatch.setattr(tables, "BARRIERS", True)
+    calls = spark.sparkContext.accumulator(0)
+
+    def kernel(i):
+        calls.add(1)
+        yield {"i": i, "v": i % 7}
+
+    df = spark.range(0, 200, 1, 4).withColumnRenamed("id", "i")
+    out = map_rows(df, kernel, "i long, v long")
+    v = F.desc("v") if desc else "v"
+    rows = [tuple(r) for r in out.transform(final_sort, v, "i").collect()]
+    assert calls.value == 200
+    expected = [(i, i % 7) for i in range(200)]
+    expected.sort(key=lambda r: (-r[1] if desc else r[1], r[0]))
+    assert rows == expected
+
+
+def test_final_sort_without_barriers_is_a_plain_order_by(spark, monkeypatch):
+    from pyspark.sql import functions as F
+
+    monkeypatch.setattr(tables, "BARRIERS", False)
+    df = spark.range(50).selectExpr("id AS i", "id % 7 AS v")
+
+    def optimized(d):
+        return d._jdf.queryExecution().optimizedPlan().toString()
+
+    cols = (F.desc("v"), "i")
+    assert optimized(final_sort(df, *cols)) == optimized(df.orderBy(*cols))
+
+
+def _is_barrier(node):
+    return (isinstance(node, ast.Name) and node.id == "barrier") or (
+        isinstance(node, ast.Attribute) and node.attr == "barrier"
+    )
+
+
+def test_no_hand_built_barrier_sort():
+    """``final_sort`` is the one place that puts a barrier before a
+    sort: no other function in ``operators/`` or ``streaming/`` may
+    call ``.orderBy(`` directly on ``barrier(...)`` or on
+    ``.transform(barrier)``."""
+    sites = []
+    for sub in ("operators", "streaming"):
+        for path in sorted(glob.glob(os.path.join(PACKAGE, sub, "*.py"))):
+            with open(path) as f:
+                tree = ast.parse(f.read())
+            for top in tree.body:
+                for node in ast.walk(top):
+                    if not (
+                        isinstance(node, ast.Call)
+                        and isinstance(node.func, ast.Attribute)
+                        and node.func.attr == "orderBy"
+                        and isinstance(node.func.value, ast.Call)
+                    ):
+                        continue
+                    recv = node.func.value
+                    if _is_barrier(recv.func) or (
+                        isinstance(recv.func, ast.Attribute)
+                        and recv.func.attr == "transform"
+                        and recv.args
+                        and _is_barrier(recv.args[0])
+                    ):
+                        name = getattr(top, "name", "<module>")
+                        sites.append(f"{sub}/{os.path.basename(path)}:{name}")
+    assert sites == ["operators/tables.py:final_sort"]
