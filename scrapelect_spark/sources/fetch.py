@@ -3,8 +3,9 @@
 The crawl loop's fetch is pluggable:
 
 - :class:`CorpusFetcher` — resolves pages by joining the claimed batch
-  against a corpus DataFrame (the sandbox stand-in for the network;
-  also the replay/backfill path in production);
+  against a corpus DataFrame, read once and cached (the stand-in for
+  the network in tests and benchmarks; also the replay/backfill path
+  in production);
 - :class:`HttpFetcher` — real HTTP GET via stdlib urllib inside
   ``mapInPandas``, with per-partition per-host rate limiting.  The
   politeness scheduler has already bounded per-host volume per batch
@@ -133,11 +134,19 @@ def decode_content(
 
 
 class CorpusFetcher:
-    """fetch = left join against the (url, html) corpus, always
-    broadcast: the replay stand-in for :class:`HttpFetcher`."""
+    """fetch = left join against the (url, html) corpus, broadcast each
+    batch: the replay stand-in for :class:`HttpFetcher`.
+
+    The corpus is read once: it is ``cache()``d here, so the first
+    fetch fills the cache and every later batch broadcasts the
+    JVM-resident copy instead of re-deriving the source (a Python-built
+    corpus would otherwise be re-serialized from Python each batch).
+    The cache is recomputable from the corpus lineage, so a lost block
+    is re-read, never an error.  It lives as long as the session or
+    until the caller unpersists the corpus."""
 
     def __init__(self, corpus: DataFrame):
-        self.corpus = corpus
+        self.corpus = corpus.cache()
 
     def fetch(self, claimed: DataFrame) -> DataFrame:
         return claimed.join(F.broadcast(self.corpus), on="url", how="left").withColumn(

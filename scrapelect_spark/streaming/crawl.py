@@ -22,17 +22,23 @@ seen / pages / records / sketches) plus a root table whose snapshot
 pins each sub-table snapshot id — a micro-batch commits sub-tables
 first and the root last (atomically), so resume reads a consistent
 cut (north_rule: "resumable from checkpoint with per-partition
-lineage + metrics").
+lineage + metrics").  A crash between the sub-table commits and the
+root commit leaves sub-table commits no root pins; ``Crawler.run``
+rolls every sub-table back to its root pin before it does anything
+else, so the re-run batch never appends on top of them.
 
-Python pass budget: after the fetch (a JVM join for CorpusFetcher), a
-batch runs exactly two Python passes; everything else is JVM-side.
+Python pass budget: after the fetch (a JVM join against the corpus,
+which CorpusFetcher reads once and caches), a batch runs exactly two
+Python passes; everything else is JVM-side.
 - The extract UDF (``_process_batch_udf``) parses each page once and
   emits its record plus every frontier candidate: each followable
   link and each redirect target, already carrying its ``host`` and
   robots ``excluded`` value.
-- One cogroup per bucket (``urlseen.probe_and_merge_df``) tags every
-  candidate against the bucket's old bloom and emits the bucket's
-  merged bloom, in the same task.  It is materialized once; the
+- One cogroup per bucket (``urlseen.probe_and_merge_df``) drops the
+  bucket's duplicate candidates (a URL's rows share its bucket, so no
+  separate dedup shuffle runs), tags each distinct candidate against
+  the bucket's old bloom and emits the bucket's merged bloom, in the
+  same task.  It is materialized once; the
   anti-join of the maybe-seen sliver and the sketch commit both read
   that result.  The merged bloom is old ⊕ *every* candidate, not just
   the new ones, and the bytes are the same: the bloom already holds
@@ -45,8 +51,12 @@ Scale notes:
   cost of plain parquet; on Iceberg the same loop uses MoR deletes and
   a bucket(url) layout so the anti-join is partition-local;
 - candidate dedup anti-join only sees the bloom "maybe-seen" sliver;
-- per-host windows are salt-staged (politeness.py) so host skew never
-  concentrates on one task;
+- the per-host claim is one window with a map-side group limit
+  (politeness.py), so each map task ships at most ``per_host_limit``
+  rows of a hot host and host skew never concentrates on one task;
+- the hot state (queued frontier, exact seen set) is re-materialized
+  each batch with a partition count that follows its row count, never
+  the number of batches run;
 - the corpus fetcher realizes "HTTP GET" as a join against the page
   corpus (sandbox has no network); HttpFetcher shows the mapInPandas
   shape with per-partition rate limiting for real deployments.
@@ -87,7 +97,7 @@ ALLOWED_SCHEMES = ("http", "https", "file")
 class CrawlConfig:
     batch_size: int = 1000
     per_host_limit: int = 4
-    salt_buckets: int = 8
+    salt_buckets: int = 8  # fetch-stage spread of a host's claimed URLs
     max_depth: int = 10
     buckets: int = 64  # frontier hash buckets (sketch partitioning)
     bloom_bits_per_bucket: int = 1 << 20
@@ -242,12 +252,18 @@ class Crawler:
         # removes the per-batch full-table scan + anti-join.
         self._queued_df: DataFrame | None = None
         self._seen_df: DataFrame | None = None
+        # their row counts, carried from batch to batch (and in the
+        # root metrics) so sizing them never costs a count job
+        self._queued_rows = 0
+        self._seen_rows = 0
 
     _QUEUED_COLS = ["url", "host", "depth", "page_seq", "link_seq", "priority"]
 
-    def _load_state(self) -> None:
+    def _load_state(self, root_state: dict) -> None:
         """Rebuild hot state from the root-pinned snapshots (startup +
-        resume path)."""
+        resume path).  The row counts come from the root's metrics; a
+        root written before they were recorded has them counted."""
+        m = root_state["metrics"]
         frontier = self._pinned("frontier")
         pages = self._pinned("pages")
         queued = frontier.filter(F.col("excluded").isNull()).select(
@@ -255,9 +271,15 @@ class Crawler:
         )
         if pages is not None:
             queued = queued.join(pages.select("url"), on="url", how="left_anti")
-        self._queued_df = queued.localCheckpoint()
-        seen = self._pinned("seen")
-        self._seen_df = seen.select("url", "bucket").localCheckpoint()
+        seen = self._pinned("seen").select("url", "bucket")
+        self._queued_rows = m.get("queued_urls")
+        if self._queued_rows is None:
+            self._queued_rows = queued.count()
+        self._seen_rows = m.get("seen_urls")
+        if self._seen_rows is None:
+            self._seen_rows = seen.count()
+        self._queued_df = self._hot(queued, self._queued_rows)
+        self._seen_df = self._hot(seen, self._seen_rows)
 
     # --- helpers ---------------------------------------------------
     def _with_bucket(self, df: DataFrame, col: str = "url") -> DataFrame:
@@ -271,14 +293,26 @@ class Crawler:
         cap = max(1, self.spark.sparkContext.defaultParallelism)
         return max(1, min(cap, -(-int(n_rows) // rows_per_file)))
 
-    def _host_budgets(self) -> DataFrame | None:
-        rows = [
-            (h, self.robots.host_budget(h, self.cfg.per_host_limit))
+    def _host_budgets(self) -> dict[str, int]:
+        return {
+            h: self.robots.host_budget(h, self.cfg.per_host_limit)
             for h in self.robots.per_host
-        ]
-        if not rows:
-            return None
-        return self.spark.createDataFrame(rows, ["host", "budget"])
+        }
+
+    def _state_parts(self, n_rows: int, rows_per_part: int = 50_000) -> int:
+        """Partition count for the hot state: one partition per ~50k
+        rows, never fewer than ``defaultParallelism``.  Each batch's
+        ``union`` adds the new rows' partitions; capping the result by
+        row count keeps a long crawl from gaining partitions (and tasks)
+        with every batch."""
+        floor = max(1, self.spark.sparkContext.defaultParallelism)
+        return max(floor, -(-int(n_rows) // rows_per_part))
+
+    def _hot(self, df: DataFrame, n_rows: int) -> DataFrame:
+        """Materialize hot state: a narrow ``coalesce`` to
+        :meth:`_state_parts`, then ``localCheckpoint`` so plan depth
+        stays O(1) across hundreds of batches."""
+        return df.coalesce(self._state_parts(n_rows)).localCheckpoint()
 
     def _pinned(self, name: str) -> Optional[DataFrame]:
         """Read a sub-table at the snapshot pinned by the root table."""
@@ -349,6 +383,8 @@ class Crawler:
                 },
                 "pages_fetched": 0,
                 "seeds": len(rows),
+                "queued_urls": sum(r[6] is None for r in rows),  # not excluded
+                "seen_urls": len(rows),
             },
         )
         return root
@@ -431,35 +467,28 @@ class Crawler:
         return process
 
     def _candidate_pass(self, processed: DataFrame) -> DataFrame:
-        """The batch's frontier candidates, deduplicated in batch and
-        run through one cogroup per bucket that both probes the seen
-        blooms and merges them (``probe_and_merge_df``).
+        """The batch's frontier candidates, run through one cogroup per
+        bucket that deduplicates them, probes the seen blooms and merges
+        them (``probe_and_merge_df``).
 
         Links and redirect targets share this path.  Per URL, a
         redirect row wins over links to it (its content is already
-        held), then the first discovery in lineage order.  Links sit one
-        level below their page; a redirect target keeps its page's
-        depth."""
+        held), then the first discovery in lineage order: the cogroup
+        keeps the least ``(is_link, page_seq, link_seq)``, which is
+        unique per URL.  Links sit one level below their page; a
+        redirect target keeps its page's depth."""
         is_link = F.col("kind") == "link"
-        first = (
-            processed.filter(F.col("kind").isin("link", "redirect"))
-            .groupBy(F.col("value").alias("url"))
-            .agg(
-                F.min(
-                    F.struct(
-                        is_link.alias("is_link"),
-                        "page_seq",
-                        F.col("seq").alias("link_seq"),
-                        (F.col("depth") + is_link.cast("int")).alias("depth"),
-                        "host",
-                        "excluded",
-                    )
-                ).alias("s")
-            )
-            .select("url", "s.depth", "s.page_seq", "s.link_seq", "s.host", "s.excluded")
+        candidates = processed.filter(F.col("kind").isin("link", "redirect")).select(
+            F.col("value").alias("url"),
+            is_link.alias("is_link"),
+            "page_seq",
+            F.col("seq").alias("link_seq"),
+            (F.col("depth") + is_link.cast("int")).alias("depth"),
+            "host",
+            "excluded",
         )
         return probe_and_merge_df(
-            self._with_bucket(first),
+            self._with_bucket(candidates),
             self.sketch_df,
             num_bits=self.cfg.bloom_bits_per_bucket,
             num_hashes=self.cfg.bloom_hashes,
@@ -467,14 +496,14 @@ class Crawler:
 
     # --- the loop --------------------------------------------------
     def run(self, max_batches: int = 100) -> dict:
-        state = self.root.current_snapshot()
+        state = self._rollback_to_root()
         if state is None:
             state = self._seed_commit()
         if self.sketch_df is None:
             self._restore_sketches()
 
         if self._queued_df is None:
-            self._load_state()
+            self._load_state(state)
 
         for _ in range(max_batches):
             state = self._run_one_batch(state)
@@ -484,15 +513,56 @@ class Crawler:
                 self.cfg.compact_every
                 and state["metrics"]["batch"] % self.cfg.compact_every == 0
             ):
-                self._compact_tables()
+                state = self._compact_tables()
         return self.root.current_snapshot()
 
-    def _compact_tables(self) -> None:
+    def _rollback_to_root(self) -> Optional[dict]:
+        """Crash consistency: move every sub-table whose ``LATEST`` is
+        not the root's pin back to that pin, and return the root
+        snapshot.
+
+        Sub-tables commit before the root, and an append commit builds
+        on the sub-table's ``LATEST``.  After a crash between the two,
+        the orphan commits would stay live under the re-run batch and
+        duplicate its rows.  ``SnapshotTable.rollback`` restores the
+        pinned snapshot; a sub-table the root does not pin (``None``, or
+        no root yet) gets an empty overwrite snapshot.  This can also
+        undo a compaction the root never pinned (a crash between
+        compaction and its re-pin); compaction is content-identical, so
+        nothing but the compaction is lost."""
+        root = self.root.current_snapshot()
+        pins = root["metrics"]["tables"] if root else {}
+        for name, table in self.tables.items():
+            cur = table.current_snapshot()
+            if cur is None:
+                continue
+            pin = pins.get(name)
+            if pin is None:
+                if cur["data_dirs"]:
+                    table.commit(None, mode="overwrite", metrics={"rollback": True})
+            elif cur["id"] != pin:
+                table.rollback(pin)
+        return root
+
+    def _repin_root(self) -> dict:
+        """Publish a root snapshot that pins every sub-table's current
+        snapshot (the content-identical result of a compaction), with
+        the root's metrics otherwise unchanged; returns the root."""
+        cur = self.root.current_snapshot()
+        pins_now = {
+            name: (t.current_snapshot() or {}).get("id")
+            for name, t in self.tables.items()
+        }
+        if pins_now == cur["metrics"].get("tables"):
+            return cur
+        return self.root.commit(None, metrics={**cur["metrics"], "tables": pins_now})
+
+    def _compact_tables(self) -> dict:
         """Fold each append-log into one base commit sized by row count
-        (content-identical: reads the live set, rewrites coalesced).
-        The next batch's root commit pins the fresh snapshot ids; until
-        then the previous root pin stays resolvable because compaction
-        never deletes old snapshots or data dirs."""
+        (content-identical: reads the live set, rewrites coalesced),
+        then re-pin the root to the fresh snapshot ids and return it.
+        Until the re-pin the previous root pin stays resolvable, because
+        compaction never deletes old snapshots or data dirs."""
         for name in ("frontier", "seen", "pages", "records"):
             table = self.tables[name]
             df = table.read(self.spark)
@@ -504,6 +574,7 @@ class Crawler:
                 mode="overwrite",
                 metrics={"compaction": True, "rows": int(n)},
             )
+        return self._repin_root()
 
     def expire_history(self, keep_last_batches: int = 1) -> dict:
         """Checkpoint GC (Iceberg expire_snapshots discipline): keep
@@ -518,16 +589,8 @@ class Crawler:
         # a replace-commit repinning the CURRENT (content-identical)
         # snapshots first — otherwise the retained root would keep the
         # whole pre-compaction dir set alive
-        cur = self.root.current_snapshot()
-        if cur is not None:
-            pins_now = {
-                name: (t.current_snapshot() or {}).get("id")
-                for name, t in self.tables.items()
-            }
-            if pins_now != cur["metrics"].get("tables"):
-                self.root.commit(
-                    None, metrics={**cur["metrics"], "tables": pins_now}
-                )
+        if self.root.current_snapshot() is not None:
+            self._repin_root()
         out = {"root": self.root.expire_snapshots(keep_last=keep_last_batches)}
         pins: dict[str, set[int]] = {name: set() for name in self.tables}
         for snap in self.root.history():  # post-expiry: retained only
@@ -548,7 +611,6 @@ class Crawler:
             batch_size=self.cfg.batch_size,
             host_budgets=self._host_budgets(),
             default_per_host=self.cfg.per_host_limit,
-            salt_buckets=self.cfg.salt_buckets,
         ).withColumn(
             "page_seq_assigned", F.col("fetch_order") + F.lit(next_page_seq)
         )
@@ -660,8 +722,15 @@ class Crawler:
 
         # materialize the cache once (deterministic single fill) so the
         # consumers below can run concurrently without racing to
-        # compute it
-        n_new = int(new_frontier.count())
+        # compute it; the same job counts the queue-eligible rows that
+        # size the next hot state
+        counts = new_frontier.agg(
+            F.count(F.lit(1)).alias("new"),
+            F.count_if(F.col("excluded").isNull()).alias("queued"),
+        ).first()
+        n_new = int(counts["new"])
+        queued_rows = self._queued_rows - n_fetched + int(counts["queued"])
+        seen_rows = self._seen_rows + n_new
 
         # per-batch commits coalesce so the append-log read path doesn't
         # accumulate thousands of tiny parquet files; the part count
@@ -695,19 +764,18 @@ class Crawler:
             )
             sk_f = pool.submit(self._commit_sketches, batch, next_sketch_df)
             queued_f = pool.submit(
-                lambda: remaining.unionByName(newly_queued).localCheckpoint()
+                self._hot, remaining.unionByName(newly_queued), queued_rows
             )
             seen_df_f = pool.submit(
-                lambda: self._seen_df.unionByName(
-                    new_frontier.select("url", "bucket")
-                ).localCheckpoint()
+                self._hot,
+                self._seen_df.unionByName(new_frontier.select("url", "bucket")),
+                seen_rows,
             )
             fr_snap = fr_f.result()
             seen_snap = seen_f.result()
             sk_snap = sk_f.result()
             next_queued_df = queued_f.result()
             next_seen_df = seen_df_f.result()
-        self.sketch_df = next_sketch_df
 
         root = self.root.commit(
             None,
@@ -716,6 +784,8 @@ class Crawler:
                 "next_page_seq": int(next_page_seq + n_fetched),
                 "pages_fetched": int(n_fetched),
                 "new_urls": int(n_new),
+                "queued_urls": int(queued_rows),
+                "seen_urls": int(seen_rows),
                 "tables": {
                     "frontier": fr_snap["id"],
                     "seen": seen_snap["id"],
@@ -727,12 +797,15 @@ class Crawler:
             lineage={"fetch_partition_rows": part_counts},
         )
 
-        # advance the hot state: queued minus the claimed batch plus the
-        # newly-discovered queue-eligible urls; localCheckpoint (already
-        # computed concurrently above) truncates lineage so plan depth
-        # stays O(1) across hundreds of batches
-        self._queued_df = next_queued_df
-        self._seen_df = next_seen_df
+        # advance the hot state only now that the root pins the batch:
+        # queued minus the claimed batch plus the newly-discovered
+        # queue-eligible urls, the grown seen set, the merged blooms
+        # (all computed concurrently above).  A crash before this point
+        # leaves this crawler at the root's cut, matching the rollback
+        # at the start of run()
+        self.sketch_df = next_sketch_df
+        self._queued_df, self._queued_rows = next_queued_df, queued_rows
+        self._seen_df, self._seen_rows = next_seen_df, seen_rows
 
         processed.unpersist()
         new_frontier.unpersist()

@@ -6,15 +6,16 @@ order ``(priority, depth, page_seq, link_seq, url)`` — the lineage
 order that makes the parallel crawl reproduce the sequential reference
 crawl byte-for-byte (SURVEY.md §7.1 item 4).
 
-Skew design (north_star "salted-key repartition + sortWithinPartitions
-to kill host skew"): per-host top-k is computed in two stages so one
-hot host (say 40% of a 10^10 frontier) never lands on one task:
-
-1. salt the window key — rank within ``(host, salt)`` where
-   ``salt = pmod(hash(url), S)``; each of the S shards keeps at most
-   ``k`` rows, so stage 2's input is ≤ S·k rows per host regardless of
-   how many billions the host has queued;
-2. exact rank within ``host`` over that tiny survivor set.
+Skew design: per-host top-k is one ``row_number() over (host)`` window
+whose filter carries a literal bound ``_r <= k`` (k = the largest
+budget), next to the exact per-host ``_r <= _budget``.  The literal
+lets Spark insert ``WindowGroupLimit … Partial`` below the host
+exchange, so each map task ships at most k rows per host: one hot host
+(say 40% of a 10^10 frontier) reaches the host-side task as
+≤ map_tasks·k rows, never as its whole queue.  (Spark applies the
+group limit only while k is at most
+``spark.sql.optimizer.windowGroupLimitThreshold``, 1000 by default;
+above it the claim is still exact, just without the map-side cut.)
 
 The global batch cut is a top-``batch_size`` sort over per-host
 survivors (bounded by hosts × k rows).  The fetch stage then
@@ -24,6 +25,8 @@ deterministic and hot hosts stay spread.
 """
 
 from __future__ import annotations
+
+from typing import Mapping
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -39,41 +42,39 @@ def select_batch(
     queued: DataFrame,
     *,
     batch_size: int,
-    host_budgets: DataFrame | None = None,
+    host_budgets: Mapping[str, int] | None = None,
     default_per_host: int = 4,
     salt_buckets: int = 8,
 ) -> DataFrame:
     """Claim the next micro-batch.  ``host_budgets`` is an optional
-    small (host, budget) DataFrame — broadcast-joined; hosts absent
-    from it use ``default_per_host``.
+    small ``{host: budget}`` mapping — broadcast-joined; hosts absent
+    from it use ``default_per_host``.  ``salt_buckets`` is accepted for
+    callers that pass one setting to this and to
+    :func:`repartition_for_fetch`; the claim itself needs no salt.
 
     Returns the claimed rows with a deterministic ``fetch_order``
     column (0-based within the batch).
     """
-    df = queued.withColumn(
-        "_salt", F.pmod(F.hash(F.col("url")), F.lit(salt_buckets))
-    )
-    if host_budgets is not None:
-        df = df.join(F.broadcast(host_budgets), on="host", how="left")
+    limit = default_per_host
+    if host_budgets:
+        budgets = queued.sparkSession.createDataFrame(
+            list(host_budgets.items()), "host string, budget int"
+        )
+        df = queued.join(F.broadcast(budgets), on="host", how="left")
         df = df.withColumn(
             "_budget", F.coalesce(F.col("budget"), F.lit(default_per_host))
         ).drop("budget")
+        limit = max(limit, *host_budgets.values())
     else:
-        df = df.withColumn("_budget", F.lit(default_per_host))
+        df = queued.withColumn("_budget", F.lit(default_per_host))
 
-    # stage 1: bounded pre-rank within (host, salt)
-    w1 = Window.partitionBy("host", "_salt").orderBy(*_order())
+    # exact per-host rank; the literal bound is what Spark turns into
+    # the map-side WindowGroupLimit (see the module docstring)
+    w = Window.partitionBy("host").orderBy(*_order())
     df = (
-        df.withColumn("_r1", F.row_number().over(w1))
-        .filter(F.col("_r1") <= F.col("_budget"))
-        .drop("_r1")
-    )
-    # stage 2: exact per-host rank over ≤ salt_buckets·budget survivors
-    w2 = Window.partitionBy("host").orderBy(*_order())
-    df = (
-        df.withColumn("_r2", F.row_number().over(w2))
-        .filter(F.col("_r2") <= F.col("_budget"))
-        .drop("_r2", "_salt", "_budget")
+        df.withColumn("_r", F.row_number().over(w))
+        .filter((F.col("_r") <= F.col("_budget")) & (F.col("_r") <= F.lit(limit)))
+        .drop("_r", "_budget")
     )
     # global deterministic cut: orderBy+limit plans as
     # TakeOrderedAndProject (per-partition top-k + merge, distributed)

@@ -155,15 +155,19 @@ def probe_and_merge_df(
     num_bits: int = 1 << 20,
     num_hashes: int = 5,
 ):
-    """Probe and merge in one cogroup per bucket.
+    """Dedup, probe and merge in one cogroup per bucket.
 
     Each task takes one bucket's candidates (``url``, ``bucket``, any
-    other columns) and that bucket's bloom from ``sketch_df``.  It
-    emits two kinds of rows:
+    other columns) and that bucket's bloom from ``sketch_df``.  A URL's
+    rows all share its bucket, so the task first drops duplicate URLs:
+    per url it keeps the least row by the other columns in frame order
+    (``url`` and ``bucket`` left out), the row
+    ``groupBy("url").agg(min(struct(...)))`` would pick — the caller
+    puts its tie-break columns first.  It then emits two kinds of rows:
 
-    - every candidate, tagged ``maybe_seen`` ('y'/'n') against the OLD
-      bloom, with ``sketch`` null.  'n' rows are provably new (a bloom
-      has no false negatives);
+    - every distinct candidate, tagged ``maybe_seen`` ('y'/'n') against
+      the OLD bloom, with ``sketch`` null.  'n' rows are provably new (a
+      bloom has no false negatives);
     - one row per bucket whose ``sketch`` is the old bloom OR-merged
       with every candidate URL; its other columns are null except
       ``bucket``.
@@ -181,10 +185,13 @@ def probe_and_merge_df(
             StructField("sketch", BinaryType(), True),
         ]
     )
+    order = [c for c in candidates.columns if c not in ("url", "bucket")]
 
     def probe_merge(key, cand_pdf: pd.DataFrame, sk_pdf: pd.DataFrame) -> pd.DataFrame:
         f = _bucket_bloom(key, sk_pdf, num_bits, num_hashes)
-        out = cand_pdf.copy()
+        out = cand_pdf.sort_values(
+            ["url", *order], kind="stable", na_position="first"
+        ).drop_duplicates("url", keep="first")
         urls = out["url"].to_numpy(dtype=object)
         out["maybe_seen"] = np.where(f.might_contain_many(urls), "y", "n")
         out["sketch"] = None

@@ -551,3 +551,223 @@ def test_crawler_expire_history_resume_exact(spark, tmp_path):
         assert (
             len(os.listdir(os.path.join(c2.tables[name].path, "data"))) <= 2
         ), name
+
+
+# ------------------------------------------------- batch cost and recovery
+
+
+@pytest.mark.parametrize("with_budgets", [False, True], ids=["default", "budgets"])
+def test_select_batch_matches_per_host_top_k(spark, with_budgets):
+    """The single-window claim on Zipf-skewed hosts equals a pure-Python
+    per-host top-k followed by the global cut, row for row — with and
+    without per-host budgets (one above the default, so the window's
+    literal bound is the largest budget, not the default)."""
+    from collections import Counter
+
+    from scrapelect_spark.streaming.politeness import select_batch
+
+    rng = np.random.default_rng(11)
+    hosts = rng.zipf(1.3, 4000) % 50
+    rows = [
+        (
+            f"http://h{h}.test/p{i}", f"h{h}.test",
+            int(rng.integers(0, 3)), int(rng.integers(-1, 40)),
+            int(rng.integers(0, 6)), int(rng.choice([10, 100])),
+        )
+        for i, h in enumerate(hosts)
+    ]
+    budgets = {"h1.test": 6, "h2.test": 1, "h3.test": 2} if with_budgets else None
+    default, batch_size = 4, 90
+    queued = spark.createDataFrame(
+        rows,
+        "url string, host string, depth int, page_seq long, link_seq int, priority int",
+    ).repartition(6)
+    got = sorted(
+        (r.fetch_order, r.url)
+        for r in select_batch(
+            queued, batch_size=batch_size, host_budgets=budgets,
+            default_per_host=default,
+        ).collect()
+    )
+
+    used: Counter = Counter()
+    claimed = []
+    for r in sorted(rows, key=lambda r: (r[5], r[2], r[3], r[4], r[0])):
+        if used[r[1]] < (budgets or {}).get(r[1], default):
+            used[r[1]] += 1
+            claimed.append(r[0])
+    assert got == list(enumerate(claimed[:batch_size]))
+    assert Counter(hosts)[1] > 1000  # the skew is real: one hot host
+
+
+def test_candidate_pass_dedups_across_input_partitions(spark, tmp_path):
+    """One URL reaches the candidate pass from pages in different input
+    partitions; the per-bucket cogroup keeps one row for it, the
+    winner the old groupBy(url) min-struct picked: a redirect beats
+    links, then the least (page_seq, link_seq)."""
+    from pyspark.sql import functions as F
+
+    from scrapelect_spark.streaming.crawl import (
+        PROCESS_SCHEMA,
+        Crawler,
+        CrawlConfig,
+    )
+
+    corpus_df = spark.createDataFrame([], "url string, html string")
+    c = Crawler(
+        spark, str(tmp_path / "c"), corpus_df, [("http://a.test/", 1)],
+        config=CrawlConfig(buckets=4, bloom_bits_per_bucket=1 << 12),
+    )
+    c.run(max_batches=0)
+    rows = [
+        # (page_url, page_seq, depth, kind, seq, value, host, excluded)
+        ("http://p3.test/", 3, 1, "link", 0, "http://x.test/", "x.test", None),
+        ("http://p1.test/", 1, 1, "link", 5, "http://x.test/", "x.test", None),
+        ("http://p1.test/", 1, 1, "link", 2, "http://x.test/", "x.test", None),
+        ("http://p2.test/", 2, 4, "link", 0, "http://y.test/", "y.test", None),
+        ("http://p4.test/", 4, 0, "redirect", -1, "http://y.test/", "y.test", "redirect"),
+        ("http://p0.test/", 0, 2, "link", 9, "http://y.test/", "y.test", None),
+    ]
+    processed = spark.createDataFrame(
+        spark.sparkContext.parallelize(rows, len(rows)), PROCESS_SCHEMA
+    )
+    assert (
+        processed.select(F.spark_partition_id()).distinct().count() == len(rows)
+    )
+    got = sorted(
+        (r.url, r.depth, r.page_seq, r.link_seq, r.host, r.excluded)
+        for r in c._candidate_pass(processed).collect()
+        if r.sketch is None
+    )
+    assert got == [
+        ("http://x.test/", 2, 1, 2, "x.test", None),
+        ("http://y.test/", 0, 4, -1, "y.test", "redirect"),
+    ]
+
+
+def test_corpus_is_computed_once_across_batches(spark, tmp_path):
+    """CorpusFetcher reads its corpus once: a corpus built through a
+    counting kernel is computed once over three batches, not once per
+    batch."""
+    from scrapelect_spark.streaming.crawl import Crawler, CrawlConfig
+
+    corpus = synth_corpus()
+    computed = spark.sparkContext.accumulator(0)
+
+    def count_rows(batches):
+        for pdf in batches:
+            computed.add(len(pdf))
+            yield pdf
+
+    corpus_df = spark.createDataFrame(
+        list(corpus.items()), "url string, html string"
+    ).mapInPandas(count_rows, "url string, html string")
+    c = Crawler(
+        spark, str(tmp_path / "c"), corpus_df,
+        [("http://site0.test/page/0", 1)],
+        config=CrawlConfig(
+            batch_size=8, per_host_limit=3, buckets=4,
+            bloom_bits_per_bucket=1 << 14, fetch_partitions=4,
+        ),
+    )
+    for batch in (1, 2, 3):
+        state = c.run(max_batches=1)
+        assert state["metrics"]["batch"] == batch
+        assert state["metrics"]["pages_fetched"] > 0
+    assert computed.value == len(corpus)
+
+
+def test_hot_state_partitions_do_not_grow_with_batches(spark, tmp_path):
+    """Each batch unions new rows into the queued frontier and the
+    seen set; the partition count of both follows their row count
+    (floor: defaultParallelism), not the number of batches run.  The
+    row counts carried from batch to batch are exact."""
+    from scrapelect_spark.streaming.crawl import Crawler, CrawlConfig
+
+    corpus = synth_corpus(n_hosts=4, pages_per_host=40)
+    corpus_df = spark.createDataFrame(list(corpus.items()), ["url", "html"])
+    c = Crawler(
+        spark, str(tmp_path / "c"), corpus_df,
+        [(f"http://site{h}.test/page/0", 1) for h in range(4)],
+        config=CrawlConfig(
+            batch_size=10, per_host_limit=3, buckets=4,
+            bloom_bits_per_bucket=1 << 14, fetch_partitions=4,
+        ),
+    )
+    parts = []
+    for _ in range(8):
+        state = c.run(max_batches=1)
+        assert state["metrics"]["pages_fetched"] > 0
+        parts.append(
+            (c._queued_df.rdd.getNumPartitions(), c._seen_df.rdd.getNumPartitions())
+        )
+        assert c._queued_rows == c._queued_df.count() == state["metrics"]["queued_urls"]
+        assert c._seen_rows == c._seen_df.count() == state["metrics"]["seen_urls"]
+    cap = spark.sparkContext.defaultParallelism
+    assert all(q <= cap and s <= cap for q, s in parts), parts
+
+
+@pytest.fixture(scope="module")
+def two_batch_workdir(spark, crawl_setup, tmp_path_factory):
+    """A checkpoint after 2 clean batches, and the sequential reference
+    crawl of 5 batches."""
+    from scrapelect_spark.streaming.crawl import Crawler
+
+    corpus, seeds, robots, cfg = crawl_setup
+    corpus_df = spark.createDataFrame(list(corpus.items()), ["url", "html"])
+    workdir = str(tmp_path_factory.mktemp("two_batches") / "w")
+    Crawler(spark, workdir, corpus_df, seeds, SCRP, robots, cfg).run(max_batches=2)
+    return workdir, corpus_df, run_sequential(corpus, seeds, robots, cfg, max_batches=5)
+
+
+@pytest.mark.parametrize(
+    "crash_at", ["pages", "records", "frontier", "seen", "sketches", "crawl"]
+)
+def test_crash_between_commits_resumes_exactly(
+    spark, crawl_setup, two_batch_workdir, tmp_path, monkeypatch, crash_at
+):
+    """Batch 3 crashes right after one sub-table commit (or just before
+    the root commit, ``crawl``), leaving sub-table commits the root does
+    not pin.  A fresh crawler over the same workdir rolls them back and
+    finishes with the sequential reference's visit log, seen set and
+    records, and no table holds a URL twice."""
+    import os
+    import shutil
+
+    from scrapelect_spark.sources.checkpoint import SnapshotTable
+    from scrapelect_spark.streaming.crawl import Crawler
+
+    _, seeds, robots, cfg = crawl_setup
+    base, corpus_df, sim = two_batch_workdir
+    workdir = str(tmp_path / "w")
+    shutil.copytree(base, workdir)
+
+    class Crash(RuntimeError):
+        pass
+
+    real_commit = SnapshotTable.commit
+
+    def crashing_commit(table, df, **kw):
+        name = os.path.basename(table.path)
+        if name == crash_at == "crawl":
+            raise Crash(name)
+        snap = real_commit(table, df, **kw)
+        if name == crash_at:
+            raise Crash(name)
+        return snap
+
+    c1 = Crawler(spark, workdir, corpus_df, seeds, SCRP, robots, cfg)
+    monkeypatch.setattr(SnapshotTable, "commit", crashing_commit)
+    with pytest.raises(Crash):
+        c1.run(max_batches=1)
+    monkeypatch.setattr(SnapshotTable, "commit", real_commit)
+    assert c1.root.current_snapshot()["metrics"]["batch"] == 2
+
+    c2 = Crawler(spark, workdir, corpus_df, seeds, SCRP, robots, cfg)
+    assert c2.run(max_batches=3)["metrics"]["batch"] == 5
+    assert c2.visit_log() == sim.visit_log
+    assert c2.seen_set() == sim.seen
+    assert c2.records_json() == sim.records
+    for name in ("frontier", "seen", "pages", "records"):
+        df = c2._pinned(name)
+        assert df.count() == df.select("url").distinct().count(), name

@@ -104,9 +104,16 @@ def test_partial_aggregation_before_shuffle(spark):
     assert plan.count("HashAggregate") >= 2
 
 
-def test_politeness_select_batch_stages(spark):
-    """The salt-staged top-k plan: two windows over (host,_salt) then
-    host — never a single global-window pass over the raw frontier."""
+@pytest.mark.parametrize(
+    "host_budgets", [None, {"h1.test": 1, "h2.test": 2}], ids=["default", "budgets"]
+)
+def test_politeness_select_batch_one_window_group_limit(spark, host_budgets):
+    """The per-host top-k is ONE window over ``host``, and Spark puts a
+    map-side ``WindowGroupLimit … Partial`` directly below the host
+    exchange: each map task ships at most k rows per host, so a hot
+    host never reaches its window task as its whole queue."""
+    import re
+
     from scrapelect_spark.streaming.politeness import select_batch
 
     frontier = spark.createDataFrame(
@@ -116,13 +123,19 @@ def test_politeness_select_batch_stages(spark):
         ],
         "url string, host string, depth int, page_seq long, link_seq int, priority int",
     )
-    df = select_batch(frontier, batch_size=10, default_per_host=2)
-    plan = plan_of(df)
-    assert plan.count("Window") >= 2  # salt-stage, host-stage
+    df = select_batch(
+        frontier, batch_size=10, default_per_host=2, host_budgets=host_budgets
+    )
+    rows = df.collect()
+    plan = plan_of(df).split("== Initial Plan ==")[0]  # AQE's final plan
+    assert len(re.findall(r"\bWindow \[", plan)) == 1, plan
+    assert re.search(
+        r"Exchange hashpartitioning\(host#\d+, \d+\)[^\n]*\n"
+        r"\s*\+- WindowGroupLimit \[host#\d+\][^\n]*, 2, Partial\n",
+        plan,
+    ), plan
     # the global cut is WindowExec-free (TakeOrdered + sequential ids)
     assert "TakeOrderedAndProject" in plan
-    assert "_salt" in plan
-    rows = df.collect()
     assert len(rows) <= 10
     from collections import Counter
 
