@@ -76,8 +76,8 @@ def extract(
     BTreeMap serialization parity, value.rs:9/main.rs:62).
 
     ``corpus`` (url → html) backs URL recursion inside the UDF; it is
-    broadcast once per job.  At crawl scale the frontier loop owns
-    link-following instead.
+    broadcast once per call, and only when given.  At crawl scale the
+    frontier loop owns link-following instead.
 
     ``registry`` is the filter table the interpreter dispatches on; the
     default is the full ``FILTERS``.  Pass ``REFERENCE_FILTERS`` for
@@ -89,14 +89,13 @@ def extract(
     (tests/test_streaming.py::test_extract_over_stream_matches_batch).
     """
     statements = compile_scrp(program)
-    spark = pages.sparkSession
-    corpus_bc = spark.sparkContext.broadcast(corpus or {})
+    corpus_bc = pages.sparkSession.sparkContext.broadcast(corpus) if corpus else None
 
     def run_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from ..functions.filters import FILTERS
 
         filters = registry or FILTERS
-        local_corpus = corpus_bc.value
+        local_corpus = corpus_bc.value if corpus_bc is not None else {}
         doc_cache: dict[str, object] = {}
 
         def fetch(url: str):

@@ -602,6 +602,17 @@ class Crawler:
         return out
 
     def _run_one_batch(self, root_state: dict) -> dict:
+        """Run one micro-batch and return the root snapshot.  Every frame
+        the batch ``cache()``s is unpersisted when it ends, also when it
+        raises; the fetcher's corpus cache is not the batch's and stays."""
+        cached: list[DataFrame] = []
+        try:
+            return self._batch(root_state, cached)
+        finally:
+            for df in cached:
+                df.unpersist()
+
+    def _batch(self, root_state: dict, cached: list[DataFrame]) -> dict:
         m = root_state["metrics"]
         batch = m["batch"] + 1
         next_page_seq = m["next_page_seq"]
@@ -618,6 +629,7 @@ class Crawler:
         claimed = repartition_for_fetch(
             claimed, self.cfg.fetch_partitions, self.cfg.salt_buckets
         ).cache()
+        cached.append(claimed)
 
         # per-partition lineage metric; its sum doubles as n_fetched
         # (one job on the cached claimed batch, no separate count)
@@ -643,6 +655,7 @@ class Crawler:
             "url", "html", "page_seq_assigned", "depth", fin_col
         ).mapInPandas(self._process_batch_udf(), schema=PROCESS_SCHEMA)
         processed = processed.cache()
+        cached.append(processed)
 
         # --- pages log ---
         page_rows = (
@@ -656,8 +669,6 @@ class Crawler:
             .withColumn("batch", F.lit(batch).cast("long"))
         )
         if n_fetched == 0:
-            processed.unpersist()
-            claimed.unpersist()
             root = self.root.commit(
                 None,
                 metrics={**m, "batch": batch, "pages_fetched": 0, "tables": m["tables"]},
@@ -719,6 +730,7 @@ class Crawler:
             )
             .cache()
         )
+        cached.append(new_frontier)
 
         # materialize the cache once (deterministic single fill) so the
         # consumers below can run concurrently without racing to
@@ -806,10 +818,6 @@ class Crawler:
         self.sketch_df = next_sketch_df
         self._queued_df, self._queued_rows = next_queued_df, queued_rows
         self._seen_df, self._seen_rows = next_seen_df, seen_rows
-
-        processed.unpersist()
-        new_frontier.unpersist()
-        claimed.unpersist()
         return root
 
     # --- outputs ---------------------------------------------------

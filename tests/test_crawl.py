@@ -728,8 +728,9 @@ def test_crash_between_commits_resumes_exactly(
 ):
     """Batch 3 crashes right after one sub-table commit (or just before
     the root commit, ``crawl``), leaving sub-table commits the root does
-    not pin.  A fresh crawler over the same workdir rolls them back and
-    finishes with the sequential reference's visit log, seen set and
+    not pin.  The crashed batch leaves none of its cached frames behind.
+    A fresh crawler over the same workdir rolls the orphan commits back
+    and finishes with the sequential reference's visit log, seen set and
     records, and no table holds a URL twice."""
     import os
     import shutil
@@ -757,11 +758,17 @@ def test_crash_between_commits_resumes_exactly(
         return snap
 
     c1 = Crawler(spark, workdir, corpus_df, seeds, SCRP, robots, cfg)
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    cached_before = cache_manager.numCachedEntries()
     monkeypatch.setattr(SnapshotTable, "commit", crashing_commit)
     with pytest.raises(Crash):
         c1.run(max_batches=1)
     monkeypatch.setattr(SnapshotTable, "commit", real_commit)
     assert c1.root.current_snapshot()["metrics"]["batch"] == 2
+    # the crashed batch unpersisted every frame it cached; the fetcher's
+    # corpus cache is the crawler's, not the batch's, and stays
+    assert cache_manager.numCachedEntries() == cached_before
+    assert cache_manager.lookupCachedData(c1.fetcher.corpus._jdf).isDefined()
 
     c2 = Crawler(spark, workdir, corpus_df, seeds, SCRP, robots, cfg)
     assert c2.run(max_batches=3)["metrics"]["batch"] == 5

@@ -88,3 +88,48 @@ def test_fail_fast_mode(spark):
     df = extract(pages, "x: h1 {};", fail_fast=True)
     with pytest.raises(PythonException):
         df.collect()
+
+
+RECURSE_SCRP = (
+    'next: #next { link: $element | attrs() | take(key: "href"); }'
+    ' | take(key: "link");\n'
+    'page-2: <$next> #story { content: $element | text(); }'
+    ' | take(key: "content");'
+)
+INDEX_HTML = '<html><body><a id="next" href="page2.html">Continue</a></body></html>'
+PAGE2_HTML = '<html><body><p id="story">The end.</p></body></html>'
+
+
+def _recursing_page(spark):
+    return spark.createDataFrame(
+        [("https://site.test/index.html", INDEX_HTML)], ["url", "html"]
+    )
+
+
+def test_extract_recursion_reads_the_given_corpus(spark):
+    from scrapelect_spark.operators.extract import extract
+
+    corpus = {"https://site.test/page2.html": PAGE2_HTML}
+    (row,) = extract(_recursing_page(spark), RECURSE_SCRP, corpus=corpus).collect()
+    assert row.error is None
+    assert json.loads(row.result)["page-2"] == "The end."
+
+
+def test_extract_without_corpus_broadcasts_nothing(spark, monkeypatch):
+    """No corpus, no broadcast; a page that recurses still gets the
+    "not in corpus" error."""
+    from pyspark import SparkContext
+
+    from scrapelect_spark.operators.extract import extract
+
+    made = []
+    real_broadcast = SparkContext.broadcast
+
+    def counting_broadcast(sc, value):
+        made.append(value)
+        return real_broadcast(sc, value)
+
+    monkeypatch.setattr(SparkContext, "broadcast", counting_broadcast)
+    (row,) = extract(_recursing_page(spark), RECURSE_SCRP).collect()
+    assert made == []
+    assert "request to `https://site.test/page2.html` failed: not in corpus" in row.error
