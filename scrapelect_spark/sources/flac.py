@@ -23,6 +23,8 @@ import struct
 
 import numpy as np
 
+from .bits import BitReader, BitWriter as _BitWriter
+
 # ------------------------------------------------------------------ CRCs
 
 _CRC8_TABLE = []
@@ -57,98 +59,9 @@ def _crc16(data: bytes) -> int:
 # ------------------------------------------------------------------ bit I/O
 
 
-class _BitWriter:
-    def __init__(self) -> None:
-        self._out = bytearray()
-        self._acc = 0
-        self._nbits = 0
-
-    def write(self, value: int, nbits: int) -> None:
-        if nbits == 0:
-            return
-        self._acc = (self._acc << nbits) | (value & ((1 << nbits) - 1))
-        self._nbits += nbits
-        while self._nbits >= 8:
-            self._nbits -= 8
-            self._out.append((self._acc >> self._nbits) & 0xFF)
-        self._acc &= (1 << self._nbits) - 1
-
-    def write_unary(self, q: int) -> None:
-        # q zero bits then a one bit
-        while q >= 32:
-            self.write(0, 32)
-            q -= 32
-        self.write(1, q + 1)
-
-    def align(self) -> None:
-        if self._nbits:
-            self.write(0, 8 - self._nbits)
-
-    def bytes(self) -> bytes:
-        assert self._nbits == 0
-        return bytes(self._out)
-
-
-class _BitReader:
-    def __init__(self, data: bytes, pos: int = 0) -> None:
-        self._data = data
-        self._byte = pos
-        self._bit = 0  # bits consumed of current byte (0..7)
-
-    def read(self, nbits: int) -> int:
-        v = 0
-        data, byte, bit = self._data, self._byte, self._bit
-        while nbits > 0:
-            if byte >= len(data):
-                raise ValueError("FLAC bitstream truncated")
-            avail = 8 - bit
-            take = avail if avail < nbits else nbits
-            cur = data[byte]
-            v = (v << take) | ((cur >> (avail - take)) & ((1 << take) - 1))
-            bit += take
-            nbits -= take
-            if bit == 8:
-                bit = 0
-                byte += 1
-        self._byte, self._bit = byte, bit
-        return v
-
-    def read_signed(self, nbits: int) -> int:
-        v = self.read(nbits)
-        if nbits and v >= 1 << (nbits - 1):
-            v -= 1 << nbits
-        return v
-
-    def read_unary(self) -> int:
-        q = 0
-        data, byte, bit = self._data, self._byte, self._bit
-        while True:
-            if byte >= len(data):
-                raise ValueError("FLAC bitstream truncated in unary code")
-            # remaining bits of current byte, left-aligned into 8 bits
-            rem = (data[byte] << bit) & 0xFF
-            if rem == 0:
-                q += 8 - bit
-                byte += 1
-                bit = 0
-                continue
-            lead = 8 - rem.bit_length()  # zeros before the 1 bit
-            q += lead
-            bit += lead + 1
-            if bit >= 8:
-                bit -= 8
-                byte += 1
-            self._byte, self._bit = byte, bit
-            return q
-
-    def align(self) -> None:
-        if self._bit:
-            self._bit = 0
-            self._byte += 1
-
-    def tell_bytes(self) -> int:
-        assert self._bit == 0
-        return self._byte
+class _BitReader(BitReader):
+    truncated = "FLAC bitstream truncated"
+    truncated_unary = "FLAC bitstream truncated in unary code"
 
 
 # ------------------------------------------------------------- coded number
@@ -525,7 +438,7 @@ def decode_flac(data: bytes, check_md5: bool = True):
         elif sr_code == 15:
             raise ValueError("invalid sample rate code 15")
         r.align()
-        hdr_crc = _crc8(data[pos : r.tell_bytes()])
+        hdr_crc = _crc8(data[pos : r.byte_pos()])
         if r.read(8) != hdr_crc:
             raise ValueError("frame header CRC-8 mismatch")
         bps = _SAMPLE_SIZES.get(ss_code, bps_si)
@@ -554,8 +467,7 @@ def decode_flac(data: bytes, check_md5: bool = True):
             raise ValueError(f"reserved channel assignment {ch_code}")
         if nch != nch_si:
             raise ValueError("frame channel count differs from STREAMINFO")
-        r.align()
-        frame_end = r.tell_bytes()
+        frame_end = r.byte_pos()
         if _crc16(data[pos:frame_end]) != struct.unpack(
             ">H", data[frame_end : frame_end + 2]
         )[0]:

@@ -43,6 +43,8 @@ from __future__ import annotations
 
 import numpy as np
 
+from .bits import BitReader, BitWriter as _BitWriter
+
 __all__ = [
     "encode_h264_ipcm",
     "decode_h264",
@@ -54,90 +56,16 @@ __all__ = [
 # --- bit I/O (Annex-B conventions) -----------------------------------
 
 
-class _BitWriter:
-    def __init__(self) -> None:
-        self.buf = bytearray()
-        self.acc = 0
-        self.nbits = 0
-
-    def write(self, value: int, nbits: int) -> None:
-        if nbits:
-            self.acc = (self.acc << nbits) | (value & ((1 << nbits) - 1))
-            self.nbits += nbits
-            while self.nbits >= 8:
-                self.nbits -= 8
-                self.buf.append((self.acc >> self.nbits) & 0xFF)
-        self.acc &= (1 << self.nbits) - 1
-
-    def ue(self, value: int) -> None:
-        # Exp-Golomb: (n-1) zeros then the n-bit codeNum+1
-        k = value + 1
-        n = k.bit_length()
-        self.write(0, n - 1)
-        self.write(k, n)
-
-    def se(self, value: int) -> None:
-        self.ue(2 * value - 1 if value > 0 else -2 * value)
-
-    def byte_align_zero(self) -> None:
-        if self.nbits:
-            self.write(0, 8 - self.nbits)
-
-    def write_bytes(self, data: bytes) -> None:
-        assert self.nbits == 0
-        self.buf.extend(data)
-
-    def rbsp_trailing(self) -> None:
-        self.write(1, 1)
-        self.byte_align_zero()
-
-    def bytes(self) -> bytes:
-        assert self.nbits == 0
-        return bytes(self.buf)
+class _BitReader(BitReader):
+    truncated = "h264: truncated NAL payload"
+    truncated_bytes = "h264: truncated PCM samples"
+    ue_too_long = "h264: exp-Golomb code too long"
 
 
-class _BitReader:
-    def __init__(self, data: bytes) -> None:
-        self.data = data
-        self.pos = 0
-        self.bit = 0
-
-    def read(self, nbits: int) -> int:
-        v = 0
-        for _ in range(nbits):
-            if self.pos >= len(self.data):
-                raise ValueError("h264: truncated NAL payload")
-            v = (v << 1) | ((self.data[self.pos] >> (7 - self.bit)) & 1)
-            self.bit += 1
-            if self.bit == 8:
-                self.bit = 0
-                self.pos += 1
-        return v
-
-    def ue(self) -> int:
-        zeros = 0
-        while self.read(1) == 0:
-            zeros += 1
-            if zeros > 31:
-                raise ValueError("h264: exp-Golomb code too long")
-        return (1 << zeros) - 1 + (self.read(zeros) if zeros else 0)
-
-    def se(self) -> int:
-        k = self.ue()
-        return (k + 1) // 2 if k % 2 else -(k // 2)
-
-    def byte_align(self) -> None:
-        if self.bit:
-            self.bit = 0
-            self.pos += 1
-
-    def read_bytes(self, n: int) -> bytes:
-        assert self.bit == 0
-        if self.pos + n > len(self.data):
-            raise ValueError("h264: truncated PCM samples")
-        out = self.data[self.pos : self.pos + n]
-        self.pos += n
-        return out
+def _rbsp_trailing(w: _BitWriter) -> None:
+    """rbsp_stop_one_bit, then zero bits to the byte boundary."""
+    w.write(1, 1)
+    w.align()
 
 
 # --- emulation prevention + Annex-B framing --------------------------
@@ -250,7 +178,7 @@ def _sps_rbsp(w: int, h: int) -> bytes:
     else:
         bw.write(0, 1)
     bw.write(0, 1)  # vui_parameters_present_flag
-    bw.rbsp_trailing()
+    _rbsp_trailing(bw)
     return bw.bytes()
 
 
@@ -271,7 +199,7 @@ def _pps_rbsp() -> bytes:
     bw.write(1, 1)  # deblocking_filter_control_present_flag
     bw.write(0, 1)  # constrained_intra_pred_flag
     bw.write(0, 1)  # redundant_pic_cnt_present_flag
-    bw.rbsp_trailing()
+    _rbsp_trailing(bw)
     return bw.bytes()
 
 
@@ -401,7 +329,7 @@ def encode_h264_ipcm(frames) -> bytes:
         for mby in range(mbs_h):
             for mbx in range(mbs_w):
                 bw.ue(25)  # mb_type: I_PCM
-                bw.byte_align_zero()  # pcm_alignment_zero_bit(s)
+                bw.align()  # pcm_alignment_zero_bit(s)
                 bw.write_bytes(
                     yp[mby * 16 : mby * 16 + 16,
                        mbx * 16 : mbx * 16 + 16].tobytes()
@@ -414,7 +342,7 @@ def encode_h264_ipcm(frames) -> bytes:
                     crp[mby * 8 : mby * 8 + 8,
                         mbx * 8 : mbx * 8 + 8].tobytes()
                 )
-        bw.rbsp_trailing()
+        _rbsp_trailing(bw)
         out += _nal(3, 5, bw.bytes())
     return bytes(out)
 
@@ -463,7 +391,7 @@ def _decode_slice(rbsp: bytes, sps: dict, pps: dict, idr: bool,
                     "h264: transform-coded macroblock (CAVLC residual / "
                     "intra prediction) not implemented — I_PCM only"
                 )
-            br.byte_align()
+            br.align()
             y[mby * 16 : mby * 16 + 16, mbx * 16 : mbx * 16 + 16] = (
                 np.frombuffer(br.read_bytes(256), dtype=np.uint8).reshape(
                     16, 16

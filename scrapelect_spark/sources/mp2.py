@@ -66,6 +66,8 @@ from __future__ import annotations
 
 import numpy as np
 
+from .bits import BitReader, BitWriter as _BitWriter
+
 #: Layer II bitrate table (kbps), index 1..14; 0 is 'free format'
 #: (unsupported here), 15 is forbidden.
 BITRATES = (None, 32, 48, 56, 64, 80, 96, 112, 128, 160, 192, 224,
@@ -206,45 +208,16 @@ def _synthesis(S: np.ndarray) -> np.ndarray:
 # --- bit I/O (MSB-first) ----------------------------------------------
 
 
-class _BitWriter:
-    def __init__(self) -> None:
-        self.buf = bytearray()
-        self.acc = 0
-        self.nbits = 0
-
-    def write(self, value: int, nbits: int) -> None:
-        self.acc = (self.acc << nbits) | (value & ((1 << nbits) - 1))
-        self.nbits += nbits
-        while self.nbits >= 8:
-            self.nbits -= 8
-            self.buf.append((self.acc >> self.nbits) & 0xFF)
-        self.acc &= (1 << self.nbits) - 1
-
-    def pad_to(self, nbytes: int) -> bytes:
-        if self.nbits:
-            self.write(0, 8 - self.nbits)
-        if len(self.buf) > nbytes:
-            raise ValueError("mp2: frame overflow")
-        return bytes(self.buf) + b"\x00" * (nbytes - len(self.buf))
+class _BitReader(BitReader):
+    truncated = "mp2: truncated frame"
 
 
-class _BitReader:
-    def __init__(self, data: bytes, pos: int = 0) -> None:
-        self.data = data
-        self.pos = pos
-        self.bit = 0
-
-    def read(self, nbits: int) -> int:
-        # MSB-first multi-bit read through one int.from_bytes window
-        start = self.pos * 8 + self.bit
-        end = start + nbits
-        if end > len(self.data) * 8:
-            raise ValueError("mp2: truncated frame")
-        b0, b1 = start >> 3, (end + 7) >> 3
-        chunk = int.from_bytes(self.data[b0:b1], "big")
-        v = (chunk >> (b1 * 8 - end)) & ((1 << nbits) - 1)
-        self.pos, self.bit = end >> 3, end & 7
-        return v
+def _pad_to(w: _BitWriter, nbytes: int) -> bytes:
+    """Byte-align ``w`` and zero-pad it to one ``nbytes`` frame."""
+    w.align()
+    if len(w.buf) > nbytes:
+        raise ValueError("mp2: frame overflow")
+    return w.bytes() + b"\x00" * (nbytes - len(w.buf))
 
 
 # --- encoder ----------------------------------------------------------
@@ -438,7 +411,7 @@ def encode_mp2(
                     else:
                         for v in q:
                             w.write(int(v), bits)
-        out += w.pad_to(slots)
+        out += _pad_to(w, slots)
     return bytes(out)
 
 
@@ -701,7 +674,7 @@ def encode_mp1(
                     q = min(max(int((min(max(v, -1.0), 1.0) + 1.0)
                                     / 2.0 * levels), 0), levels - 1)
                     w.write(q, a + 1)
-        out += w.pad_to(nbytes)
+        out += _pad_to(w, nbytes)
     return bytes(out)
 
 

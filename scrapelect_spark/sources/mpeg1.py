@@ -67,6 +67,7 @@ import struct
 
 import numpy as np
 
+from .bits import BitReader, BitWriter as _BitWriter
 from .jpeg import ZIGZAG, _A, _pad_replicate, rgb_to_ycbcr, ycbcr_to_rgb
 
 MAX_PIXELS = 1 << 24
@@ -235,12 +236,9 @@ _B_MBTYPE = {
 }
 
 
-def _invert(table: dict, keyfmt=lambda k: k) -> dict[tuple[int, int], object]:
-    """(code, nbits) → key lookup for the bit-at-a-time decoders."""
-    out = {}
-    for k, (code, nbits) in table.items():
-        out[(code, nbits)] = keyfmt(k)
-    return out
+def _invert(table: dict) -> dict[tuple[int, int], object]:
+    """(code, nbits) → key table for ``BitReader.read_vlc``."""
+    return {code: k for k, code in table.items()}
 
 
 _DC_LUMA_DEC = _invert(_DC_LUMA)
@@ -263,65 +261,9 @@ _B_MBTYPE_DEC = {
 # --- bit I/O (MSB-first, no marker stuffing — unlike JPEG) ------------
 
 
-class _BitWriter:
-    def __init__(self) -> None:
-        self.buf = bytearray()
-        self.acc = 0
-        self.nbits = 0
-
-    def write(self, value: int, nbits: int) -> None:
-        if nbits:
-            self.acc = (self.acc << nbits) | (value & ((1 << nbits) - 1))
-            self.nbits += nbits
-            while self.nbits >= 8:
-                self.nbits -= 8
-                self.buf.append((self.acc >> self.nbits) & 0xFF)
-        self.acc &= (1 << self.nbits) - 1
-
-    def byte_align(self, fill: int = 0) -> None:
-        if self.nbits:
-            self.write(0 if not fill else (1 << (8 - self.nbits)) - 1,
-                       8 - self.nbits)
-
-    def bytes(self) -> bytes:
-        assert self.nbits == 0
-        return bytes(self.buf)
-
-
-class _BitReader:
-    def __init__(self, data: bytes, pos: int = 0) -> None:
-        self.data = data
-        self.pos = pos  # byte position
-        self.bit = 0
-
-    def read(self, nbits: int) -> int:
-        v = 0
-        for _ in range(nbits):
-            if self.pos >= len(self.data):
-                raise ValueError("mpeg1: truncated bitstream")
-            v = (v << 1) | ((self.data[self.pos] >> (7 - self.bit)) & 1)
-            self.bit += 1
-            if self.bit == 8:
-                self.bit = 0
-                self.pos += 1
-        return v
-
-    def read_vlc(self, table: dict, what: str, max_bits: int = 16):
-        code, n = 0, 0
-        while n < max_bits:
-            code = (code << 1) | self.read(1)
-            n += 1
-            hit = table.get((code, n))
-            if hit is not None:
-                return hit
-        raise ValueError(
-            f"mpeg1: VLC code outside the implemented {what} table"
-        )
-
-    def byte_align(self) -> None:
-        if self.bit:
-            self.bit = 0
-            self.pos += 1
+class _BitReader(BitReader):
+    truncated = "mpeg1: truncated bitstream"
+    vlc_outside = "mpeg1: VLC code outside the implemented {what} table"
 
 
 # --- encoder ----------------------------------------------------------
@@ -558,14 +500,14 @@ def encode_m1v(
     sw.write(0, 1)
     sw.write(0, 1)
     sw.write(0, 1)
-    sw.byte_align()
+    sw.align()
     out += b"\x00\x00\x01" + bytes([_SEQ]) + sw.bytes()
     # GOP: time_code(25)=0 closed(1)=1 broken(1)=0
     gw = _BitWriter()
     gw.write(0, 25)
     gw.write(1, 1)
     gw.write(0, 1)
-    gw.byte_align()
+    gw.align()
     out += b"\x00\x00\x01" + bytes([_GOP]) + gw.bytes()
 
     n = len(frames)
@@ -638,7 +580,7 @@ def _encode_i_picture(
     pw.write(1, 3)  # picture_coding_type = I
     pw.write(0xFFFF, 16)  # vbv_delay
     pw.write(0, 1)  # extra_bit_picture
-    pw.byte_align()
+    pw.align()
     out += b"\x00\x00\x01" + bytes([_PIC]) + pw.bytes()
 
     rec_y = np.zeros_like(y) if want_recon else None
@@ -671,7 +613,7 @@ def _encode_i_picture(
                 if rec is not None:
                     coeff = _dequant_intra(zz, qscale)
                     rec[...] = _A.T @ coeff.astype(np.float64) @ _A
-        bw.byte_align()
+        bw.align()
         out += b"\x00\x00\x01" + bytes([row + 1]) + bw.bytes()
     if not want_recon:
         return out, None
@@ -726,7 +668,7 @@ def _encode_p_picture(
     pw.write(0, 1)  # full_pel_forward_vector
     pw.write(1, 3)  # forward_f_code = 1
     pw.write(0, 1)  # extra_bit_picture
-    pw.byte_align()
+    pw.align()
     out += b"\x00\x00\x01" + bytes([_PIC]) + pw.bytes()
 
     # reconstruction starts as the reference: skipped MBs are exactly
@@ -842,7 +784,7 @@ def _encode_p_picture(
                 coeff = _dequant_nonintra(zz, qscale)
                 rec[...] = pred + (_A.T @ coeff.astype(np.float64) @ _A)
         # pending is always 0 here: col == mbw-1 is never skippable
-        bw.byte_align()
+        bw.align()
         out += b"\x00\x00\x01" + bytes([row + 1]) + bw.bytes()
 
     return out, tuple(
@@ -915,7 +857,7 @@ def _encode_b_picture(
     pw.write(0, 1)  # full_pel_backward_vector
     pw.write(1, 3)  # backward_f_code = 1
     pw.write(0, 1)  # extra_bit_picture
-    pw.byte_align()
+    pw.align()
     out += b"\x00\x00\x01" + bytes([_PIC]) + pw.bytes()
 
     for row in range(mbh):
@@ -1031,7 +973,7 @@ def _encode_b_picture(
                     bw.write(_EOB[0], _EOB[1])
             prev_state = state
         # pending is always 0 here: col == mbw-1 is never skippable
-        bw.byte_align()
+        bw.align()
         out += b"\x00\x00\x01" + bytes([row + 1]) + bw.bytes()
 
 
@@ -1322,7 +1264,7 @@ def _decode_picture(
         while True:
             # a slice ends at the next byte-aligned start code, which
             # may be preceded by zero-byte stuffing
-            probe = sr.pos if sr.bit == 0 else sr.pos + 1
+            probe = sr.byte_pos()
             if probe >= len(data):
                 break
             nxt = data.find(b"\x00\x00\x01", probe)
@@ -1479,8 +1421,7 @@ def _decode_picture(
                     tgt[...] = pred + _read_nonintra_block(sr, qscale)
                 else:
                     tgt[...] = pred
-        end = sr.pos if sr.bit == 0 else sr.pos + 1
-        code, spos = _next_start_code(data, end)
+        code, spos = _next_start_code(data, sr.byte_pos())
     # integer reconstruction planes are BOTH the P reference and the
     # RGB source: a decoded picture must match what a later P-picture
     # predicts from (an all-skip P equals its reference exactly)

@@ -163,7 +163,7 @@ def encode_m2v(frames, fps: float = 25.0, qscale: int = 4) -> bytes:
     sw.write(0, 1)  # constrained_parameters_flag
     sw.write(0, 1)  # load_intra_quantiser_matrix
     sw.write(0, 1)  # load_non_intra_quantiser_matrix
-    sw.byte_align()
+    sw.align()
     out += b"\x00\x00\x01" + bytes([_SEQ]) + sw.bytes()
     # sequence_extension — this is what makes the stream MPEG-2
     ew = _BitWriter()
@@ -179,7 +179,7 @@ def encode_m2v(frames, fps: float = 25.0, qscale: int = 4) -> bytes:
     ew.write(0, 1)  # low_delay
     ew.write(0, 2)  # frame_rate_extension_n
     ew.write(0, 5)  # frame_rate_extension_d
-    ew.byte_align()
+    ew.align()
     out += b"\x00\x00\x01" + bytes([_EXT]) + ew.bytes()
 
     for idx, frame in enumerate(frames):
@@ -196,7 +196,7 @@ def encode_m2v(frames, fps: float = 25.0, qscale: int = 4) -> bytes:
         pw.write(1, 3)  # picture_coding_type: I
         pw.write(0xFFFF, 16)  # vbv_delay
         pw.write(0, 1)  # extra_bit_picture
-        pw.byte_align()
+        pw.align()
         out += b"\x00\x00\x01" + bytes([_PIC]) + pw.bytes()
         xw = _BitWriter()
         xw.write(0b1000, 4)  # identifier: picture coding extension
@@ -214,7 +214,7 @@ def encode_m2v(frames, fps: float = 25.0, qscale: int = 4) -> bytes:
         xw.write(1, 1)  # chroma_420_type (= progressive_frame)
         xw.write(1, 1)  # progressive_frame
         xw.write(0, 1)  # composite_display_flag
-        xw.byte_align()
+        xw.align()
         out += b"\x00\x00\x01" + bytes([_EXT]) + xw.bytes()
         for row in range(mbh):
             bw = _BitWriter()
@@ -239,7 +239,7 @@ def encode_m2v(frames, fps: float = 25.0, qscale: int = 4) -> bytes:
                         _write_ac2(bw, int(i) - prev, int(zz[1 + i]))
                         prev = int(i) + 1
                     bw.write(_EOB[0], _EOB[1])
-            bw.byte_align()
+            bw.align()
             out += b"\x00\x00\x01" + bytes([row + 1]) + bw.bytes()
     out += b"\x00\x00\x01" + bytes([_SEQ_END])
     return bytes(out)
@@ -322,7 +322,7 @@ def _decode_i_picture(data: bytes, pos: int, w: int, h: int, pce: dict):
             cr[row * 8 : row * 8 + 8, col * 8 : col * 8 + 8] = (
                 _read_intra_block2(sr, preds, "cr", qscale)
             )
-        code, spos = _next_start_code(data, sr.pos + (1 if sr.bit else 0))
+        code, spos = _next_start_code(data, sr.byte_pos())
     ycc = np.stack(
         [
             np.clip(y, 0, 255),

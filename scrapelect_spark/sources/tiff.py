@@ -41,6 +41,8 @@ import struct
 
 import numpy as np
 
+from .bits import BitWriter
+
 MAX_PIXELS = 1 << 24
 _MAX_ENTRIES = 512
 
@@ -192,30 +194,25 @@ def _lzw_decode(data: bytes, expected: int) -> bytes:
     raise ValueError("tiff: LZW strip too short")
 
 
+#: the 256 one-byte strings, built once: the encoder's hot loop joins
+#: one per input byte
+_BYTES = [bytes([i]) for i in range(256)]
+
+
 def _lzw_encode(data: bytes) -> bytes:
-    out = bytearray()
-    acc = bits = 0
-
-    def emit(code: int, width: int) -> None:
-        nonlocal acc, bits
-        acc = (acc << width) | code
-        bits += width
-        while bits >= 8:
-            bits -= 8
-            out.append((acc >> bits) & 0xFF)
-        acc &= (1 << bits) - 1
-
-    table: dict[bytes, int] = {bytes([i]): i for i in range(256)}
+    w = BitWriter()
+    write = w.write
+    table: dict[bytes, int] = {c: i for i, c in enumerate(_BYTES)}
     nxt = 258
     width = 9
-    emit(_CLEAR, width)
+    write(_CLEAR, width)
     cur = b""
     for b in data:
-        cand = cur + bytes([b])
+        cand = cur + _BYTES[b]
         if cand in table:
             cur = cand
             continue
-        emit(table[cur], width)
+        write(table[cur], width)
         table[cand] = nxt
         nxt += 1
         # EarlyChange: widen when the next emitted code could be the
@@ -223,17 +220,16 @@ def _lzw_encode(data: bytes) -> bytes:
         if nxt + 1 > (1 << width) and width < 12:
             width += 1
         if nxt >= 4094:
-            emit(_CLEAR, width)
-            table = {bytes([i]): i for i in range(256)}
+            write(_CLEAR, width)
+            table = {c: i for i, c in enumerate(_BYTES)}
             nxt = 258
             width = 9
-        cur = bytes([b])
+        cur = _BYTES[b]
     if cur:
-        emit(table[cur], width)
-    emit(_EOI, width)
-    if bits:
-        emit(0, 8 - bits)
-    return bytes(out)
+        write(table[cur], width)
+    write(_EOI, width)
+    w.align()
+    return w.bytes()
 
 
 # --- decoder ----------------------------------------------------------

@@ -9,7 +9,11 @@ Two canonical shapes:
 - :func:`sessionize_stream` — custom stateful operator via
   ``applyInPandasWithState``: per-user sessions split on a 30-minute
   inactivity gap (the shape used for per-host crawl-rate state at
-  cluster scale).
+  cluster scale).  It is bounded: no state timeout is armed, so an
+  ``availableNow`` query ends once its input is read.  A session
+  closes only when a later event of the same user arrives, so each
+  user's trailing session stays open in state unless something (the
+  gate's per-user sentinel event) follows it.
 
 Tests drive both with ``trigger(availableNow=True)`` over the parquet
 events table and check against the equivalent batch computation.
@@ -92,46 +96,15 @@ _STATE_SCHEMA = StructType(
 GAP_MINUTES = 30
 
 
-def _make_sessionize_fn(use_timeout: bool):
-    """Build the stateful per-user sessionizer.  ``use_timeout=True``
-    arms a processing-time timeout so idle open sessions eventually
-    flush (the production shape — but note Spark keeps scheduling
-    timeout batches, so an ``availableNow`` run never self-terminates);
-    ``use_timeout=False`` is the bounded-run shape where something else
-    (e.g. a sentinel event) closes trailing sessions."""
-
-    def _sessionize_fn(
-        key: Tuple[int], pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        return _sessionize_impl(key, pdfs, state, use_timeout)
-
-    return _sessionize_fn
-
-
-def _sessionize_impl(
-    key: Tuple[int],
-    pdfs: Iterator[pd.DataFrame],
-    state: GroupState,
-    use_timeout: bool,
+def _sessionize_fn(
+    key: Tuple[int], pdfs: Iterator[pd.DataFrame], state: GroupState
 ) -> Iterator[pd.DataFrame]:
     """Stateful per-user sessionizer: emits closed sessions; keeps the
-    open one in GroupState (timeout closes it on stream idle)."""
+    open one in GroupState.  No timeout is armed, so an ``availableNow``
+    run ends once its input is read; a later event (e.g. a sentinel)
+    closes trailing sessions."""
     gap_us = GAP_MINUTES * 60 * 1_000_000
     (user_id,) = key
-
-    if use_timeout and state.hasTimedOut:
-        start_us, end_us, n, total = state.get
-        state.remove()
-        yield pd.DataFrame(
-            {
-                "user_id": [user_id],
-                "session_start": [pd.Timestamp(start_us, unit="us")],
-                "session_end": [pd.Timestamp(end_us, unit="us")],
-                "n_events": [n],
-                "total_value": [total],
-            }
-        )
-        return
 
     rows = pd.concat(list(pdfs)).sort_values(["ts", "event_id"])
     ts_us = rows["ts"].astype("datetime64[us]").astype("int64").to_numpy()
@@ -157,30 +130,20 @@ def _sessionize_impl(
             end_us, n, total = int(t), n + 1, total + float(v)
 
     state.update((int(start_us), int(end_us), int(n), float(total)))
-    if use_timeout:
-        state.setTimeoutDuration(60_000)
     if out["user_id"]:
         yield pd.DataFrame(out)
 
 
-#: production shape (kept under the historical name for tests)
-_sessionize_fn = _make_sessionize_fn(True)
-
-
-def sessionize_stream(events: DataFrame, *, state_timeout: bool = True) -> DataFrame:
+def sessionize_stream(events: DataFrame) -> DataFrame:
     return (
         events.withWatermark("ts", "2 hours")
         .groupBy("user_id")
         .applyInPandasWithState(
-            _make_sessionize_fn(state_timeout),
+            _sessionize_fn,
             outputStructType=SESSION_SCHEMA,
             stateStructType=_STATE_SCHEMA,
             outputMode="append",
-            timeoutConf=(
-                GroupStateTimeout.ProcessingTimeTimeout
-                if state_timeout
-                else GroupStateTimeout.NoTimeout
-            ),
+            timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
 
@@ -366,7 +329,7 @@ def events_sessionized_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         # input-sized state partitioning — see events_hourly_stream
         with loop_shuffle(spark, scan_partitions(spark.read.parquet(d))):
             q = (
-                sessionize_stream(events_stream(spark, d), state_timeout=False)
+                sessionize_stream(events_stream(spark, d))
                 .writeStream.format("memory")
                 .queryName(name)
                 .outputMode("append")

@@ -13,7 +13,7 @@ from __future__ import annotations
 
 import numpy as np
 
-from .png import encode_png
+from scrapelect_spark.sources.png import encode_png
 
 _CAPTION_WORDS = (
     "sunset mountain river forest bridge harbor skyline meadow canyon "

@@ -11,6 +11,7 @@ from scrapelect_spark.sources.h264 import (
     _nal,
     _pps_rbsp,
     _rbsp,
+    _rbsp_trailing,
     _sps_rbsp,
     decode_h264,
     encode_h264_ipcm,
@@ -116,7 +117,7 @@ def _idr_with_mb_type(mb_type: int) -> bytes:
     bw.se(0)   # slice_qp_delta
     bw.ue(1)   # disable deblocking
     bw.ue(mb_type)
-    bw.rbsp_trailing()
+    _rbsp_trailing(bw)
     return _sps_pps_prefix() + _nal(3, 5, bw.bytes())
 
 
@@ -132,7 +133,7 @@ def test_p_slice_rejected():
     bw.ue(0)
     bw.write(0, 4)
     bw.ue(0)
-    bw.rbsp_trailing()
+    _rbsp_trailing(bw)
     blob = _sps_pps_prefix() + _nal(3, 5, bw.bytes())
     with pytest.raises(NotImplementedError, match="P/B slice"):
         decode_h264(blob)
@@ -155,7 +156,7 @@ def test_cabac_pps_rejected():
     bw.write(1, 1)
     bw.write(0, 1)
     bw.write(0, 1)
-    bw.rbsp_trailing()
+    _rbsp_trailing(bw)
     blob = _nal(3, 7, _sps_rbsp(16, 16)) + _nal(3, 8, bw.bytes())
     with pytest.raises(NotImplementedError, match="CABAC"):
         decode_h264(blob)

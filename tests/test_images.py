@@ -7,7 +7,7 @@ import numpy as np
 import pytest
 
 from scrapelect_spark.sources.png import decode_png, encode_png, phash64, psnr
-from scrapelect_spark.sources.synth import (
+from synth import (
     build_image_store,
     gallery_pages,
     make_caption,

@@ -483,7 +483,7 @@ def test_motion_component_roundtrip_f1():
     deltas = list(range(-16, 16))
     for d in deltas:
         M._write_mv(w, d)
-    w.byte_align()
+    w.align()
     r = M._BitReader(w.bytes(), 0)
     for d in deltas:
         assert M._read_motion_component(r, 0, 1) == d
@@ -493,7 +493,7 @@ def test_motion_component_wraparound():
     # predictor 15, delta +2 → 17 wraps to -15 (range [-16, 15])
     w = M._BitWriter()
     M._write_mv(w, 2)
-    w.byte_align()
+    w.align()
     r = M._BitReader(w.bytes(), 0)
     assert M._read_motion_component(r, 15, 1) == -15
 
@@ -503,7 +503,7 @@ def test_cbp_table_roundtrip():
     for cbp in range(1, 64):
         code, n = M._CBP_TABLE[cbp]
         w.write(code, n)
-    w.byte_align()
+    w.align()
     r = M._BitReader(w.bytes(), 0)
     for cbp in range(1, 64):
         assert r.read_vlc(M._CBP_DEC, "cbp", max_bits=9) == cbp
@@ -527,7 +527,7 @@ def _hand_p_stream(ref_rgb, header_bits, mb_motion_bits):
     pw.write(0xFFFF, 16)
     header_bits(pw)
     pw.write(0, 1)  # extra_bit_picture
-    pw.byte_align()
+    pw.align()
     body += b"\x00\x00\x01\x00" + pw.bytes()
     for row in range(2):
         sw = M._BitWriter()
@@ -538,7 +538,7 @@ def _hand_p_stream(ref_rgb, header_bits, mb_motion_bits):
             code, n, _f = M._P_MBTYPE["mc"]
             sw.write(code, n)
             mb_motion_bits(sw, row * 2 + col)
-        sw.byte_align()
+        sw.align()
         body += b"\x00\x00\x01" + bytes([row + 1]) + sw.bytes()
     body += b"\x00\x00\x01\xb7"
     return bytes(body)
@@ -634,7 +634,7 @@ def test_quantizer_update_macroblock():
         M._write_dc(w, dcs[comp] - preds[comp], table)
         preds[comp] = dcs[comp]
         w.write(M._EOB[0], M._EOB[1])
-    w.byte_align()
+    w.align()
     hand = (ref[: ref.find(b"\x00\x00\x01\x01")]
             + b"\x00\x00\x01\x01" + w.bytes() + b"\x00\x00\x01\xb7")
     (_, dec), = decode_m1v_frames(hand)
@@ -669,7 +669,7 @@ def test_mba_stuffing_code_is_skipped():
     rest_bits = (len(slice_start) - r.pos) * 8 - r.bit
     for _ in range(rest_bits):
         w.write(r.read(1), 1)
-    w.byte_align()
+    w.align()
     hand = head + b"\x00\x00\x01\x01" + w.bytes()
     if not hand.endswith(b"\x00\x00\x01\xb7"):
         hand += b"\x00\x00\x01\xb7"
@@ -689,7 +689,7 @@ def test_escape_levels_roundtrip_through_writer():
               if lv != 0 and (63, abs(lv)) not in M._AC_TABLE]
     for lv in levels:
         M._write_ac(w, 63, lv)
-    w.byte_align()
+    w.align()
     r = M._BitReader(w.bytes(), 0)
     for lv in levels:
         assert M._read_ac(r) == (63, lv)
@@ -701,7 +701,7 @@ def test_ac_vlc_roundtrip_all_table_entries():
     for run, level in pairs:
         M._write_ac(w, run, level)
         M._write_ac(w, run, -level)
-    w.byte_align()
+    w.align()
     r = M._BitReader(w.bytes(), 0)
     for run, level in pairs:
         assert M._read_ac(r) == (run, level)
@@ -713,7 +713,7 @@ def test_dc_differential_roundtrip():
     diffs = list(range(-255, 256))
     for d in diffs:
         M._write_dc(w, d, M._DC_LUMA)
-    w.byte_align()
+    w.align()
     r = M._BitReader(w.bytes(), 0)
     for d in diffs:
         assert M._read_dc(r, M._DC_LUMA_DEC) == d
@@ -771,14 +771,14 @@ def _hand_b_stream(a_rgb, b_rgb, header_bits, slice_writer, mbh=2):
     pw.write(0xFFFF, 16)
     header_bits(pw)
     pw.write(0, 1)  # extra_bit_picture
-    pw.byte_align()
+    pw.align()
     body += b"\x00\x00\x01\x00" + pw.bytes()
     for row in range(mbh):
         sw = M._BitWriter()
         sw.write(2, 5)  # quantizer_scale
         sw.write(0, 1)
         slice_writer(sw, row)
-        sw.byte_align()
+        sw.align()
         body += b"\x00\x00\x01" + bytes([row + 1]) + sw.bytes()
     body += b"\x00\x00\x01\xb7"
     return bytes(body)

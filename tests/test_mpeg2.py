@@ -78,7 +78,7 @@ def test_escape_levels_roundtrip():
     for level in (50, -50, 300, -300, 2047, -2047):
         bw = _BitWriter()
         _write_ac2(bw, 5, level)
-        bw.byte_align()
+        bw.align()
         r = _BitReader(bw.bytes(), 0)
         assert _read_ac2(r) == (5, level)
 
@@ -88,7 +88,7 @@ def test_forbidden_escape_levels():
     bw.write(0b000001, 6)  # ESCAPE
     bw.write(0, 6)
     bw.write(0x800, 12)  # -2048: forbidden
-    bw.byte_align()
+    bw.align()
     with pytest.raises(ValueError, match="forbidden"):
         _read_ac2(_BitReader(bw.bytes(), 0))
 

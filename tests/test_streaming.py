@@ -99,7 +99,10 @@ def test_sessionize_stream_matches_batch(spark, events_dir, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(180)
+    try:
+        assert q.awaitTermination(180), "availableNow query did not end"
+    finally:
+        q.stop()
     got = {
         (r.user_id, r.session_start, r.session_end, r.n_events)
         for r in spark.sql("SELECT * FROM sessions_stream").collect()
