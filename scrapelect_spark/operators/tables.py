@@ -1,8 +1,15 @@
-"""Gate plumbing for the catalog operators: the parquet loader for the
-star-schema tables, the fan-out (:func:`spread`, :func:`docs`), loop
-sizing (:func:`scan_partitions`, :func:`loop_shuffle`), materialization
-(:func:`barrier` for reused subtrees, :func:`final_sort` for a gate's
-output order), and the per-row kernel applier (:func:`map_rows`)."""
+"""Gate plumbing for the catalog operators: the declared catalog of the
+star-schema tables (:data:`SCHEMAS`, read by :func:`load`), the fan-out
+(:func:`spread`, :func:`docs`), loop sizing (:func:`scan_partitions`,
+:func:`loop_shuffle`), materialization (:func:`barrier` for reused
+subtrees, :func:`final_sort` for a gate's output order), and the
+per-row kernel applier (:func:`map_rows`).
+
+The catalog plays the part of Iceberg table metadata: a table's schema
+is declared here, so a read never scans a file to learn it.  A bare
+``spark.read.parquet`` runs a one-task schema-inference job per call
+(90-110 ms per read in a warm local session, against 17-25 ms with the
+schema given)."""
 
 from __future__ import annotations
 
@@ -13,15 +20,36 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegralType, _parse_datatype_string
 
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
-).split()
+#: DDL of each star-schema table, equal to the schema Spark infers from
+#: its parquet files (``TIMESTAMP_NTZ`` included: Spark writes those
+#: columns without the UTC-adjusted flag).
+SCHEMAS = {
+    "region": "r_regionkey int, r_name string",
+    "nation": "n_nationkey int, n_name string, n_regionkey int",
+    "customer": "c_custkey bigint, c_name string, c_nationkey int, "
+    "c_acctbal double, c_mktsegment string",
+    "supplier": "s_suppkey bigint, s_name string, s_nationkey int, "
+    "s_acctbal double",
+    "part": "p_partkey bigint, p_name string, p_brand string, p_type string, "
+    "p_size int, p_retailprice double",
+    "orders": "o_orderkey bigint, o_custkey bigint, o_orderstatus string, "
+    "o_totalprice double, o_orderdate timestamp_ntz, o_orderpriority string",
+    "lineitem": "l_orderkey bigint, l_partkey bigint, l_suppkey bigint, "
+    "l_linenumber int, l_quantity double, l_extendedprice double, "
+    "l_discount double, l_tax double, l_returnflag string, "
+    "l_linestatus string, l_shipdate timestamp_ntz",
+    "events": "event_id bigint, ts timestamp_ntz, user_id bigint, "
+    "event_type string, value double, props string",
+    "documents": "doc_id bigint, text string, lang string, source string, "
+    "n_chars bigint",
+    "embeddings": "vec_id bigint, embedding array<float>, label int",
+}
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    assert name in TABLES, name
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    """Read star-schema table ``name`` under ``sf_dir`` with its
+    declared schema (no inference job)."""
+    return spark.read.schema(SCHEMAS[name]).parquet(f"{sf_dir}/{name}.parquet")
 
 
 #: ceiling on :func:`scan_partitions`: 65 536 loop partitions is about
@@ -30,15 +58,27 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 MAX_LOOP_PARTITIONS = 65_536
 
 
+def size_estimate(df: DataFrame) -> int:
+    """The optimizer's size estimate of ``df`` in bytes (file-size based
+    for scans; driver-side, costs no job), or 0 if it is unavailable.
+    Size-only statistics scale a unary node's estimate by row width, not
+    row count, so they do not see a row fan-out (see :func:`final_sort`)."""
+    try:
+        return int(
+            str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+        )
+    except Exception:
+        return 0
+
+
 def scan_partitions(df: DataFrame, target_bytes: int = 16 << 20) -> int:
     """Input-proportional partition count for sizing an ITERATIVE
     loop's shuffles/state to the corpus rather than to a constant
     tuned for either local mode or one cluster (guide §2:
     scale-adaptive partitioning).
 
-    Derived from the optimizer's size estimate of ``df`` (file-size
-    based for scans; driver-side, costs no job) at ``target_bytes``
-    per partition.  The target is deliberately finer than a scan
+    Derived from :func:`size_estimate` at ``target_bytes`` per
+    partition.  The target is deliberately finer than a scan
     split (16 MiB vs 128 MiB): a loop touches its working set twice
     per round across many rounds and typically explodes it (edge
     lists, element tables), so per-round partitions want to be
@@ -46,14 +86,9 @@ def scan_partitions(df: DataFrame, target_bytes: int = 16 << 20) -> int:
     1 (the measured-fast case for the graph loops); a 100 TB corpus
     is clamped to :data:`MAX_LOOP_PARTITIONS`.  Falls back to the
     physical scan split count if the estimate is unavailable."""
-    try:
-        size = int(
-            str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-        )
-        if size > 0:
-            return min(MAX_LOOP_PARTITIONS, max(1, -(-size // target_bytes)))
-    except Exception:
-        pass
+    size = size_estimate(df)
+    if size > 0:
+        return min(MAX_LOOP_PARTITIONS, max(1, -(-size // target_bytes)))
     return min(MAX_LOOP_PARTITIONS, max(1, df.rdd.getNumPartitions()))
 
 
@@ -108,15 +143,38 @@ def barrier(df: DataFrame) -> DataFrame:
 
 
 def final_sort(df: DataFrame, *cols) -> DataFrame:
-    """A gate's output order: ``df.orderBy(*cols)`` over a
-    :func:`barrier`.  Chain with ``df.transform(final_sort, *cols)``.
+    """A gate's output order.  Chain with
+    ``df.transform(final_sort, *cols)``.
 
-    A global sort is a range partitioning, and its sampling pass runs
-    the child in full before the sort proper runs it again; with a
-    Python kernel below, every row goes through the kernel twice.  The
-    barrier computes the child once and both passes read the saved
-    partitions (3.33 s → 1.76 s on the MPEG-1 B-frame gate at sf0.1).
-    This is the one place gate-final sorts are materialized."""
+    - *Small output:* when :func:`size_estimate` is positive and at most
+      the session's ``spark.sql.autoBroadcastJoinThreshold`` (the bound
+      Spark already uses for "small enough for one task"), the rows go
+      to one partition and are sorted there:
+      ``df.repartition(1).sortWithinPartitions(*cols)``.  That runs the
+      child once, with no sampling job and no barrier.  A child whose
+      plan already ends in one partition (a top-k, a ``coalesce(1)``)
+      is sorted in place, without the extra exchange.
+    - *Otherwise:* ``df.orderBy(*cols)`` over a :func:`barrier`.  A
+      global sort is a range partitioning, and its sampling pass runs
+      the child in full before the sort proper runs it again; with a
+      Python kernel below, every row goes through the kernel twice.
+      The barrier computes the child once and both passes read the
+      saved partitions (3.33 s → 1.76 s on the MPEG-1 B-frame gate at
+      sf0.1).
+
+    The estimate's known limit: size-only statistics do not see a
+    Python kernel's (or an explode's) row fan-out, so a kernel that
+    yields many rows per input row can send a large output down the
+    one-task branch.  With ``BARRIERS`` off (plan inspection) this is a
+    plain ``orderBy``.  This is the one place gate-final sorts are
+    materialized."""
+    if BARRIERS:
+        conf = df._jdf.sparkSession().sessionState().conf()
+        if 0 < size_estimate(df) <= conf.autoBroadcastJoinThreshold():
+            plan = df._jdf.queryExecution().executedPlan()
+            if plan.outputPartitioning().numPartitions() != 1:
+                df = df.repartition(1)
+            return df.sortWithinPartitions(*cols)
     return barrier(df).orderBy(*cols)
 
 

@@ -9,7 +9,9 @@ time travel):
   a ``snapshots/`` JSON log; each snapshot lists the *complete* set of
   live data directories plus per-partition lineage/metrics carried by
   the committing micro-batch (north_rule: "resumable from checkpoint
-  with per-partition lineage + metrics");
+  with per-partition lineage + metrics"), and the table schema, so a
+  read runs no schema-inference job (a manifest without one, written
+  before commits recorded it, still reads by inference);
 - commits are atomic: manifest written to a temp name then
   ``os.rename``'d; the ``LATEST`` pointer is swapped last — a crash at
   any point leaves the previous snapshot intact and readable;
@@ -31,6 +33,7 @@ import uuid
 from typing import Any, Iterable, Optional
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 class SnapshotTable:
@@ -161,14 +164,17 @@ class SnapshotTable:
         sid = max(self._snapshot_ids(), default=0) + 1
         assert prev is None or sid > prev["id"]
         dirs: list[str] = list(prev["data_dirs"]) if (prev and mode == "append") else []
+        schema = prev.get("schema") if prev else None
         if df is not None:
             rel = f"data/commit-{sid:06d}-{uuid.uuid4().hex[:8]}"
             df.write.mode("errorifexists").parquet(os.path.join(self.path, rel))
             dirs.append(rel)
+            schema = df.schema.jsonValue()
         manifest = {
             "id": sid,
             "parent": prev["id"] if prev else None,
             "data_dirs": dirs,
+            "schema": schema,
             "metrics": metrics or {},
             "lineage": lineage or {},
             "committed_at": time.time(),
@@ -194,7 +200,11 @@ class SnapshotTable:
         if snap is None or not snap["data_dirs"]:
             return None
         paths = [os.path.join(self.path, d) for d in snap["data_dirs"]]
-        return spark.read.parquet(*paths)
+        if snap.get("schema") is None:
+            # a manifest written before commits recorded the schema
+            return spark.read.parquet(*paths)
+        schema = StructType.fromJson(snap["schema"])
+        return spark.read.schema(schema).parquet(*paths)
 
     def compact(self, spark: SparkSession, transform=None) -> None:
         """Rewrite the live file set as one base commit, optionally

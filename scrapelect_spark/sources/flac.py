@@ -468,6 +468,8 @@ def decode_flac(data: bytes, check_md5: bool = True):
         if nch != nch_si:
             raise ValueError("frame channel count differs from STREAMINFO")
         frame_end = r.byte_pos()
+        if frame_end + 2 > len(data):
+            raise ValueError("FLAC bitstream truncated")
         if _crc16(data[pos:frame_end]) != struct.unpack(
             ">H", data[frame_end : frame_end + 2]
         )[0]:

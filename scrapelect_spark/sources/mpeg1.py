@@ -1268,6 +1268,10 @@ def _decode_picture(
             if probe >= len(data):
                 break
             nxt = data.find(b"\x00\x00\x01", probe)
+            if nxt == -1 and not any(data[probe:]):
+                # only zero bytes left: the stream was cut inside the
+                # start code that ends this slice
+                raise ValueError("mpeg1: truncated bitstream")
             if nxt != -1 and not any(data[probe:nxt]):
                 break
             inc = 0

@@ -36,16 +36,18 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from ..operators.tables import loop_shuffle, scan_partitions
+from ..operators.tables import load, loop_shuffle, scan_partitions
 
 DEC = "decimal(28,8)"
 
 
-def events_stream(spark: SparkSession, events_dir: str) -> DataFrame:
-    """File-source stream over a directory of events parquet files
-    (one file per trigger, so multi-file dirs exercise incremental
-    batches)."""
-    schema = spark.read.parquet(events_dir).schema
+def events_stream(
+    spark: SparkSession, events_dir: str, schema: StructType
+) -> DataFrame:
+    """File-source stream over a directory of events parquet files with
+    the given ``schema`` (one file per trigger, so multi-file dirs
+    exercise incremental batches).  A file source needs its schema up
+    front; the caller holds it from the frames it wrote there."""
     return (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -232,7 +234,7 @@ def events_hourly_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    batch = spark.read.parquet(f"{sf_dir}/events.parquet")
+    batch = load(spark, sf_dir, "events")
     d = tempfile.mkdtemp(prefix="events-stream-gate-")
     name = f"hourly_stream_gate_{next(_GATE_SEQ)}"
     try:
@@ -247,9 +249,10 @@ def events_hourly_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         # derivation scales with the input.  The partition count is
         # pinned into the checkpoint at the first batch, so it is a
         # per-query decision made here, before start().
-        with loop_shuffle(spark, scan_partitions(spark.read.parquet(d))):
+        fixture = spark.read.schema(batch.schema).parquet(d)
+        with loop_shuffle(spark, scan_partitions(fixture)):
             q = (
-                hourly_counts_stream(events_stream(spark, d))
+                hourly_counts_stream(events_stream(spark, d, batch.schema))
                 .writeStream.format("memory")
                 .queryName(name)
                 .outputMode("complete")
@@ -296,7 +299,7 @@ def events_sessionized_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     u_cut = 120  # bounds gate cost; ~8k events at sf0.1
     batch = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
+        load(spark, sf_dir, "events")
         .filter(F.col("user_id") < u_cut)
         .select(
             "event_id", "user_id", F.col("ts").cast("timestamp").alias("ts"), "value"
@@ -327,9 +330,10 @@ def events_sessionized_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
         _write_trigger_files(d, parts)
         # input-sized state partitioning — see events_hourly_stream
-        with loop_shuffle(spark, scan_partitions(spark.read.parquet(d))):
+        fixture = spark.read.schema(batch.schema).parquet(d)
+        with loop_shuffle(spark, scan_partitions(fixture)):
             q = (
-                sessionize_stream(events_stream(spark, d))
+                sessionize_stream(events_stream(spark, d, batch.schema))
                 .writeStream.format("memory")
                 .queryName(name)
                 .outputMode("append")
@@ -405,7 +409,7 @@ def events_late_drop_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     u_cut = 120
     base = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
+        load(spark, sf_dir, "events")
         .filter(F.col("user_id") < u_cut)
         .select(
             "event_id", "user_id",
@@ -447,7 +451,7 @@ def events_late_drop_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         parts = [base, advancer, late, sentinel]
         _write_trigger_files(d, parts)
         agg = (
-            events_stream(spark, d)
+            events_stream(spark, d, base.schema)
             .withWatermark("ts", "1 hour")
             .groupBy(F.window("ts", "1 hour").alias("win"))
             .agg(
@@ -459,7 +463,8 @@ def events_late_drop_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(F.col("win.start").alias("hour"), "n", "total_value")
         )
         # input-sized state partitioning — see events_hourly_stream
-        with loop_shuffle(spark, scan_partitions(spark.read.parquet(d))):
+        fixture = spark.read.schema(base.schema).parquet(d)
+        with loop_shuffle(spark, scan_partitions(fixture)):
             q = (
                 agg.writeStream.format("memory")
                 .queryName(name)

@@ -240,6 +240,47 @@ def test_snapshot_table_atomic_commits(spark, tmp_path):
     assert t.read(spark).count() == 8
 
 
+def test_snapshot_read_takes_the_manifest_schema(spark, tmp_path):
+    """A committed table reads with the schema its manifest carries, so
+    the read starts no Spark job; a commit without data carries the
+    schema forward, and an older manifest without the key still reads
+    the same rows and schema by inference."""
+    import json
+    import os
+
+    from pyspark.sql import functions as F
+
+    from scrapelect_spark.sources.checkpoint import SnapshotTable
+
+    t = SnapshotTable(str(tmp_path / "tbl"))
+    df = spark.range(6).select(
+        F.col("id").alias("x"),
+        F.col("id").cast("int").alias("n"),
+        F.array(F.col("id").cast("float")).alias("v"),
+        F.lit(None).cast("string").alias("s"),
+    )
+    t.commit(df)
+    t.commit(df.filter("x < 2"))
+    snap = t.commit(None, metrics={"empty": True})
+    assert snap["schema"] == df.schema.jsonValue()
+
+    tracker = spark.sparkContext.statusTracker()
+    before = max(tracker.getJobIdsForGroup(None), default=-1)
+    got = t.read(spark)
+    assert [j for j in tracker.getJobIdsForGroup(None) if j > before] == []
+
+    path = os.path.join(t.path, "snapshots", f"snapshot-{snap['id']:06d}.json")
+    with open(path) as f:
+        manifest = json.load(f)
+    del manifest["schema"]
+    with open(path, "w") as f:
+        json.dump(manifest, f)
+    legacy = t.read(spark)
+    assert got.schema == legacy.schema
+    assert sorted(got.collect()) == sorted(legacy.collect())
+    assert got.count() == 8
+
+
 def test_periodic_compaction_preserves_crawl_exactly(spark, tmp_path):
     """compact_every folds the snapshot logs mid-crawl without changing
     a single byte of crawl output, and resume from a post-compaction

@@ -129,6 +129,15 @@ def test_md5_mismatch_detected():
     assert np.array_equal(out, pcm.astype(np.int32))
 
 
+@pytest.mark.parametrize("cut", [1, 2])
+def test_stream_cut_inside_the_last_crc_is_truncation(cut):
+    rng = np.random.default_rng(7)
+    pcm = np.cumsum(rng.integers(-150, 150, 9_000)).clip(-32768, 32767)
+    blob = encode_flac(pcm.astype(np.int16), 16000)
+    with pytest.raises(ValueError, match="FLAC bitstream truncated"):
+        decode_flac(blob[:-cut])
+
+
 def test_not_flac():
     with pytest.raises(ValueError):
         decode_flac(b"RIFF" + b"\x00" * 64)

@@ -728,6 +728,29 @@ def test_truncated_stream_raises():
         list(decode_m1v_frames(data[: len(data) * 2 // 3]))
 
 
+def test_cut_inside_the_start_code_after_a_slice_is_truncation():
+    """A stream cut inside the start code that ends a slice leaves only
+    zero bytes after the slice's last macroblock: that is truncation,
+    not a macroblock address made of zero bits."""
+    data = encode_m1v(moving(24, 16, 5, step=1), qscale=4, gop_size=5,
+                      b_frames=2)
+    codes = []
+    i = data.find(b"\x00\x00\x01")
+    while i != -1:
+        codes.append((i, data[i + 3]))
+        i = data.find(b"\x00\x00\x01", i + 3)
+    cuts = [
+        i + k
+        for (_, prev), (i, _) in zip(codes, codes[1:])
+        if 0x01 <= prev <= 0xAF  # a slice start code
+        for k in (1, 2)
+    ]
+    assert len(data) - 2 in cuts  # inside the sequence end code
+    for cut in cuts:
+        with pytest.raises(ValueError, match="mpeg1: truncated bitstream"):
+            list(decode_m1v_frames(data[:cut]))
+
+
 def test_mutation_fuzz_never_hangs_or_segfaults():
     f = smooth(16, 24, seed=8)
     data = bytearray(encode_m1v([f], qscale=2))

@@ -49,7 +49,8 @@ def events_dir(tmp_path_factory):
 def test_hourly_counts_stream_matches_batch(spark, events_dir, tmp_path):
     from scrapelect_spark.streaming.windows import events_stream, hourly_counts_stream
 
-    stream = hourly_counts_stream(events_stream(spark, events_dir))
+    schema = spark.read.parquet(events_dir).schema
+    stream = hourly_counts_stream(events_stream(spark, events_dir, schema))
     q = (
         stream.writeStream.format("memory")
         .queryName("hourly_stream")
@@ -90,7 +91,8 @@ def test_sessionize_stream_matches_batch(spark, events_dir, tmp_path):
         sessionize_stream,
     )
 
-    stream = sessionize_stream(events_stream(spark, events_dir))
+    schema = spark.read.parquet(events_dir).schema
+    stream = sessionize_stream(events_stream(spark, events_dir, schema))
     q = (
         stream.writeStream.format("memory")
         .queryName("sessions_stream")

@@ -1,9 +1,10 @@
 """The gate plumbing in ``operators/tables.py``: the per-row kernel
-applier ``map_rows``, the ``docs`` input helper, the loop-partition
-ceiling of ``scan_partitions``, the gate-final sort ``final_sort``, and
-guards that keep operators on ``map_rows`` instead of hand-rolled
-``mapInPandas`` batch loops and on ``final_sort`` instead of a
-hand-built barrier-then-sort."""
+applier ``map_rows``, the ``docs`` input helper, the declared catalog
+behind ``load``, the loop-partition ceiling of ``scan_partitions``, the
+gate-final sort ``final_sort``, and guards that keep operators on
+``map_rows`` instead of hand-rolled ``mapInPandas`` batch loops, on
+``final_sort`` instead of a hand-built barrier-then-sort, and parquet
+reads on a declared schema."""
 
 import ast
 import glob
@@ -18,6 +19,7 @@ from scrapelect_spark.operators.tables import (
     map_rows,
     scan_partitions,
 )
+from test_oracle_parity import SF_DIR
 
 PACKAGE = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
@@ -106,6 +108,35 @@ def test_docs_filters_and_projects(spark, tmp_path):
     assert _rows(d) == [(i, "en") for i in range(10)]
 
 
+#: the directory holding the sf0.001 / sf0.01 / sf0.1 catalogs
+TESTDATA = os.path.dirname(SF_DIR)
+
+
+@pytest.mark.parametrize("sf", ["sf0.001", "sf0.01", "sf0.1"])
+def test_load_schema_is_the_inferred_schema(spark, sf):
+    """The declared catalog equals what Spark infers from the files,
+    ``timestamp_ntz`` and ``array<float>`` included."""
+    sf_dir = f"{TESTDATA}/{sf}"
+    for name in tables.SCHEMAS:
+        inferred = spark.read.parquet(f"{sf_dir}/{name}.parquet").schema
+        assert tables.load(spark, sf_dir, name).schema == inferred, name
+
+
+def _jobs_started(spark, fn):
+    tracker = spark.sparkContext.statusTracker()
+    before = max(tracker.getJobIdsForGroup(None), default=-1)
+    fn()
+    return [j for j in tracker.getJobIdsForGroup(None) if j > before]
+
+
+def test_load_starts_no_job(spark):
+    sf_dir = f"{TESTDATA}/sf0.001"
+    assert _jobs_started(spark, lambda: tables.load(spark, sf_dir, "orders")) == []
+    # the probe does see the inference job of a bare read
+    path = f"{sf_dir}/orders.parquet"
+    assert _jobs_started(spark, lambda: spark.read.parquet(path))
+
+
 class _Stats:
     def __init__(self, size):
         self.size = size
@@ -191,14 +222,26 @@ def test_map_rows_error_drops_rows_already_yielded(spark):
     assert _rows(out) == [(0, 0, 0), (0, 1, 0), (1, None, 1)]
 
 
+def _executed(df):
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
 @pytest.mark.parametrize("desc", [False, True])
-def test_final_sort_runs_the_kernel_once(spark, monkeypatch, desc):
-    """The range sort's sampling pass reads the barrier's saved
-    partitions, so each input row goes through the kernel once; a plain
-    ``orderBy`` runs the kernel twice per row."""
+@pytest.mark.parametrize("branch", ["small", "large"])
+def test_final_sort_runs_the_kernel_once(spark, monkeypatch, branch, desc):
+    """Each input row goes through the kernel once on both branches.  A
+    small output is sorted in one task, with no range sort and no
+    barrier; on a large one the range sort's sampling pass reads the
+    barrier's saved partitions (a plain ``orderBy`` runs the kernel
+    twice per row)."""
     from pyspark.sql import functions as F
 
     monkeypatch.setattr(tables, "BARRIERS", True)
+    if branch == "large":
+        estimate = tables.size_estimate
+        monkeypatch.setattr(
+            tables, "size_estimate", lambda df: estimate(_SizedFrame(100 * 10**12))
+        )
     calls = spark.sparkContext.accumulator(0)
 
     def kernel(i):
@@ -208,11 +251,17 @@ def test_final_sort_runs_the_kernel_once(spark, monkeypatch, desc):
     df = spark.range(0, 200, 1, 4).withColumnRenamed("id", "i")
     out = map_rows(df, kernel, "i long, v long")
     v = F.desc("v") if desc else "v"
-    rows = [tuple(r) for r in out.transform(final_sort, v, "i").collect()]
+    sorted_out = out.transform(final_sort, v, "i")
+    rows = [tuple(r) for r in sorted_out.collect()]
     assert calls.value == 200
     expected = [(i, i % 7) for i in range(200)]
     expected.sort(key=lambda r: (-r[1] if desc else r[1], r[0]))
     assert rows == expected
+    # the large branch keeps the barrier (a checkpoint scan) and the
+    # range sort; the small one has neither
+    plan = _executed(sorted_out).lower()
+    large = branch == "large"
+    assert ("rangepartitioning" in plan, "existingrdd" in plan) == (large, large)
 
 
 def test_final_sort_without_barriers_is_a_plain_order_by(spark, monkeypatch):
@@ -263,3 +312,63 @@ def test_no_hand_built_barrier_sort():
                         name = getattr(top, "name", "<module>")
                         sites.append(f"{sub}/{os.path.basename(path)}:{name}")
     assert sites == ["operators/tables.py:final_sort"]
+
+
+def _chain(node):
+    """The attribute names along a method chain, last call first."""
+    names = []
+    while isinstance(node, (ast.Call, ast.Attribute)):
+        if isinstance(node, ast.Attribute):
+            names.append(node.attr)
+            node = node.value
+        else:
+            node = node.func
+    return names
+
+
+def _definitions(tree):
+    """(qualified name, node) for each top-level statement, with a
+    class's methods named ``Class.method``."""
+    for top in tree.body:
+        if isinstance(top, ast.ClassDef):
+            for member in top.body:
+                yield f"{top.name}.{getattr(member, 'name', '<body>')}", member
+        else:
+            yield getattr(top, "name", "<module>"), top
+
+
+def test_parquet_reads_declare_their_schema():
+    """A parquet read in the package names its schema (``.schema(``
+    earlier in the chain than ``.parquet(``), so no read starts a
+    schema-inference job.  The one bare read is ``SnapshotTable.read``'s
+    branch for manifests written before commits recorded the schema."""
+    bare = []
+    for path in sorted(glob.glob(os.path.join(PACKAGE, "**", "*.py"), recursive=True)):
+        with open(path) as f:
+            tree = ast.parse(f.read())
+        for name, top in _definitions(tree):
+            for node in ast.walk(top):
+                if not (
+                    isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr == "parquet"
+                ):
+                    continue
+                chain = _chain(node.func.value)
+                if "write" in chain or "writeStream" in chain:
+                    continue
+                if "schema" not in chain:
+                    bare.append(f"{os.path.relpath(path, PACKAGE)}:{name}")
+    assert bare == ["sources/checkpoint.py:SnapshotTable.read"]
+
+
+def test_final_sort_of_a_one_partition_plan_adds_no_exchange(spark, monkeypatch):
+    """A top-k already ends in one partition: the small branch sorts it
+    in place, with no exchange and no extra job."""
+    from pyspark.sql import functions as F
+
+    monkeypatch.setattr(tables, "BARRIERS", True)
+    top = spark.range(0, 1000, 1, 4).orderBy(F.desc("id")).limit(10)
+    out = final_sort(top, "id")
+    assert [r.id for r in out.collect()] == list(range(990, 1000))
+    assert "exchange" not in _executed(out).lower()
