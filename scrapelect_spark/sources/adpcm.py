@@ -16,7 +16,11 @@ mp3/ogg/flac stay out of scope — they need real codec libraries; the
 
 from __future__ import annotations
 
+import struct
+
 import numpy as np
+
+from .riff import read_wav, write_wav
 
 _STEP_TABLE = [
     7, 8, 9, 10, 11, 12, 13, 14, 16, 17,
@@ -156,8 +160,6 @@ def encode_wav_ima(
     then — stereo — channel data interleaved in 4-byte (8-nibble)
     groups, left group first (the canonical fmt=0x11 layout); fact
     chunk carries the true per-channel frame count."""
-    import struct
-
     samples = np.asarray(pcm16, dtype=np.int64)
     if samples.ndim == 1:
         samples = samples[:, None]
@@ -173,13 +175,13 @@ def encode_wav_ima(
     indices = [0] * nch
     blocks = []
     for start in range(0, n, spb):
-        chunk = samples[start : start + spb]
+        block = samples[start : start + spb]
         hdr = b""
         ch_codes = []
         for c in range(nch):
-            pred = int(chunk[0, c])
+            pred = int(block[0, c])
             hdr += struct.pack("<hBB", pred, indices[c], 0)
-            codes, _, indices[c] = _encode_core(chunk[1:, c], pred, indices[c])
+            codes, _, indices[c] = _encode_core(block[1:, c], pred, indices[c])
             codes += [0] * (data_per_ch * 2 - len(codes))  # pad final block
             ch_codes.append(codes)
         if nch == 1:
@@ -190,19 +192,11 @@ def encode_wav_ima(
                 for g in range(0, data_per_ch * 2, 8)
             )
         blocks.append(hdr + body)
-    data = b"".join(blocks)
     avg_bps = rate * block_align // spb
     fmt = struct.pack(
         "<HHIIHHHH", 0x11, nch, rate, avg_bps, block_align, 4, 2, spb
     )
-    fact = struct.pack("<I", n)
-
-    def chunk_(tag, body):
-        pad = b"\x00" if len(body) % 2 else b""
-        return tag + struct.pack("<I", len(body)) + body + pad
-
-    body = b"WAVE" + chunk_(b"fmt ", fmt) + chunk_(b"fact", fact) + chunk_(b"data", data)
-    return b"RIFF" + struct.pack("<I", len(body)) + body
+    return write_wav(fmt, n, b"".join(blocks))
 
 
 def decode_wav_ima(data: bytes) -> tuple[np.ndarray, int]:
@@ -212,29 +206,9 @@ def decode_wav_ima(data: bytes) -> tuple[np.ndarray, int]:
     final block's zero-padding nibbles are indistinguishable from real
     codes), so — like other decoders — whole blocks are emitted; our
     encoder always writes ``fact``, which bounds the output exactly."""
-    import struct
-
-    if data[:4] != b"RIFF" or data[8:12] != b"WAVE":
-        raise ValueError("not a WAV")
-    pos = 12
-    fmt = fact_n = raw = None
-    while pos + 8 <= len(data):
-        tag = data[pos : pos + 4]
-        (ln,) = struct.unpack("<I", data[pos + 4 : pos + 8])
-        body = data[pos + 8 : pos + 8 + ln]
-        pos += 8 + ln + (ln % 2)
-        if tag == b"fmt ":
-            fmt = struct.unpack("<HHIIHH", body[:16])
-            ext = body[18:] if len(body) > 18 else b""
-            spb = struct.unpack("<H", ext[:2])[0] if len(ext) >= 2 else None
-            fmt = fmt + (spb,)
-        elif tag == b"fact":
-            (fact_n,) = struct.unpack("<I", body[:4])
-        elif tag == b"data":
-            raw = body
-    if fmt is None or raw is None:
-        raise ValueError("missing fmt/data chunk")
-    tag_, nch, rate, _avg, block_align, bits, spb = fmt
+    (tag_, nch, rate, _avg, block_align, bits), ext, fact_n, raw = read_wav(data)
+    # cbSize, then the samples-per-block field of the fmt extension
+    spb = struct.unpack_from("<H", ext, 2)[0] if len(ext) >= 4 else None
     if tag_ != 0x11:
         raise ValueError(f"not IMA ADPCM (format tag 0x{tag_:X})")
     if nch not in (1, 2) or bits != 4:
@@ -280,9 +254,11 @@ def decode_wav_ima(data: bytes) -> tuple[np.ndarray, int]:
 
 
 def snr_db(original: np.ndarray, decoded: np.ndarray) -> float:
-    """Signal-to-noise ratio of a lossy roundtrip, in dB."""
+    """Signal-to-noise ratio of a lossy roundtrip, in dB, over the
+    first ``len(original)`` decoded samples (frame-quantized codecs
+    decode a padded tail)."""
     x = np.asarray(original, dtype=np.float64)
-    e = x - np.asarray(decoded, dtype=np.float64)
+    e = x - np.asarray(decoded, dtype=np.float64)[: len(x)]
     p_sig = float(np.sum(x * x))
     p_err = float(np.sum(e * e))
     if p_err == 0:

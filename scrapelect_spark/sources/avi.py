@@ -6,6 +6,8 @@ by sources/jpeg.py), and the RIFF container layout is fully public
 (Microsoft AVI spec / OpenDML).  Writer emits a single 'vids'/'MJPG'
 stream (avih + strh/strf headers, 'movi' chunk list, idx1 index);
 reader walks the RIFF tree and yields the '00dc'/'00db' frame chunks.
+Chunk framing and the lenient chunk walk are sources/riff.py's, so a
+file cut mid-stream still yields the frames before the cut.
 
 ``mux_avi`` is codec-agnostic (sources/msvc.py reuses it for
 interframe MS Video 1 / CRAM streams).  Motion-compensated codecs
@@ -22,15 +24,7 @@ from typing import Iterator
 import numpy as np
 
 from .jpeg import decode_jpeg, encode_jpeg
-
-
-def _chunk(fourcc: bytes, data: bytes) -> bytes:
-    pad = b"\x00" if len(data) % 2 else b""
-    return fourcc + struct.pack("<I", len(data)) + data + pad
-
-
-def _list(listtype: bytes, body: bytes) -> bytes:
-    return _chunk(b"LIST", listtype + body)
+from .riff import chunk, riff, walk
 
 
 def mux_avi(
@@ -54,7 +48,7 @@ def mux_avi(
     n = len(jpegs)
     max_bytes = max(len(j) for j in jpegs)
 
-    avih = _chunk(
+    avih = chunk(
         b"avih",
         struct.pack(
             "<14I",
@@ -71,7 +65,7 @@ def mux_avi(
             0, 0, 0, 0,  # dwReserved
         ),
     )
-    strh = _chunk(
+    strh = chunk(
         b"strh",
         b"vids"
         + fourcc
@@ -88,7 +82,7 @@ def mux_avi(
             0, 0, w, h,  # rcFrame
         ),
     )
-    strf = _chunk(
+    strf = chunk(
         b"strf",
         struct.pack(
             "<IiiHH4sIiiII",
@@ -102,9 +96,9 @@ def mux_avi(
             0, 0, 0, 0,
         ),
     )
-    hdrl = _list(b"hdrl", avih + _list(b"strl", strh + strf))
-    movi_chunks = b"".join(_chunk(b"00dc", j) for j in jpegs)
-    movi = _list(b"movi", movi_chunks)
+    strl = chunk(b"LIST", b"strl" + strh + strf)
+    hdrl = chunk(b"LIST", b"hdrl" + avih + strl)
+    movi = chunk(b"LIST", b"movi" + b"".join(chunk(b"00dc", j) for j in jpegs))
     # idx1: one entry per frame — offset relative to 'movi' fourcc
     idx_entries = []
     off = 4
@@ -113,9 +107,8 @@ def mux_avi(
             b"00dc" + struct.pack("<III", 0x10 if key else 0, off, len(j))
         )
         off += 8 + len(j) + (len(j) % 2)
-    idx1 = _chunk(b"idx1", b"".join(idx_entries))
-    body = b"AVI " + hdrl + movi + idx1
-    return b"RIFF" + struct.pack("<I", len(body)) + body
+    idx1 = chunk(b"idx1", b"".join(idx_entries))
+    return riff(b"AVI ", hdrl + movi + idx1)
 
 
 def encode_avi_mjpeg(
@@ -132,41 +125,40 @@ def encode_avi_mjpeg(
     )
 
 
+def _lists(data: bytes, pos: int, end: int, kind: bytes) -> Iterator[tuple[int, int]]:
+    """(start, end) of the body of each ``LIST`` of type ``kind`` in
+    the chunk run ``data[pos:end]``."""
+    for fourcc, start, length in walk(data, pos, end):
+        if fourcc == b"LIST" and data[start : start + 4] == kind:
+            yield start + 4, start + length
+
+
+def _top_lists(data: bytes, kind: bytes) -> Iterator[tuple[int, int]]:
+    """:func:`_lists` over the top level of an AVI file."""
+    if data[:4] != b"RIFF" or data[8:12] != b"AVI ":
+        raise ValueError("not an AVI")
+    return _lists(data, 12, len(data), kind)
+
+
 def avi_video_fourcc(data: bytes) -> bytes:
     """The first video stream's codec fourcc (from strh), uppercased —
     how frame_sample routes MJPG vs CRAM/MSVC payloads."""
-    if data[:4] != b"RIFF" or data[8:12] != b"AVI ":
-        raise ValueError("not an AVI")
-    for fourcc, start, length in _walk_chunks(data, 12, len(data)):
-        if fourcc == b"LIST" and data[start : start + 4] == b"hdrl":
-            for f2, s2, l2 in _walk_chunks(data, start + 4, start + length):
-                if f2 == b"LIST" and data[s2 : s2 + 4] == b"strl":
-                    for f3, s3, l3 in _walk_chunks(data, s2 + 4, s2 + l2):
-                        if f3 == b"strh" and data[s3 : s3 + 4] == b"vids":
-                            return data[s3 + 4 : s3 + 8].upper()
+    for start, end in _top_lists(data, b"hdrl"):
+        for s2, e2 in _lists(data, start, end, b"strl"):
+            for f3, s3, _ in walk(data, s2, e2):
+                if f3 == b"strh" and data[s3 : s3 + 4] == b"vids":
+                    return data[s3 + 4 : s3 + 8].upper()
     raise ValueError("no video stream header")
-
-
-def _walk_chunks(data: bytes, pos: int, end: int) -> Iterator[tuple[bytes, int, int]]:
-    """Yield (fourcc, body_start, body_len) over a chunk run."""
-    while pos + 8 <= end:
-        fourcc = data[pos : pos + 4]
-        (length,) = struct.unpack("<I", data[pos + 4 : pos + 8])
-        yield fourcc, pos + 8, length
-        pos += 8 + length + (length % 2)
 
 
 def avi_meta(data: bytes) -> tuple[int, int, int, int]:
     """(width, height, n_frames, fps) from the avih/strh headers."""
-    if data[:4] != b"RIFF" or data[8:12] != b"AVI ":
-        raise ValueError("not an AVI")
-    for fourcc, start, length in _walk_chunks(data, 12, len(data)):
-        if fourcc == b"LIST" and data[start : start + 4] == b"hdrl":
-            for f2, s2, l2 in _walk_chunks(data, start + 4, start + length):
-                if f2 == b"avih":
-                    vals = struct.unpack("<14I", data[s2 : s2 + 56])
-                    fps = 1_000_000 // vals[0] if vals[0] else 0
-                    return int(vals[8]), int(vals[9]), int(vals[4]), int(fps)
+    for start, end in _top_lists(data, b"hdrl"):
+        for f2, s2, _ in walk(data, start, end):
+            if f2 == b"avih":
+                vals = struct.unpack("<14I", data[s2 : s2 + 56])
+                fps = 1_000_000 // vals[0] if vals[0] else 0
+                return int(vals[8]), int(vals[9]), int(vals[4]), int(fps)
     raise ValueError("no avih header")
 
 
@@ -174,19 +166,16 @@ def avi_frame_chunks(data: bytes) -> Iterator[bytes]:
     """Yield each video frame's compressed bytes ('00dc'/'00db'),
     including frames grouped inside interleave LIST 'rec ' chunks
     (the layout muxers emit when interleaving audio+video)."""
-    if data[:4] != b"RIFF" or data[8:12] != b"AVI ":
-        raise ValueError("not an AVI")
 
-    def walk(pos: int, end: int) -> Iterator[bytes]:
-        for f2, s2, l2 in _walk_chunks(data, pos, end):
+    def frames(pos: int, end: int) -> Iterator[bytes]:
+        for f2, s2, l2 in walk(data, pos, end):
             if f2 == b"LIST" and data[s2 : s2 + 4] == b"rec ":
-                yield from walk(s2 + 4, s2 + l2)
+                yield from frames(s2 + 4, s2 + l2)
             elif f2[2:4] in (b"dc", b"db"):
                 yield data[s2 : s2 + l2]
 
-    for fourcc, start, length in _walk_chunks(data, 12, len(data)):
-        if fourcc == b"LIST" and data[start : start + 4] == b"movi":
-            yield from walk(start + 4, start + length)
+    for start, end in _top_lists(data, b"movi"):
+        yield from frames(start, end)
 
 
 def decode_avi_mjpeg_frames(
@@ -195,6 +184,6 @@ def decode_avi_mjpeg_frames(
     """Decode every ``every_n``-th frame → (frame_idx, HxWxC uint8).
     Skipped frames are never JPEG-decoded (chunk walk is free) — the
     point of frame *sampling*."""
-    for idx, chunk in enumerate(avi_frame_chunks(data)):
+    for idx, frame in enumerate(avi_frame_chunks(data)):
         if idx % every_n == 0:
-            yield idx, decode_jpeg(chunk)
+            yield idx, decode_jpeg(frame)

@@ -206,14 +206,11 @@ class SnapshotTable:
         schema = StructType.fromJson(snap["schema"])
         return spark.read.schema(schema).parquet(*paths)
 
-    def compact(self, spark: SparkSession, transform=None) -> None:
-        """Rewrite the live file set as one base commit, optionally
-        collapsing an append-log via ``transform(df) -> df`` (e.g. a
-        latest-wins window).  The new commit writes to a fresh data dir,
-        so reading the old dirs while writing is safe."""
+    def compact(self, spark: SparkSession) -> None:
+        """Rewrite the live file set as one base commit.  The new commit
+        writes to a fresh data dir, so reading the old dirs while
+        writing is safe."""
         df = self.read(spark)
         if df is None:
             return
-        if transform is not None:
-            df = transform(df)
         self.commit(df, mode="overwrite", metrics={"compaction": True})

@@ -5,8 +5,11 @@ pipelines filter and stratify on (orientation for rotation-fixup,
 capture time for dedup/decontamination windows, camera model for
 source diversity).  This module parses the Exif APP1 payload — a TIFF
 byte stream: ``II``/``MM`` byte order, magic 42, chained IFDs of
-12-byte entries — from untrusted bytes with hard bounds checks, and
-builds deterministic APP1 segments for the gate corpus.
+12-byte entries — from untrusted bytes, and builds deterministic APP1
+segments for the gate corpus.  The IFD layer itself (header, bounds-
+checked entry reads, IFD layout) is sources/tiff.py's; this module
+keeps the tag semantics: scalar decode, the EXIF and GPS sub-IFD
+pointers, ``GPS_KEY_BASE``, and the IFD chain and nesting caps.
 
 Scope (the tags pipelines actually use): IFD0 Make/Model/Orientation/
 DateTime, the EXIF sub-IFD (DateTimeOriginal, ISO, ExposureTime,
@@ -26,7 +29,7 @@ from __future__ import annotations
 
 import struct
 
-_TYPE_SIZES = {1: 1, 2: 1, 3: 2, 4: 4, 5: 8, 7: 1, 9: 4, 10: 8}
+from .tiff import ifd_size, read_header, read_ifd, write_header, write_ifd
 
 #: IFD0 tags
 TAG_MAKE = 0x010F
@@ -49,6 +52,12 @@ TAG_DATETIME_ORIGINAL = 0x9003
 TAG_PIXEL_X = 0xA002
 TAG_PIXEL_Y = 0xA003
 
+_IFD0_TAGS = (TAG_MAKE, TAG_MODEL, TAG_ORIENTATION, TAG_DATETIME)
+_SUB_TAGS = (TAG_EXPOSURE_TIME, TAG_ISO, TAG_DATETIME_ORIGINAL,
+             TAG_PIXEL_X, TAG_PIXEL_Y)
+#: the field types the tags above use: ASCII, SHORT, LONG, RATIONAL
+_TYPES = (2, 3, 4, 5)
+
 _MAX_IFDS = 8
 _MAX_ENTRIES = 256
 
@@ -57,76 +66,34 @@ EXIF_HEADER = b"Exif\x00\x00"
 
 def _read_ifd(data: bytes, off: int, bo: str, out: dict, depth: int,
               gps: bool = False) -> int:
-    """Parse one IFD at ``off``; returns the next-IFD offset."""
+    """Parse one IFD at ``off`` into ``out``; returns the next-IFD
+    offset."""
     if depth > 2:
         raise ValueError("exif: IFD nesting too deep")
-    if off + 2 > len(data):
-        raise ValueError("exif: IFD offset out of bounds")
-    (n,) = struct.unpack_from(bo + "H", data, off)
-    if n > _MAX_ENTRIES:
-        raise ValueError("exif: too many IFD entries")
-    if off + 2 + 12 * n + 4 > len(data):
-        raise ValueError("exif: IFD overruns payload")
-    for i in range(n):
-        tag, typ, cnt = struct.unpack_from(bo + "HHI", data, off + 2 + 12 * i)
-        voff = off + 2 + 12 * i + 8
-        size = _TYPE_SIZES.get(typ)
-        if size is None:
-            continue  # unknown type: skip, per TIFF 6.0 readers
-        total = size * cnt
-        if total > 4:
-            (vpos,) = struct.unpack_from(bo + "I", data, voff)
-            if vpos + total > len(data):
-                raise ValueError("exif: value offset out of bounds")
-        else:
-            vpos = voff
-        raw = data[vpos:vpos + total]
-        if tag == TAG_EXIF_IFD and typ == 4 and not gps:
-            (sub,) = struct.unpack_from(bo + "I", raw, 0)
-            _read_ifd(data, sub, bo, out, depth + 1)
-            continue
-        if tag == TAG_GPS_IFD and typ == 4 and not gps:
-            (sub,) = struct.unpack_from(bo + "I", raw, 0)
-            _read_ifd(data, sub, bo, out, depth + 1, gps=True)
+    entries, nxt = read_ifd(data, off, bo, _TYPES, "exif", _MAX_ENTRIES)
+    for tag, typ, cnt, raw in entries:
+        if typ == 4 and not gps and tag in (TAG_EXIF_IFD, TAG_GPS_IFD):
+            (sub,) = struct.unpack_from(bo + "I", raw)
+            _read_ifd(data, sub, bo, out, depth + 1, gps=tag == TAG_GPS_IFD)
             continue
         key = (GPS_KEY_BASE | tag) if gps else tag
         if typ == 2:  # ASCII, NUL-terminated
             out[key] = raw.split(b"\x00", 1)[0].decode("ascii", "replace")
-        elif typ == 3:
-            out[key] = struct.unpack_from(bo + "H", raw, 0)[0]
-        elif typ == 4:
-            out[key] = struct.unpack_from(bo + "I", raw, 0)[0]
         elif typ == 5:
-            if cnt >= 2:
-                # multi-RATIONAL (GPS lat/lon triplets): tuple of pairs
-                out[key] = tuple(
-                    struct.unpack_from(bo + "II", raw, 8 * j)
-                    for j in range(cnt)
-                )
-            else:
-                num, den = struct.unpack_from(bo + "II", raw, 0)
-                out[key] = (num, den)
-    (nxt,) = struct.unpack_from(bo + "I", data, off + 2 + 12 * n)
+            # multi-RATIONAL (GPS lat/lon triplets): tuple of pairs
+            out[key] = (tuple(struct.iter_unpack(bo + "II", raw)) if cnt >= 2
+                        else struct.unpack_from(bo + "II", raw))
+        else:
+            out[key] = struct.unpack_from(bo + ("H" if typ == 3 else "I"), raw)[0]
     return nxt
 
 
 def parse_tiff(data: bytes) -> dict[int, object]:
     """TIFF byte stream (as inside APP1, after ``Exif\\0\\0``) → tag
     dict (EXIF sub-IFD tags merged in)."""
-    if len(data) < 8:
-        raise ValueError("exif: truncated TIFF header")
-    if data[:2] == b"II":
-        bo = "<"
-    elif data[:2] == b"MM":
-        bo = ">"
-    else:
-        raise ValueError("exif: bad byte-order mark")
-    (magic, first) = struct.unpack_from(bo + "HI", data, 2)
-    if magic != 42:
-        raise ValueError("exif: bad TIFF magic")
+    bo, off = read_header(data, "exif")
     out: dict[int, object] = {}
     seen = set()
-    off = first
     for _ in range(_MAX_IFDS):
         if off == 0:
             return out
@@ -137,9 +104,9 @@ def parse_tiff(data: bytes) -> dict[int, object]:
     raise ValueError("exif: IFD chain too long")
 
 
-def parse_exif_jpeg(jpeg: bytes) -> dict[int, object]:
-    """Walk the JPEG marker stream for an ``APP1 Exif`` segment and
-    parse it.  Raises if the image has no EXIF payload."""
+def _find_app1(jpeg: bytes) -> tuple[int, int] | None:
+    """(start, end) of the ``APP1 Exif`` segment, marker included, or
+    None when the marker stream reaches SOS or its end without one."""
     if jpeg[:2] != b"\xff\xd8":
         raise ValueError("exif: not a JPEG")
     pos = 2
@@ -156,122 +123,59 @@ def parse_exif_jpeg(jpeg: bytes) -> dict[int, object]:
         if seglen < 2 or pos + 2 + seglen > len(jpeg):
             raise ValueError("exif: segment overruns file")
         if marker == 0xE1 and jpeg[pos + 4:pos + 10] == EXIF_HEADER:
-            return parse_tiff(jpeg[pos + 10:pos + 2 + seglen])
+            return pos, pos + 2 + seglen
         pos += 2 + seglen
-    raise ValueError("exif: no APP1 Exif segment")
+    return None
+
+
+def parse_exif_jpeg(jpeg: bytes) -> dict[int, object]:
+    """Walk the JPEG marker stream for an ``APP1 Exif`` segment and
+    parse it.  Raises if the image has no EXIF payload."""
+    seg = _find_app1(jpeg)
+    if seg is None:
+        raise ValueError("exif: no APP1 Exif segment")
+    return parse_tiff(jpeg[seg[0] + 10:seg[1]])
 
 
 # --- writer -----------------------------------------------------------
 
 
-def _entry(bo: str, tag: int, typ: int, cnt: int, value_or_off: bytes) -> bytes:
-    head = struct.pack(bo + "HHI", tag, typ, cnt)
-    return head + value_or_off.ljust(4, b"\x00")[:4]
+def _entry(bo: str, tag: int, v) -> tuple[int, int, int, bytes]:
+    """A tag value as an IFD entry: str → ASCII, (num, den) or a tuple
+    of them → RATIONAL, int → SHORT when it fits, else LONG."""
+    if isinstance(v, str):
+        raw = v.encode("ascii") + b"\x00"
+        return tag, 2, len(raw), raw
+    if isinstance(v, tuple):
+        pairs = v if v and isinstance(v[0], tuple) else (v,)
+        raw = b"".join(struct.pack(bo + "II", *p) for p in pairs)
+        return tag, 5, len(pairs), raw
+    if v < 0x10000:
+        return tag, 3, 1, struct.pack(bo + "H", v)
+    return tag, 4, 1, struct.pack(bo + "I", v)
 
 
 def build_tiff(fields: dict[int, object], byte_order: str = "II") -> bytes:
-    """Deterministic TIFF stream with IFD0 + EXIF sub-IFD from a tag
-    dict (the inverse of :func:`parse_tiff` for the supported tags)."""
+    """Deterministic TIFF stream with IFD0 + EXIF sub-IFD + GPS IFD
+    from a tag dict (the inverse of :func:`parse_tiff` for the
+    supported tags)."""
     bo = "<" if byte_order == "II" else ">"
-    ifd0_tags = {
-        t: v
-        for t, v in fields.items()
-        if t in (TAG_MAKE, TAG_MODEL, TAG_ORIENTATION, TAG_DATETIME)
-    }
-    sub_tags = {
-        t: v
-        for t, v in fields.items()
-        if t in (TAG_EXPOSURE_TIME, TAG_ISO, TAG_DATETIME_ORIGINAL,
-                 TAG_PIXEL_X, TAG_PIXEL_Y)
-    }
-    gps_tags = {
-        t & 0xFFFF: v for t, v in fields.items() if t >= GPS_KEY_BASE
-    }
-
-    def encode(tags: dict, base: int, extra_entries: int):
-        """→ (entry blob list, overflow data, total size) with value
-        offsets relative to ``base`` (the IFD's start)."""
-        n = len(tags) + extra_entries
-        data_off = base + 2 + 12 * n + 4
-        entries, overflow = [], b""
-        for tag in sorted(tags):
-            v = tags[tag]
-            if isinstance(v, str):
-                raw = v.encode("ascii") + b"\x00"
-                if len(raw) > 4:
-                    entries.append(
-                        _entry(bo, tag, 2, len(raw),
-                               struct.pack(bo + "I", data_off + len(overflow)))
-                    )
-                    overflow += raw
-                else:
-                    entries.append(_entry(bo, tag, 2, len(raw), raw))
-            elif isinstance(v, tuple) and v and isinstance(v[0], tuple):
-                # multi-RATIONAL (GPS lat/lon deg-min-sec triplets)
-                raw = b"".join(struct.pack(bo + "II", *p) for p in v)
-                entries.append(
-                    _entry(bo, tag, 5, len(v),
-                           struct.pack(bo + "I", data_off + len(overflow)))
-                )
-                overflow += raw
-            elif isinstance(v, tuple):  # RATIONAL
-                raw = struct.pack(bo + "II", *v)
-                entries.append(
-                    _entry(bo, tag, 5, 1,
-                           struct.pack(bo + "I", data_off + len(overflow)))
-                )
-                overflow += raw
-            elif v < 0x10000 and tag != TAG_EXIF_IFD:
-                entries.append(_entry(bo, tag, 3, 1, struct.pack(bo + "H", v)))
-            else:
-                entries.append(_entry(bo, tag, 4, 1, struct.pack(bo + "I", v)))
-        return entries, overflow
-
-    # IFD0 sits at offset 8; compute its size to place the sub-IFDs
-    has_sub = 1 if sub_tags else 0
-    has_gps = 1 if gps_tags else 0
-    ifd0_entries, ifd0_overflow = encode(ifd0_tags, 8, has_sub + has_gps)
-    ifd0_size = (
-        2 + 12 * (len(ifd0_tags) + has_sub + has_gps) + 4 + len(ifd0_overflow)
-    )
-    sub_off = 8 + ifd0_size
-    sub_blob = b""
-    if has_sub:
-        sub_entries, sub_overflow = encode(sub_tags, sub_off, 0)
-        sub_blob = (
-            struct.pack(bo + "H", len(sub_entries))
-            + b"".join(sub_entries)
-            + struct.pack(bo + "I", 0)
-            + sub_overflow
-        )
-        ifd0_entries.append(
-            _entry(bo, TAG_EXIF_IFD, 4, 1, struct.pack(bo + "I", sub_off))
-        )
-    gps_off = sub_off + len(sub_blob)
-    gps_blob = b""
-    if has_gps:
-        gps_entries, gps_overflow = encode(gps_tags, gps_off, 0)
-        gps_blob = (
-            struct.pack(bo + "H", len(gps_entries))
-            + b"".join(gps_entries)
-            + struct.pack(bo + "I", 0)
-            + gps_overflow
-        )
-        ifd0_entries.append(
-            _entry(bo, TAG_GPS_IFD, 4, 1, struct.pack(bo + "I", gps_off))
-        )
-    if has_sub or has_gps:
-        ifd0_entries.sort(key=lambda e: struct.unpack_from(bo + "H", e, 0)[0])
-    out = bytearray()
-    out += byte_order.encode("ascii")
-    out += struct.pack(bo + "HI", 42, 8)
-    out += struct.pack(bo + "H", len(ifd0_entries))
-    out += b"".join(ifd0_entries)
-    out += struct.pack(bo + "I", 0)  # no IFD1
-    out += ifd0_overflow
-    out += sub_blob
-    out += gps_blob
-    return bytes(out)
+    ifd0 = [_entry(bo, t, v) for t, v in fields.items() if t in _IFD0_TAGS]
+    sub = [_entry(bo, t, v) for t, v in fields.items() if t in _SUB_TAGS]
+    gps = [_entry(bo, t & 0xFFFF, v) for t, v in fields.items()
+           if t >= GPS_KEY_BASE]
+    children = [(ptr, entries) for ptr, entries
+                in ((TAG_EXIF_IFD, sub), (TAG_GPS_IFD, gps)) if entries]
+    # IFD0 sits at offset 8 and its pointers are inline LONGs, so its
+    # size (with zero pointers) places the sub-IFDs after it
+    pointers = [(ptr, 4, 1, bytes(4)) for ptr, _ in children]
+    off = 8 + ifd_size(ifd0 + pointers)
+    blobs = []
+    for ptr, entries in children:
+        ifd0.append((ptr, 4, 1, struct.pack(bo + "I", off)))
+        blobs.append(write_ifd(entries, bo, off))
+        off += len(blobs[-1])
+    return write_header(byte_order) + write_ifd(ifd0, bo, 8) + b"".join(blobs)
 
 
 def insert_exif_jpeg(jpeg: bytes, tiff: bytes) -> bytes:
@@ -287,25 +191,8 @@ def insert_exif_jpeg(jpeg: bytes, tiff: bytes) -> bytes:
 
 def strip_exif_jpeg(jpeg: bytes) -> bytes:
     """Remove the APP1 Exif segment (if any) from a JPEG."""
-    if jpeg[:2] != b"\xff\xd8":
-        raise ValueError("exif: not a JPEG")
-    pos = 2
-    while pos + 4 <= len(jpeg):
-        if jpeg[pos] != 0xFF:
-            raise ValueError("exif: bad marker stream")
-        marker = jpeg[pos + 1]
-        if marker in (0xD8, 0x01) or 0xD0 <= marker <= 0xD7:
-            pos += 2
-            continue
-        if marker == 0xDA:
-            break
-        (seglen,) = struct.unpack_from(">H", jpeg, pos + 2)
-        if seglen < 2 or pos + 2 + seglen > len(jpeg):
-            raise ValueError("exif: segment overruns file")
-        if marker == 0xE1 and jpeg[pos + 4:pos + 10] == EXIF_HEADER:
-            return jpeg[:pos] + jpeg[pos + 2 + seglen:]
-        pos += 2 + seglen
-    return jpeg
+    seg = _find_app1(jpeg)
+    return jpeg if seg is None else jpeg[:seg[0]] + jpeg[seg[1]:]
 
 
 def scrub_gps_jpeg(jpeg: bytes, byte_order: str = "II") -> tuple[bytes, bool]:

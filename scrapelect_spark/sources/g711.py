@@ -17,7 +17,11 @@ are independent, so Spark parallelism is across documents.
 
 from __future__ import annotations
 
+import struct
+
 import numpy as np
+
+from .riff import read_wav, write_wav
 
 _BIAS = 0x84
 _SEG_AEND = np.array(
@@ -109,8 +113,6 @@ def encode_wav_g711(
     """int16 samples (1-D mono or ``(n, 2)`` stereo) → a standard
     G.711 WAV (8 bits/sample, fact chunk with the frame count —
     required for compressed format tags)."""
-    import struct
-
     if law not in _TAGS:
         raise ValueError(f"unknown G.711 law {law!r}")
     s = np.asarray(pcm16, dtype=np.int16)
@@ -122,49 +124,24 @@ def encode_wav_g711(
     if n == 0:
         raise ValueError("no samples")
     enc = encode_ulaw if law == "ulaw" else encode_alaw
-    data = enc(s.reshape(-1))  # channel-interleaved, 1 byte/sample
     fmt = struct.pack(
         "<HHIIHHH", _TAGS[law], nch, rate, rate * nch, nch, 8, 0
     )
-    fact = struct.pack("<I", n)
-
-    def chunk_(tag, body):
-        pad = b"\x00" if len(body) % 2 else b""
-        return tag + struct.pack("<I", len(body)) + body + pad
-
-    body = (
-        b"WAVE" + chunk_(b"fmt ", fmt) + chunk_(b"fact", fact)
-        + chunk_(b"data", data)
-    )
-    return b"RIFF" + struct.pack("<I", len(body)) + body
+    return write_wav(fmt, n, enc(s.reshape(-1)))  # channel-interleaved bytes
 
 
 def decode_wav_g711(data: bytes) -> tuple[np.ndarray, int]:
     """G.711 WAV bytes → (int16 samples — 1-D mono / ``(n, 2)``
-    stereo, sample rate)."""
-    import struct
-
-    if data[:4] != b"RIFF" or data[8:12] != b"WAVE":
-        raise ValueError("not a WAV")
-    pos = 12
-    fmt = raw = None
-    while pos + 8 <= len(data):
-        tag = data[pos : pos + 4]
-        (ln,) = struct.unpack("<I", data[pos + 4 : pos + 8])
-        body = data[pos + 8 : pos + 8 + ln]
-        pos += 8 + ln + (ln % 2)
-        if tag == b"fmt ":
-            fmt = struct.unpack("<HHIIHH", body[:16])
-        elif tag == b"data":
-            raw = body
-    if fmt is None or raw is None:
-        raise ValueError("missing fmt/data chunk")
-    tag_, nch, rate, _avg, _align, bits = fmt
+    stereo, sample rate).  A ``data`` chunk shorter than the ``fact``
+    frame count raises ``ValueError``."""
+    (tag_, nch, rate, _avg, _align, bits), _, fact_n, raw = read_wav(data)
     if tag_ not in (6, 7):
         raise ValueError(f"not G.711 (format tag 0x{tag_:X})")
     if nch not in (1, 2) or bits != 8:
         raise NotImplementedError("only mono/stereo 8-bit G.711 supported")
+    frames = len(raw) // nch
+    if fact_n is not None and frames < fact_n:
+        raise ValueError(f"truncated data: {frames} < {fact_n} samples")
     dec = decode_ulaw if tag_ == 7 else decode_alaw
-    flat = dec(raw[: len(raw) - (len(raw) % nch)])
-    out = flat.reshape(-1, nch)
+    out = dec(raw[: frames * nch]).reshape(-1, nch)
     return (out[:, 0] if nch == 1 else out), int(rate)

@@ -6,10 +6,14 @@ PNG/JPEG/GIF/BMP: scanned-document corpora (patents, books, archival
 scans) ship as strip-based TIFFs.  This module implements the
 baseline profile from the public TIFF 6.0 specification:
 
-- Header/IFD structure: ``II``/``MM`` byte orders, magic 42, 12-byte
-  IFD entries — the same layout sources/exif.py parses for APP1, but
-  with full array-valued tags (StripOffsets/StripByteCounts/
-  BitsPerSample/ColorMap) rather than EXIF's scalar subset.
+- IFD layer: ``II``/``MM`` byte orders, magic 42, 12-byte IFD
+  entries.  ``read_header`` and ``read_ifd`` (bounds-checked entries
+  as raw value bytes) read it; ``write_ifd`` lays out one IFD and its
+  overflow values, and ``ifd_size`` sizes one before its pointer
+  values are known.  sources/exif.py reads and writes the APP1
+  payload through these and keeps only the EXIF tag semantics; this
+  codec reads the array-valued tags (StripOffsets/StripByteCounts/
+  BitsPerSample/ColorMap).
 - Decoder: bilevel (1-bit, both photometric polarities), 8-bit
   grayscale, 8-bit palette-color (ColorMap's 16-bit entries scaled),
   RGB and RGBA (ExtraSamples alpha composited over white like the
@@ -38,6 +42,8 @@ graft brief.  Scale shape: one image per row through Arrow-batched
 from __future__ import annotations
 
 import struct
+from collections.abc import Container
+from itertools import accumulate
 
 import numpy as np
 
@@ -63,38 +69,90 @@ _T_EXTRA_SAMPLES = 338
 
 _TYPE_SIZES = {1: 1, 2: 1, 3: 2, 4: 4, 5: 8, 6: 1, 7: 1, 8: 2,
                9: 4, 10: 8}
+#: the array-valued types baseline decode reads (BYTE, SHORT, LONG)
+_ARRAY_FORMATS = {1: "B", 3: "H", 4: "I"}
 
 
-def _read_ifd_arrays(data: bytes, off: int, bo: str) -> dict:
-    """One IFD → {tag: tuple-of-ints} (array-valued, unlike the EXIF
-    reader's scalars).  RATIONALs and ASCII are skipped — baseline
-    image decode needs none."""
+# --- IFD layer (shared with sources/exif.py) ------------------------
+
+
+def read_header(data: bytes, prefix: str) -> tuple[str, int]:
+    """TIFF header → (``struct`` byte-order char, first IFD offset).
+    ``prefix`` (``tiff``/``exif``) starts every error message."""
+    if len(data) < 8:
+        raise ValueError(f"{prefix}: truncated header")
+    bo = {b"II": "<", b"MM": ">"}.get(data[:2])
+    if bo is None:
+        raise ValueError(f"{prefix}: bad byte-order mark")
+    magic, first = struct.unpack_from(bo + "HI", data, 2)
+    if magic != 42:
+        raise ValueError(f"{prefix}: bad magic")
+    return bo, first
+
+
+def read_ifd(
+    data: bytes, off: int, bo: str, types: Container[int], prefix: str,
+    max_entries: int,
+) -> tuple[list[tuple[int, int, int, bytes]], int]:
+    """The IFD at ``off`` → ([(tag, type, count, raw value bytes)],
+    next IFD offset).  Entries whose type is not in ``types`` are
+    skipped unread, as TIFF 6.0 readers skip what they do not know;
+    every offset is checked against ``len(data)`` before the read."""
     if off + 2 > len(data):
-        raise ValueError("tiff: IFD offset out of bounds")
+        raise ValueError(f"{prefix}: IFD offset out of bounds")
     (n,) = struct.unpack_from(bo + "H", data, off)
-    if n > _MAX_ENTRIES:
-        raise ValueError("tiff: too many IFD entries")
-    if off + 2 + 12 * n + 4 > len(data):
-        raise ValueError("tiff: IFD overruns payload")
-    out: dict[int, tuple[int, ...]] = {}
-    for i in range(n):
-        tag, typ, cnt = struct.unpack_from(
-            bo + "HHI", data, off + 2 + 12 * i
-        )
-        size = _TYPE_SIZES.get(typ)
-        if size is None or typ not in (1, 3, 4):
+    if n > max_entries:
+        raise ValueError(f"{prefix}: too many IFD entries")
+    end = off + 2 + 12 * n
+    if end + 4 > len(data):
+        raise ValueError(f"{prefix}: IFD overruns payload")
+    entries = []
+    for pos in range(off + 2, end, 12):
+        tag, typ, cnt, vpos = struct.unpack_from(bo + "HHII", data, pos)
+        if typ not in types:
             continue
-        total = size * cnt
-        voff = off + 2 + 12 * i + 8
-        if total > 4:
-            (vpos,) = struct.unpack_from(bo + "I", data, voff)
-            if vpos + total > len(data):
-                raise ValueError("tiff: value offset out of bounds")
+        total = _TYPE_SIZES[typ] * cnt
+        if total <= 4:
+            vpos = pos + 8
+        elif vpos + total > len(data):
+            raise ValueError(f"{prefix}: value offset out of bounds")
+        entries.append((tag, typ, cnt, data[vpos:vpos + total]))
+    return entries, struct.unpack_from(bo + "I", data, end)[0]
+
+
+def ifd_size(entries: list[tuple[int, int, int, bytes]]) -> int:
+    """Bytes :func:`write_ifd` emits for ``entries``: the IFD and the
+    values too long to sit in their entries.  Placeholder values of
+    the final length give the size before pointers are known."""
+    return 2 + 12 * len(entries) + 4 + sum(
+        len(raw) for *_, raw in entries if len(raw) > 4
+    )
+
+
+def write_ifd(
+    entries: list[tuple[int, int, int, bytes]], bo: str, base: int
+) -> bytes:
+    """One IFD at file offset ``base`` (entries sorted by tag, no next
+    IFD), followed by the values longer than 4 bytes in entry order."""
+    head = [struct.pack(bo + "H", len(entries))]
+    tail = []
+    pos = base + 2 + 12 * len(entries) + 4
+    for tag, typ, cnt, raw in sorted(entries, key=lambda e: e[0]):
+        if len(raw) > 4:
+            field = struct.pack(bo + "I", pos)
+            tail.append(raw)
+            pos += len(raw)
         else:
-            vpos = voff
-        fmt = {1: "B", 3: "H", 4: "I"}[typ]
-        out[tag] = struct.unpack_from(bo + str(cnt) + fmt, data, vpos)
-    return out
+            field = raw.ljust(4, b"\x00")
+        head.append(struct.pack(bo + "HHI", tag, typ, cnt) + field)
+    head.append(struct.pack(bo + "I", 0))
+    return b"".join(head + tail)
+
+
+def write_header(byte_order: str) -> bytes:
+    """The 8-byte header of a file whose first IFD follows it."""
+    bo = "<" if byte_order == "II" else ">"
+    return struct.pack(bo + "2sHI", byte_order.encode("ascii"), 42, 8)
 
 
 def _unpackbits(data: bytes, expected: int) -> bytes:
@@ -237,18 +295,12 @@ def _lzw_encode(data: bytes) -> bytes:
 
 def decode_tiff(data: bytes) -> np.ndarray:
     """TIFF bytes → HxWx3 uint8 RGB (alpha composited over white)."""
-    if len(data) < 8:
-        raise ValueError("tiff: truncated header")
-    if data[:2] == b"II":
-        bo = "<"
-    elif data[:2] == b"MM":
-        bo = ">"
-    else:
-        raise ValueError("tiff: bad byte-order mark")
-    magic, first = struct.unpack_from(bo + "HI", data, 2)
-    if magic != 42:
-        raise ValueError("tiff: bad magic")
-    tags = _read_ifd_arrays(data, first, bo)
+    bo, first = read_header(data, "tiff")
+    entries, _ = read_ifd(data, first, bo, _ARRAY_FORMATS, "tiff", _MAX_ENTRIES)
+    tags = {
+        tag: struct.unpack(f"{bo}{cnt}{_ARRAY_FORMATS[typ]}", raw)
+        for tag, typ, cnt, raw in entries
+    }
 
     def one(tag, default=None):
         v = tags.get(tag)
@@ -406,77 +458,32 @@ def encode_tiff(
             raw = _lzw_encode(raw)
         strips.append(raw)
 
-    n_strips = len(strips)
-    entries = []  # (tag, type, count, value-int or bytes)
+    def field(tag, typ, *vals):
+        fmt = f"{bo}{len(vals)}{_ARRAY_FORMATS[typ]}"
+        return tag, typ, len(vals), struct.pack(fmt, *vals)
 
-    def short(tag, *vals):
-        entries.append((tag, 3, len(vals), vals))
-
-    def longs(tag, *vals):
-        entries.append((tag, 4, len(vals), vals))
-
-    short(_T_WIDTH, w)
-    short(_T_LENGTH, h)
-    short(_T_BITS, *((8,) * spp))
-    short(_T_COMPRESSION, compression)
-    short(_T_PHOTOMETRIC, 1 if gray else 2)
-    longs(_T_STRIP_OFFSETS, *([0] * n_strips))  # patched below
-    short(_T_SAMPLES, spp)
-    short(_T_ROWS_PER_STRIP, rows_per_strip)
-    longs(_T_STRIP_COUNTS, *(len(s) for s in strips))
+    counts = [len(s) for s in strips]
+    entries = [
+        field(_T_WIDTH, 3, w),
+        field(_T_LENGTH, 3, h),
+        field(_T_BITS, 3, *((8,) * spp)),
+        field(_T_COMPRESSION, 3, compression),
+        field(_T_PHOTOMETRIC, 3, 1 if gray else 2),
+        field(_T_SAMPLES, 3, spp),
+        field(_T_ROWS_PER_STRIP, 3, rows_per_strip),
+        field(_T_STRIP_COUNTS, 4, *counts),
+    ]
     if predictor == 2:
-        short(_T_PREDICTOR, 2)
-    entries.sort(key=lambda e: e[0])
-
-    header = struct.pack(bo + "2sHI", byte_order.encode(), 42, 8)
-    ifd_size = 2 + 12 * len(entries) + 4
-    # layout: header(8) | IFD | overflow values | strip data
-    overflow_pos = 8 + ifd_size
-    overflow = bytearray()
-    fixed = []
-    for tag, typ, cnt, vals in entries:
-        unit = _TYPE_SIZES[typ]
-        fmt = {3: "H", 4: "I"}[typ]
-        payload = struct.pack(bo + str(cnt) + fmt, *vals)
-        if len(payload) <= 4:
-            fixed.append((tag, typ, cnt, payload.ljust(4, b"\x00"), None))
-        else:
-            fixed.append((tag, typ, cnt, None, len(overflow)))
-            overflow += payload
-    data_pos = overflow_pos + len(overflow)
-    # strip offsets now known: rebuild the offsets entry
-    strip_offsets = []
-    p = data_pos
-    for s in strips:
-        strip_offsets.append(p)
-        p += len(s)
-    out = bytearray(header)
-    out += struct.pack(bo + "H", len(entries))
-    for tag, typ, cnt, inline, ov in fixed:
-        if tag == _T_STRIP_OFFSETS:
-            payload = struct.pack(
-                bo + str(n_strips) + "I", *strip_offsets
-            )
-            if len(payload) <= 4:
-                out += struct.pack(bo + "HHI", tag, typ, cnt)
-                out += payload.ljust(4, b"\x00")
-            else:
-                # patch into the overflow area at its reserved slot
-                overflow[ov:ov + len(payload)] = payload
-                out += struct.pack(
-                    bo + "HHI", tag, typ, cnt
-                ) + struct.pack(bo + "I", overflow_pos + ov)
-            continue
-        out += struct.pack(bo + "HHI", tag, typ, cnt)
-        if inline is not None:
-            out += inline
-        else:
-            out += struct.pack(bo + "I", overflow_pos + ov)
-    out += struct.pack(bo + "I", 0)  # next IFD
-    out += overflow
-    for s in strips:
-        out += s
-    return bytes(out)
+        entries.append(field(_T_PREDICTOR, 3, 2))
+    # layout: header | IFD | values over 4 bytes | strips.  A zero
+    # StripOffsets of the final length sizes the IFD, which places
+    # the strips.
+    placeholder = field(_T_STRIP_OFFSETS, 4, *([0] * len(strips)))
+    start = 8 + ifd_size(entries + [placeholder])
+    entries.append(
+        field(_T_STRIP_OFFSETS, 4, *accumulate(counts[:-1], initial=start))
+    )
+    return write_header(byte_order) + write_ifd(entries, bo, 8) + b"".join(strips)
 
 
 def is_tiff(data: bytes) -> bool:

@@ -26,9 +26,9 @@ layer at all.
 
 from __future__ import annotations
 
-import struct
-
 import numpy as np
+
+from .riff import chunk, riff, walk
 
 _MAX_PIXELS = 1 << 24  # same decoder cap as the JPEG/GIF/BMP codecs
 
@@ -536,19 +536,12 @@ def decode_webp(data: bytes) -> np.ndarray:
     if data[:4] == b"RIFF":
         if len(data) < 12 or data[8:12] != b"WEBP":
             raise ValueError("webp: bad RIFF container")
-        pos = 12
-        payload = None
-        while pos + 8 <= len(data):
-            tag = data[pos : pos + 4]
-            (size,) = struct.unpack("<I", data[pos + 4 : pos + 8])
-            body = data[pos + 8 : pos + 8 + size]
-            if tag == b"VP8L":
-                payload = body
+        for fourcc, start, length in walk(data, 12, len(data)):
+            if fourcc == b"VP8L":
+                data = data[start : start + length]
                 break
-            pos += 8 + size + (size & 1)
-        if payload is None:
+        else:
             raise ValueError("webp: no VP8L chunk (lossy VP8 unsupported)")
-        data = payload
     if not data or data[0] != 0x2F:
         raise ValueError("vp8l: bad signature")
     br = BitReader(data)
@@ -840,9 +833,4 @@ def encode_webp(arr: np.ndarray) -> bytes:
             if dist_eb:
                 bw.write(dist_ev, dist_eb)
 
-    payload = bw.getvalue()
-    chunk = b"VP8L" + struct.pack("<I", len(payload)) + payload
-    if len(payload) & 1:
-        chunk += b"\x00"
-    riff = b"WEBP" + chunk
-    return b"RIFF" + struct.pack("<I", len(riff)) + riff
+    return riff(b"WEBP", chunk(b"VP8L", bw.getvalue()))
