@@ -27,10 +27,9 @@ from typing import Optional
 
 from .errors import ScrapelectError
 from .functions.dom import parse_html
-from .functions.interpreter import Interpreter
+from .functions.interpreter import Interpreter, corpus_fetcher
 from .functions.value import to_json_pretty
 from .plans.parser import parse_program
-from .repl import corpus_fetcher
 
 
 def _fetch_text(url: str) -> str:

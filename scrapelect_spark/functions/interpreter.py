@@ -15,8 +15,10 @@ Execution semantics preserved from the reference:
   Null, `*` = all matches in document order (execution_mode.rs:53-61);
 - element-valued bindings are dropped at block close
   (context.rs:142-149);
-- strict errors: first error aborts (the Spark operator captures them
-  per-row instead — permissive corpus mode).
+- strict errors: first error aborts.  The corpus paths run each page
+  through one kernel (``operators.extract.evaluate_page``), which turns
+  a ``ScrapelectError`` into that page's error value; any other
+  exception fails the task.
 
 Selectors are compiled once per process via an lru-cache keyed by the
 (frozen, hashable) Selector AST node — the driver warms it at compile
@@ -104,6 +106,31 @@ class Scope:
 
 #: fetcher contract: canonical-ish URL string -> parsed document root
 Fetcher = Callable[[str], ElementNode]
+
+
+def corpus_fetcher(corpus: dict[str, str]) -> Callable[[str], str]:
+    """``url -> html`` over an in-memory corpus, the resolver behind
+    ``extract()``'s URL recursion, the REPL and the CLI's ``file://``
+    reads.  A URL missing from the corpus is retried without its
+    trailing ``/``; a ``file://`` URL reads the local file (reference
+    parity, mod.rs:70-72); anything else raises ``EvalError``."""
+
+    def fetch(url: str) -> str:
+        html = corpus.get(url)
+        if html is None and url.endswith("/"):
+            html = corpus.get(url[:-1])
+        if html is None and url.startswith("file://"):
+            path = urlsplit(url).path
+            try:
+                with open(path) as f:
+                    return f.read()
+            except OSError as e:
+                raise EvalError(f"reading from file `{path}` failed: {e}")
+        if html is None:
+            raise EvalError(f"request to `{url}` failed: not in corpus")
+        return html
+
+    return fetch
 
 
 def _no_fetcher(url: str) -> ElementNode:

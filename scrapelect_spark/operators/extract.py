@@ -13,8 +13,12 @@ per page — the reference recompiles selectors on every block evaluation
 
 Error model: the reference is fail-fast (first error aborts the run).
 A corpus-scale engine must not lose a 10^10-page job to one bad page,
-so errors are captured per-row into an ``error`` column; pass
-``fail_fast=True`` for reference-parity abort semantics (golden tests).
+so :func:`evaluate_page` — the one place a program meets a page, for
+``extract()``, the crawl's extract pass, the recrawl and the
+sequential reference crawler alike — turns a ``ScrapelectError`` into
+that page's ``error`` value.  Any other exception is a bug, not a bad
+page: it propagates and fails the task.  Pass ``fail_fast=True`` for
+reference-parity abort semantics (golden tests).
 
 Scale notes (100 TB design point):
 - extraction is embarrassingly parallel: no shuffle, no driver
@@ -31,17 +35,17 @@ Scale notes (100 TB design point):
 
 from __future__ import annotations
 
-from typing import Iterator, Optional
+from typing import Optional
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import StringType, StructField, StructType
 
-from ..errors import EvalError, ScrapelectError
+from ..errors import ScrapelectError
 from ..functions.dom import parse_html
-from ..functions.interpreter import Interpreter, warm_selectors
+from ..functions.interpreter import Interpreter, corpus_fetcher, warm_selectors
 from ..functions.value import to_json
 from ..plans.parser import parse_program
+from .tables import map_rows, per_task
 
 RESULT_SCHEMA = StructType(
     [
@@ -60,6 +64,19 @@ def compile_scrp(program: str):
     return statements
 
 
+def evaluate_page(
+    interp: Interpreter, statements, url: str, root
+) -> tuple[Optional[str], Optional[str]]:
+    """The page kernel: evaluate a compiled program on one parsed page
+    → ``(result, error)``.  ``result`` is the record's compact JSON; a
+    ``ScrapelectError`` (the program failing on this page) gives its
+    message as ``error`` instead.  Any other exception propagates."""
+    try:
+        return to_json(interp.interpret_document(statements, root, url)), None
+    except ScrapelectError as e:
+        return None, str(e)
+
+
 def extract(
     pages: DataFrame,
     program: str,
@@ -75,9 +92,10 @@ def extract(
     ``result`` is deterministic compact JSON (sorted structure keys —
     BTreeMap serialization parity, value.rs:9/main.rs:62).
 
-    ``corpus`` (url → html) backs URL recursion inside the UDF; it is
-    broadcast once per call, and only when given.  At crawl scale the
-    frontier loop owns link-following instead.
+    ``corpus`` (url → html) backs URL recursion inside the UDF through
+    ``functions.interpreter.corpus_fetcher``, with one parse cache per
+    task; it is broadcast once per call, and only when given.  At crawl
+    scale the frontier loop owns link-following instead.
 
     ``registry`` is the filter table the interpreter dispatches on; the
     default is the full ``FILTERS``.  Pass ``REFERENCE_FILTERS`` for
@@ -91,55 +109,26 @@ def extract(
     statements = compile_scrp(program)
     corpus_bc = pages.sparkSession.sparkContext.broadcast(corpus) if corpus else None
 
-    def run_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def make_interpreter() -> Interpreter:
         from ..functions.filters import FILTERS
 
-        filters = registry or FILTERS
-        local_corpus = corpus_bc.value if corpus_bc is not None else {}
-        doc_cache: dict[str, object] = {}
+        resolve = corpus_fetcher(corpus_bc.value if corpus_bc is not None else {})
+        docs: dict[str, object] = {}
 
         def fetch(url: str):
-            if url in doc_cache:
-                return doc_cache[url]
-            html = local_corpus.get(url)
-            if html is None and url.endswith("/") and url[:-1] in local_corpus:
-                html = local_corpus[url[:-1]]
-            if html is None and url.startswith("file://"):
-                # reference parity: the `file` scheme reads local files
-                # (mod.rs:70-72) — executor-local paths only
-                from urllib.parse import urlsplit
+            if url not in docs:
+                docs[url] = parse_html(resolve(url))
+            return docs[url]
 
-                try:
-                    with open(urlsplit(url).path) as f:
-                        html = f.read()
-                except OSError as e:
-                    raise EvalError(
-                        f"reading from file `{urlsplit(url).path}` failed: {e}"
-                    )
-            if html is None:
-                raise EvalError(f"request to `{url}` failed: not in corpus")
-            doc = parse_html(html)
-            doc_cache[url] = doc
-            return doc
+        return Interpreter(fetcher=fetch, registry=registry or FILTERS)
 
-        interp = Interpreter(fetcher=fetch, registry=filters)
+    interpreter = per_task(make_interpreter)
 
-        for batch in batches:
-            urls = batch[url_col].tolist()
-            htmls = batch[html_col].tolist()
-            results: list[Optional[str]] = []
-            errors: list[Optional[str]] = []
-            for url, html in zip(urls, htmls):
-                try:
-                    root = parse_html(html if html is not None else "")
-                    out = interp.interpret_document(statements, root, url)
-                    results.append(to_json(out))
-                    errors.append(None)
-                except ScrapelectError as e:
-                    if fail_fast:
-                        raise
-                    results.append(None)
-                    errors.append(str(e))
-            yield pd.DataFrame({"url": urls, "result": results, "error": errors})
+    def page(url, html):
+        root = parse_html(html if html is not None else "")
+        result, error = evaluate_page(interpreter(), statements, url, root)
+        if error is not None and fail_fast:
+            raise ScrapelectError(error)
+        yield {"url": url, "result": result, "error": error}
 
-    return pages.mapInPandas(run_batches, schema=RESULT_SCHEMA)
+    return map_rows(pages.select(url_col, html_col), page, RESULT_SCHEMA)

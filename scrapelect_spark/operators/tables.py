@@ -255,3 +255,18 @@ def map_rows(df: DataFrame, fn, schema, errors=(), on_error=None) -> DataFrame:
             yield pd.DataFrame({c: pd.Series(v, dtype=object) for c, v in cols.items()})
 
     return df.mapInPandas(run, schema=schema)
+
+
+def per_task(make):
+    """A getter for one ``make()`` result per task, built on first use:
+    for per-task state (an interpreter, a parse cache) in a ``map_rows``
+    kernel.  Spark unpickles a task's function afresh, so the cell this
+    closes over starts empty in every task."""
+    cell = []
+
+    def get():
+        if not cell:
+            cell.append(make())
+        return cell[0]
+
+    return get

@@ -34,10 +34,15 @@ import sys
 from dataclasses import dataclass, field
 from typing import Any, Callable, Optional, TextIO
 
-from .errors import EvalError, ParseError, ScrapelectError
+from .errors import EvalError, ScrapelectError
 from .functions.dom import ElementNode, parse_html
 from .functions.filters import FILTERS, FilterSpec
-from .functions.interpreter import Interpreter, Scope, compile_selector
+from .functions.interpreter import (
+    Interpreter,
+    Scope,
+    compile_selector,
+    corpus_fetcher,
+)
 from .functions.value import bindings_into_data, is_element
 from .plans.parser import Parser, parse_string_literal
 from .plans.scanner import Token
@@ -115,28 +120,6 @@ class Frame:
 
 #: fetcher: url -> html text
 Fetcher = Callable[[str], str]
-
-
-def corpus_fetcher(corpus: dict[str, str]) -> Fetcher:
-    """In-memory corpus + ``file://`` fetcher (extract.py parity)."""
-
-    def fetch(url: str) -> str:
-        html = corpus.get(url)
-        if html is None and url.startswith("file://"):
-            from urllib.parse import urlsplit
-
-            try:
-                with open(urlsplit(url).path) as f:
-                    html = f.read()
-            except OSError as e:
-                raise EvalError(
-                    f"reading from file `{urlsplit(url).path}` failed: {e}"
-                )
-        if html is None:
-            raise EvalError(f"request to `{url}` failed: not in corpus")
-        return html
-
-    return fetch
 
 
 class Repl:

@@ -154,9 +154,11 @@ def avi_video_fourcc(data: bytes) -> bytes:
 def avi_meta(data: bytes) -> tuple[int, int, int, int]:
     """(width, height, n_frames, fps) from the avih/strh headers."""
     for start, end in _top_lists(data, b"hdrl"):
-        for f2, s2, _ in walk(data, start, end):
+        for f2, s2, l2 in walk(data, start, end):
             if f2 == b"avih":
-                vals = struct.unpack("<14I", data[s2 : s2 + 56])
+                if l2 < 56 or s2 + 56 > len(data):
+                    raise ValueError("truncated avih header")
+                vals = struct.unpack_from("<14I", data, s2)
                 fps = 1_000_000 // vals[0] if vals[0] else 0
                 return int(vals[8]), int(vals[9]), int(vals[4]), int(fps)
     raise ValueError("no avih header")

@@ -72,6 +72,8 @@ def _read_ifd(data: bytes, off: int, bo: str, out: dict, depth: int,
         raise ValueError("exif: IFD nesting too deep")
     entries, nxt = read_ifd(data, off, bo, _TYPES, "exif", _MAX_ENTRIES)
     for tag, typ, cnt, raw in entries:
+        if cnt == 0 and typ != 2:
+            raise ValueError(f"exif: tag {tag} has count 0")
         if typ == 4 and not gps and tag in (TAG_EXIF_IFD, TAG_GPS_IFD):
             (sub,) = struct.unpack_from(bo + "I", raw)
             _read_ifd(data, sub, bo, out, depth + 1, gps=tag == TAG_GPS_IFD)

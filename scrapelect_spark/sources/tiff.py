@@ -308,6 +308,8 @@ def decode_tiff(data: bytes) -> np.ndarray:
             if default is None:
                 raise ValueError(f"tiff: missing required tag {tag}")
             return default
+        if not v:
+            raise ValueError(f"tiff: tag {tag} has count 0")
         return int(v[0])
 
     w = one(_T_WIDTH)

@@ -30,10 +30,12 @@ else, so the re-run batch never appends on top of them.
 Python pass budget: after the fetch (a JVM join against the corpus,
 which CorpusFetcher reads once and caches), a batch runs exactly two
 Python passes; everything else is JVM-side.
-- The extract UDF (``_process_batch_udf``) parses each page once and
-  emits its record plus every frontier candidate: each followable
-  link and each redirect target, already carrying its ``host`` and
-  robots ``excluded`` value.
+- The extract pass (``_extract_pass``, one ``map_rows``) parses each
+  page once and emits its record plus every frontier candidate: each
+  followable link and each redirect target, already carrying its
+  ``host`` and robots ``excluded`` value.  The record comes from the
+  page kernel ``operators.extract.evaluate_page``: a program error
+  is the page's ``error`` record, any other exception fails the task.
 - One cogroup per bucket (``urlseen.probe_and_merge_df``) drops the
   bucket's duplicate candidates (a URL's rows share its bucket, so no
   separate dedup shuffle runs), tags each distinct candidate against
@@ -66,10 +68,9 @@ from __future__ import annotations
 
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
-from typing import Iterator, Optional
+from typing import Optional
 from urllib.parse import urlsplit
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -81,9 +82,9 @@ from pyspark.sql.types import (
 )
 
 from ..functions.dom import parse_html
-from ..functions.interpreter import Interpreter, warm_selectors
-from ..functions.value import to_json
-from ..plans.parser import parse_program
+from ..functions.interpreter import Interpreter
+from ..operators.extract import compile_scrp, evaluate_page
+from ..operators.tables import map_rows, per_task
 from ..sources.checkpoint import SnapshotTable
 from .canonicalize import canonicalize_url, host_of, resolve_and_canonicalize
 from .politeness import repartition_for_fetch, select_batch
@@ -226,10 +227,7 @@ class Crawler:
         self.seeds = seeds
         self.robots = robots or RobotsPolicy({}, self.cfg.batch_seconds)
         self.program = program
-        self.statements = None
-        if program is not None:
-            self.statements = parse_program(program)
-            warm_selectors(self.statements)
+        self.statements = compile_scrp(program) if program is not None else None
         self.corpus = corpus
         if fetcher is None:
             from ..sources.fetch import CorpusFetcher
@@ -397,74 +395,55 @@ class Crawler:
             df, mode="overwrite", metrics={"batch": batch}
         )
 
-    def _process_batch_udf(self):
-        """The batch's extract pass: per fetched page, its record (or
-        error) and its frontier candidates — each followable link
-        (allowed scheme, on a page shallower than ``max_depth``) and
-        each redirect target, already carrying the frontier ``host``
-        and ``excluded`` columns."""
+    def _extract_pass(self, fetched: DataFrame) -> DataFrame:
+        """The batch's extract pass over the fetched pages: per page, its
+        record or error (the page kernel, on an interpreter with no
+        fetcher; a page that did not fetch is an error) and its frontier
+        candidates — each followable link (allowed scheme, on a page
+        shallower than ``max_depth``) and each redirect target, already
+        carrying the frontier ``host`` and ``excluded`` columns."""
         statements = self.statements
         robots = self.robots
         max_depth = self.cfg.max_depth
+        interpreter = per_task(Interpreter)
+        if "final_url" not in fetched.columns:
+            fetched = fetched.withColumn("final_url", F.lit(None).cast("string"))
 
-        def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            interp = Interpreter() if statements is not None else None
-            for pdf in batches:
-                out: dict[str, list] = {
-                    k.name: [] for k in PROCESS_SCHEMA.fields
+        def page(url, html, page_seq, depth, final_url):
+            def row(kind, seq, value, host=None, excluded=None):
+                return {
+                    "page_url": url, "page_seq": page_seq, "depth": depth,
+                    "kind": kind, "seq": seq, "value": value,
+                    "host": host, "excluded": excluded,
                 }
 
-                def emit(url, seq_, depth, kind, i, value, host=None, excluded=None):
-                    out["page_url"].append(url)
-                    out["page_seq"].append(seq_)
-                    out["depth"].append(depth)
-                    out["kind"].append(kind)
-                    out["seq"].append(i)
-                    out["value"].append(value)
-                    out["host"].append(host)
-                    out["excluded"].append(excluded)
+            if html is None:
+                yield row("error", 0, "fetch failed: 404")
+                return
+            # a 3xx chain was followed: relative links resolve against
+            # the URL the body was SERVED from, and the target is
+            # recorded so the frontier can mark it seen-but-not-queued
+            # (its content is already held under the requested URL)
+            base = final_url or url
+            if base != url:
+                canon = canonicalize_url(base)
+                if canon is not None and canon != canonicalize_url(url):
+                    yield row("redirect", -1, canon, host_of(canon), "redirect")
+            root = parse_html(html)
+            directives = page_robots_directives(root)
+            if depth < max_depth and "nofollow" not in directives:
+                for i, target in enumerate(extract_links(root, base)):
+                    if target is not None and urlsplit(target).scheme in ALLOWED_SCHEMES:
+                        yield row("link", i, target, *robots_fields(target, robots))
+            if statements is not None and "noindex" not in directives:
+                result, error = evaluate_page(interpreter(), statements, url, root)
+                yield row("record", 0, result) if error is None else row("error", 0, error)
 
-                for url, html, pseq, depth, finu in zip(
-                    pdf["url"], pdf["html"], pdf["page_seq_assigned"],
-                    pdf["depth"], pdf["final_url"],
-                ):
-                    if html is None:
-                        emit(url, pseq, depth, "error", 0, "fetch failed: 404")
-                        continue
-                    # a 3xx chain was followed: relative links resolve
-                    # against the URL the body was SERVED from, and the
-                    # target is recorded so the frontier can mark it
-                    # seen-but-not-queued (its content is already held
-                    # under the requested URL)
-                    base = finu if isinstance(finu, str) and finu else url
-                    if base != url:
-                        canon = canonicalize_url(base)
-                        if canon is not None and canon != canonicalize_url(url):
-                            emit(
-                                url, pseq, depth, "redirect", -1, canon,
-                                host_of(canon), "redirect",
-                            )
-                    root = parse_html(html)
-                    directives = page_robots_directives(root)
-                    if depth < max_depth and "nofollow" not in directives:
-                        for i, target in enumerate(extract_links(root, base)):
-                            if (
-                                target is not None
-                                and urlsplit(target).scheme in ALLOWED_SCHEMES
-                            ):
-                                emit(
-                                    url, pseq, depth, "link", i, target,
-                                    *robots_fields(target, robots),
-                                )
-                    if interp is not None and "noindex" not in directives:
-                        try:
-                            rec = interp.interpret_document(statements, root, url)
-                            emit(url, pseq, depth, "record", 0, to_json(rec))
-                        except Exception as e:  # permissive corpus mode
-                            emit(url, pseq, depth, "error", 0, str(e))
-                yield pd.DataFrame(out)
-
-        return process
+        return map_rows(
+            fetched.select("url", "html", "page_seq_assigned", "depth", "final_url"),
+            page,
+            PROCESS_SCHEMA,
+        )
 
     def _candidate_pass(self, processed: DataFrame) -> DataFrame:
         """The batch's frontier candidates, run through one cogroup per
@@ -644,17 +623,7 @@ class Crawler:
 
         # fetch stage is pluggable: CorpusFetcher (corpus join — the
         # sandbox/replay path) or HttpFetcher (real GETs in mapInPandas)
-        fetched = self.fetcher.fetch(claimed)
-
-        has_final = "final_url" in fetched.columns
-        fin_col = (
-            F.col("final_url") if has_final
-            else F.lit(None).cast("string").alias("final_url")
-        )
-        processed = fetched.select(
-            "url", "html", "page_seq_assigned", "depth", fin_col
-        ).mapInPandas(self._process_batch_udf(), schema=PROCESS_SCHEMA)
-        processed = processed.cache()
+        processed = self._extract_pass(self.fetcher.fetch(claimed)).cache()
         cached.append(processed)
 
         # --- pages log ---

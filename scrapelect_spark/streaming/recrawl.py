@@ -16,7 +16,10 @@ individually gated:
   (integer staleness score, global top-k via TakeOrderedAndProject);
 - transfer   — conditional GETs: a 304 costs a header round-trip,
   no body, no parse;
-- processing — the scrp engine re-runs only over the changed slice.
+- processing — ``operators.extract.extract()`` re-runs the program
+  over the changed slice only, so a page's record or error is the one
+  ``extract()`` gives it; a non-scrp exception fails the task, and URL
+  recursion resolves against an empty corpus (a "not in corpus" error).
 
 Scale shape at the 10^10-URL design point: the store is a bucketed
 table; the pass touches ``budget`` rows of it (top-k + one url-key
@@ -29,16 +32,10 @@ anti-join, nothing driver-side but the top-k heads.
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.dom import parse_html
-from ..functions.interpreter import Interpreter
-from ..functions.value import to_json
-from ..plans.parser import parse_program
+from ..operators.extract import compile_scrp, extract
 
 #: validator-store columns (the pass preserves this schema exactly)
 STORE_COLS = (
@@ -90,33 +87,12 @@ class RecrawlPass:
     ):
         self.spark = spark
         self.fetcher = fetcher
-        self.statements = parse_program(program) if program else None
+        self.program = program or None
+        if self.program is not None:
+            compile_scrp(self.program)  # a bad program fails here, not mid-pass
         self.budget = budget
         self.fetch_partitions = fetch_partitions
         self.salt_buckets = salt_buckets
-
-    # -- extraction over the changed slice only ---------------------
-    def _extract_udf(self):
-        statements = self.statements
-
-        def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            interp = Interpreter()
-            for pdf in batches:
-                urls, kinds, values = [], [], []
-                for url, html in zip(pdf["url"], pdf["html"]):
-                    try:
-                        rec = interp.interpret_document(
-                            statements, parse_html(html), url
-                        )
-                        kinds.append("record")
-                        values.append(to_json(rec))
-                    except Exception as e:  # permissive corpus mode
-                        kinds.append("error")
-                        values.append(str(e))
-                    urls.append(url)
-                yield pd.DataFrame({"url": urls, "kind": kinds, "value": values})
-
-        return run
 
     def run(
         self, store: DataFrame, now_s: int, store_rows: int | None = None
@@ -222,9 +198,11 @@ class RecrawlPass:
         changed = j.filter(F.col("outcome") == "changed").select(
             "url", F.col("f_html").alias("html")
         )
-        if self.statements is not None:
-            records = changed.mapInPandas(
-                self._extract_udf(), schema="url string, kind string, value string"
+        if self.program is not None:
+            records = extract(changed, self.program).select(
+                "url",
+                F.when(F.col("error").isNull(), "record").otherwise("error").alias("kind"),
+                F.coalesce("result", "error").alias("value"),
             )
         else:
             records = changed.select(

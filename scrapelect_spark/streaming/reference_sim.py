@@ -8,8 +8,10 @@ per-host politeness budget, following links in document order, with an
 exact URL-seen set.  The Spark crawl (crawl.py) must reproduce this
 byte-for-byte — same visit log, same seen set, same extraction output
 (north_rule).  Shares ``extract_links``, canonicalization, robots and
-the scrp engine with the distributed path so any divergence is a
-scheduling bug, not a parsing one.
+the page kernel (``operators.extract.evaluate_page``) with the
+distributed path so any divergence is a scheduling bug, not a parsing
+one.  A page whose program fails gets no record (the crawl keeps its
+error row instead); any other exception propagates.
 """
 
 from __future__ import annotations
@@ -18,9 +20,8 @@ from typing import Optional
 from urllib.parse import urlsplit
 
 from ..functions.dom import parse_html
-from ..functions.interpreter import Interpreter, warm_selectors
-from ..functions.value import to_json
-from ..plans.parser import parse_program
+from ..functions.interpreter import Interpreter
+from ..operators.extract import compile_scrp, evaluate_page
 from .canonicalize import canonicalize_url, host_of
 from .crawl import (
     ALLOWED_SCHEMES,
@@ -43,10 +44,7 @@ class SequentialCrawler:
         self.corpus = corpus
         self.cfg = config or CrawlConfig()
         self.robots = robots or RobotsPolicy({}, self.cfg.batch_seconds)
-        self.statements = None
-        if program is not None:
-            self.statements = parse_program(program)
-            warm_selectors(self.statements)
+        self.statements = compile_scrp(program) if program is not None else None
         self.interp = Interpreter()
 
         # queued entries: (priority, depth, page_seq, link_seq, url)
@@ -104,13 +102,9 @@ class SequentialCrawler:
             root = parse_html(html)
             directives = page_robots_directives(root)
             if self.statements is not None and "noindex" not in directives:
-                try:
-                    rec = self.interp.interpret_document(
-                        self.statements, root, url
-                    )
-                    self.records[url] = to_json(rec)
-                except Exception:
-                    pass
+                result, _ = evaluate_page(self.interp, self.statements, url, root)
+                if result is not None:
+                    self.records[url] = result
             if depth >= self.cfg.max_depth:
                 continue
             if "nofollow" in directives:

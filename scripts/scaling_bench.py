@@ -112,7 +112,7 @@ out["extract_pages_per_sec"] = N_EX / best
 pages.unpersist()
 
 # --- crawl_stage: fetch-join + link/record extraction of one claimed batch ---
-from scrapelect_spark.streaming.crawl import Crawler, CrawlConfig, PROCESS_SCHEMA
+from scrapelect_spark.streaming.crawl import Crawler, CrawlConfig
 N_CS = SIZES["n_cs"]
 corpus = heavy_pages(N_CS, items=60)
 claimed = (corpus.select("url")
@@ -125,13 +125,7 @@ crawler = Crawler(spark, tempfile.mkdtemp(), corpus, [], program=PROGRAM, config
 from scrapelect_spark.streaming.politeness import repartition_for_fetch
 def crawl_stage():
     fetched = claimed.join(F.broadcast(corpus), on="url", how="left")
-    proc = fetched.select(
-        "url", "html", "page_seq_assigned", "depth",
-        # corpus replay has no redirects; the process UDF reads the
-        # column unconditionally (crawl.py guards the same way)
-        F.lit(None).cast("string").alias("final_url"),
-    ).mapInPandas(
-        crawler._process_batch_udf(), schema=PROCESS_SCHEMA)
+    proc = crawler._extract_pass(fetched)
     proc.write.format("noop").mode("overwrite").save()
 crawl_stage()  # warm (full pass: all partitions, all workers)
 best = float("inf")

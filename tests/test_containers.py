@@ -52,6 +52,55 @@ def test_ifd_write_read_roundtrip(byte_order):
         T.read_ifd(blob, base, bo, (3,), "exif", 4)
 
 
+def _zero_count(blob: bytes, tag: int) -> bytes:
+    """``blob`` with the count of the first IFD's ``tag`` entry set to 0."""
+    bo, off = T.read_header(blob, "tiff")
+    (n,) = struct.unpack_from(bo + "H", blob, off)
+    for pos in range(off + 2, off + 2 + 12 * n, 12):
+        if struct.unpack_from(bo + "H", blob, pos)[0] == tag:
+            return blob[: pos + 4] + struct.pack(bo + "I", 0) + blob[pos + 8 :]
+    raise AssertionError(f"no tag {tag}")
+
+
+@pytest.mark.parametrize("byte_order", ["II", "MM"])
+def test_exif_entry_with_count_0_is_a_value_error(byte_order):
+    from scrapelect_spark.sources.exif import TAG_ORIENTATION, build_tiff, parse_tiff
+
+    blob = build_tiff({TAG_ORIENTATION: 6}, byte_order)
+    assert parse_tiff(blob)[TAG_ORIENTATION] == 6
+    with pytest.raises(ValueError, match="^exif: tag 274 has count 0"):
+        parse_tiff(_zero_count(blob, TAG_ORIENTATION))
+
+
+@pytest.mark.parametrize("byte_order", ["II", "MM"])
+def test_tiff_width_with_count_0_is_a_value_error(byte_order):
+    blob = T.encode_tiff(_image(4, 6, 3, seed=1), byte_order=byte_order)
+    assert T.decode_tiff(blob).shape == (4, 6, 3)
+    with pytest.raises(ValueError, match="^tiff: tag 256 has count 0"):
+        T.decode_tiff(_zero_count(blob, 256))
+
+
+@pytest.mark.parametrize("cut", [20, 55])
+def test_avi_cut_inside_avih_is_a_value_error(cut):
+    from scrapelect_spark.sources.avi import avi_meta
+
+    data = encode_avi_mjpeg([_image(16, 24, 3, seed=0)], fps=5)
+    assert avi_meta(data) == (24, 16, 1, 5)
+    body = data.index(b"avih") + 8
+    with pytest.raises(ValueError, match="^truncated avih header"):
+        avi_meta(data[: body + cut])
+
+
+def test_avi_avih_declared_short_is_a_value_error():
+    from scrapelect_spark.sources.avi import avi_meta
+
+    data = encode_avi_mjpeg([_image(16, 24, 3, seed=0)], fps=5)
+    at = data.index(b"avih") + 4
+    short = data[:at] + struct.pack("<I", 8) + data[at + 4 :]
+    with pytest.raises(ValueError, match="^truncated avih header"):
+        avi_meta(short)
+
+
 def test_riff_walk_yields_the_frames_before_a_cut():
     from scrapelect_spark.sources.avi import avi_frame_chunks
 

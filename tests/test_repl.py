@@ -181,3 +181,14 @@ def test_parse_error_is_reported_not_fatal():
     )
     assert "Error:" in err
     assert 'y: "ok"' in out  # loop survives the parse error
+
+
+def test_open_retries_without_the_trailing_slash():
+    """The REPL resolves URLs like ``extract()``: a URL missing from the
+    corpus is retried without its trailing ``/``."""
+    out, err = run_session(
+        ['/open "http://repl.test/page/"', "t: h1 { x: $element | text(); };", "/exit"],
+        corpus={"http://repl.test/page": PAGE},
+    )
+    assert err == ""
+    assert '"x": "Hello"' in out

@@ -175,8 +175,6 @@ def test_scan_partitions_small_frame_is_one(spark):
 #: the only operators that call ``mapInPandas`` themselves, and why
 BATCH_LEVEL = {
     "tables.py:map_rows": "the per-row kernel applier itself",
-    "extract.py:extract": "per-partition state: the Interpreter, the "
-    "broadcast corpus and the URL-recursion document cache",
     "warc_io.py:warc_export": "one WARC segment per Arrow batch, not per row",
 }
 
