@@ -27,31 +27,9 @@ from typing import Optional
 
 from .errors import ScrapelectError
 from .functions.dom import parse_html
-from .functions.interpreter import Interpreter, corpus_fetcher
+from .functions.interpreter import Interpreter, fetch_text
 from .functions.value import to_json_pretty
 from .plans.parser import parse_program
-
-
-def _fetch_text(url: str) -> str:
-    """file:// via the corpus fetcher; http(s) with the reference UA.
-    Failures raise EvalError so they print as interpreter errors, the
-    way the reference surfaces reqwest failures."""
-    if url.startswith("file://"):
-        return corpus_fetcher({})(url)
-    import urllib.error
-    import urllib.request
-
-    from .errors import EvalError
-    from .sources.fetch import HttpFetcher
-
-    req = urllib.request.Request(
-        url, headers={"User-Agent": HttpFetcher.REFERENCE_UA}
-    )
-    try:
-        with urllib.request.urlopen(req, timeout=10.0) as resp:
-            return resp.read().decode("utf-8", errors="replace")
-    except (urllib.error.URLError, OSError) as e:
-        raise EvalError(f"request to `{url}` failed: {e}") from e
 
 
 def _report(context: str, cause: Optional[str], err) -> None:
@@ -76,7 +54,7 @@ def run(file: str, url: str, out=None, err=None) -> int:
     except ScrapelectError as e:
         _report(f"parse error in {file}:", str(e), err)
         return 1
-    interp = Interpreter(fetcher=lambda u: parse_html(_fetch_text(u)))
+    interp = Interpreter(fetcher=lambda u: parse_html(fetch_text(u)))
     try:
         results = interp.interpret(ast, url)
     except ScrapelectError as e:

@@ -133,6 +133,26 @@ def corpus_fetcher(corpus: dict[str, str]) -> Callable[[str], str]:
     return fetch
 
 
+def fetch_text(url: str) -> str:
+    """``url -> html`` for the CLI and the REPL: ``file://`` through
+    :func:`corpus_fetcher`, http(s) with the reference User-Agent.
+    Failures raise ``EvalError``, so they print as interpreter errors,
+    the way the reference surfaces reqwest failures."""
+    if url.startswith("file://"):
+        return corpus_fetcher({})(url)
+    import urllib.error
+    import urllib.request
+
+    from ..sources.fetch import HttpFetcher
+
+    req = urllib.request.Request(url, headers={"User-Agent": HttpFetcher.REFERENCE_UA})
+    try:
+        with urllib.request.urlopen(req, timeout=10.0) as resp:
+            return resp.read().decode("utf-8", errors="replace")
+    except (urllib.error.URLError, OSError) as e:
+        raise EvalError(f"request to `{url}` failed: {e}") from e
+
+
 def _no_fetcher(url: str) -> ElementNode:
     raise EvalError(
         f"URL recursion to `{url}` requires a fetcher (none configured)"

@@ -39,7 +39,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .tables import load, loop_shuffle, scan_partitions
+from .tables import load, scan_partitions, sized_session
 
 _DEC = "decimal(28,12)"
 _PAGERANK_ROUNDS = 8
@@ -115,37 +115,38 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 8-round loop schedules input-proportional stages instead of
     # shuffle.partitions-sized ones — at bench scale each round is a
     # couple of tasks, at 10^10 nodes the same derivation yields
-    # thousands of partitions.
+    # thousands of partitions.  The loop plans in a child session
+    # carrying that count; the caller's session is never written.
     p = scan_partitions(d)
-    with loop_shuffle(spark, p):
-        edges = _link_edges(d, n).repartition(p, "src").persist()
-        nodes = (
-            d.select(F.col("doc_id").alias("node"))
-            .repartition(p, "node")
-            .persist()
-        )
-        try:
-            edges.count()
-            nodes.count()
-            ranks = nodes.select("node", F.lit(1.0 / n).alias("rank")).persist()
-            ranks.count()
-            for _ in range(_PAGERANK_ROUNDS):
-                nxt = _pagerank_round(nodes, edges, ranks, base).persist()
-                nxt.count()
-                ranks.unpersist()
-                ranks = nxt
-            # The N-row rank vector is NEVER collected to the driver (at
-            # 10^10 nodes that is fatal): the result stays a distributed
-            # DataFrame backed by the final round's cache — a production
-            # run writes it straight back to the frontier priority table.
-            # The final cache is deliberately left alive for the consumer;
-            # if evicted, the deterministic lineage recomputes.
-            return ranks.select(
-                "node", F.round("rank", 12).alias("rank")
-            ).orderBy("node")
-        finally:
-            edges.unpersist()
-            nodes.unpersist()
+    d = load(sized_session(spark, p), sf_dir, "documents")
+    edges = _link_edges(d, n).repartition(p, "src").persist()
+    nodes = (
+        d.select(F.col("doc_id").alias("node"))
+        .repartition(p, "node")
+        .persist()
+    )
+    try:
+        edges.count()
+        nodes.count()
+        ranks = nodes.select("node", F.lit(1.0 / n).alias("rank")).persist()
+        ranks.count()
+        for _ in range(_PAGERANK_ROUNDS):
+            nxt = _pagerank_round(nodes, edges, ranks, base).persist()
+            nxt.count()
+            ranks.unpersist()
+            ranks = nxt
+        # The N-row rank vector is NEVER collected to the driver (at
+        # 10^10 nodes that is fatal): the result stays a distributed
+        # DataFrame backed by the final round's cache — a production
+        # run writes it straight back to the frontier priority table.
+        # The final cache is deliberately left alive for the consumer;
+        # if evicted, the deterministic lineage recomputes.
+        return ranks.select(
+            "node", F.round("rank", 12).alias("rank")
+        ).orderBy("node")
+    finally:
+        edges.unpersist()
+        nodes.unpersist()
 
 
 def _pagerank_sql() -> str:
@@ -210,96 +211,97 @@ def graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     ONLY thing the driver ever holds is the two normalization scalars
     per round (exact DECIMAL sums cast to double — the same value in
     both engines, so the division is hash-exact)."""
-    d = load(spark, sf_dir, "documents").filter(F.col("doc_id") < 400)
+    cut = F.col("doc_id") < 400
+    d = load(spark, sf_dir, "documents").filter(cut)
     n = int(d.agg(F.max("doc_id")).first()[0]) + 1
 
-    # input-sized loop partitioning, same derivation as PageRank
+    # input-sized loop partitioning in a child session, as in PageRank
     p = scan_partitions(d)
-    with loop_shuffle(spark, p):
-        edges = (
-            _link_edges(d, n)
-            .select("src", "dst")
-            .repartition(p, "src")
-            .persist()
-        )
-        nodes = (
-            d.select(F.col("doc_id").alias("node"))
-            .repartition(p, "node")
-            .persist()
-        )
-        try:
-            edges.count()
-            nodes.count()
-            hubs = nodes.select("node", F.lit(1.0).alias("h"))
-            auths = None
-            for _ in range(_HITS_ROUNDS):
-                # each half-round: one co-partitioned join + one grouped
-                # exchange; the raw vector is localCheckpoint'ed LAZILY so
-                # the normalization aggregate right below both materializes
-                # the cache and reads the scalar in ONE job (the r5 eager
-                # form paid a separate materialization job per half-round);
-                # the checkpoint still truncates the logical plan to
-                # ROUND-SIZED — persist alone leaves a lineage whose
-                # analysis cost grows superlinearly with rounds (measured:
-                # round 5 took 11s against round 0's 1s)
-                a_full = (
-                    nodes.join(
-                        edges.join(hubs, edges["src"] == hubs["node"])
-                        .groupBy("dst")
-                        .agg(
-                            F.sum(F.col("h").cast(_DEC))
-                            .cast("double")
-                            .alias("ra")
-                        ),
-                        nodes["node"] == F.col("dst"),
-                        "left",
-                    )
-                    .select("node", F.coalesce("ra", F.lit(0.0)).alias("ra"))
-                    .localCheckpoint(eager=False)
+    d = load(sized_session(spark, p), sf_dir, "documents").filter(cut)
+    edges = (
+        _link_edges(d, n)
+        .select("src", "dst")
+        .repartition(p, "src")
+        .persist()
+    )
+    nodes = (
+        d.select(F.col("doc_id").alias("node"))
+        .repartition(p, "node")
+        .persist()
+    )
+    try:
+        edges.count()
+        nodes.count()
+        hubs = nodes.select("node", F.lit(1.0).alias("h"))
+        auths = None
+        for _ in range(_HITS_ROUNDS):
+            # each half-round: one co-partitioned join + one grouped
+            # exchange; the raw vector is localCheckpoint'ed LAZILY so
+            # the normalization aggregate right below both materializes
+            # the cache and reads the scalar in ONE job (the r5 eager
+            # form paid a separate materialization job per half-round);
+            # the checkpoint still truncates the logical plan to
+            # ROUND-SIZED — persist alone leaves a lineage whose
+            # analysis cost grows superlinearly with rounds (measured:
+            # round 5 took 11s against round 0's 1s)
+            a_full = (
+                nodes.join(
+                    edges.join(hubs, edges["src"] == hubs["node"])
+                    .groupBy("dst")
+                    .agg(
+                        F.sum(F.col("h").cast(_DEC))
+                        .cast("double")
+                        .alias("ra")
+                    ),
+                    nodes["node"] == F.col("dst"),
+                    "left",
                 )
-                za = float(
-                    a_full.agg(
-                        F.sum(F.col("ra").cast(_DEC)).cast("double")
-                    ).first()[0]
-                )
-                auths = a_full.select(
-                    "node", (F.col("ra") / F.lit(za)).alias("a")
-                )
-                h_full = (
-                    nodes.join(
-                        edges.join(auths, edges["dst"] == auths["node"])
-                        .groupBy("src")
-                        .agg(
-                            F.sum(F.col("a").cast(_DEC))
-                            .cast("double")
-                            .alias("rh")
-                        ),
-                        nodes["node"] == F.col("src"),
-                        "left",
-                    )
-                    .select("node", F.coalesce("rh", F.lit(0.0)).alias("rh"))
-                    .localCheckpoint(eager=False)
-                )
-                zh = float(
-                    h_full.agg(
-                        F.sum(F.col("rh").cast(_DEC)).cast("double")
-                    ).first()[0]
-                )
-                hubs = h_full.select(
-                    "node", (F.col("rh") / F.lit(zh)).alias("h")
-                )
-            return (
-                hubs.join(auths, "node")
-                .select(
-                    "node",
-                    F.round("h", 10).alias("hub"),
-                    F.round("a", 10).alias("authority"),
-                )
-                .orderBy("node")
+                .select("node", F.coalesce("ra", F.lit(0.0)).alias("ra"))
+                .localCheckpoint(eager=False)
             )
-        finally:
-            edges.unpersist()
-            nodes.unpersist()
+            za = float(
+                a_full.agg(
+                    F.sum(F.col("ra").cast(_DEC)).cast("double")
+                ).first()[0]
+            )
+            auths = a_full.select(
+                "node", (F.col("ra") / F.lit(za)).alias("a")
+            )
+            h_full = (
+                nodes.join(
+                    edges.join(auths, edges["dst"] == auths["node"])
+                    .groupBy("src")
+                    .agg(
+                        F.sum(F.col("a").cast(_DEC))
+                        .cast("double")
+                        .alias("rh")
+                    ),
+                    nodes["node"] == F.col("src"),
+                    "left",
+                )
+                .select("node", F.coalesce("rh", F.lit(0.0)).alias("rh"))
+                .localCheckpoint(eager=False)
+            )
+            zh = float(
+                h_full.agg(
+                    F.sum(F.col("rh").cast(_DEC)).cast("double")
+                ).first()[0]
+            )
+            hubs = h_full.select(
+                "node", (F.col("rh") / F.lit(zh)).alias("h")
+            )
+        return (
+            hubs.join(auths, "node")
+            .select(
+                "node",
+                F.round("h", 10).alias("hub"),
+                F.round("a", 10).alias("authority"),
+            )
+            .orderBy("node")
+        )
+    finally:
+        edges.unpersist()
+        nodes.unpersist()
 
 
 def _hits_sql() -> str:

@@ -1,7 +1,7 @@
 """Gate plumbing for the catalog operators: the declared catalog of the
 star-schema tables (:data:`SCHEMAS`, read by :func:`load`), the fan-out
 (:func:`spread`, :func:`docs`), loop sizing (:func:`scan_partitions`,
-:func:`loop_shuffle`), materialization (:func:`barrier` for reused
+:func:`sized_session`), materialization (:func:`barrier` for reused
 subtrees, :func:`final_sort` for a gate's output order), and the
 per-row kernel applier (:func:`map_rows`).
 
@@ -12,8 +12,6 @@ is declared here, so a read never scans a file to learn it.  A bare
 schema given)."""
 
 from __future__ import annotations
-
-from contextlib import contextmanager
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -85,18 +83,19 @@ def scan_partitions(df: DataFrame, target_bytes: int = 16 << 20) -> int:
     smaller than one-shot scan splits.  A 600 KB bench table yields
     1 (the measured-fast case for the graph loops); a 100 TB corpus
     is clamped to :data:`MAX_LOOP_PARTITIONS`.  Falls back to the
-    physical scan split count if the estimate is unavailable."""
+    physical scan split count if the estimate is unavailable.  The loop
+    plans at this count in a :func:`sized_session` child, never by
+    writing the caller's session conf."""
     size = size_estimate(df)
     if size > 0:
         return min(MAX_LOOP_PARTITIONS, max(1, -(-size // target_bytes)))
     return min(MAX_LOOP_PARTITIONS, max(1, df.rdd.getNumPartitions()))
 
 
-@contextmanager
-def loop_shuffle(spark: SparkSession, n: int):
-    """Run an iterative loop's jobs under ``spark.sql.shuffle.partitions
-    = n`` (derived from :func:`scan_partitions`, so it is input-sized),
-    restoring the session value afterwards.
+def sized_session(spark: SparkSession, n: int) -> SparkSession:
+    """A clone of ``spark`` whose ``spark.sql.shuffle.partitions`` is
+    ``n`` (derived from :func:`scan_partitions`, so it is input-sized),
+    for an iterative loop or a stateful stream to plan its jobs in.
 
     Why: the per-round joins/aggregations of the iterative operators
     run over vectors cached with an explicit hash partitioning, and
@@ -109,17 +108,17 @@ def loop_shuffle(spark: SparkSession, n: int):
     loop's shuffles to the input keeps the co-partitioned
     zero-exchange round shape at every scale.
 
-    The setting is session-global, so this assumes gates run one at a
-    time: no other query may run on the same session while a loop
-    holds the conf (it would be planned with the loop's partition
-    count)."""
-    key = "spark.sql.shuffle.partitions"
-    old = spark.conf.get(key)
-    spark.conf.set(key, str(n))
-    try:
-        yield n
-    finally:
-        spark.conf.set(key, old)
+    The clone shares the SparkContext and the cache, and starts with a
+    copy of ``spark``'s runtime conf, temp views and functions
+    (``newSession()`` would drop the runtime conf, the time zone
+    included).  Writing the count into the clone leaves ``spark``
+    untouched, so queries that other threads plan on it meanwhile keep
+    their own partition count."""
+    return SparkSession(
+        spark.sparkContext,
+        spark._jsparkSession.cloneSession(),
+        {"spark.sql.shuffle.partitions": str(n)},
+    )
 
 
 #: materialization barriers on (the production default).  Plan-shape

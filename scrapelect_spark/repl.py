@@ -42,6 +42,7 @@ from .functions.interpreter import (
     Scope,
     compile_selector,
     corpus_fetcher,
+    fetch_text,
 )
 from .functions.value import bindings_into_data, is_element
 from .plans.parser import Parser, parse_string_literal
@@ -303,19 +304,7 @@ def main(argv: Optional[list[str]] = None) -> int:
     everywhere; http(s) requires network access."""
     argv = sys.argv[1:] if argv is None else argv
 
-    def fetch(url: str) -> str:
-        if url.startswith("file://"):
-            return corpus_fetcher({})(url)
-        from .sources.fetch import HttpFetcher
-        import urllib.request
-
-        req = urllib.request.Request(
-            url, headers={"User-Agent": HttpFetcher.REFERENCE_UA}
-        )
-        with urllib.request.urlopen(req, timeout=10.0) as resp:
-            return resp.read().decode("utf-8", errors="replace")
-
-    repl = Repl(fetcher=fetch)
+    repl = Repl(fetcher=fetch_text)
     if argv:
         try:
             repl.handle_command(f'open "{argv[0]}"')

@@ -15,12 +15,19 @@ Two canonical shapes:
   user's trailing session stays open in state unless something (the
   gate's per-user sentinel event) follows it.
 
-Tests drive both with ``trigger(availableNow=True)`` over the parquet
-events table and check against the equivalent batch computation.
+The driver gates and the tests run both through :func:`run_stream`:
+an ``availableNow`` query over events written as trigger files, planned
+in a child session sized to that input, and checked against the
+equivalent batch computation.
 """
 
 from __future__ import annotations
 
+import os
+import shutil
+import tempfile
+import time
+from concurrent.futures import ThreadPoolExecutor
 from typing import Iterator, Tuple
 
 import pandas as pd
@@ -36,7 +43,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from ..operators.tables import load, loop_shuffle, scan_partitions
+from ..operators.tables import load, scan_partitions, sized_session
 
 DEC = "decimal(28,8)"
 
@@ -150,36 +157,6 @@ def sessionize_stream(events: DataFrame) -> DataFrame:
     )
 
 
-def sessionize_batch(events: DataFrame) -> DataFrame:
-    """Batch oracle for the stateful sessionizer (closed sessions only
-    comparable; the batch form closes every session)."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    gap = F.lag("ts").over(w)
-    marked = events.withColumn(
-        "new_session",
-        F.when(
-            gap.isNull()
-            | ((F.unix_timestamp("ts") - F.unix_timestamp(gap)) > GAP_MINUTES * 60),
-            1,
-        ).otherwise(0),
-    )
-    sess = marked.withColumn(
-        "session_id", F.sum("new_session").over(w)
-    )
-    return (
-        sess.groupBy("user_id", "session_id")
-        .agg(
-            F.min("ts").alias("session_start"),
-            F.max("ts").alias("session_end"),
-            F.count(F.lit(1)).cast("int").alias("n_events"),
-            F.sum("value").alias("total_value"),
-        )
-        .drop("session_id")
-    )
-
-
 # ---------------------------------------------------------------------------
 # Driver-gate query: the STREAMING hourly rollup flows through a
 # CORRECTNESS row with the same SQL oracle as its batch twin — complete-
@@ -187,11 +164,6 @@ def sessionize_batch(events: DataFrame) -> DataFrame:
 # so the gate pins incremental execution against DuckDB, not just
 # against our own batch code.
 # ---------------------------------------------------------------------------
-
-import itertools as _itertools
-
-_GATE_SEQ = _itertools.count()
-
 
 def _write_trigger_files(d: str, parts) -> None:
     """Write one single-file parquet per trigger part into ``d``,
@@ -203,10 +175,6 @@ def _write_trigger_files(d: str, parts) -> None:
     commit latency, and the sequential r5 loop paid it four times in a
     row).  The mtimes are assigned after every write lands, so the
     trigger order is exactly the sequential loop's."""
-    import os
-    import shutil
-    import time
-    from concurrent.futures import ThreadPoolExecutor
 
     def write_one(k, p):
         sub = os.path.join(d, f"_stage{k}")
@@ -224,48 +192,70 @@ def _write_trigger_files(d: str, parts) -> None:
         os.utime(dst, (now + k, now + k))
 
 
+#: an availableNow query over a bounded fixture ends by itself; one
+#: still running after this many seconds is stuck, and its gate fails
+_STREAM_TIMEOUT_S = 600
+
+
+def run_stream(spark: SparkSession, parts, build, mode: str) -> DataFrame:
+    """Run ``build`` over a file stream of ``parts`` as an availableNow
+    query into a memory sink, and return the sink's rows.
+
+    Each frame of ``parts`` becomes one trigger file
+    (:func:`_write_trigger_files`), so the query reads it as one
+    micro-batch, in order.  ``build`` maps the :func:`events_stream`
+    over those files to the query; ``mode`` is its output mode.
+
+    The query plans in :func:`sized_session` of ``spark``, sized by
+    :func:`scan_partitions` over the written fixture (guide §2
+    scale-adaptive partitioning).  AQE is off inside stateful streaming
+    queries, so every trigger otherwise runs a full
+    shuffle.partitions-wide stateful stage and commits that many
+    state-store instances per micro-batch: fixed overhead for a bounded
+    fixture, and a constant that is too small for a production-scale
+    stream.  The count is pinned into the checkpoint at the first batch,
+    so it is decided here, before ``start()``.  The memory-sink table
+    lives in the child session only.
+
+    The sink's rows are localCheckpoint'ed and the temp dir (trigger
+    files and checkpoint) removed before this returns: bench runs a
+    gate 4×, and leaking a fixture per run grows /tmp unboundedly."""
+    schema = parts[0].schema
+    d = tempfile.mkdtemp(prefix="events-stream-")
+    try:
+        _write_trigger_files(d, parts)
+        fixture = spark.read.schema(schema).parquet(d)
+        child = sized_session(spark, scan_partitions(fixture))
+        q = (
+            build(events_stream(child, d, schema))
+            .writeStream.format("memory")
+            .queryName("stream_gate")
+            .outputMode(mode)
+            .option("checkpointLocation", os.path.join(d, "_ckpt"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        try:
+            if not q.awaitTermination(_STREAM_TIMEOUT_S):
+                raise TimeoutError(
+                    f"availableNow query still running after {_STREAM_TIMEOUT_S} s"
+                )
+        finally:
+            q.stop()
+        return child.table("stream_gate").localCheckpoint()
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
+
+
 def events_hourly_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Run ``hourly_counts_stream`` as a real Structured Streaming query
-    (file source split into 3 files → 3 incremental triggers, memory
-    sink, complete mode, availableNow) and return the final result.
-    The result is localCheckpoint'ed so the temp input dir and the
-    memory-sink table can be cleaned up immediately (bench runs the
-    query 4×; leaking a corpus copy per run grows /tmp unboundedly)."""
-    import shutil
-    import tempfile
-
+    (the events split into 3 files → 3 incremental triggers, complete
+    mode) and return the final result."""
     batch = load(spark, sf_dir, "events")
-    d = tempfile.mkdtemp(prefix="events-stream-gate-")
-    name = f"hourly_stream_gate_{next(_GATE_SEQ)}"
-    try:
-        batch.repartition(3).write.mode("overwrite").parquet(d)
-        # State/shuffle partitioning sized to the stream's input (guide
-        # §2 scale-adaptive partitioning): AQE is disabled inside
-        # stateful streaming queries, so every trigger otherwise runs a
-        # full shuffle.partitions-wide stateful stage and commits that
-        # many state-store instances per micro-batch — pure fixed
-        # overhead for a bounded fixture, and a constant that would be
-        # WRONG (too small) for a production-scale stream, where this
-        # derivation scales with the input.  The partition count is
-        # pinned into the checkpoint at the first batch, so it is a
-        # per-query decision made here, before start().
-        fixture = spark.read.schema(batch.schema).parquet(d)
-        with loop_shuffle(spark, scan_partitions(fixture)):
-            q = (
-                hourly_counts_stream(events_stream(spark, d, batch.schema))
-                .writeStream.format("memory")
-                .queryName(name)
-                .outputMode("complete")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        return (
-            spark.table(name).orderBy("hour", "event_type").localCheckpoint()
-        )
-    finally:
-        spark.catalog.dropTempView(name)
-        shutil.rmtree(d, ignore_errors=True)
+    parts = [batch.filter(F.pmod("event_id", F.lit(3)) == k) for k in range(3)]
+    return run_stream(spark, parts, hourly_counts_stream, "complete").orderBy(
+        "hour", "event_type"
+    )
 
 
 def _hourly_stream_sql() -> str:
@@ -292,11 +282,6 @@ def events_sessionized_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     non-decreasing; within a batch the operator sorts), with strictly
     increasing mtimes so the file source triggers them in order.
     """
-    import os
-    import shutil
-    import tempfile
-    import time
-
     u_cut = 120  # bounds gate cost; ~8k events at sf0.1
     batch = (
         load(spark, sf_dir, "events")
@@ -319,43 +304,22 @@ def events_sessionized_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(0.0).alias("value"),
         )
     )
-    d = tempfile.mkdtemp(prefix="events-session-gate-")
-    name = f"session_stream_gate_{next(_GATE_SEQ)}"
-    try:
-        parts = [
-            batch.filter(F.col("ts") < c1),
-            batch.filter((F.col("ts") >= c1) & (F.col("ts") < c2)),
-            batch.filter(F.col("ts") >= c2),
-            sentinels,
-        ]
-        _write_trigger_files(d, parts)
-        # input-sized state partitioning — see events_hourly_stream
-        fixture = spark.read.schema(batch.schema).parquet(d)
-        with loop_shuffle(spark, scan_partitions(fixture)):
-            q = (
-                sessionize_stream(events_stream(spark, d, batch.schema))
-                .writeStream.format("memory")
-                .queryName(name)
-                .outputMode("append")
-                .option("checkpointLocation", os.path.join(d, "_ckpt"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        return (
-            spark.table(name)
-            .select(
-                "user_id",
-                "session_start",
-                "session_end",
-                F.col("n_events").cast("long").alias("n_events"),
-            )
-            .orderBy("user_id", "session_start")
-            .localCheckpoint()
+    parts = [
+        batch.filter(F.col("ts") < c1),
+        batch.filter((F.col("ts") >= c1) & (F.col("ts") < c2)),
+        batch.filter(F.col("ts") >= c2),
+        sentinels,
+    ]
+    return (
+        run_stream(spark, parts, sessionize_stream, "append")
+        .select(
+            "user_id",
+            "session_start",
+            "session_end",
+            F.col("n_events").cast("long").alias("n_events"),
         )
-    finally:
-        spark.catalog.dropTempView(name)
-        shutil.rmtree(d, ignore_errors=True)
+        .orderBy("user_id", "session_start")
+    )
 
 
 _SESSION_STREAM_SQL = """
@@ -402,11 +366,6 @@ def events_late_drop_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle aggregates base + advancer + sentinel and NOT the
     planted clones — the result hashes equal only if late-data
     eviction actually dropped them (and only them)."""
-    import os
-    import shutil
-    import tempfile
-    import time
-
     u_cut = 120
     base = (
         load(spark, sf_dir, "events")
@@ -445,39 +404,20 @@ def events_late_drop_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     advancer = one_row(2 * 10**9, hi + pd.Timedelta(hours=3), 1.5)
     sentinel = one_row(3 * 10**9, hi + pd.Timedelta(hours=10), 2.5)
-    d = tempfile.mkdtemp(prefix="events-late-gate-")
-    name = f"late_drop_gate_{next(_GATE_SEQ)}"
-    try:
-        parts = [base, advancer, late, sentinel]
-        _write_trigger_files(d, parts)
-        agg = (
-            events_stream(spark, d, base.schema)
-            .withWatermark("ts", "1 hour")
+
+    def hourly(events: DataFrame) -> DataFrame:
+        return (
+            events.withWatermark("ts", "1 hour")
             .groupBy(F.window("ts", "1 hour").alias("win"))
             .agg(
                 F.count(F.lit(1)).cast("long").alias("n"),
-                F.sum(F.col("value").cast(DEC)).cast("double").alias(
-                    "total_value"
-                ),
+                F.sum(F.col("value").cast(DEC)).cast("double").alias("total_value"),
             )
             .select(F.col("win.start").alias("hour"), "n", "total_value")
         )
-        # input-sized state partitioning — see events_hourly_stream
-        fixture = spark.read.schema(base.schema).parquet(d)
-        with loop_shuffle(spark, scan_partitions(fixture)):
-            q = (
-                agg.writeStream.format("memory")
-                .queryName(name)
-                .outputMode("append")
-                .option("checkpointLocation", os.path.join(d, "_ckpt"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        return spark.table(name).orderBy("hour").localCheckpoint()
-    finally:
-        spark.catalog.dropTempView(name)
-        shutil.rmtree(d, ignore_errors=True)
+
+    parts = [base, advancer, late, sentinel]
+    return run_stream(spark, parts, hourly, "append").orderBy("hour")
 
 
 #: the oracle rebuilds base + advancer (NOT the late clones, and NOT

@@ -192,3 +192,19 @@ def test_open_retries_without_the_trailing_slash():
     )
     assert err == ""
     assert '"x": "Hello"' in out
+
+
+def test_main_reports_a_refused_fetch_and_goes_on(monkeypatch, capsys):
+    """``repl.main`` fetches through the CLI's ``fetch_text``: a refused
+    http request is an interpreter error, not a traceback, and the
+    session keeps reading commands."""
+    from scrapelect_spark import repl
+
+    monkeypatch.setattr(
+        "sys.stdin", io.StringIO('/open "http://127.0.0.1:9/"\nx: 1;\n/exit\n')
+    )
+    assert repl.main([]) == 0
+    out, err = capsys.readouterr()
+    assert "request to `http://127.0.0.1:9/` failed" in err
+    assert "You do not have a document open" in err
+    assert out.rstrip().endswith("Exiting...")

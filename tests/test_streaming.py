@@ -1,78 +1,88 @@
 """Structured Streaming tests: the incremental windowed aggregation and
-the custom stateful sessionizer must agree with their batch oracles."""
+the custom stateful sessionizer must agree with their batch oracles,
+and a streaming gate's state must run in a child session sized to its
+input."""
 
 import os
 import shutil
+import types
 
 import pytest
+from pyspark.sql import Window
 from pyspark.sql import functions as F
+
+from scrapelect_spark.streaming import windows
+from scrapelect_spark.streaming.windows import (
+    GAP_MINUTES,
+    hourly_counts_stream,
+    run_stream,
+    sessionize_stream,
+)
 
 SF = "/root/testdata/sf0.001"
 
 
-@pytest.fixture(scope="module")
-def events_dir(tmp_path_factory):
-    """events parquet split into 3 files so availableNow runs 3
-    incremental triggers (maxFilesPerTrigger=1)."""
-    d = tmp_path_factory.mktemp("events_stream")
-    from scrapelect_spark.session import get_spark
-
-    spark = get_spark(app_name="stream-prep")
-    df = spark.read.parquet(f"{SF}/events.parquet")
-    # Time-range chunks written as separate files with strictly
-    # increasing modification times: the file stream source orders
-    # pending files by timestamp, so triggers deliver the stream in
-    # event-time order (log-stream shape) — the stateful sessionizer
-    # assumes ordered arrival within its watermark.
-    import time
-
-    bounds = df.selectExpr(
-        "percentile(cast(cast(ts as timestamp) as double), array(0.34, 0.67)) as q"
-    ).collect()[0].q
-    lo, hi = bounds
-    out = d / "events"
-    chunks = [
-        df.filter(F.col("ts").cast("timestamp").cast("double") <= lo),
-        df.filter(
-            (F.col("ts").cast("timestamp").cast("double") > lo) & (F.col("ts").cast("timestamp").cast("double") <= hi)
-        ),
-        df.filter(F.col("ts").cast("timestamp").cast("double") > hi),
-    ]
-    for i, chunk in enumerate(chunks):
-        chunk.coalesce(1).sortWithinPartitions("ts").write.mode(
-            "append"
-        ).parquet(str(out))
-        time.sleep(1.2)
-    return str(out)
-
-
-def test_hourly_counts_stream_matches_batch(spark, events_dir, tmp_path):
-    from scrapelect_spark.streaming.windows import events_stream, hourly_counts_stream
-
-    schema = spark.read.parquet(events_dir).schema
-    stream = hourly_counts_stream(events_stream(spark, events_dir, schema))
-    q = (
-        stream.writeStream.format("memory")
-        .queryName("hourly_stream")
-        .outputMode("complete")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
+def sessionize_batch(events):
+    """Batch oracle for the stateful sessionizer (closed sessions only
+    comparable; the batch form closes every session)."""
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    gap = F.lag("ts").over(w)
+    marked = events.withColumn(
+        "new_session",
+        F.when(
+            gap.isNull()
+            | ((F.unix_timestamp("ts") - F.unix_timestamp(gap)) > GAP_MINUTES * 60),
+            1,
+        ).otherwise(0),
     )
-    q.awaitTermination(180)
+    sess = marked.withColumn("session_id", F.sum("new_session").over(w))
+    return (
+        sess.groupBy("user_id", "session_id")
+        .agg(
+            F.min("ts").alias("session_start"),
+            F.max("ts").alias("session_end"),
+            F.count(F.lit(1)).cast("int").alias("n_events"),
+            F.sum("value").alias("total_value"),
+        )
+        .drop("session_id")
+    )
 
+
+@pytest.fixture(scope="module")
+def events(spark):
+    return spark.read.parquet(f"{SF}/events.parquet").withColumn(
+        "ts", F.col("ts").cast("timestamp")
+    )
+
+
+@pytest.fixture(scope="module")
+def event_parts(events):
+    """The events split on event-time tertiles, one trigger file each,
+    so availableNow runs 3 incremental triggers in event-time order
+    (log-stream shape): the stateful sessionizer assumes ordered arrival
+    within its watermark."""
+    ts = F.col("ts").cast("double")
+    lo, hi = events.select(
+        F.percentile(ts, F.array(F.lit(0.34), F.lit(0.67))).alias("q")
+    ).first().q
+    return [
+        events.filter(ts <= lo),
+        events.filter((ts > lo) & (ts <= hi)),
+        events.filter(ts > hi),
+    ]
+
+
+def test_hourly_counts_stream_matches_batch(spark, events, event_parts):
+    stream = run_stream(spark, event_parts, hourly_counts_stream, "complete")
     got = {
         (r.hour, r.event_type): (r.n, round(r.total_value, 4))
-        for r in spark.sql("SELECT * FROM hourly_stream").collect()
+        for r in stream.collect()
     }
-    batch = (
-        spark.read.parquet(events_dir)
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-        .groupBy(F.date_trunc("hour", "ts").alias("hour"), "event_type")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n"),
-            F.sum(F.col("value").cast("decimal(28,8)")).cast("double").alias("tv"),
-        )
+    batch = events.groupBy(
+        F.date_trunc("hour", "ts").alias("hour"), "event_type"
+    ).agg(
+        F.count(F.lit(1)).cast("long").alias("n"),
+        F.sum(F.col("value").cast("decimal(28,8)")).cast("double").alias("tv"),
     )
     want = {
         (r.hour, r.event_type): (r.n, round(r.tv, 4)) for r in batch.collect()
@@ -81,47 +91,58 @@ def test_hourly_counts_stream_matches_batch(spark, events_dir, tmp_path):
     assert len(got) > 5
 
 
-def test_sessionize_stream_matches_batch(spark, events_dir, tmp_path):
+def test_sessionize_stream_matches_batch(spark, events, event_parts):
     """Stateful sessionizer: every session emitted by the stream must
     exist identically in the batch oracle (open sessions at end-of-
     stream may be withheld — subset check + volume sanity)."""
-    from scrapelect_spark.streaming.windows import (
-        events_stream,
-        sessionize_batch,
-        sessionize_stream,
-    )
-
-    schema = spark.read.parquet(events_dir).schema
-    stream = sessionize_stream(events_stream(spark, events_dir, schema))
-    q = (
-        stream.writeStream.format("memory")
-        .queryName("sessions_stream")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt2"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        assert q.awaitTermination(180), "availableNow query did not end"
-    finally:
-        q.stop()
     got = {
         (r.user_id, r.session_start, r.session_end, r.n_events)
-        for r in spark.sql("SELECT * FROM sessions_stream").collect()
+        for r in run_stream(spark, event_parts, sessionize_stream, "append").collect()
     }
     want = {
         (r.user_id, r.session_start, r.session_end, r.n_events)
-        for r in sessionize_batch(
-            spark.read.parquet(events_dir).withColumn(
-                "ts", F.col("ts").cast("timestamp")
-            )
-        ).collect()
+        for r in sessionize_batch(events).collect()
     }
     assert got, "stream emitted no closed sessions"
     assert got <= want, f"stream emitted sessions absent from batch: {sorted(got - want)[:3]}"
     # most sessions close (only per-user trailing sessions stay open)
-    n_users = spark.read.parquet(events_dir).select("user_id").distinct().count()
+    n_users = events.select("user_id").distinct().count()
     assert len(got) >= len(want) - n_users
+
+
+def test_stream_gate_state_runs_on_scan_partitions(spark, monkeypatch):
+    """A streaming gate's stateful stage runs on
+    ``scan_partitions(fixture)`` partitions: its state checkpoint holds
+    exactly that many, planned in a child session, while the caller's
+    session conf stays as it was."""
+    key = "spark.sql.shuffle.partitions"
+    parent = spark.conf.get(key)
+    fixture_rows, stream_confs, state_dirs = [], [], []
+
+    def three(fixture):
+        fixture_rows.append(fixture.count())
+        return 3
+
+    def hourly(stream):
+        stream_confs.append((spark.conf.get(key), stream.sparkSession.conf.get(key)))
+        return hourly_counts_stream(stream)
+
+    def rmtree(path, **kw):
+        state = os.path.join(path, "_ckpt", "state", "0")
+        if os.path.isdir(state):
+            state_dirs.append(sorted(p for p in os.listdir(state) if p.isdigit()))
+        shutil.rmtree(path, **kw)
+
+    monkeypatch.setattr(windows, "scan_partitions", three)
+    monkeypatch.setattr(windows, "hourly_counts_stream", hourly)
+    monkeypatch.setattr(
+        windows, "shutil", types.SimpleNamespace(move=shutil.move, rmtree=rmtree)
+    )
+    assert windows.events_hourly_stream(spark, SF).count() > 5
+    assert fixture_rows == [spark.read.parquet(f"{SF}/events.parquet").count()]
+    assert stream_confs == [(parent, "3")]
+    assert state_dirs == [["0", "1", "2"]]
+    assert spark.conf.get(key) == parent
 
 
 def test_extract_over_stream_matches_batch(spark, tmp_path):
@@ -161,7 +182,10 @@ def test_extract_over_stream_matches_batch(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(180)
+    try:
+        assert q.awaitTermination(180), "availableNow query did not end"
+    finally:
+        q.stop()
     got = {
         (r.url, r.result, r.error)
         for r in spark.sql("SELECT * FROM extract_stream").collect()

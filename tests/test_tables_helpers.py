@@ -1,10 +1,11 @@
 """The gate plumbing in ``operators/tables.py``: the per-row kernel
 applier ``map_rows``, the ``docs`` input helper, the declared catalog
 behind ``load``, the loop-partition ceiling of ``scan_partitions``, the
-gate-final sort ``final_sort``, and guards that keep operators on
-``map_rows`` instead of hand-rolled ``mapInPandas`` batch loops, on
-``final_sort`` instead of a hand-built barrier-then-sort, and parquet
-reads on a declared schema."""
+sized child session ``sized_session``, the gate-final sort
+``final_sort``, and guards that keep operators on ``map_rows`` instead
+of hand-rolled ``mapInPandas`` batch loops, on ``final_sort`` instead of
+a hand-built barrier-then-sort, parquet reads on a declared schema, and
+session conf unwritten."""
 
 import ast
 import glob
@@ -18,6 +19,7 @@ from scrapelect_spark.operators.tables import (
     final_sort,
     map_rows,
     scan_partitions,
+    sized_session,
 )
 from test_oracle_parity import SF_DIR
 
@@ -170,6 +172,46 @@ def test_scan_partitions_is_capped():
 
 def test_scan_partitions_small_frame_is_one(spark):
     assert scan_partitions(spark.range(100)) == 1
+
+
+SHUFFLE = "spark.sql.shuffle.partitions"
+
+
+def test_sized_session_keeps_the_runtime_conf(spark):
+    """The child starts from the parent's runtime conf (a bare
+    ``newSession()`` would fall back to the builder's time zone) and
+    only its own shuffle partition count changes."""
+    key = "spark.sql.session.timeZone"
+    old, parts = spark.conf.get(key), spark.conf.get(SHUFFLE)
+    spark.conf.set(key, "America/New_York")
+    try:
+        child = sized_session(spark, 3)
+        assert child.conf.get(key) == "America/New_York"
+    finally:
+        spark.conf.set(key, old)
+    assert child.conf.get(SHUFFLE) == "3"
+    assert spark.conf.get(SHUFFLE) == parts
+
+
+def test_graph_loop_leaves_the_session_conf_alone(spark, monkeypatch):
+    """PageRank's loop jobs plan at the input-sized count in a child
+    session; the caller's session keeps its own count all along."""
+    from scrapelect_spark.operators import graph
+
+    parts = spark.conf.get(SHUFFLE)
+    seen = []
+    frame = type(spark.range(1))
+    count = frame.count
+
+    def spy(df):
+        seen.append((spark.conf.get(SHUFFLE), df.sparkSession.conf.get(SHUFFLE)))
+        return count(df)
+
+    monkeypatch.setattr(graph, "scan_partitions", lambda df: 3)
+    monkeypatch.setattr(frame, "count", spy)
+    out = graph.graph_pagerank(spark, SF_DIR)
+    assert seen and set(seen) == {(parts, "3")}
+    assert out.count() > 0
 
 
 #: the only operators that call ``mapInPandas`` themselves, and why
@@ -370,3 +412,25 @@ def test_final_sort_of_a_one_partition_plan_adds_no_exchange(spark, monkeypatch)
     out = final_sort(top, "id")
     assert [r.id for r in out.collect()] == list(range(990, 1000))
     assert "exchange" not in _executed(out).lower()
+
+
+def test_no_session_conf_writes():
+    """No code under ``operators/`` or ``streaming/`` writes a session's
+    conf: a loop or a stream that needs its own partition count plans in
+    ``sized_session``'s child, so a query that another thread plans on
+    the caller's session meanwhile keeps the caller's count."""
+    sites = []
+    for sub in ("operators", "streaming"):
+        for path in sorted(glob.glob(os.path.join(PACKAGE, sub, "*.py"))):
+            with open(path) as f:
+                tree = ast.parse(f.read())
+            for name, top in _definitions(tree):
+                for node in ast.walk(top):
+                    if (
+                        isinstance(node, ast.Call)
+                        and isinstance(node.func, ast.Attribute)
+                        and node.func.attr == "set"
+                        and _chain(node.func.value)[:1] == ["conf"]
+                    ):
+                        sites.append(f"{sub}/{os.path.basename(path)}:{name}")
+    assert sites == []
